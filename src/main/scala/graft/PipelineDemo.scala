@@ -32,25 +32,24 @@ object PipelineDemo {
     val dirs = Pipeline.Dirs(s"$root/staging", s"$root/warehouse")
 
     println("=== epoch 1 (staging after stages 1-6, no drain) ===")
-    Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
-      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", 1, drainToWarehouse = false)
-    spark.read.parquet(dirs.stagingDir)
+    Pipeline.stageEpoch(spark, sources("videos_epoch1.json"), dirs,
+      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z")
       .select("video_id", "channel_name", "main_code", "code", "resource_name",
         "show_name", "cpm_category", "views", "avg_view_duration",
         "engagement_rate", "rpm", "published_time_local")
       .orderBy("video_id").show(20, truncate = false)
 
     println("=== epoch 2 (overlapping video v02 re-fetched) + drain ===")
-    Pipeline.runEpoch(spark, sources("videos_epoch2.json"), dirs,
+    val wh = Pipeline.runEpoch(spark, sources("videos_epoch2.json"), dirs,
       "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z", 2)
-    val wh = spark.read.parquet(dirs.warehouseDir)
     println(s"warehouse rows=${wh.count()} stagingRows=${spark.read.parquet(dirs.stagingDir).count()}")
     wh.select("video_id", "video_title", "views", "load_seq")
       .orderBy("video_id").show(20, truncate = false)
 
-    println("=== replayed drain (crash-recovery idempotence) ===")
-    sinks.Warehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir, "video_id", 3)
-    println(s"warehouse rows after replay=${spark.read.parquet(dirs.warehouseDir).count()}")
+    println("=== replayed drain of epoch 2 (crash-recovery idempotence) ===")
+    sinks.AtomicWarehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir, 2)
+    println("warehouse rows after replay=" +
+      sinks.AtomicWarehouse.read(spark, dirs.warehouseDir, "video_id").count())
     spark.stop()
   }
 }

@@ -1,15 +1,18 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.sinks.Warehouse
+import graft.sinks.{AtomicWarehouse, Constraints}
 import graft.sources.{AnalyticsSource, DimLoader}
 
 /** End-to-end epoch runner — the reference's Airflow DAG
   * (ref: dags/Dashboard-pipeline.py) collapses into one composed Catalyst
-  * plan per epoch: sources → 6 transform stages → staging overwrite →
-  * warehouse drain. Scheduling (2×/day cron) stays external, exactly like
-  * the reference; `runDate`/window bounds are injected for determinism.
+  * plan per epoch: sources → 6 transform stages → CHECK-gated atomic
+  * warehouse commit. Every epoch reaches the warehouse through
+  * [[graft.sinks.AtomicWarehouse]]; only the batch [[runEpoch]] (and the
+  * stage-only [[stageEpoch]]) keep the reference's staging "sheet" as a
+  * parquet dir, the streaming [[streamEpochs]] commits each epoch frame
+  * directly. Scheduling (2×/day cron) stays external, exactly like the
+  * reference; `runDate`/window bounds are injected for determinism.
   */
 object Pipeline {
 
@@ -30,24 +33,15 @@ object Pipeline {
     DimLoader.loadDim(spark, s"$dir/shows.json", Schemas.shows, "code"),
     DimLoader.loadDim(spark, s"$dir/cpm_categories.json", Schemas.cpmCategories, "shows_name"))
 
-  def readStaging(spark: SparkSession, dirs: Dirs): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(dirs.stagingDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      spark.read.schema(Schemas.staging).parquet(dirs.stagingDir)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.staging)
-  }
-
-  /** Stages 1–6 composed lazily into ONE Catalyst plan, materialized
-    * only at the staging overwrite (K1, write-then-swap because the plan
-    * reads the same staging dir it replaces). Shared by every epoch
-    * runner below. */
-  private def stageEpoch(spark: SparkSession, src: Sources, dirs: Dirs,
-      windowStartIso: String, windowEndIso: String): Unit = {
-    val prior = readStaging(spark, dirs)
-    val s1 = Stages.ingest(src.videos, src.channels, prior,
+  /** Stages 1–6 composed lazily into ONE Catalyst plan over the `prior`
+    * staged rows (None: the epoch is the batch alone, still keep-last
+    * deduped within itself). Writes nothing; the caller materializes. */
+  private def epochFrame(spark: SparkSession, src: Sources,
+      prior: Option[DataFrame], windowStartIso: String,
+      windowEndIso: String): DataFrame = {
+    val priorRows = prior.getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.staging))
+    val s1 = Stages.ingest(src.videos, src.channels, priorRows,
       windowStartIso, windowEndIso)
     val s2 = Stages.enrichTitleCode(s1, src.employees)
     // MATERIALIZE the enriched frame once (guide §3.3 "materialising an
@@ -63,16 +57,25 @@ object Pipeline {
     val metrics = AnalyticsSource.metricsAcrossOwners(
       src.analyticsFacts, ids, src.contentOwners, withContentType = true)
     val s5 = Stages.mergeAnalytics(s3, metrics)
-    val s6 = Stages.toCanonical(Stages.derive(s5, src.cpmCategories))
+    Stages.toCanonical(Stages.derive(s5, src.cpmCategories))
+  }
 
-    val tmp = dirs.stagingDir + "_epoch_tmp"
-    s6.write.mode(SaveMode.Overwrite).parquet(tmp)
-    // swap by FILESYSTEM RENAME (Warehouse.compact's pattern): the tmp dir
-    // already holds exactly the new staging content, so re-writing it
-    // through a second Spark job (the old read-back + overwrite) doubled
-    // the staging I/O and added two jobs per epoch for identical bytes
+  /** Stage-only epoch — the reference's sheet update without the load:
+    * stages 1–6 over the current staging rows (keep-last across epochs),
+    * written back as the new staging dir. The plan reads the dir it
+    * replaces, so the write goes to a tmp dir that is then swapped in by
+    * rename. Returns the new staging rows. */
+  def stageEpoch(spark: SparkSession, src: Sources, dirs: Dirs,
+      windowStartIso: String, windowEndIso: String): DataFrame = {
     val dst = new org.apache.hadoop.fs.Path(dirs.stagingDir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prior =
+      if (fs.exists(dst))
+        Some(spark.read.schema(Schemas.staging).parquet(dirs.stagingDir))
+      else None
+    val tmp = dirs.stagingDir + "_epoch_tmp"
+    epochFrame(spark, src, prior, windowStartIso, windowEndIso)
+      .write.mode(SaveMode.Overwrite).parquet(tmp)
     // loud on a failed delete: silently renaming onto a live dir would
     // either fail obscurely or interleave old and new part files
     if (fs.exists(dst) && !fs.delete(dst, true))
@@ -81,34 +84,37 @@ object Pipeline {
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
       throw new java.io.IOException(
         s"staging swap failed: rename($tmp -> ${dirs.stagingDir})")
+    spark.read.parquet(dirs.stagingDir)
   }
 
-  /** One epoch: stages 1–6 composed lazily into a single plan, written to
-    * staging (the only materialization), then stage 7 drains staging to
-    * the warehouse with idempotent dedup.
-    */
+  /** One batch epoch, the reference's sheet-then-load shape: [[stageEpoch]],
+    * then stage 7 drains staging into the AtomicWarehouse
+    * ([[graft.sinks.AtomicWarehouse.drain]]: all-string epoch commit,
+    * staging truncate; replaying a committed `loadSeq` is a no-op).
+    * Returns the warehouse's last-wins snapshot. */
   def runEpoch(spark: SparkSession, src: Sources, dirs: Dirs,
-      windowStartIso: String, windowEndIso: String, loadSeq: Long,
-      drainToWarehouse: Boolean = true): DataFrame = {
+      windowStartIso: String, windowEndIso: String, loadSeq: Long): DataFrame = {
     stageEpoch(spark, src, dirs, windowStartIso, windowEndIso)
-    if (drainToWarehouse)
-      Warehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir, "video_id", loadSeq)
-    spark.read.parquet(if (drainToWarehouse) dirs.warehouseDir else dirs.stagingDir)
+    AtomicWarehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir, loadSeq)
+    AtomicWarehouse.read(spark, dirs.warehouseDir, "video_id")
   }
 
-  /** The PRODUCTION-SHAPED epoch: stages 1–6 as one plan, then a
-    * CHECK-gated, atomically-committed drain into the
-    * [[graft.sinks.AtomicWarehouse]] ([[graft.sinks.Constraints
-    * .drainChecked]]: the audit and the commit share one pinned staging
-    * snapshot; a violating batch aborts with the warehouse untouched).
-    * This is the reference's cron unit (dags/Dashboard-pipeline.py:20-40)
-    * with the transactionality its BigQuery sink provides server-side. */
+  /** The PRODUCTION-SHAPED epoch: stages 1–6 as one plan, materialized
+    * ONCE (`localCheckpoint`), then a CHECK-gated, atomically-committed
+    * drain of that same frame into the [[graft.sinks.AtomicWarehouse]]
+    * ([[graft.sinks.Constraints.drainChecked]]: the audited rows are the
+    * committed rows; a violating batch aborts with the warehouse
+    * untouched). No staging dir is read or written — `dirs.stagingDir`
+    * is unused here. The epoch has no prior staged rows: each epoch is
+    * its own batch, keep-last deduped within itself. This is the
+    * reference's cron unit (dags/Dashboard-pipeline.py:20-40) with the
+    * transactionality its BigQuery sink provides server-side. */
   def runEpochAtomic(spark: SparkSession, src: Sources, dirs: Dirs,
       windowStartIso: String, windowEndIso: String, loadSeq: Long,
       checks: Seq[(String, String)]): Unit = {
-    stageEpoch(spark, src, dirs, windowStartIso, windowEndIso)
-    graft.sinks.Constraints.drainChecked(spark, dirs.stagingDir,
-      dirs.warehouseDir, loadSeq, checks)
+    val epoch = epochFrame(spark, src, None, windowStartIso, windowEndIso)
+      .localCheckpoint()
+    Constraints.drainChecked(spark, epoch, dirs.warehouseDir, loadSeq, checks)
   }
 
   /** The WHOLE pipeline on the STREAMING ENGINE: each micro-batch of
@@ -118,16 +124,20 @@ object Pipeline {
     * (`Trigger.AvailableNow` reproduces the reference's cron cadence:
     * drain everything pending, then stop; a processing-time trigger
     * would be the continuous deployment). Checkpointed offsets make a
-    * restarted run resume at the first unprocessed batch; a re-run
-    * micro-batch around a crash re-stages and re-commits the SAME
-    * epoch seq, which [[graft.sinks.AtomicWarehouse.commitEpoch]]
-    * no-ops — exactly-once per epoch end-to-end.
+    * restarted run resume at the first unprocessed batch; a micro-batch
+    * re-run around a crash or a refused CHECK recomputes the same epoch
+    * from the same rows and re-commits the SAME epoch seq, which
+    * [[graft.sinks.AtomicWarehouse.commitEpoch]] no-ops — exactly-once
+    * per epoch end-to-end.
     *
-    * Scale: the stream side never shuffles before staging (dim joins are
-    * broadcasts); per-epoch cost is the batch pipeline's. State lives in
-    * the source checkpoint only — the pipeline itself is stateless
-    * across epochs by design (staging is truncated each drain, the
-    * warehouse merge is read-side). */
+    * The streaming path never writes `dirs.stagingDir`: each epoch
+    * frame is checkpointed in memory, audited and committed as is.
+    *
+    * Scale: the stream side never shuffles before the commit (dim joins
+    * are broadcasts); per-epoch cost is the batch pipeline's. State lives
+    * in the source checkpoint only — the pipeline itself is stateless
+    * across epochs by design (no staging carries rows between epochs,
+    * the warehouse merge is read-side). */
   def streamEpochs(spark: SparkSession, videoStream: DataFrame,
       srcFor: DataFrame => Sources, dirs: Dirs,
       windowStartIso: String, windowEndIso: String,

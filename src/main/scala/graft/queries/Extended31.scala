@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sinks.AtomicWarehouse
 
 /** Round-3 widening, part 31: the two spec-only families from the round-2
   * verdict promoted into the hash-checked battery — the warehouse drain
@@ -10,21 +11,22 @@ import graft.Tables
   */
 object Extended31 {
 
-  /** C3 — the full staging→warehouse drain epoch (K6 append → W2 window
-    * dedup → K7 truncate, ref: Python-pipeline/ingestdatainbigquery.py:
-    * 103-136) executed twice and read back: epoch 1 stages the whole
-    * customer dim, epoch 2 re-stages a "re-fetched" slice (nationkey<10,
-    * segment overwritten) that must win the keyed last-wins merge. The
-    * oracle replays both epochs as a UNION ALL + row_number keep-last —
-    * the same merge the reference runs in SQL after every load. This is
-    * the sink family's hash gate: the parquet round-trips, the sanitize/
-    * all-string casts (F19/F20), the load_seq ordering and the idempotent
-    * re-dedup all have to line up for the hash to match.
+  /** C3 — the full staging→warehouse drain epoch (K6 load → W2 keyed
+    * last-wins merge → K7 truncate, ref: Python-pipeline/
+    * ingestdatainbigquery.py:103-136) executed twice and read back:
+    * epoch 1 stages the whole customer dim, epoch 2 re-stages a
+    * "re-fetched" slice (nationkey<10, segment overwritten) that must win
+    * the keyed last-wins merge. The oracle replays both epochs as a
+    * UNION ALL + row_number keep-last — the same merge the reference runs
+    * in SQL after every load. This is the sink family's hash gate: the
+    * parquet round-trips, the sanitize/all-string casts (F19/F20), the
+    * load_seq ordering and the last-wins read all have to line up for the
+    * hash to match.
     *
-    * Scale: each epoch appends one partition-parallel parquet write and
-    * one key-shuffle dedup — cost tracks the epoch delta + warehouse size,
-    * never re-reads the source, and replaying an epoch is a no-op (same
-    * load_seq wins again). Only string/integer columns are staged so the
+    * Scale: each epoch is one atomic AtomicWarehouse commit of the staged
+    * delta (never a warehouse rewrite); the merge is one key shuffle on
+    * read, and replaying an epoch is a no-op (its seq is already
+    * committed). Only string/integer columns are staged so the
     * cross-engine string rendering is exact. */
   val c3WarehouseDrain = q("c3_warehouse_drain",
     """WITH e1 AS (
@@ -48,12 +50,12 @@ object Extended31 {
     val cust = Tables.customer(s, d)
       .select("c_custkey", "c_name", "c_mktsegment", "c_nationkey")
     cust.write.mode("overwrite").parquet(staging)
-    graft.sinks.Warehouse.drain(s, staging, warehouse, "c_custkey", loadSeq = 1L)
+    AtomicWarehouse.drain(s, staging, warehouse, 1L)
     cust.where(col("c_nationkey") < 10)
       .withColumn("c_mktsegment", lit("REFETCHED"))
       .write.mode("overwrite").parquet(staging)
-    graft.sinks.Warehouse.drain(s, staging, warehouse, "c_custkey", loadSeq = 2L)
-    s.read.parquet(warehouse)
+    AtomicWarehouse.drain(s, staging, warehouse, 2L)
+    AtomicWarehouse.read(s, warehouse, "c_custkey")
       .select("c_custkey", "c_name", "c_mktsegment", "c_nationkey", "load_seq")
   }
 

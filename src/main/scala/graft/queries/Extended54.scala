@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
+import graft.sinks.AtomicWarehouse
 import graft.text.NearDup
 
 /** Round-4 widening, part 54: adversarial-scale dedup hardening. */
@@ -90,7 +91,8 @@ object Extended54 {
     * the last: dags/Dashboard-pipeline.py:26, dataingestion1.py:118-121)
     * executed by the streaming engine: a `Trigger.AvailableNow` file
     * stream over an "incoming" directory drains to staging via
-    * foreachBatch, then the K6→W2→K7 warehouse drain runs — twice, with
+    * foreachBatch, then the AtomicWarehouse drain (K6 load, W2 last-wins
+    * read, K7 truncate) runs — twice, with
     * new files landing between the runs. The CHECKPOINT is what's under
     * test: epoch 2 restarts the stream from the same checkpoint and must
     * process only the files epoch 1 hadn't committed — the incremental
@@ -120,7 +122,7 @@ object Extended54 {
         }
         .start()
       stream.awaitTermination()
-      graft.sinks.Warehouse.drain(s, staging, warehouse, "c_custkey", loadSeq)
+      AtomicWarehouse.drain(s, staging, warehouse, loadSeq)
     }
 
     cust.write.mode("append").parquet(incoming) // epoch-1 files land
@@ -129,7 +131,7 @@ object Extended54 {
       .withColumn("c_mktsegment", lit("REFETCHED"))
       .write.mode("append").parquet(incoming)
     runEpoch(2L)
-    s.read.parquet(warehouse)
+    AtomicWarehouse.read(s, warehouse, "c_custkey")
       .select("c_custkey", "c_name", "c_mktsegment", "c_nationkey", "load_seq")
   }
 
@@ -150,7 +152,7 @@ object Extended54 {
     * the read-side merge (W2's window, one key shuffle), where compaction
     * amortizes it. */
   val c16AtomicRecovery = q("c16_atomic_recovery", drainOracle) { (s, d) =>
-    import graft.sinks.{AtomicWarehouse, Warehouse}
+    import graft.sinks.Warehouse
     val base = freshScratch("c16")
     val staging = s"$base/staging"; val warehouse = s"$base/warehouse"
     val cust = Tables.customer(s, d)

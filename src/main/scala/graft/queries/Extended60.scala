@@ -18,10 +18,11 @@ object Extended60 {
     * a file-source video stream (two day-files, maxFilesPerTrigger=1)
     * drives [[graft.pipeline.Pipeline.streamEpochs]] under
     * `Trigger.AvailableNow` — each micro-batch runs ingest→title-code→
-    * show-join→analytics-merge→derivations as ONE Catalyst plan, stages
-    * to parquet, and commits a CHECK-gated exactly-once drain into the
-    * AtomicWarehouse ([[graft.sinks.Constraints.drainChecked]] over the
-    * pinned staging snapshot). The result is the warehouse snapshot
+    * show-join→analytics-merge→derivations as ONE Catalyst plan,
+    * materializes that epoch frame once, and commits it through a
+    * CHECK-gated exactly-once drain into the AtomicWarehouse
+    * ([[graft.sinks.Constraints.drainChecked]]: the audited frame is the
+    * committed frame). The result is the warehouse snapshot
     * read: every stage's semantics — channel default, purge rules,
     * employee/show lookups, the 2-owner anti-join metrics loop, H:MM:SS
     * rendering, +05:00 local split, rate derivations, the International-
@@ -43,7 +44,7 @@ object Extended60 {
     * `load_seq` is dropped), so the hash is deterministic however the
     * file source orders or coalesces its batches.
     *
-    * Scale: the stream side never shuffles before staging (all dim
+    * Scale: the stream side never shuffles before the commit (all dim
     * joins broadcast), per-epoch cost is the composed batch plan, and
     * the engine adds checkpointed offsets + idempotent epoch commits —
     * crash/retry semantics the reference's scripts lack entirely. */
@@ -346,9 +347,10 @@ object Extended60 {
     * the warehouse commit and the offset commit); a NEW query resumes
     * from the checkpoint alone and finishes the replay. Exactly-once
     * end-to-end falls out of the composition, not luck: a re-run
-    * micro-batch re-stages its epoch and `AtomicWarehouse.commitEpoch`
-    * no-ops the already-committed seq, staging re-writes are overwrite-
-    * idempotent, and re-enrichment is a pure recomputation — so the
+    * micro-batch recomputes its epoch frame from the same rows (no
+    * staging dir carries state between runs), `AtomicWarehouse
+    * .commitEpoch` no-ops the already-committed seq, and re-enrichment
+    * is a pure recomputation — so the
     * final warehouse must hash-match c30's straight-through oracle
     * EXACTLY, wherever the stop landed. This is c26's restart contract
     * lifted from one operator to the reference's entire cron identity.

@@ -10,9 +10,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Atomic-commit warehouse — the transactionality the reference's BigQuery
   * sink gets for free (ref: Python-pipeline/ingestdatainbigquery.py:49-99:
   * each load job + the CREATE OR REPLACE dedup is atomic server-side) and
-  * plain parquet directories lack: `Warehouse.drain`'s append→dedup→
-  * truncate sequence has crash windows where the warehouse holds a
-  * half-appended epoch or a half-rewritten dedup copy.
+  * plain parquet directories lack: an append-then-rewrite-dedup drain
+  * into a plain directory has crash windows where the warehouse holds a
+  * half-appended epoch or a half-rewritten dedup copy. Every pipeline
+  * epoch reaches the warehouse through this object: [[drain]] from a
+  * staging dir, or [[Constraints.drainChecked]] from an epoch frame.
   *
   * Design (log-structured, the public Delta/Iceberg idea at its minimum):
   *
@@ -3266,64 +3268,53 @@ object AtomicWarehouse {
       statsCol: String, lo: String, hi: String): Seq[EpochEntry] =
     entries.filter(_.statsFor(statsCol, key).forall(_.mayIntersect(lo, hi)))
 
-  /** Default drain part-size target: one part file per ~128 MB of
-    * staged bytes, the same granule Spark's own scan split
-    * (`spark.sql.files.maxPartitionBytes`) assumes. Without it a
+  /** Rows per part file of a drained epoch: about 128 MB of staged
+    * parquet at ~128 bytes a row, the granule Spark's own scan split
+    * (`spark.sql.files.maxPartitionBytes`) assumes. Without sizing a
     * 100-row drain run under 32 shuffle partitions writes 32 ~100-byte
     * files, and two cron drains a day compound into the fold probe's
     * measured cliff — 32k tiny files made the 1000-epoch merged read
     * ~12× slower than the same bytes in right-sized parts (BENCH.md
-    * `foldprofile`). Sizing reads NOTHING extra: the staging dir's file
-    * lengths are already on the driver from the snapshot's listing. */
-  val DefaultDrainPartBytes: Long = 128L << 20
+    * `foldprofile`). */
+  private val DrainRowsPerPart: Long = 1L << 20
 
-  /** Full drain epoch against the atomic warehouse: sanitize/all-string
+  /** Full drain epoch from a staging directory: sanitize/all-string
     * staging (F19/F20) → atomic epoch commit → staging truncate (K7).
-    * Crash anywhere and re-running the same call converges: before the
-    * manifest rename the epoch is invisible; after it, the epoch replay
-    * no-ops and only the truncate re-runs. */
+    * The staged row count that sizes the parts comes from the parquet
+    * footers, read on the driver (no Spark job). Crash anywhere and
+    * re-running the same call converges: before the manifest rename the
+    * epoch is invisible; after it, the epoch replay no-ops and only the
+    * truncate re-runs. */
   def drain(spark: SparkSession, stagingDir: String, dir: String,
-      seq: Long, statsKey: Option[String] = None,
-      statsCols: Seq[String] = Nil,
-      partitionBy: Seq[String] = Nil,
-      targetPartBytes: Long = DefaultDrainPartBytes): Unit =
-    drainSnapshot(spark, spark.read.parquet(stagingDir), stagingDir, dir,
-      seq, statsKey, statsCols, partitionBy, targetPartBytes)
-
-  /** [[drain]] over an ALREADY-READ staging DataFrame: the rows committed
-    * are exactly the snapshot's (its parquet file listing is pinned when
-    * the DataFrame is created, so a concurrent staging writer's later
-    * files are invisible to it) — the seam [[Constraints.drainChecked]]
-    * uses so the rows it CHECKED are bit-identical to the rows DRAINED,
-    * with no second directory read between check and commit.
-    *
-    * `targetPartBytes` sizes the epoch's part files from the staging
-    * dir's byte total: the epoch is coalesced to
-    * ceil(stagedBytes / target) partitions (never repartitioned — a
-    * drain must not buy even part sizes with an extra shuffle of the
-    * delta; the scan split already bounds partition size from above).
-    * 0 disables sizing (the write keeps its upstream partitioning). */
-  def drainSnapshot(spark: SparkSession, staging: DataFrame,
-      stagingDir: String, dir: String, seq: Long,
-      statsKey: Option[String] = None,
-      statsCols: Seq[String] = Nil,
-      partitionBy: Seq[String] = Nil,
-      targetPartBytes: Long = DefaultDrainPartBytes): Unit = {
-    val staged0 = Warehouse.allString(Warehouse.sanitizeColumns(staging))
-      .withColumn("load_seq", lit(seq))
-    val staged =
-      if (targetPartBytes <= 0) staged0
-      else {
-        val f = fs(spark, stagingDir)
-        val p = new Path(stagingDir)
-        val bytes =
-          if (f.exists(p)) relativeDataFiles(f, p).map(_._2).sum else 0L
-        val parts = math.max(1L,
-          (bytes + targetPartBytes - 1) / targetPartBytes)
-        staged0.coalesce(math.min(parts, Int.MaxValue.toLong).toInt)
-      }
-    commitEpoch(spark, dir, staged, seq, statsKey, statsCols, partitionBy)
+      seq: Long, statsKey: Option[String] = None): Unit = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val staged = spark.read.parquet(stagingDir)
+    val f = fs(spark, stagingDir)
+    val p = new Path(stagingDir)
+    val rows = relativeDataFiles(f, p).map { case (rel, _) =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(p, rel), f.getConf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    commitDrained(spark, staged, rows, dir, seq, statsKey)
     Warehouse.truncate(spark, stagingDir)
+  }
+
+  /** The drain's commit: `epoch` (of `rows` rows) sanitized and cast
+    * all-string (F19/F20), stamped with `load_seq`, coalesced to
+    * ceil(rows / [[DrainRowsPerPart]]) parts — never repartitioned: a
+    * drain must not buy even part sizes with an extra shuffle of the
+    * delta — and committed as epoch `seq`. Shared by the directory
+    * [[drain]] and the frame drain [[Constraints.drainChecked]]. */
+  private[sinks] def commitDrained(spark: SparkSession, epoch: DataFrame,
+      rows: Long, dir: String, seq: Long,
+      statsKey: Option[String] = None): Unit = {
+    val parts = math.max(1L, (rows + DrainRowsPerPart - 1) / DrainRowsPerPart)
+    val sized = Warehouse.allString(Warehouse.sanitizeColumns(epoch))
+      .withColumn("load_seq", lit(seq))
+      .coalesce(math.min(parts, Int.MaxValue.toLong).toInt)
+    commitEpoch(spark, dir, sized, seq, statsKey)
   }
 }
 

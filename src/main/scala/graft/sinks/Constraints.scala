@@ -1,11 +1,11 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CHECK-constraint gate for warehouse drains — the quality fence the
   * reference applies by hand-inspecting the sheet after each load (and
-  * Delta/BigQuery enforce server-side): a drain whose staging rows
+  * Delta/BigQuery enforce server-side): a drain whose epoch rows
   * violate a declared predicate is REFUSED before anything is committed,
   * so bad batches never reach the warehouse and never cost a rollback.
   *
@@ -24,10 +24,7 @@ object Constraints {
     * (the PREDICATES are SQL by contract — that's the API). */
   def violationReport(df: DataFrame,
       checks: Seq[(String, String)]): DataFrame = {
-    require(checks.nonEmpty, "no constraints declared")
-    val aggs = checks.zipWithIndex.map { case ((_, pred), i) =>
-      sum(when(coalesce(!expr(pred), lit(false)), 1L).otherwise(0L)).as(s"__c$i")
-    }
+    val aggs = violationCounts(checks)
     val one = df.agg(aggs.head, aggs.tail: _*)
     val kv = explode(array(checks.zipWithIndex.map { case ((name, _), i) =>
       struct(lit(name).as("constraint_name"),
@@ -37,32 +34,42 @@ object Constraints {
       col("kv.n_violations"))
   }
 
-  /** [[AtomicWarehouse.drain]] gated on `checks`: any violation aborts
-    * BEFORE the epoch is staged — the warehouse manifest, the epoch dirs
-    * and the staging dir are all left untouched, and the error carries
-    * the per-constraint counts. A clean batch drains normally.
+  /** One conditional sum per constraint, aliased `__c<i>`. */
+  private def violationCounts(checks: Seq[(String, String)]): Seq[Column] = {
+    require(checks.nonEmpty, "no constraints declared")
+    checks.zipWithIndex.map { case ((_, pred), i) =>
+      sum(when(coalesce(!expr(pred), lit(false)), 1L).otherwise(0L)).as(s"__c$i")
+    }
+  }
+
+  /** Commit the epoch frame `epoch` as warehouse epoch `seq`, gated on
+    * `checks`: any violation aborts BEFORE anything is written — the
+    * manifest and the epoch dirs are left untouched, and the error
+    * carries the per-constraint counts. A clean epoch commits through
+    * the drain's all-string, part-sized commit.
     *
-    * CHECK and DRAIN see one snapshot: the staging directory is read
-    * ONCE (the DataFrame's parquet file listing is pinned at creation)
-    * and that same DataFrame flows into
-    * [[AtomicWarehouse.drainSnapshot]] — a concurrent staging writer
-    * cannot slip unchecked files between the audit and the commit, and
-    * the directory isn't listed twice per gated drain. `afterCheck` is a
-    * test seam (fires between the audit and the commit) for pinning
-    * exactly that property. */
-  def drainChecked(spark: SparkSession, stagingDir: String, dir: String,
+    * CHECK and COMMIT see one frame: the audit is one aggregate pass
+    * (the violation sums plus the row count the part sizing needs) and
+    * the same DataFrame is committed, so the rows audited are the rows
+    * committed. Callers pass a frame whose input is pinned — a
+    * `localCheckpoint`ed epoch, or a parquet read (its file listing is
+    * fixed when the DataFrame is created). `afterCheck` is a test seam
+    * (fires between the audit and the commit) for pinning exactly that
+    * property. */
+  def drainChecked(spark: SparkSession, epoch: DataFrame, dir: String,
       seq: Long, checks: Seq[(String, String)],
       afterCheck: () => Unit = () => ()): Unit = {
-    val staged = spark.read.parquet(stagingDir)
-    val bad = violationReport(staged, checks)
-      .where(col("n_violations") > 0)
-      .collect()
+    val audit = epoch.agg(count(lit(1)), violationCounts(checks): _*).head()
+    val rows = audit.getLong(0)
+    val bad = if (rows == 0L) Nil else checks.zipWithIndex.collect {
+      case ((name, _), i) if audit.getLong(i + 1) > 0 =>
+        s"$name=${audit.getLong(i + 1)}"
+    }
     if (bad.nonEmpty)
-      throw new ConstraintViolationException(
-        bad.map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(
-          s"drain epoch $seq refused, constraint violations: ", ", ", ""))
+      throw new ConstraintViolationException(bad.mkString(
+        s"drain epoch $seq refused, constraint violations: ", ", ", ""))
     afterCheck()
-    AtomicWarehouse.drainSnapshot(spark, staged, stagingDir, dir, seq)
+    AtomicWarehouse.commitDrained(spark, epoch, rows, dir, seq)
   }
 }
 

@@ -1,18 +1,14 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Warehouse sink — the reference's BigQuery load path
-  * (ref: Python-pipeline/ingestdatainbigquery.py) re-expressed as a
-  * parquet "warehouse" directory: sanitize column names (F19), optional
-  * all-string mode (F20), append (K6), idempotent window dedup (W2),
-  * staging truncate (K7).
-  *
-  * Scale: append is a partitioned parquet write; dedup is one shuffle on
-  * the key. The drain (append → dedup → truncate) stays idempotent under
-  * replay exactly like the reference (re-dedup after every load).
+/** Plain-directory helpers of the reference's BigQuery load path
+  * (ref: Python-pipeline/ingestdatainbigquery.py): sanitize column names
+  * (F19), all-string mode (F20), hive-partitioned append, small-file
+  * compaction and staging truncate (K7). The load itself — append plus
+  * the keyed last-wins dedup (K6/W2) — is [[AtomicWarehouse.drain]]'s
+  * atomic epoch commit and read-side merge.
   */
 object Warehouse {
 
@@ -31,10 +27,6 @@ object Warehouse {
   def allString(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).cast("string").as(c)): _*)
 
-  /** K6 — append to the warehouse dir (create-if-absent is implicit). */
-  def append(df: DataFrame, warehouseDir: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(warehouseDir)
-
   /** K6 at scale — hive-layout partitioned append: queries filtering on
     * the partition columns prune whole directories at planning time
     * (PartitionFilters in the scan), so a day's query over a years-deep
@@ -45,35 +37,6 @@ object Warehouse {
       partitionCols: Seq[String]): Unit =
     df.write.mode(SaveMode.Append).partitionBy(partitionCols: _*)
       .parquet(warehouseDir)
-
-  /** W2 — idempotent keyed dedup of the warehouse: the reference orders by
-    * CURRENT_TIMESTAMP() (nondeterministic survivor,
-    * ingestdatainbigquery.py:89); we order by an explicit load sequence —
-    * documented divergence for determinism. */
-  def dedup(spark: SparkSession, warehouseDir: String, key: String,
-      orderCol: String): Unit = {
-    val df = spark.read.parquet(warehouseDir)
-    val w = Window.partitionBy(col(key)).orderBy(col(orderCol).desc)
-    val deduped = df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    // same temp-table-then-swap shape as the reference's
-    // CREATE OR REPLACE … _dedup (parquet needs the staging hop too:
-    // can't overwrite a dir while reading it). The swap is a filesystem
-    // RENAME, not a second Spark write of identical bytes — compact's
-    // pattern; halves the dedup pass's write I/O.
-    val tmp = warehouseDir + "_dedup"
-    deduped.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val dst = new org.apache.hadoop.fs.Path(warehouseDir)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // loud on a failed delete: silently renaming onto a live dir would
-    // either fail obscurely or interleave old and new part files
-    if (fs.exists(dst) && !fs.delete(dst, true))
-      throw new java.io.IOException(
-        s"dedup swap failed: could not delete $warehouseDir before rename")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-      throw new java.io.IOException(
-        s"dedup swap failed: rename($tmp -> $warehouseDir)")
-  }
 
   /** Small-file compaction — the maintenance pass every incrementally
     * appended warehouse needs: each micro-batch append (twice daily in
@@ -100,13 +63,19 @@ object Warehouse {
           .partitionBy(partitionCols: _*)
       }
     writer.mode(SaveMode.Overwrite).parquet(tmp)
-    // atomic-ish swap: write once, rename into place (no second write —
-    // unlike dedup's copy-back, compaction output can be large)
+    // swap: write once, rename into place (compaction output can be
+    // large, so no second write). Loud on a failed delete or rename:
+    // renaming onto a live dir would either fail obscurely or interleave
+    // old and new part files
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(warehouseDir)
     val fs = dst.getFileSystem(conf)
-    fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    if (fs.exists(dst) && !fs.delete(dst, true))
+      throw new java.io.IOException(
+        s"compaction swap failed: could not delete $warehouseDir before rename")
+    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
+      throw new java.io.IOException(
+        s"compaction swap failed: rename($tmp -> $warehouseDir)")
   }
 
   /** K7 — truncate staging keeping the schema (clear + header re-append,
@@ -115,15 +84,5 @@ object Warehouse {
     val schema = spark.read.parquet(stagingDir).schema
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .write.mode(SaveMode.Overwrite).parquet(stagingDir)
-  }
-
-  /** Full drain epoch (K6→W2→K7): stage → warehouse, dedup, clear. */
-  def drain(spark: SparkSession, stagingDir: String, warehouseDir: String,
-      key: String, loadSeq: Long): Unit = {
-    val staged = allString(sanitizeColumns(spark.read.parquet(stagingDir)))
-      .withColumn("load_seq", lit(loadSeq))
-    append(staged, warehouseDir)
-    dedup(spark, warehouseDir, key, "load_seq")
-    truncate(spark, stagingDir)
   }
 }

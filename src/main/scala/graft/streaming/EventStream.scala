@@ -273,18 +273,20 @@ object EventStream {
   }
 
   /** §3.3 drain — the staging→warehouse epoch as a foreachBatch sink:
-    * checkpointed offsets give exactly-once per epoch; the idempotent
-    * re-dedup (W2) is kept anyway for reference parity. */
-  def drainSink(stream: DataFrame, warehouseDir: String, checkpointDir: String,
-      key: String): org.apache.spark.sql.streaming.StreamingQuery =
+    * each micro-batch commits as AtomicWarehouse epoch `epochId`
+    * (`load_seq` = `epochId`). Checkpointed offsets give exactly-once per
+    * epoch, and a batch replayed after a crash re-commits a committed
+    * seq, which [[graft.sinks.AtomicWarehouse.commitEpoch]] no-ops;
+    * readers get the keyed last-wins merge from
+    * [[graft.sinks.AtomicWarehouse.read]]. */
+  def drainSink(stream: DataFrame, warehouseDir: String,
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        val spark = batch.sparkSession
-        graft.sinks.Warehouse.append(
-          batch.withColumn("load_seq", lit(epochId)), warehouseDir)
-        graft.sinks.Warehouse.dedup(spark, warehouseDir, key, "load_seq")
+        graft.sinks.AtomicWarehouse.commitEpoch(batch.sparkSession,
+          warehouseDir, batch.withColumn("load_seq", lit(epochId)), epochId)
       }
       .start()
 }

@@ -690,6 +690,19 @@ class PlanAuditSpec extends SparkSuite {
     }
   }
 
+  test("c30: streamed epochs commit one part file each and stage nothing") {
+    SparkEntry.queries("c30_streaming_pipeline_epoch")(spark, sf).count()
+    val base = new java.io.File(sys.props("java.io.tmpdir"), "graft_c30")
+    assert(!new java.io.File(base, "staging").exists(),
+      "the streaming path wrote the staging dir")
+    val epochs = new java.io.File(base, "warehouse").listFiles()
+      .filter(_.getName.startsWith("epoch_"))
+    assert(epochs.length == 2, epochs.map(_.getName).mkString(","))
+    for (e <- epochs)
+      assert(e.listFiles().count(_.getName.endsWith(".parquet")) == 1,
+        s"${e.getName}: ${e.list().mkString(",")}")
+  }
+
   test("composed 7-stage epoch: every dim join broadcasts, no nested loop anywhere") {
     import spark.implicits._
     import graft.pipeline.{Schemas, Stages}

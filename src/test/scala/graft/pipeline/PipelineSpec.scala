@@ -1,13 +1,15 @@
 package graft.pipeline
 
 import graft.SparkSuite
+import graft.sinks.{AtomicWarehouse, ConstraintViolationException}
 import graft.sources.DimLoader
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import java.nio.file.Files
 
 /** End-to-end epoch tests over the committed fixtures (FIXTURES.md §1):
-  * two overlapping epochs, stage goldens, warehouse-drain idempotence. */
+  * two overlapping epochs, stage goldens, warehouse-drain idempotence,
+  * and the streamed epochs' refusal/restart contract. */
 class PipelineSpec extends SparkSuite {
 
   private def videos(name: String): DataFrame =
@@ -41,10 +43,8 @@ class PipelineSpec extends SparkSuite {
 
   test("epoch 1: full A-AD derivation goldens") {
     val dirs = tmpDirs()
-    Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
-      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", loadSeq = 1,
-      drainToWarehouse = false)
-    val staged = spark.read.parquet(dirs.stagingDir)
+    val staged = Pipeline.stageEpoch(spark, sources("videos_epoch1.json"),
+      dirs, "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z")
     val rows = staged.collect().map(r => r.getAs[String]("video_id") -> r).toMap
 
     // window filter: v07 (June) excluded
@@ -93,11 +93,10 @@ class PipelineSpec extends SparkSuite {
 
   test("epoch 2 after epoch 1: keep-last dedup on re-fetched video") {
     val dirs = tmpDirs()
-    Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
-      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", 1, drainToWarehouse = false)
-    Pipeline.runEpoch(spark, sources("videos_epoch2.json"), dirs,
-      "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z", 2, drainToWarehouse = false)
-    val staged = spark.read.parquet(dirs.stagingDir)
+    Pipeline.stageEpoch(spark, sources("videos_epoch1.json"), dirs,
+      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z")
+    val staged = Pipeline.stageEpoch(spark, sources("videos_epoch2.json"),
+      dirs, "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z")
     val titles = staged.collect()
       .map(r => r.getAs[String]("video_id") -> r.getAs[String]("video_title")).toMap
     assert(titles("v02") == "Evening Talk RERUN | K6A") // keep-last
@@ -106,19 +105,18 @@ class PipelineSpec extends SparkSuite {
 
   test("warehouse drain: all-string schema, dedup, staging truncated, idempotent replay") {
     val dirs = tmpDirs()
-    Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
+    val wh = Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
       "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", 1)
-    val wh = spark.read.parquet(dirs.warehouseDir)
     assert(wh.schema.fields.filter(_.name != "load_seq")
       .forall(_.dataType.typeName == "string")) // F20
     assert(wh.count() == 6)
     assert(spark.read.parquet(dirs.stagingDir).count() == 0) // K7 truncate
 
-    // crash-replay: draining an already-drained (empty) staging twice and
-    // re-deduping leaves the warehouse unchanged (idempotence, §2.9)
-    graft.sinks.Warehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir,
-      "video_id", 2)
-    assert(spark.read.parquet(dirs.warehouseDir).count() == 6)
+    // crash-replay: re-running the drain of the committed epoch over the
+    // truncated staging leaves the warehouse unchanged (idempotence, §2.9)
+    AtomicWarehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir, 1)
+    assert(AtomicWarehouse.currentVersion(spark, dirs.warehouseDir) == 1L)
+    assert(AtomicWarehouse.read(spark, dirs.warehouseDir, "video_id").count() == 6)
   }
 
   test("atomic epoch: a violating batch is refused, warehouse and manifest untouched") {
@@ -146,5 +144,59 @@ class PipelineSpec extends SparkSuite {
       "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z", loadSeq = 2,
       checks = Seq("video_id_present" -> "video_id IS NOT NULL"))
     assert(graft.sinks.AtomicWarehouse.currentVersion(spark, dirs.warehouseDir) == 2L)
+  }
+
+  /** The two fixture epochs as two day-files under `root`, one per
+    * trigger (c30's driving shape), drained by [[Pipeline.streamEpochs]]
+    * over a window holding both; rethrows the stream's failure. */
+  private def streamFixtureEpochs(root: String,
+      checks: Seq[(String, String)]): Unit = {
+    val in = new java.io.File(s"$root/videos_in")
+    if (!in.exists()) {
+      in.mkdirs()
+      val t0 = System.currentTimeMillis() - 120000L
+      Seq("videos_epoch1.json", "videos_epoch2.json").zipWithIndex.foreach {
+        case (f, i) =>
+          val day = new java.io.File(in, s"day${i + 1}.json")
+          Files.copy(java.nio.file.Paths.get(fixture(f)), day.toPath)
+          day.setLastModified(t0 + i * 60000L)
+      }
+    }
+    val stream = spark.readStream.schema(Schemas.videoRaw)
+      .option("multiLine", "true").option("maxFilesPerTrigger", 1)
+      .json(in.toString)
+    val src = sources("videos_epoch1.json")
+    Pipeline.streamEpochs(spark, stream, batch => src.copy(videos = batch),
+      Pipeline.Dirs(s"$root/staging", s"$root/warehouse"),
+      "2024-05-01T00:00:00Z", "2024-05-03T23:59:59Z", checks,
+      s"$root/checkpoint").awaitTermination()
+  }
+
+  private def snapshot(root: String): Set[Seq[Any]] =
+    AtomicWarehouse.read(spark, s"$root/warehouse", "video_id")
+      .collect().map(_.toSeq).toSet
+
+  test("stream: a refused epoch restarts from its checkpoint to the straight-through warehouse") {
+    val pass = Seq("video_id_present" -> "video_id IS NOT NULL")
+    val straight = Files.createTempDirectory("graft_stream_ok").toString
+    streamFixtureEpochs(straight, pass)
+    val want = snapshot(straight)
+    assert(want.size == 7) // v01-v06 from epoch 1, v02 re-fetched + v08
+
+    // epoch 2 (the 05-03 day-file) violates: the stream fails on it with
+    // epoch 1 committed and epoch 2's offsets logged but not committed
+    val root = Files.createTempDirectory("graft_stream_refuse").toString
+    val e = intercept[StreamingQueryException] {
+      streamFixtureEpochs(root,
+        Seq("before_may3" -> "published_at < '2024-05-03'"))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ConstraintViolationException]), e)
+    assert(AtomicWarehouse.currentVersion(spark, s"$root/warehouse") == 1L)
+
+    // the restart replays epoch 2 from the checkpoint with passing checks
+    streamFixtureEpochs(root, pass)
+    assert(AtomicWarehouse.currentVersion(spark, s"$root/warehouse") == 2L)
+    assert(snapshot(root) == want)
   }
 }

@@ -653,20 +653,17 @@ class AtomicWarehouseSpec extends SparkSuite {
     val staging = s"$base/staging"; val wh = s"$base/wh"
     // 8 tiny staged shards — the cron-drain shape that compounded into
     // the fold probe's 32k-file cliff; a few hundred bytes must land as
-    // ONE part file, not 8
+    // ONE part file, not 8 (the staged footers' row count sizes parts)
     (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v")
       .repartition(8).write.parquet(staging)
     AtomicWarehouse.drain(spark, staging, wh, 1L, statsKey = Some("k"))
     assert(epochParquetFiles(wh, "epoch_1") == 1)
-    // sizing off (targetPartBytes = 0): upstream partitioning kept —
-    // drive the snapshot form with a pinned 8-partition frame (the
-    // dir-reading form would let Spark's small-file packing choose)
-    (41L to 80L).map(k => (k, s"v$k")).toDF("k", "v")
-      .write.mode("overwrite").parquet(staging)
-    AtomicWarehouse.drainSnapshot(spark,
-      spark.read.parquet(staging).repartition(8), staging, wh, 2L,
-      statsKey = Some("k"), targetPartBytes = 0L)
-    assert(epochParquetFiles(wh, "epoch_2") == 8)
+    // the frame form (the CHECK-gated drain's commit) sizes from the
+    // audited row count: a pinned 8-partition frame lands as one part
+    AtomicWarehouse.commitDrained(spark,
+      (41L to 80L).map(k => (k, s"v$k")).toDF("k", "v").repartition(8),
+      40L, wh, 2L, statsKey = Some("k"))
+    assert(epochParquetFiles(wh, "epoch_2") == 1)
     assert(AtomicWarehouse.read(spark, wh, "k").count() == 80)
   }
 

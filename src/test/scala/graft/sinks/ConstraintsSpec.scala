@@ -10,26 +10,22 @@ class ConstraintsSpec extends SparkSuite {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("violating drain is refused before anything is staged") {
-    val base = tmp("cons_refuse")
-    val staging = s"$base/staging"; val wh = s"$base/wh"
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(staging)
-    Constraints.drainChecked(spark, staging, wh, 1L, Seq("k_pos" -> "k > 0"))
+    val wh = tmp("cons_refuse") + "/wh"
+    Constraints.drainChecked(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      wh, 1L, Seq("k_pos" -> "k > 0"))
     assert(AtomicWarehouse.currentVersion(spark, wh) == 1L)
     // epoch 2 carries a violation: k = -7
-    Seq((3L, "c"), (-7L, "bad")).toDF("k", "v")
-      .write.mode("overwrite").parquet(staging)
     val e = intercept[ConstraintViolationException] {
-      Constraints.drainChecked(spark, staging, wh, 2L, Seq("k_pos" -> "k > 0"))
+      Constraints.drainChecked(spark, Seq((3L, "c"), (-7L, "bad")).toDF("k", "v"),
+        wh, 2L, Seq("k_pos" -> "k > 0"))
     }
     assert(e.getMessage.contains("k_pos=1"))
-    // nothing moved: no new version, no epoch dir, staging NOT truncated
+    // nothing moved: no new version, no epoch dir
     assert(AtomicWarehouse.currentVersion(spark, wh) == 1L)
     assert(!new java.io.File(s"$wh/epoch_2").exists())
-    assert(spark.read.parquet(staging).count() == 2)
     // fixing the batch lets the same drain proceed
-    Seq((3L, "c"), (7L, "good")).toDF("k", "v")
-      .write.mode("overwrite").parquet(staging)
-    Constraints.drainChecked(spark, staging, wh, 2L, Seq("k_pos" -> "k > 0"))
+    Constraints.drainChecked(spark, Seq((3L, "c"), (7L, "good")).toDF("k", "v"),
+      wh, 2L, Seq("k_pos" -> "k > 0"))
     assert(AtomicWarehouse.currentVersion(spark, wh) == 2L)
     assert(AtomicWarehouse.read(spark, wh, "k").count() == 4)
   }
@@ -56,11 +52,14 @@ class ConstraintsSpec extends SparkSuite {
     val base = tmp("cons_snapshot")
     val staging = s"$base/staging"; val wh = s"$base/wh"
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(staging)
-    // a concurrent writer lands a VIOLATING file between the audit and
-    // the commit (the afterCheck seam fires in exactly that window): the
-    // drained epoch must be the checked snapshot — the late row neither
-    // fails the (already-passed) check nor sneaks into the warehouse
-    Constraints.drainChecked(spark, staging, wh, 1L,
+    // the epoch frame is a parquet read: its file listing is fixed when
+    // the DataFrame is created. A concurrent writer lands a VIOLATING file
+    // between the audit and the commit (the afterCheck seam fires in
+    // exactly that window): the committed rows must be the audited rows
+    // — the late row neither fails the (already-passed) check nor sneaks
+    // into the warehouse
+    val epoch = spark.read.parquet(staging)
+    Constraints.drainChecked(spark, epoch, wh, 1L,
       Seq("k_pos" -> "k > 0"),
       afterCheck = () =>
         Seq((-99L, "late")).toDF("k", "v")
@@ -68,11 +67,11 @@ class ConstraintsSpec extends SparkSuite {
     val drained = AtomicWarehouse.read(spark, wh, "k")
       .select(col("k").cast("long"), col("v"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(drained == Set((1L, "a"), (2L, "b")),
-      s"drained epoch diverged from the checked snapshot: $drained")
-    // the late row is gone with the truncate (K7 truncates the staging
-    // DIRECTORY; the next epoch's writer re-stages everything current) —
-    // what matters is it never reached the warehouse unchecked
-    assert(spark.read.parquet(staging).count() == 0)
+    val audited = epoch.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(drained == audited && audited == Set((1L, "a"), (2L, "b")),
+      s"committed epoch $drained diverged from the audited frame $audited")
+    // the frame drain never touches the staging dir: the late file is
+    // still there, and never reached the warehouse unchecked
+    assert(spark.read.parquet(staging).count() == 3)
   }
 }

@@ -81,4 +81,28 @@ class WarehouseSpec extends SparkSuite {
     assert(parquetFiles(flat).length == 1)
     assert(spark.read.parquet(flat).count() == 10)
   }
+
+  test("compaction fails loudly when the swap's delete fails, data intact") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.nodelete.impl", classOf[NoDeleteFileSystem].getName)
+    conf.setBoolean("fs.nodelete.impl.disable.cache", true)
+    val dir = java.nio.file.Files.createTempDirectory("wh_nodelete").toString + "/wh"
+    (1 to 3).foreach(b => Seq((b.toLong, b * 1.0)).toDF("id", "v")
+      .write.mode("append").parquet(dir))
+    val e = intercept[java.io.IOException] {
+      Warehouse.compact(spark, s"nodelete://$dir", Seq.empty, targetRowsPerFile = 1000L)
+    }
+    assert(e.getMessage.contains("could not delete"), e.getMessage)
+    // no rename onto the live dir: its rows are all still there, unmixed
+    assert(spark.read.parquet(dir).count() == 3)
+  }
+}
+
+/** A local filesystem under the `nodelete` scheme whose `delete` refuses
+  * (returns false, deletes nothing) — a permission-denied or flaky store,
+  * for pinning that swaps check the delete's result. */
+class NoDeleteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("nodelete:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean = false
 }

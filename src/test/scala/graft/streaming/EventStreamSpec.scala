@@ -233,13 +233,13 @@ class EventStreamSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_stream").toString
     val input = MemoryStream[(Long, String)]
     val q = EventStream.drainSink(input.toDF().toDF("id", "payload"),
-      s"$root/wh", s"$root/ckpt", "id")
+      s"$root/wh", s"$root/ckpt")
     input.addData((1L, "a"), (2L, "b"))
     q.processAllAvailable()
     input.addData((2L, "b2"), (3L, "c"))
     q.processAllAvailable()
     q.stop()
-    val wh = spark.read.parquet(s"$root/wh")
+    val wh = graft.sinks.AtomicWarehouse.read(spark, s"$root/wh", "id")
     assert(wh.count() == 3) // deduped on id, keep-latest-epoch
     val v2 = wh.where(col("id") === 2).select("payload").head().getString(0)
     assert(v2 == "b2")
