@@ -1,18 +1,18 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import graft.sinks.{AtomicWarehouse, Constraints}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sinks.Constraints
 import graft.sources.{AnalyticsSource, DimLoader}
 
 /** End-to-end epoch runner — the reference's Airflow DAG
   * (ref: dags/Dashboard-pipeline.py) collapses into one composed Catalyst
   * plan per epoch: sources → 6 transform stages → CHECK-gated atomic
-  * warehouse commit. Every epoch reaches the warehouse through
-  * [[graft.sinks.AtomicWarehouse]]; only the batch [[runEpoch]] (and the
-  * stage-only [[stageEpoch]]) keep the reference's staging "sheet" as a
-  * parquet dir, the streaming [[streamEpochs]] commits each epoch frame
-  * directly. Scheduling (2×/day cron) stays external, exactly like the
-  * reference; `runDate`/window bounds are injected for determinism.
+  * warehouse commit. Every epoch, batch ([[runEpoch]]) or streamed
+  * ([[streamEpochs]]), commits its frame straight into
+  * [[graft.sinks.AtomicWarehouse]]; the reference's staging "sheet" has
+  * no parquet copy. Scheduling (2×/day cron) stays external, exactly
+  * like the reference; `runDate`/window bounds are injected for
+  * determinism.
   */
 object Pipeline {
 
@@ -60,65 +60,30 @@ object Pipeline {
     Stages.toCanonical(Stages.derive(s5, src.cpmCategories))
   }
 
-  /** Stage-only epoch — the reference's sheet update without the load:
-    * stages 1–6 over the current staging rows (keep-last across epochs),
-    * written back as the new staging dir. The plan reads the dir it
-    * replaces, so the write goes to a tmp dir that is then swapped in by
-    * rename. Returns the new staging rows. */
-  def stageEpoch(spark: SparkSession, src: Sources, dirs: Dirs,
-      windowStartIso: String, windowEndIso: String): DataFrame = {
-    val dst = new org.apache.hadoop.fs.Path(dirs.stagingDir)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(dst))
-        Some(spark.read.schema(Schemas.staging).parquet(dirs.stagingDir))
-      else None
-    val tmp = dirs.stagingDir + "_epoch_tmp"
-    epochFrame(spark, src, prior, windowStartIso, windowEndIso)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    // loud on a failed delete: silently renaming onto a live dir would
-    // either fail obscurely or interleave old and new part files
-    if (fs.exists(dst) && !fs.delete(dst, true))
-      throw new java.io.IOException(
-        s"staging swap failed: could not delete ${dirs.stagingDir} before rename")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-      throw new java.io.IOException(
-        s"staging swap failed: rename($tmp -> ${dirs.stagingDir})")
-    spark.read.parquet(dirs.stagingDir)
-  }
-
-  /** One batch epoch, the reference's sheet-then-load shape: [[stageEpoch]],
-    * then stage 7 drains staging into the AtomicWarehouse
-    * ([[graft.sinks.AtomicWarehouse.drain]]: all-string epoch commit,
-    * staging truncate; replaying a committed `loadSeq` is a no-op).
-    * Returns the warehouse's last-wins snapshot. */
-  def runEpoch(spark: SparkSession, src: Sources, dirs: Dirs,
-      windowStartIso: String, windowEndIso: String, loadSeq: Long): DataFrame = {
-    stageEpoch(spark, src, dirs, windowStartIso, windowEndIso)
-    AtomicWarehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir, loadSeq)
-    AtomicWarehouse.read(spark, dirs.warehouseDir, "video_id")
-  }
-
-  /** The PRODUCTION-SHAPED epoch: stages 1–6 as one plan, materialized
-    * ONCE (`localCheckpoint`), then a CHECK-gated, atomically-committed
-    * drain of that same frame into the [[graft.sinks.AtomicWarehouse]]
+  /** One epoch: stages 1–6 as one plan, materialized ONCE
+    * (`localCheckpoint`), then a CHECK-gated, atomically-committed drain
+    * of that same frame into the [[graft.sinks.AtomicWarehouse]]
     * ([[graft.sinks.Constraints.drainChecked]]: the audited rows are the
     * committed rows; a violating batch aborts with the warehouse
     * untouched). No staging dir is read or written — `dirs.stagingDir`
-    * is unused here. The epoch has no prior staged rows: each epoch is
-    * its own batch, keep-last deduped within itself. This is the
-    * reference's cron unit (dags/Dashboard-pipeline.py:20-40) with the
-    * transactionality its BigQuery sink provides server-side. */
-  def runEpochAtomic(spark: SparkSession, src: Sources, dirs: Dirs,
+    * is unused. The epoch has no prior staged rows: each epoch is its
+    * own batch, keep-last deduped within itself, and keep-last ACROSS
+    * epochs is the warehouse's last-wins read. Replaying a committed
+    * `loadSeq` is a no-op. This is the reference's cron unit
+    * (dags/Dashboard-pipeline.py:20-40) with the transactionality its
+    * BigQuery sink provides server-side. Returns the committed epoch
+    * frame, typed (the warehouse stores it all-string). */
+  def runEpoch(spark: SparkSession, src: Sources, dirs: Dirs,
       windowStartIso: String, windowEndIso: String, loadSeq: Long,
-      checks: Seq[(String, String)]): Unit = {
+      checks: Seq[(String, String)]): DataFrame = {
     val epoch = epochFrame(spark, src, None, windowStartIso, windowEndIso)
       .localCheckpoint()
     Constraints.drainChecked(spark, epoch, dirs.warehouseDir, loadSeq, checks)
+    epoch
   }
 
   /** The WHOLE pipeline on the STREAMING ENGINE: each micro-batch of
-    * arriving videos runs one full [[runEpochAtomic]] epoch — DSv2/file
+    * arriving videos runs one full [[runEpoch]] epoch — DSv2/file
     * source → stages 1–6 → CHECK-gated exactly-once AtomicWarehouse
     * drain — under whatever trigger the caller starts it with
     * (`Trigger.AvailableNow` reproduces the reference's cron cadence:
@@ -149,8 +114,9 @@ object Pipeline {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        runEpochAtomic(spark, srcFor(batch), dirs,
+        runEpoch(spark, srcFor(batch), dirs,
           windowStartIso, windowEndIso, loadSeq = id + 1, checks)
+        ()
       }
       .start()
 }

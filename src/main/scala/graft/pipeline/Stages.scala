@@ -8,8 +8,8 @@ import graft.functions.SecondsToHms
 /** The reference's 7 pipeline stages as pure DataFrame → DataFrame
   * functions (SURVEY.md §3). The inter-stage Google-Sheet handoff
   * disappears into Catalyst's logical plan; stages compose lazily and the
-  * whole epoch optimizes as ONE plan (or checkpoints through the staging
-  * parquet dir when stage isolation is wanted).
+  * whole epoch optimizes as ONE plan ([[Pipeline.runEpoch]] materializes
+  * it once per epoch with `localCheckpoint`, in memory, not on disk).
   */
 object Stages {
 

@@ -63,19 +63,29 @@ object Warehouse {
           .partitionBy(partitionCols: _*)
       }
     writer.mode(SaveMode.Overwrite).parquet(tmp)
-    // swap: write once, rename into place (compaction output can be
-    // large, so no second write). Loud on a failed delete or rename:
-    // renaming onto a live dir would either fail obscurely or interleave
-    // old and new part files
+    // rename-aside swap: dir → dir_old, tmp → dir, delete dir_old. A
+    // crash or a refused call at any step leaves a complete copy at
+    // `warehouseDir` or at the aside name, never only in the tmp dir
+    // (a delete-then-rename swap strands the data there). Every refused
+    // call fails loudly.
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(warehouseDir)
+    val aside = new org.apache.hadoop.fs.Path(warehouseDir + "_old")
     val fs = dst.getFileSystem(conf)
-    if (fs.exists(dst) && !fs.delete(dst, true))
-      throw new java.io.IOException(
-        s"compaction swap failed: could not delete $warehouseDir before rename")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-      throw new java.io.IOException(
-        s"compaction swap failed: rename($tmp -> $warehouseDir)")
+    def fail(what: String) =
+      throw new java.io.IOException(s"compaction swap failed: $what")
+    // renaming onto an existing aside dir would nest the live dir in it
+    if (fs.exists(aside))
+      fail(s"$aside exists (an interrupted swap's previous data); " +
+        "restore or remove it first")
+    if (!fs.rename(dst, aside)) fail(s"rename($warehouseDir -> $aside)")
+    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
+      val restored = fs.rename(aside, dst)
+      fail(s"rename($tmp -> $warehouseDir); the previous data is " +
+        (if (restored) "back in place" else s"intact at $aside"))
+    }
+    if (!fs.delete(aside, true))
+      fail(s"could not delete $aside; the compacted data is in place")
   }
 
   /** K7 — truncate staging keeping the schema (clear + header re-append,

@@ -1,7 +1,6 @@
 package graft.sources.v2
 
 import java.util.{Map => JMap}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -61,14 +60,16 @@ import graft.sinks.AtomicWarehouse.{ColStats, EpochEntry}
   * Time travel: `.option("version", N)` reads the manifest as of version
   * N — same contract as [[AtomicWarehouse.readVersion]].
   *
-  * Files are decoded executor-side with the parquet-hadoop Group reader —
-  * plain public parquet, no Spark internals — supporting the flat
-  * long/int/string/double/float/boolean/date/timestamp shapes warehouse
-  * epochs hold (drained epochs are all-string + load_seq by F19/F20;
-  * directly-committed epochs keep their primitive types). INT96 and
-  * INT64(MILLIS|MICROS) timestamps both decode. A production deployment
-  * would swap in the vectorized columnar reader; the CONTRACT — what is
-  * pruned, what is projected, what is residual — is what this class pins.
+  * Files are decoded executor-side by Spark's own vectorized parquet
+  * reader — the same decoder [[AtomicWarehouse.read]] scans with — each
+  * under its physical column names, with pushed filters skipping row
+  * groups by footer statistics (the third pruning level, the one
+  * `clusterBy` writes feed); [[WarehouseReaderFactory]] maps the decoded
+  * rows onto the served schema and applies tombstone drops. Drained
+  * epochs are all-string + load_seq by F19/F20; directly-committed epochs
+  * keep their primitive types; INT96 and INT64(MILLIS|MICROS) timestamps
+  * both decode, never rebased. The CONTRACT — what is pruned, what is
+  * projected, what is residual — is what this class pins.
   *
   * Scale: planning reads ONE manifest file (O(epochs) entries, kept short
   * by compaction) and lists only surviving epochs' dirs; files BIN-PACK
@@ -743,17 +744,15 @@ object WarehouseConnector {
     * first-fit over size-descending files) so the connector schedules
     * the same O(bytes) task count the built-in parquet source would,
     * while small tables still fan out across cores. Files are whole
-    * units here (the Group reader doesn't split row groups) — for the
-    * MB-scale parts the sized drains write, a file fits one bin
-    * anyway. */
-  def packPartitions(spark: SparkSession,
-      files: Seq[(WarehouseFilePartition, Long)])
+    * units here (never split by row-group range) — for the MB-scale
+    * parts the sized drains write, a file fits one bin anyway. */
+  def packPartitions(spark: SparkSession, files: Seq[WarehouseFilePartition])
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val sqlConf = org.apache.spark.sql.internal.SQLConf.get
     val maxBytes = sqlConf.filesMaxPartitionBytes
     val openCost = sqlConf.filesOpenCostInBytes
     val parallelism = spark.sparkContext.defaultParallelism.toLong max 1L
-    val total = files.map { case (_, len) => len + openCost }.sum
+    val total = files.map(_.len + openCost).sum
     val maxSplit = math.min(maxBytes,
       math.max(openCost, total / parallelism))
     val bins = Array.newBuilder[org.apache.spark.sql.connector.read.InputPartition]
@@ -765,8 +764,8 @@ object WarehouseConnector {
       bins += (if (fs.length == 1) fs(0) else WarehouseFilesPartition(fs))
       cur.clear(); curBytes = 0L; curN = 0
     }
-    files.sortBy { case (_, len) => -len }.foreach { case (fp, len) =>
-      val cost = len + openCost
+    files.sortBy(-_.len).foreach { fp =>
+      val cost = fp.len + openCost
       if (curN > 0 && curBytes + cost > maxSplit) flush()
       cur += fp; curBytes += cost; curN += 1
     }
@@ -1043,6 +1042,21 @@ object WarehouseConnector {
   def dropsFor(tombstones: Seq[TombstoneKeys], pos: Int,
       ops: Seq[(Int, AtomicWarehouse.ColMapOp)] = Nil)
       : Array[(String, Array[Long], Array[String])] =
+    resolvedTombstones(tombstones, pos, ops).groupBy(_.keyCol)
+      .map { case (c, ts) => (c, ts.flatMap(_.keys).distinct.toArray,
+        ts.flatMap(_.strKeys).distinct.toArray) }
+      .toArray
+
+  /** The physical key columns [[dropsFor]] compares for `pos`, without
+    * gathering any key lists — what the planner needs to decide which
+    * columns a file is read with. */
+  def dropKeyCols(tombstones: Seq[TombstoneKeys], pos: Int,
+      ops: Seq[(Int, AtomicWarehouse.ColMapOp)]): Seq[String] =
+    resolvedTombstones(tombstones, pos, ops).map(_.keyCol).distinct
+      .flatMap(AtomicWarehouse.keyParts).distinct
+
+  private def resolvedTombstones(tombstones: Seq[TombstoneKeys], pos: Int,
+      ops: Seq[(Int, AtomicWarehouse.ColMapOp)]): Seq[TombstoneKeys] =
     tombstones.filter(_.pos > pos).flatMap { t =>
       if (ops.isEmpty) Some(t)
       else {
@@ -1051,10 +1065,88 @@ object WarehouseConnector {
         if (resolved.exists(_.isEmpty)) None
         else Some(t.copy(keyCol = resolved.flatten.mkString(",")))
       }
-    }.groupBy(_.keyCol)
-      .map { case (c, ts) => (c, ts.flatMap(_.keys).distinct.toArray,
-        ts.flatMap(_.strKeys).distinct.toArray) }
-      .toArray
+    }
+
+  /** The physical columns a planned file is decoded with — the schema
+    * [[WarehouseReaderFactory]] asks Spark's parquet reader for: every
+    * projected served column the file holds, under the name the file
+    * stores it (column mapping), typed as served; then the tombstone key
+    * columns its drops compare, typed as the file holds them. `physical`
+    * is the file's entry schema ([[entrySchema]]); hive partition values
+    * and the per-file constants are served by the factory, never read. */
+  def fileReadSchema(required: StructType, physical: StructType,
+      p: WarehouseFilePartition, dropCols: Seq[String]): StructType = {
+    val parts = p.partValues.map(_._1).toSet
+    val held = physical.fieldNames.filterNot(parts).toSet
+    val served = required.fields.toSeq.flatMap { f =>
+      if (f.name == PosColumn) None
+      else p.physOf(f.name).filter(held).map(StructField(_, f.dataType))
+    }
+    val keys = dropCols.filter(c => held(c) && !served.exists(_.name == c))
+      .map(c => physical(c).copy(nullable = true))
+    StructType((served ++ keys).distinctBy(_.name))
+  }
+
+  /** The distinct read schemas one scan's (or one stream's) files are
+    * decoded with. Spark's parquet reader takes its requested schema
+    * from the Hadoop conf, so each schema is broadcast ONCE inside its
+    * own conf — never once per file. Files carry an index into the list
+    * ([[WarehouseFilePartition.read]]); it only grows, so an index stays
+    * valid for every reader factory built after the file was planned. */
+  final class FileReads(required: StructType) {
+    private val schemas =
+      scala.collection.mutable.ArrayBuffer.empty[StructType]
+    private val confs = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration]]
+
+    /** `p` with its read schema registered. */
+    def plan(p: WarehouseFilePartition, physical: StructType,
+        dropCols: => Seq[String]): WarehouseFilePartition = synchronized {
+      val s = fileReadSchema(required, physical, p,
+        if (p.applyDrops) dropCols else Nil)
+      val i = schemas.indexOf(s) match {
+        case -1 => schemas += s; schemas.size - 1
+        case i => i
+      }
+      p.copy(read = i)
+    }
+
+    /** Every registered schema with its broadcast reader conf. */
+    def broadcast(spark: SparkSession): Array[WarehouseReaderFactory.Read] =
+      synchronized {
+        while (confs.size < schemas.size)
+          confs += readerConf(spark, schemas(confs.size))
+        schemas.zip(confs).map { case (s, c) =>
+          WarehouseReaderFactory.Read(s, c) }.toArray
+      }
+  }
+
+  /** The Hadoop conf Spark's own `ParquetScan.createReaderFactory` hands
+    * its reader: the session's conf plus the requested schema and the
+    * schema-conversion flags, broadcast. */
+  private def readerConf(spark: SparkSession, schema: StructType) = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+    import org.apache.spark.sql.internal.SQLConf
+    val sql = spark.sessionState.conf
+    val c = spark.sessionState.newHadoopConf()
+    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    c.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, schema.json)
+    c.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    c.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    c.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sql.isParquetBinaryAsString)
+    c.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sql.isParquetINT96AsTimestamp)
+    c.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sql.legacyParquetNanosAsLong)
+    spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(c))
+  }
 
   /** Does the file's hive partition value satisfy `filter`? Only exact
     * column matches prune; comparisons run on the RAW path string for
@@ -1826,6 +1918,12 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
           .empty[Int, (Array[(String, String)], Array[String])]
         def resoFor(pos: Int) = resoMemo.getOrElseUpdate(pos,
           WarehouseConnector.colMapResolution(pos, ops))
+        val dropMemo = scala.collection.mutable.HashMap.empty[Int, Seq[String]]
+        val byName = (allEntries ++ entries).map(e => e.name -> e).toMap
+        def planned(p: WarehouseFilePartition, epoch: String) =
+          fileReads.plan(p, entrySchema(spark, dir,
+            byName.getOrElse(epoch, EpochEntry(epoch))),
+            dropMemo.getOrElseUpdate(p.pos, dropKeyCols(tombstones, p.pos, ops)))
         val files = listPlannedFiles()
           .filter(file => all.forall(fileMayMatch(file, _)))
         val packed = WarehouseConnector.packPartitions(spark, files.map { file =>
@@ -1835,13 +1933,13 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
           // as the tail) — first-appearance order below position 0
           val pos = posOf.getOrElse(file.epoch, foldedPos.getOrElse(file.epoch, 0))
           val (rn, mk) = resoFor(pos)
-          WarehouseFilePartition(file.path, file.partValues.toArray,
-            pos,
+          planned(WarehouseFilePartition(file.path, file.len,
+            file.partValues.toArray, pos,
             commitVersion = v,
             commitTsMicros = tsOf.getOrElse(v, -1L),
             changeType =
               WarehouseConnector.feedChangeType(file.epoch),
-            renames = rn, masked = mk) -> file.len
+            renames = rn, masked = mk), file.epoch)
         })
         // readChangeFeed: each in-range tombstone's key list becomes one
         // partition of synthesized _change_type='delete' rows — O(purged
@@ -1877,12 +1975,11 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
         // at the sentinel's position (above the entry's insert, below
         // every survivor). O(removed entries) extra file reads, zero
         // driver-side key collection.
-        val restoreDeleteFiles: Seq[(WarehouseFilePartition, Long)] =
+        val restoreDeleteFiles: Seq[WarehouseFilePartition] =
           changePlan match {
             case Some((_, _, _, rDels)) if rDels.nonEmpty =>
               val f = new Path(dir).getFileSystem(
                 spark.sparkContext.hadoopConfiguration)
-              val byName = allEntries.map(en => en.name -> en).toMap
               rDels.flatMap { case (n, v) =>
                 val dfiles = byName.get(n)
                   .map(WarehouseConnector.entryFiles(f, dir, _))
@@ -1890,11 +1987,11 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
                 val pos = foldedPos.getOrElse(
                   WarehouseConnector.restoreDelSentinel(n, v), 0)
                 val (rn, mk) = resoFor(posOf.getOrElse(n, pos))
-                dfiles.map(file => WarehouseFilePartition(file.path,
-                  file.partValues.toArray, pos, applyDrops = false,
+                dfiles.map(file => planned(WarehouseFilePartition(file.path,
+                  file.len, file.partValues.toArray, pos, applyDrops = false,
                   commitVersion = v,
                   commitTsMicros = tsOf.getOrElse(v, -1L),
-                  changeType = "delete", renames = rn, masked = mk) -> file.len)
+                  changeType = "delete", renames = rn, masked = mk), n))
               }
             case _ => Nil
           }
@@ -1903,11 +2000,15 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
           deletes
     }
 
+  /** The read schemas of this scan's planned files ([[planInputPartitions]]
+    * registers them; Spark plans the partitions before it asks for the
+    * reader factory). */
+  private lazy val fileReads = new FileReads(required)
+
   override def createReaderFactory(): PartitionReaderFactory =
     if (pushedAgg.isDefined) new WarehouseAggReaderFactory
     else new WarehouseReaderFactory(required, pruneFilters ++ runtimeFilters,
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration), tombstones,
+      fileReads.broadcast(spark), tombstones,
       AtomicWarehouse.colMapOps(allEntries))
 
   override def description(): String =
@@ -1959,8 +2060,11 @@ class WarehouseAggReaderFactory extends PartitionReaderFactory {
   * binary and derives each position's drops memoized; the partition
   * carries only its manifest position and whether drops apply (the
   * stream's stepped batches never apply them — a tombstone either
-  * failed the tail or was ignoreDeletes-skipped). */
+  * failed the tail or was ignoreDeletes-skipped). `len` is the file's
+  * byte length; `read` indexes the factory's read schemas
+  * ([[WarehouseConnector.FileReads]]). */
 final case class WarehouseFilePartition(path: String,
+    len: Long,
     partValues: Array[(String, String)],
     pos: Int = 0,
     applyDrops: Boolean = true,
@@ -1974,8 +2078,16 @@ final case class WarehouseFilePartition(path: String,
     // away or dropped after this entry committed — a later re-added
     // column of the same name is a different column).
     renames: Array[(String, String)] = Array.empty,
-    masked: Array[String] = Array.empty)
-    extends InputPartition
+    masked: Array[String] = Array.empty,
+    read: Int = -1)
+    extends InputPartition {
+  /** The physical column this file stores served column `n` under: the
+    * rename indirection first, the name itself unless a later directive
+    * remapped or dropped it. */
+  def physOf(n: String): Option[String] =
+    renames.collectFirst { case (`n`, ph) => ph }
+      .orElse(if (masked.contains(n)) None else Some(n))
+}
 
 /** Several bin-packed small files served by ONE task (see
   * [[WarehouseConnector.packPartitions]]); the reader chains the
@@ -1994,17 +2106,35 @@ final case class WarehouseDeleteKeysPartition(keyCol: String,
     pos: Int, commitVersion: Long, commitTsMicros: Long = -1L)
     extends InputPartition
 
-/** Executor-side parquet decode via the public parquet-hadoop Group
-  * reader: footer first (for the file's actual columns — additive
-  * evolution means a requested column may be absent, served as null),
-  * then a PROJECTED read of exactly the requested-and-present columns.
-  * Hive partition values ride in from the path. */
+object WarehouseReaderFactory {
+  /** One distinct file read schema and the broadcast Hadoop conf that
+    * carries it to Spark's parquet reader. */
+  final case class Read(schema: StructType,
+      conf: org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration])
+}
+
+/** Executor-side decode through Spark's own parquet reader
+  * (`ParquetPartitionReaderFactory`, the reader behind
+  * `spark.read.parquet` and [[AtomicWarehouse.read]]): vectorized
+  * decode, row-group skipping from the pushed filters (Spark's
+  * `ParquetFilters` over each footer's statistics), and nulls for
+  * requested columns a file lacks. Each file is read under its PHYSICAL
+  * schema ([[WarehouseConnector.fileReadSchema]], one of `reads`); this
+  * factory maps the decoded rows onto the served schema — renamed
+  * columns under their served names, masked and absent columns null,
+  * hive partition values and the per-file `_pos`/change-feed columns as
+  * constants — and applies the tombstone key drops to the decoded
+  * values. Every filter stays residual: Spark re-filters the rows of the
+  * row groups that survive. */
 class WarehouseReaderFactory(required: StructType,
-    filters: Array[Filter] = Array.empty,
-    hadoopConf: org.apache.spark.util.SerializableConfiguration = null,
+    filters: Array[Filter],
+    reads: Array[WarehouseReaderFactory.Read],
     tombstones: Seq[WarehouseConnector.TombstoneKeys] = Nil,
     colMapOps: Seq[(Int, graft.sinks.AtomicWarehouse.ColMapOp)] = Nil)
     extends PartitionReaderFactory {
+  import WarehouseConnector.{ChangeTypeColumn, CommitTimestampColumn,
+    CommitVersionColumn, PosColumn}
 
   /** Per-position drop lists derived from the factory-shipped tombstone
     * list — key columns resolved through the column-mapping directives
@@ -2017,131 +2147,19 @@ class WarehouseReaderFactory(required: StructType,
     if (tombstones.isEmpty) Array.empty
     else dropsByPos.computeIfAbsent(pos,
       p => WarehouseConnector.dropsFor(tombstones, p, colMapOps))
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-  import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 
-  private val JulianDayOfEpoch = 2440588L
+  /** The task's session conf (Spark propagates it to executor tasks;
+    * a driver-side SQLConf does not survive serialization). */
+  @transient private lazy val sqlConf =
+    org.apache.spark.sql.internal.SQLConf.get
 
-  /** Pushed filters → a parquet [[org.apache.parquet.filter2.predicate
-    * .FilterPredicate]] for ROW-GROUP skipping inside each file — the
-    * third pruning level under epochs and hive partitions, and the one
-    * `clusterBy` writes exist to feed (sorted files → disjoint row-group
-    * min/max → a point/range predicate reads one group instead of the
-    * file). Sound by approximation-downward: any conjunct that cannot be
-    * translated exactly is DROPPED (weaker predicate = more rows read,
-    * Spark re-filters them); an Or with an untranslatable side drops
-    * entirely. Long/int/date/string columns translate; timestamps and
-    * anything absent from this file's footer do not (additive
-    * evolution). */
-  private[v2] def rowGroupPredicate(
-      schema: MessageType,
-      physOf: String => Option[String] = null)
-      : Option[org.apache.parquet.filter2.predicate.FilterPredicate] = {
-    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-    import org.apache.parquet.io.api.Binary
-
-    // filters name SERVED columns; under column mapping the row-group
-    // stats live under the file's PHYSICAL name — resolve first (a
-    // served name with no physical source in this file drops its
-    // conjunct, conservative as ever)
-    val resolve: String => Option[String] =
-      if (physOf != null) physOf
-      else c => if (schema.containsField(c)) Some(c) else None
-
-    def prim(c: String): Option[(String, PrimitiveType)] =
-      resolve(c).flatMap { pn =>
-        if (!schema.containsField(pn)) None
-        else {
-          val t = schema.getType(schema.getFieldIndex(pn))
-          if (t.isPrimitive) Some(pn -> t.asPrimitiveType()) else None
-        }
-      }
-
-    def longLit(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-    def intLit(v: Any): Option[Int] = v match {
-      case i: Int => Some(i)
-      case s: Short => Some(s.toInt)
-      case b: Byte => Some(b.toInt)
-      case l: Long if l.isValidInt => Some(l.toInt)
-      case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toInt)
-      case d: java.time.LocalDate => Some(d.toEpochDay.toInt)
-      case _ => None
-    }
-
-    sealed trait Cmp
-    case object Eq extends Cmp; case object Gt extends Cmp
-    case object GtEq extends Cmp; case object Lt extends Cmp
-    case object LtEq extends Cmp
-
-    def cmp(c: String, v: Any, op: Cmp): Option[FilterPredicate] =
-      prim(c).flatMap { case (pn, pt) =>
-        (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
-          case (INT64, null) => longLit(v).map { l =>
-            val col = FilterApi.longColumn(pn); val lit = java.lang.Long.valueOf(l)
-            op match {
-              case Eq => FilterApi.eq(col, lit); case Gt => FilterApi.gt(col, lit)
-              case GtEq => FilterApi.gtEq(col, lit); case Lt => FilterApi.lt(col, lit)
-              case LtEq => FilterApi.ltEq(col, lit)
-            }
-          }
-          case (INT32, null | _: LogicalTypeAnnotation.DateLogicalTypeAnnotation |
-              _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) =>
-            intLit(v).map { i =>
-              val col = FilterApi.intColumn(pn); val lit = java.lang.Integer.valueOf(i)
-              op match {
-                case Eq => FilterApi.eq(col, lit); case Gt => FilterApi.gt(col, lit)
-                case GtEq => FilterApi.gtEq(col, lit); case Lt => FilterApi.lt(col, lit)
-                case LtEq => FilterApi.ltEq(col, lit)
-              }
-            }
-          case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-            v match {
-              case s: String =>
-                val col = FilterApi.binaryColumn(pn)
-                val lit = Binary.fromString(s)
-                Some(op match {
-                  case Eq => FilterApi.eq(col, lit); case Gt => FilterApi.gt(col, lit)
-                  case GtEq => FilterApi.gtEq(col, lit); case Lt => FilterApi.lt(col, lit)
-                  case LtEq => FilterApi.ltEq(col, lit)
-                })
-              case _ => None
-            }
-          case _ => None
-        }
-      }
-
-    def translate(f: Filter): Option[FilterPredicate] = f match {
-      case EqualTo(c, v) if v != null => cmp(c, v, Eq)
-      case GreaterThan(c, v) if v != null => cmp(c, v, Gt)
-      case GreaterThanOrEqual(c, v) if v != null => cmp(c, v, GtEq)
-      case LessThan(c, v) if v != null => cmp(c, v, Lt)
-      case LessThanOrEqual(c, v) if v != null => cmp(c, v, LtEq)
-      case In(c, vs) if vs.nonEmpty && vs.length <= 20 && vs.forall(_ != null) =>
-        val parts = vs.toSeq.map(v => cmp(c, v, Eq))
-        if (parts.forall(_.isDefined))
-          parts.flatten.reduceLeftOption(FilterApi.or)
-        else None
-      case And(l, r) => (translate(l), translate(r)) match {
-        case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
-        case (a, b) => a.orElse(b) // drop the untranslatable conjunct
-      }
-      case Or(l, r) => for { a <- translate(l); b <- translate(r) }
-        yield FilterApi.or(a, b)
-      case _ => None
-    }
-
-    filters.flatMap(translate(_)).reduceLeftOption(FilterApi.and)
+  /** Epochs decode exactly as written: no calendar rebase of dates,
+    * timestamps or INT96 values. */
+  @transient private lazy val parquetOptions = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
+    new ParquetOptions(Map(
+      ParquetOptions.DATETIME_REBASE_MODE -> "CORRECTED",
+      ParquetOptions.INT96_REBASE_MODE -> "CORRECTED"), sqlConf)
   }
 
   override def createReader(partition: InputPartition)
@@ -2230,333 +2248,184 @@ class WarehouseReaderFactory(required: StructType,
       s"unexpected partition type ${other.getClass.getName}")
   }
 
-  /** Footer schema per CONTAINING DIR, memoized for the life of THIS
-    * reader factory instance (Spark deserializes one factory per task,
-    * so the practical scope is per-task: a bin-packed partition of many
-    * tiny files from one dir pays one footer open, not one per file —
-    * the probe measured the per-file open+parse at over half the
-    * tiny-file scan floor). Keying by dir is sound because engine
-    * epochs are publish-once and schema-uniform within a dir (one write
-    * job per epoch/partition subdir); a foreign file violating that
-    * uniformity fails LOUDLY in the projected read (parquet-hadoop
-    * checks the requested projection against the file's own footer and
-    * the decoder checks primitive types) — never a silent wrong-column
-    * decode. */
-  @transient private lazy val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MessageType]()
-
-  /** Configuration per PROJECTED READ SCHEMA, memoized executor-wide:
-    * `new Configuration(base)` costs milliseconds (Properties deep
-    * copy), and every file of a uniform table projects identically.
-    * Readers only READ the shared instance (Configuration reads are
-    * Hashtable-synchronized), and the read schema is baked in at
-    * construction, so nothing mutates it afterwards. */
-  @transient private lazy val confCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Configuration]()
+  /** The pushed filters over this file's PHYSICAL columns: served names
+    * rewritten to the name the file stores them under; a conjunct naming
+    * a column the file cannot serve (masked) is dropped — a weaker
+    * predicate only reads more row groups, and Spark re-filters rows.
+    * Columns the file lacks (additive evolution, partition values) pass
+    * through: Spark's reader skips filters on columns absent from the
+    * footer. Under `Not`, conjuncts must translate whole. */
+  private def physicalFilter(f: Filter, p: WarehouseFilePartition,
+      partial: Boolean = true): Option[Filter] = {
+    def on(c: String)(mk: String => Filter) = p.physOf(c).map(mk)
+    f match {
+      case And(l, r) =>
+        (physicalFilter(l, p, partial), physicalFilter(r, p, partial)) match {
+          case (Some(a), Some(b)) => Some(And(a, b))
+          case (a, b) => if (partial) a.orElse(b) else None
+        }
+      case Or(l, r) => for {
+        a <- physicalFilter(l, p, partial = false)
+        b <- physicalFilter(r, p, partial = false)
+      } yield Or(a, b)
+      case Not(c) => physicalFilter(c, p, partial = false).map(Not)
+      case EqualTo(c, v) => on(c)(EqualTo(_, v))
+      case EqualNullSafe(c, v) => on(c)(EqualNullSafe(_, v))
+      case GreaterThan(c, v) => on(c)(GreaterThan(_, v))
+      case GreaterThanOrEqual(c, v) => on(c)(GreaterThanOrEqual(_, v))
+      case LessThan(c, v) => on(c)(LessThan(_, v))
+      case LessThanOrEqual(c, v) => on(c)(LessThanOrEqual(_, v))
+      case In(c, vs) => on(c)(In(_, vs))
+      case IsNull(c) => on(c)(IsNull)
+      case IsNotNull(c) => on(c)(IsNotNull)
+      case StringStartsWith(c, v) => on(c)(StringStartsWith(_, v))
+      case StringEndsWith(c, v) => on(c)(StringEndsWith(_, v))
+      case StringContains(c, v) => on(c)(StringContains(_, v))
+      case _ => None
+    }
+  }
 
   private def fileReader(p: WarehouseFilePartition)
       : PartitionReader[InternalRow] = {
-    val baseConf =
-      if (hadoopConf == null) new Configuration()
-      else hadoopConf.value
-    val inPath = new Path(p.path)
-
-    val footerSchema: MessageType =
-      footerCache.computeIfAbsent(inPath.getParent.toString, _ => {
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(inPath, baseConf))
-        try r.getFileMetaData.getSchema finally r.close()
-      })
+    import org.apache.spark.sql.catalyst.ProjectingInternalRow
+    import org.apache.spark.sql.catalyst.expressions.JoinedRow
+    import org.apache.spark.sql.execution.datasources.PartitionedFile
+    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+    val read = reads(p.read)
+    val decoded = read.schema.fieldNames
     val partMap = p.partValues.toMap
-    val drops: Array[(String, Array[Long], Array[String])] =
-      if (p.applyDrops) dropsAt(p.pos)
-      else Array.empty
-    // COLUMN MAPPING: the physical column this file stores served name
-    // `n` under — the rename indirection first, the name itself unless a
-    // later directive remapped/dropped it (`masked`), else absent
-    // (additive evolution / renamed-in column this epoch predates).
-    val renameFor: Map[String, String] = p.renames.toMap
-    val maskedSet: Set[String] = p.masked.toSet
-    def physOf(n: String): Option[String] =
-      renameFor.get(n).filter(footerSchema.containsField)
-        .orElse(if (!maskedSet.contains(n) && footerSchema.containsField(n))
-          Some(n)
-        else None)
-    // (served field, physical column) pairs present in this file
-    val present: Seq[(StructField, String)] = required.fields.toSeq
-      .flatMap { f =>
-        if (f.name == WarehouseConnector.PosColumn ||
-            partMap.contains(f.name)) None
-        else physOf(f.name).map(f -> _)
-      }
-    // tombstone key-drop columns must be DECODED to filter on, even when
-    // the query didn't project them — appended to the read schema (and
-    // never emitted); a column absent from this file's footer means the
-    // epoch predates it, so its rows hold null keys and no drop applies.
-    // Drop-key names arrive ALREADY RESOLVED to this file's physical
-    // columns ([[WarehouseConnector.dropsFor]] walks the mapping
-    // directives between each tombstone and this entry), so a purge
-    // keyed on a renamed column still reaches pre-rename files.
-    val dropExtra: Seq[String] = drops.map(_._1).toSeq
-      .flatMap(AtomicWarehouse.keyParts).distinct
-      .filter(c => !partMap.contains(c) && footerSchema.containsField(c) &&
-        !present.exists(_._2 == c))
-    val projected = new MessageType("spark_schema",
-      (present.map(_._2) ++ dropExtra).map(n =>
-        footerSchema.getType(footerSchema.getFieldIndex(n))): _*)
-    // the session's Hadoop configuration rides the (serializable)
-    // factory to executors — a fresh Configuration() would drop
-    // session-configured fs.* settings (ABFS credentials etc.); the
-    // projected-schema copy is shared across every file that projects
-    // identically (concurrent readers only read it)
-    val conf = confCache.computeIfAbsent(projected.toString, _ => {
-      val c = new Configuration(baseConf)
-      c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-        projected.toString)
-      c
-    })
 
-    val presentIdx: Map[String, Int] =
-      present.map(_._1.name).zipWithIndex.toMap
-
-    /** Group-field decoder per present column, by (spark type, parquet
-      * primitive). Unsupported combinations fail loudly, naming both. */
-    def decoder(f: StructField, i: Int): Group => Any = {
-      val pt = projected.getType(i).asPrimitiveType()
-      val prim = pt.getPrimitiveTypeName
-      (f.dataType, prim) match {
-        case (StringType, BINARY | FIXED_LEN_BYTE_ARRAY) =>
-          g => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-        case (LongType, INT64) => g => g.getLong(i, 0)
-        case (LongType, INT32) => g => g.getInteger(i, 0).toLong
-        case (IntegerType, INT32) => g => g.getInteger(i, 0)
-        case (DoubleType, DOUBLE) => g => g.getDouble(i, 0)
-        case (DoubleType, FLOAT) => g => g.getFloat(i, 0).toDouble
-        case (FloatType, FLOAT) => g => g.getFloat(i, 0)
-        case (BooleanType, BOOLEAN) => g => g.getBoolean(i, 0)
-        case (DateType, INT32) => g => g.getInteger(i, 0)
-        case (TimestampType | TimestampNTZType, INT64) =>
-          val toMicros: Long => Long = pt.getLogicalTypeAnnotation match {
-            case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.MILLIS =>
-              _ * 1000L
-            case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.NANOS =>
-              _ / 1000L
-            case _ => identity // MICROS (Spark's default) or bare INT64
-          }
-          g => toMicros(g.getLong(i, 0))
-        case (TimestampType | TimestampNTZType, INT96) => g => {
-          val b = g.getInt96(i, 0).getBytes // 8B nanos-of-day LE + 4B julian day LE
-          val buf = java.nio.ByteBuffer.wrap(b)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanos = buf.getLong
-          val julian = buf.getInt
-          (julian - JulianDayOfEpoch) * 86400000000L + nanos / 1000L
-        }
-        case (dt, other) => throw new IllegalArgumentException(
-          s"graft-warehouse cannot decode column '${f.name}': spark type " +
-            s"$dt vs parquet $other in ${p.path} — warehouse epochs hold " +
-            "flat primitive columns only")
+    // each served column is an ordinal into (decoded columns ++ this
+    // file's constants)
+    val consts = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def const(v: Any): Int = { consts += v; decoded.length + consts.size - 1 }
+    val ordinals = required.fields.toIndexedSeq.map { f =>
+      // `_pos`: the partition's manifest position, a per-file constant
+      // (every row in a file belongs to one entry)
+      if (f.name == PosColumn) const(p.pos)
+      else partMap.get(f.name) match {
+        case Some(raw) => const(partValue(f, raw))
+        case None => p.physOf(f.name).map(decoded.indexOf(_)).filter(_ >= 0)
+          .getOrElse(f.name match {
+            // readChangeFeed: every row decoded from a data file is an
+            // append — per-file constants like `_pos`: 'insert' for plain
+            // epochs, 'update_postimage' for SQL UPDATE epochs
+            // ([[WarehouseConnector.feedChangeType]], Delta CDF's typing)
+            case ChangeTypeColumn => const(UTF8String.fromString(p.changeType))
+            case CommitVersionColumn => const(p.commitVersion)
+            case CommitTimestampColumn => const(p.commitTsMicros)
+            case _ => const(null) // additively-evolved column: this epoch predates it
+          })
       }
     }
+    val dropped = dropCheck(p, read.schema, partMap)
 
-    /** Hive partition path value → Spark internal value per the schema's
-      * type for that column. */
-    def partValue(f: StructField, raw: String): Any =
-      if (raw == "__HIVE_DEFAULT_PARTITION__") null
-      else f.dataType match {
-        case StringType => UTF8String.fromString(raw)
-        case IntegerType => raw.toInt
-        case LongType => raw.toLong
-        case DoubleType => raw.toDouble
-        case BooleanType => raw.toBoolean
-        case DateType =>
-          java.time.LocalDate.parse(raw).toEpochDay.toInt
-        case dt => throw new IllegalArgumentException(
-          s"graft-warehouse partition column '${f.name}' of type $dt is " +
-            "unsupported — partition on string/int/long/double/boolean/date")
-      }
-
-    val getters: Array[Group => Any] = required.fields.map { f =>
-      if (f.name == WarehouseConnector.PosColumn) {
-        // `_pos` metadata column: the partition's manifest position, a
-        // per-file constant (every row in a file belongs to one entry)
-        val v: Any = p.pos
-        (_: Group) => v
-      } else if (f.name == WarehouseConnector.ChangeTypeColumn &&
-          !footerSchema.containsField(f.name)) {
-        // readChangeFeed: every row decoded from a data file is an
-        // append — a per-file constant like `_pos`: 'insert' for plain
-        // epochs, 'update_postimage' for SQL UPDATE epochs
-        // ([[WarehouseConnector.feedChangeType]], Delta CDF's typing)
-        val v: Any = UTF8String.fromString(p.changeType)
-        (_: Group) => v
-      } else if (f.name == WarehouseConnector.CommitVersionColumn &&
-          !footerSchema.containsField(f.name)) {
-        val v: Any = p.commitVersion
-        (_: Group) => v
-      } else if (f.name == WarehouseConnector.CommitTimestampColumn &&
-          !footerSchema.containsField(f.name)) {
-        val v: Any = p.commitTsMicros
-        (_: Group) => v
-      } else partMap.get(f.name) match {
-        case Some(raw) =>
-          val v = partValue(f, raw); _ => v
-        case None => presentIdx.get(f.name) match {
-          case Some(i) =>
-            val dec = decoder(f, i)
-            g => if (g.getFieldRepetitionCount(i) == 0) null else dec(g)
-          case None => _ => null // additively-evolved column: this epoch predates it
-        }
-      }
-    }
-
-    // TOMBSTONE key drops (merge-on-read): a row whose key column value
-    // is in a drop list is suppressed at scan time — the connector's
-    // deletion-vector application. One check per drop list per key type
-    // (LONG drops cast-compare, STRING drops compare the canonical
-    // rendering — a numeric column's value matches its decimal form);
-    // rows with null/unparseable keys never match (null keys are never
-    // purge targets).
-    def idxOf(c: String): Int = present.indexWhere(_._2 == c) match {
-      case -1 =>
-        val j = dropExtra.indexOf(c)
-        if (j < 0) -1 else present.size + j
-      case i => i
-    }
-    // COMPOSITE tombstones (keyCol = "k1,k2"): render each part to its
-    // canonical string (hive-partition constant, decoded string, or
-    // decimal form of a numeric), join with the engine's separator, and
-    // compare the rendering — exactly the null-propagating composite
-    // the engine's merged read suppresses (a null/absent part means the
-    // row's composite key is null, never a purge target).
-    val compositeChecks: Array[Group => Boolean] = drops.collect {
-      case (c, _, strKeys) if AtomicWarehouse.keyParts(c).size > 1 &&
-          strKeys.nonEmpty =>
-        val parts = AtomicWarehouse.keyParts(c)
-        val keySet = new java.util.HashSet[String](
-          java.util.Arrays.asList(strKeys: _*))
-        val renderers: Seq[Group => Option[String]] = parts.map { pc =>
-          partMap.get(pc) match {
-            case Some(raw) => (_: Group) => Some(raw)
-            case None =>
-              val idx = idxOf(pc)
-              if (idx < 0) (_: Group) => None // epoch predates the column
-              else {
-                val pt = projected.getType(idx).asPrimitiveType()
-                  .getPrimitiveTypeName
-                val render: Group => Option[String] = pt match {
-                  case BINARY | FIXED_LEN_BYTE_ARRAY =>
-                    g => Some(g.getString(idx, 0))
-                  case INT64 => g => Some(g.getLong(idx, 0).toString)
-                  case INT32 => g => Some(g.getInteger(idx, 0).toString)
-                  case _ => _ => None
-                }
-                g => if (g.getFieldRepetitionCount(idx) > 0) render(g)
-                  else None
-              }
-          }
-        }
-        (g: Group) => {
-          val vs = renderers.map(_(g))
-          vs.forall(_.isDefined) &&
-            keySet.contains(vs.flatten.mkString(AtomicWarehouse.CompositeSep))
-        }
-    }
-    val dropChecks: Array[Group => Boolean] = compositeChecks ++ drops
-      .filter(d => AtomicWarehouse.keyParts(d._1).size == 1).flatMap {
-      case (c, keys, strKeys) =>
-        def colIdx: Int = idxOf(c)
-        val longCheck: Option[Group => Boolean] =
-          if (keys.isEmpty) None
-          else {
-            val keySet: java.util.HashSet[Long] = {
-              val s = new java.util.HashSet[Long](keys.length * 2)
-              keys.foreach(s.add)
-              s
-            }
-            partMap.get(c) match {
-              case Some(raw) => // constant per file: all rows match or none
-                // parse as the ENGINE matches long tombstones —
-                // try_cast semantics (trim + sign), not toLongOption
-                AtomicWarehouse.sparkLongCast(raw) match {
-                  case Some(v) if keySet.contains(v) =>
-                    Some((_: Group) => true)
-                  case _ => None
-                }
-              case None =>
-                val idx = colIdx
-                if (idx < 0) None // epoch predates the key column: nulls
-                else {
-                  val pt = projected.getType(idx).asPrimitiveType()
-                    .getPrimitiveTypeName
-                  val toLong: Group => Option[Long] = pt match {
-                    case INT64 => g => Some(g.getLong(idx, 0))
-                    case INT32 => g => Some(g.getInteger(idx, 0).toLong)
-                    case BINARY | FIXED_LEN_BYTE_ARRAY => // all-string drains
-                      // MUST mirror the engine's `try_cast(key as long)`
-                      // (trim + sign): String.toLongOption would keep a
-                      // `" 7"` row a long-7 tombstone suppresses in
-                      // engine reads — connector and engine disagreeing
-                      // on served rows
-                      g => AtomicWarehouse.sparkLongCast(g.getString(idx, 0))
-                    case _ => _ => None
-                  }
-                  Some((g: Group) => g.getFieldRepetitionCount(idx) > 0 &&
-                    toLong(g).exists(keySet.contains))
-                }
-            }
-          }
-        val strCheck: Option[Group => Boolean] =
-          if (strKeys.isEmpty) None
-          else {
-            val keySet = new java.util.HashSet[String](
-              java.util.Arrays.asList(strKeys: _*))
-            partMap.get(c) match {
-              case Some(raw) =>
-                if (keySet.contains(raw)) Some((_: Group) => true) else None
-              case None =>
-                val idx = colIdx
-                if (idx < 0) None
-                else {
-                  val pt = projected.getType(idx).asPrimitiveType()
-                    .getPrimitiveTypeName
-                  val toStr: Group => Option[String] = pt match {
-                    case BINARY | FIXED_LEN_BYTE_ARRAY =>
-                      g => Some(g.getString(idx, 0))
-                    case INT64 => g => Some(g.getLong(idx, 0).toString)
-                    case INT32 => g => Some(g.getInteger(idx, 0).toString)
-                    case _ => _ => None
-                  }
-                  Some((g: Group) => g.getFieldRepetitionCount(idx) > 0 &&
-                    toStr(g).exists(keySet.contains))
-                }
-            }
-          }
-        longCheck.toSeq ++ strCheck
-    }
-
+    val file = PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPathString(p.path), 0L, p.len,
+      Array.empty[String], 0L, p.len, Map.empty)
+    val in = ParquetPartitionReaderFactory(sqlConf, read.conf, read.schema,
+      read.schema, new StructType(), filters.flatMap(physicalFilter(_, p)),
+      None, parquetOptions).buildReader(file)
+    val constRow = new GenericInternalRow(consts.toArray)
+    val joined = new JoinedRow()
+    val out = ProjectingInternalRow(required, ordinals)
     new PartitionReader[InternalRow] {
-      @SuppressWarnings(Array("deprecation"))
-      private val reader: ParquetReader[Group] = {
-        val b = ParquetReader.builder(new GroupReadSupport(), inPath)
-          .withConf(conf)
-        rowGroupPredicate(footerSchema, physOf) match {
-          case Some(p) => b.withFilter(
-            org.apache.parquet.filter2.compat.FilterCompat.get(p)).build()
-          case None => b.build()
-        }
-      }
-      private var cur: Group = _
       override def next(): Boolean = {
-        cur = reader.read()
-        while (cur != null && dropChecks.exists(_(cur)))
-          cur = reader.read()
-        cur != null
+        var more = in.next()
+        while (more && dropped(in.get())) more = in.next()
+        more
       }
-      override def get(): InternalRow =
-        new GenericInternalRow(getters.map(_(cur)))
-      override def close(): Unit = reader.close()
+      override def get(): InternalRow = {
+        out.project(joined(in.get(), constRow)); out
+      }
+      override def close(): Unit = in.close()
     }
+  }
+
+  /** Hive partition path value → Spark internal value per the schema's
+    * type for that column. */
+  private def partValue(f: StructField, raw: String): Any =
+    if (raw == "__HIVE_DEFAULT_PARTITION__") null
+    else f.dataType match {
+      case StringType => UTF8String.fromString(raw)
+      case IntegerType => raw.toInt
+      case LongType => raw.toLong
+      case DoubleType => raw.toDouble
+      case BooleanType => raw.toBoolean
+      case DateType =>
+        java.time.LocalDate.parse(raw).toEpochDay.toInt
+      case dt => throw new IllegalArgumentException(
+        s"graft-warehouse partition column '${f.name}' of type $dt is " +
+          "unsupported — partition on string/int/long/double/boolean/date")
+    }
+
+  /** TOMBSTONE key drops (merge-on-read): whether a decoded row's key is
+    * in one of the file's drop lists — the connector's deletion-vector
+    * application. LONG drops cast-compare (a string-stored key parses
+    * with the engine's `try_cast` semantics,
+    * [[AtomicWarehouse.sparkLongCast]] — trim + sign, so connector and
+    * engine reads suppress the same rows); STRING drops compare the
+    * canonical rendering (a numeric key matches its decimal form).
+    * COMPOSITE tombstones (keyCol = "k1,k2") compare the parts'
+    * renderings joined with the engine's separator. A null key part, or
+    * one this file predates, never matches (null keys are never purge
+    * targets). Hive partition key values are per-file constants. */
+  private def dropCheck(p: WarehouseFilePartition, schema: StructType,
+      partMap: Map[String, String]): InternalRow => Boolean = {
+    if (!p.applyDrops) return _ => false
+    val drops = dropsAt(p.pos)
+    if (drops.isEmpty) return _ => false
+    def getter[T](c: String, fromRaw: String => Option[T])(
+        decode: PartialFunction[DataType, (InternalRow, Int) => Option[T]])
+        : InternalRow => Option[T] = partMap.get(c) match {
+      case Some(raw) => val v = fromRaw(raw); _ => v
+      case None => schema.fieldNames.indexOf(c) match {
+        case i if i >= 0 && decode.isDefinedAt(schema(i).dataType) =>
+          val d = decode(schema(i).dataType)
+          r => if (r.isNullAt(i)) None else d(r, i)
+        case _ => _ => None // the epoch predates the key column
+      }
+    }
+    def render(c: String) = getter[String](c, Some(_)) {
+      case StringType => (r, i) => Some(r.getUTF8String(i).toString)
+      case LongType => (r, i) => Some(r.getLong(i).toString)
+      case IntegerType => (r, i) => Some(r.getInt(i).toString)
+    }
+    def asLong(c: String) = getter[Long](c, AtomicWarehouse.sparkLongCast) {
+      case LongType => (r, i) => Some(r.getLong(i))
+      case IntegerType => (r, i) => Some(r.getInt(i).toLong)
+      case StringType => (r, i) =>
+        AtomicWarehouse.sparkLongCast(r.getUTF8String(i).toString)
+    }
+    def setOf[T](xs: Seq[T]) = new java.util.HashSet[T](
+      java.util.Arrays.asList(xs: _*))
+    val checks: Seq[InternalRow => Boolean] = drops.toSeq.flatMap {
+      case (c, keys, strKeys) =>
+        val parts = AtomicWarehouse.keyParts(c)
+        if (parts.size > 1) {
+          if (strKeys.isEmpty) Nil
+          else {
+            val set = setOf(strKeys.toSeq)
+            val rs = parts.map(render)
+            Seq((r: InternalRow) => {
+              val vs = rs.map(_(r))
+              vs.forall(_.isDefined) &&
+                set.contains(vs.flatten.mkString(AtomicWarehouse.CompositeSep))
+            })
+          }
+        } else {
+          val longCheck = if (keys.isEmpty) None else {
+            val set = setOf(keys.toSeq.map(Long.box)); val get = asLong(c)
+            Some((r: InternalRow) => get(r).exists(k => set.contains(k)))
+          }
+          val strCheck = if (strKeys.isEmpty) None else {
+            val set = setOf(strKeys.toSeq); val get = render(c)
+            Some((r: InternalRow) => get(r).exists(set.contains))
+          }
+          longCheck.toSeq ++ strCheck
+        }
+    }
+    r => checks.exists(_(r))
   }
 }
 
@@ -2784,6 +2653,12 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
     def posFor(n: String): Int = posOf.getOrElse(n, negPos.getOrElse(n, 0))
     val tsOf: Map[Long, Long] =
       if (cdf) AtomicWarehouse.manifestTimes(spark, dir) else Map.empty
+    val dropMemo = scala.collection.mutable.HashMap.empty[Int, Seq[String]]
+    def planned(p: WarehouseFilePartition, epoch: String) =
+      fileReads.plan(p, entrySchema(spark, dir,
+        byName.getOrElse(epoch, EpochEntry(epoch))),
+        dropMemo.getOrElseUpdate(p.pos,
+          dropKeyCols(snapshotTombs, p.pos, snapshotColMapOps)))
     val files = dataAdds
       .filter { case (n, _) => byName.get(n).forall(en =>
         pruneFilters.forall(fl =>
@@ -2797,14 +2672,14 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
       .map { case (file, v) =>
         val pos = posFor(file.epoch)
         val (rn, mk) = resoFor(pos)
-        WarehouseFilePartition(file.path, file.partValues.toArray,
-          pos,
+        planned(WarehouseFilePartition(file.path, file.len,
+          file.partValues.toArray, pos,
           applyDrops = !cdf && s == 0L && snapshotAtZero,
           commitVersion = v,
           commitTsMicros = tsOf.getOrElse(v, -1L),
           changeType =
             WarehouseConnector.feedChangeType(file.epoch),
-          renames = rn, masked = mk) -> file.len }
+          renames = rn, masked = mk), file.epoch) }
     val deletes: Array[InputPartition] = delAdds.map { case (name, v) =>
       val keyCol0 = AtomicWarehouse.tombstoneKeyCol(spark, dir, name)
         .getOrElse("")
@@ -2825,45 +2700,46 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
     }.toArray
     // restoreAsDeletes: a removed entry's files re-served as delete
     // rows, same contract as the batch feed
-    val restoreDeleteFiles: Seq[(WarehouseFilePartition, Long)] =
+    val restoreDeleteFiles: Seq[WarehouseFilePartition] =
       rDels.flatMap { case (n, v) =>
         val dfiles = byName.get(n)
           .map(WarehouseConnector.entryFiles(f, dir, _))
           .getOrElse(WarehouseConnector.listEpochFiles(f, dir, n))
         val pos = posFor(WarehouseConnector.restoreDelSentinel(n, v))
         val (rn, mk) = resoFor(posOf.getOrElse(n, pos))
-        dfiles.map(file => WarehouseFilePartition(file.path,
-          file.partValues.toArray, pos, applyDrops = false,
+        dfiles.map(file => planned(WarehouseFilePartition(file.path,
+          file.len, file.partValues.toArray, pos, applyDrops = false,
           commitVersion = v, commitTsMicros = tsOf.getOrElse(v, -1L),
-          changeType = "delete", renames = rn, masked = mk) -> file.len)
+          changeType = "delete", renames = rn, masked = mk), n))
       }
     WarehouseConnector.packPartitions(spark, files) ++
       WarehouseConnector.packPartitions(spark, restoreDeleteFiles) ++
       deletes
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // `_pos` THROUGH THE TAIL: the streaming plan keeps the RELATION's
-    // output — data columns plus any resolved metadata column appended
-    // LAST — but (unlike batch) column pruning never reaches the scan
-    // builder, so `required` here is the bare table schema. Serve
-    // `_pos` as an extra TRAILING field whenever it isn't already
-    // projected: a consumer that selected it reads the appended ordinal
-    // (the relation layout puts metadata columns last), one that didn't
-    // never reads past its own schema width — so the tiebreaker has
-    // identical semantics on the tail path (position in the END-version
-    // manifest; stable across batches because the tail path's manifest
-    // is append-only: folds/purges fail the tail or are skipped).
-    val served =
-      if (required.fieldNames.contains(WarehouseConnector.PosColumn))
-        required
-      else required.add(StructField(WarehouseConnector.PosColumn,
-        IntegerType, nullable = false))
-    new WarehouseReaderFactory(served, pruneFilters,
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration), snapshotTombs,
-      snapshotColMapOps)
-  }
+  // `_pos` THROUGH THE TAIL: the streaming plan keeps the RELATION's
+  // output — data columns plus any resolved metadata column appended
+  // LAST — but (unlike batch) column pruning never reaches the scan
+  // builder, so `required` here is the bare table schema. Serve `_pos`
+  // as an extra TRAILING field whenever it isn't already projected: a
+  // consumer that selected it reads the appended ordinal (the relation
+  // layout puts metadata columns last), one that didn't never reads past
+  // its own schema width — so the tiebreaker has identical semantics on
+  // the tail path (position in the END-version manifest; stable across
+  // batches because the tail path's manifest is append-only:
+  // folds/purges fail the tail or are skipped).
+  private val served =
+    if (required.fieldNames.contains(WarehouseConnector.PosColumn)) required
+    else required.add(StructField(WarehouseConnector.PosColumn,
+      IntegerType, nullable = false))
+
+  /** Read schemas of every file this stream planned, across batches
+    * (each batch plans, then builds its reader factory). */
+  private val fileReads = new FileReads(served)
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new WarehouseReaderFactory(served, pruneFilters, fileReads.broadcast(spark),
+      snapshotTombs, snapshotColMapOps)
 
   override def commit(end: StreamOffset): Unit = ()
   override def stop(): Unit = ()

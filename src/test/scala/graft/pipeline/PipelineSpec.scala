@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 import java.nio.file.Files
 
 /** End-to-end epoch tests over the committed fixtures (FIXTURES.md §1):
-  * two overlapping epochs, stage goldens, warehouse-drain idempotence,
+  * two overlapping epochs, stage goldens, warehouse-commit idempotence,
   * and the streamed epochs' refusal/restart contract. */
 class PipelineSpec extends SparkSuite {
 
@@ -27,6 +27,8 @@ class PipelineSpec extends SparkSuite {
       Seq("owner1", "owner2", "owner3"))
   }
 
+  private val idPresent = Seq("video_id_present" -> "video_id IS NOT NULL")
+
   private def tmpDirs(): Pipeline.Dirs = {
     val root = Files.createTempDirectory("graft_pipe").toString
     Pipeline.Dirs(s"$root/staging", s"$root/warehouse")
@@ -43,9 +45,9 @@ class PipelineSpec extends SparkSuite {
 
   test("epoch 1: full A-AD derivation goldens") {
     val dirs = tmpDirs()
-    val staged = Pipeline.stageEpoch(spark, sources("videos_epoch1.json"),
-      dirs, "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z")
-    val rows = staged.collect().map(r => r.getAs[String]("video_id") -> r).toMap
+    val epoch = Pipeline.runEpoch(spark, sources("videos_epoch1.json"),
+      dirs, "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", loadSeq = 1, idPresent)
+    val rows = epoch.collect().map(r => r.getAs[String]("video_id") -> r).toMap
 
     // window filter: v07 (June) excluded
     assert(!rows.contains("v07") && rows.size == 6)
@@ -93,28 +95,33 @@ class PipelineSpec extends SparkSuite {
 
   test("epoch 2 after epoch 1: keep-last dedup on re-fetched video") {
     val dirs = tmpDirs()
-    Pipeline.stageEpoch(spark, sources("videos_epoch1.json"), dirs,
-      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z")
-    val staged = Pipeline.stageEpoch(spark, sources("videos_epoch2.json"),
-      dirs, "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z")
-    val titles = staged.collect()
+    Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
+      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", loadSeq = 1, idPresent)
+    Pipeline.runEpoch(spark, sources("videos_epoch2.json"), dirs,
+      "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z", loadSeq = 2, idPresent)
+    // keep-last across epochs is the warehouse's last-wins read
+    val titles = AtomicWarehouse.read(spark, dirs.warehouseDir, "video_id")
+      .collect()
       .map(r => r.getAs[String]("video_id") -> r.getAs[String]("video_title")).toMap
     assert(titles("v02") == "Evening Talk RERUN | K6A") // keep-last
     assert(titles.contains("v08") && titles.size == 7)
   }
 
-  test("warehouse drain: all-string schema, dedup, staging truncated, idempotent replay") {
+  test("warehouse drain: all-string, dedup, no staging dir, idempotent replay") {
     val dirs = tmpDirs()
-    val wh = Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
-      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", 1)
+    def run() = Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
+      "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", 1, idPresent)
+    run()
+    val wh = AtomicWarehouse.read(spark, dirs.warehouseDir, "video_id")
     assert(wh.schema.fields.filter(_.name != "load_seq")
       .forall(_.dataType.typeName == "string")) // F20
     assert(wh.count() == 6)
-    assert(spark.read.parquet(dirs.stagingDir).count() == 0) // K7 truncate
+    // the epoch frame commits straight through: no staging copy to truncate
+    assert(!new java.io.File(dirs.stagingDir).exists())
 
-    // crash-replay: re-running the drain of the committed epoch over the
-    // truncated staging leaves the warehouse unchanged (idempotence, §2.9)
-    AtomicWarehouse.drain(spark, dirs.stagingDir, dirs.warehouseDir, 1)
+    // crash-replay: re-running the committed epoch seq leaves the
+    // warehouse unchanged (idempotence, §2.9)
+    run()
     assert(AtomicWarehouse.currentVersion(spark, dirs.warehouseDir) == 1L)
     assert(AtomicWarehouse.read(spark, dirs.warehouseDir, "video_id").count() == 6)
   }
@@ -122,7 +129,7 @@ class PipelineSpec extends SparkSuite {
   test("atomic epoch: a violating batch is refused, warehouse and manifest untouched") {
     val dirs = tmpDirs()
     // first epoch drains clean
-    Pipeline.runEpochAtomic(spark, sources("videos_epoch1.json"), dirs,
+    Pipeline.runEpoch(spark, sources("videos_epoch1.json"), dirs,
       "2024-05-01T00:00:00Z", "2024-05-02T23:59:59Z", loadSeq = 1,
       checks = Seq("video_id_present" -> "video_id IS NOT NULL"))
     assert(graft.sinks.AtomicWarehouse.currentVersion(spark, dirs.warehouseDir) == 1L)
@@ -131,7 +138,7 @@ class PipelineSpec extends SparkSuite {
     // second epoch declares an unsatisfiable constraint: refused BEFORE
     // anything reaches the warehouse; the first epoch stays intact
     val e = intercept[graft.sinks.ConstraintViolationException] {
-      Pipeline.runEpochAtomic(spark, sources("videos_epoch2.json"), dirs,
+      Pipeline.runEpoch(spark, sources("videos_epoch2.json"), dirs,
         "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z", loadSeq = 2,
         checks = Seq("impossible" -> "len < 0"))
     }
@@ -140,7 +147,7 @@ class PipelineSpec extends SparkSuite {
     assert(graft.sinks.AtomicWarehouse
       .read(spark, dirs.warehouseDir, "video_id").count() == before)
     // fixing the constraint lets the SAME epoch seq proceed
-    Pipeline.runEpochAtomic(spark, sources("videos_epoch2.json"), dirs,
+    Pipeline.runEpoch(spark, sources("videos_epoch2.json"), dirs,
       "2024-05-03T00:00:00Z", "2024-05-03T23:59:59Z", loadSeq = 2,
       checks = Seq("video_id_present" -> "video_id IS NOT NULL"))
     assert(graft.sinks.AtomicWarehouse.currentVersion(spark, dirs.warehouseDir) == 2L)

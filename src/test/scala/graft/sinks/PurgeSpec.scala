@@ -73,7 +73,7 @@ class PurgeSpec extends SparkSuite {
     assert(read3.where(col("grp") === "a" && col("id") === 1L)
       .head.getAs[String]("name") == "a1-reborn")
     // the CONNECTOR's snapshot read applies the composite drops in the
-    // executor-side Group reader (same logical content as the engine)
+    // executor-side reader (same logical content as the engine)
     // 9 committed row versions − 3 suppressed ((a,1)@v1, (a,1)@v2,
     // (b,2)@v1); the v4 re-add post-dates the tombstone and survives
     val conn = spark.read.format("graft-warehouse").option("path", dir).load()

@@ -82,27 +82,75 @@ class WarehouseSpec extends SparkSuite {
     assert(spark.read.parquet(flat).count() == 10)
   }
 
+  /** Runs `body` with every `refuse://` call matching `refuse`
+    * (call, local path) refused. */
+  private def refusing[T](refuse: (String, String) => Boolean)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.refuse.impl", classOf[RefusingFileSystem].getName)
+    conf.setBoolean("fs.refuse.impl.disable.cache", true)
+    RefusingFileSystem.refuse = refuse
+    try body finally RefusingFileSystem.refuse = (_, _) => false
+  }
+
   test("compaction fails loudly when the swap's delete fails, data intact") {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.nodelete.impl", classOf[NoDeleteFileSystem].getName)
-    conf.setBoolean("fs.nodelete.impl.disable.cache", true)
     val dir = java.nio.file.Files.createTempDirectory("wh_nodelete").toString + "/wh"
     (1 to 3).foreach(b => Seq((b.toLong, b * 1.0)).toDF("id", "v")
       .write.mode("append").parquet(dir))
     val e = intercept[java.io.IOException] {
-      Warehouse.compact(spark, s"nodelete://$dir", Seq.empty, targetRowsPerFile = 1000L)
+      refusing((call, _) => call == "delete") {
+        Warehouse.compact(spark, s"refuse://$dir", Seq.empty, targetRowsPerFile = 1000L)
+      }
     }
     assert(e.getMessage.contains("could not delete"), e.getMessage)
-    // no rename onto the live dir: its rows are all still there, unmixed
+    // the refused delete is the aside copy's: the compacted rows are in
+    // place, all of them, unmixed with the old files
     assert(spark.read.parquet(dir).count() == 3)
+  }
+
+  test("compaction swap: a refusal at any of its calls leaves a full copy at dir or aside") {
+    import spark.implicits._
+    // the swap's three calls: rename dir aside, rename tmp in, delete aside
+    val calls = Seq[(String, String => String)](
+      "rename" -> (d => d), "rename" -> (d => d + "_compact"),
+      "delete" -> (d => d + "_old"))
+    calls.foreach { case (call, target) =>
+      val dir = java.nio.file.Files.createTempDirectory("wh_refuse").toString + "/wh"
+      (1 to 3).foreach(b => Seq((b.toLong, b * 1.0)).toDF("id", "v")
+        .write.mode("append").parquet(dir))
+      val want = spark.read.parquet(dir).collect().map(_.toSeq).toSet
+      val e = intercept[java.io.IOException] {
+        refusing((c, p) => c == call && p == target(dir)) {
+          Warehouse.compact(spark, s"refuse://$dir", Seq.empty, targetRowsPerFile = 1000L)
+        }
+      }
+      assert(e.getMessage.contains("compaction swap failed"), e.getMessage)
+      def rows(d: String): Option[Set[Seq[Any]]] =
+        if (new java.io.File(d).exists())
+          Some(spark.read.parquet(d).collect().map(_.toSeq).toSet)
+        else None
+      assert(rows(dir).contains(want) || rows(dir + "_old").contains(want),
+        s"refused $call of ${target(dir)}: no full copy at dir or aside")
+    }
   }
 }
 
-/** A local filesystem under the `nodelete` scheme whose `delete` refuses
-  * (returns false, deletes nothing) — a permission-denied or flaky store,
-  * for pinning that swaps check the delete's result. */
-class NoDeleteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("nodelete:///")
-  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean = false
+/** A local filesystem under the `refuse` scheme that refuses (returns
+  * false, does nothing) each `delete` or `rename` for which
+  * [[RefusingFileSystem.refuse]] holds on (call, local source path) — a
+  * permission-denied or flaky store, for pinning that swaps check every
+  * call's result. */
+class RefusingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refuse:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    !RefusingFileSystem.refuse("delete", p.toUri.getPath) &&
+      super.delete(p, recursive)
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !RefusingFileSystem.refuse("rename", src.toUri.getPath) &&
+      super.rename(src, dst)
+}
+
+object RefusingFileSystem {
+  @volatile var refuse: (String, String) => Boolean = (_, _) => false
 }

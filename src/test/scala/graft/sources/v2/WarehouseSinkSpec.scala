@@ -257,30 +257,64 @@ class WarehouseSinkSpec extends SparkSuite {
       .load().count() == 4000)
   }
 
-  test("row-group predicate translation: exact where possible, dropped where not") {
-    import org.apache.spark.sql.sources.{EqualTo, And, GreaterThan, Or, StringContains}
-    val msg = WarehouseSink.messageType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("name",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType))))
-    def pred(fs: org.apache.spark.sql.sources.Filter*) =
-      new WarehouseReaderFactory(
-        org.apache.spark.sql.types.StructType(Nil), fs.toArray)
-        .rowGroupPredicate(msg)
-    assert(pred(EqualTo("k", 5L)).isDefined)
-    assert(pred(GreaterThan("name", "m")).isDefined)
-    // timestamps don't translate (unit semantics) — dropped, not wrong
-    assert(pred(EqualTo("ts", java.sql.Timestamp.valueOf("2024-05-01 00:00:00"))).isEmpty)
-    // a conjunct that can't translate is dropped, the rest kept
-    assert(pred(And(EqualTo("k", 5L), StringContains("name", "x"))).isDefined)
-    // an Or with an untranslatable side drops entirely (weaker != wrong)
-    assert(pred(Or(EqualTo("k", 5L), StringContains("name", "x"))).isEmpty)
-    // absent column (additive evolution): dropped
-    assert(pred(EqualTo("ghost", 1L)).isEmpty)
+  test("pushed filters skip row groups of a clustered epoch") {
+    val dir = freshDir("rg_skip")
+    val n = 20000
+    // one k-sorted part file of many small row groups
+    val old = spark.conf.getOption("parquet.block.size")
+    spark.conf.set("parquet.block.size", "16384")
+    try AtomicWarehouse.commitEpoch(spark, dir,
+      rows(1, n, 1L).repartition(1).sortWithinPartitions("k"), 1L)
+    finally old.fold(spark.conf.unset("parquet.block.size"))(
+      spark.conf.set("parquet.block.size", _))
+    val groups = new java.io.File(s"$dir/epoch_1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString),
+            spark.sparkContext.hadoopConfiguration))
+        try r.getFooter.getBlocks.size finally r.close()
+      }.sum
+    assert(groups > 4, s"only $groups row groups")
+
+    /** The query's keys and the rows its scan tasks read
+      * (`inputMetrics.recordsRead`, summed over the job's tasks). */
+    def scan(where: org.apache.spark.sql.Column): (Set[Long], Long) = {
+      val read = new java.util.concurrent.atomic.AtomicLong(0L)
+      val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m =>
+            read.addAndGet(m.inputMetrics.recordsRead))
+        override def onJobEnd(
+            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          ended.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val keys = spark.read.format("graft-warehouse").option("path", dir)
+          .load().where(where).select("k").as[Long].collect().toSet
+        // a job's task ends are delivered before its job end
+        val deadline = System.currentTimeMillis() + 10000
+        while (ended.get() == 0 && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+        (keys, read.get())
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+
+    val (point, pointRead) = scan(col("k") === 12345L)
+    assert(point == Set(12345L))
+    assert(pointRead >= 1L && pointRead < n, s"point read $pointRead of $n rows")
+    val (range, rangeRead) = scan(col("k").between(5000L, 5100L))
+    assert(range == (5000L to 5100L).toSet)
+    assert(rangeRead < n / 2, s"range read $rangeRead of $n rows")
+    // a conjunct no row-group filter can serve stays exact (residual)
+    val (mixed, _) = scan(col("k").between(5000L, 5100L) &&
+      length(col("name")) === 5)
+    assert(mixed == (5000L to 5100L).filter(k => s"n$k".length == 5).toSet)
+    val (suffix, _) = scan(col("name").endsWith("777"))
+    assert(suffix == (1L to n).filter(_.toString.endsWith("777")).toSet)
   }
 
   test("a clustered epoch answers point reads with row-group skipping correctness") {

@@ -64,7 +64,7 @@ class WarehouseSourceSpec extends SparkSuite {
   }
 
   test("timestamps decode under both INT96 and INT64-micros encodings") {
-    for (enc <- Seq("INT96", "TIMESTAMP_MICROS")) {
+    for (enc <- Seq("INT96", "TIMESTAMP_MICROS", "TIMESTAMP_MILLIS")) {
       val dir = freshDir(s"ts_$enc")
       val old = spark.conf.get("spark.sql.parquet.outputTimestampType")
       spark.conf.set("spark.sql.parquet.outputTimestampType", enc)

@@ -57,6 +57,54 @@ class EventStreamSpec extends SparkSuite {
     assert(!after.exists(_.getDouble(3) == 100.0), "late event's value leaked into output")
   }
 
+  test("late batches: watermark eviction over 7 micro-batches matches batch semantics") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Timestamp, String, Double)]
+    val df = input.toDF().toDF("ts", "event_type", "value")
+    val q = EventStream.windowedAgg(df).writeStream
+      .outputMode("append").format("memory").queryName("late_canary_out").start()
+    // (rows, late?) per micro-batch; the watermark trails the max event
+    // time by 4 days, so batch 4 closes the 2024-01-01 windows and batch
+    // 6 the 01-02/01-03 ones; batches 5-7 carry rows behind the watermark
+    val batches = Seq(
+      Seq((ts("2024-01-01 10:05:00"), "click", 1.0) -> false,
+        (ts("2024-01-01 10:20:00"), "view", 2.0) -> false),
+      Seq((ts("2024-01-01 11:10:00"), "click", 3.0) -> false,
+        (ts("2024-01-01 12:30:00"), "click", 4.0) -> false),
+      Seq((ts("2024-01-02 09:00:00"), "view", 5.0) -> false,
+        (ts("2024-01-01 10:40:00"), "click", 6.0) -> false),
+      Seq((ts("2024-01-05 14:30:00"), "advance", 0.0) -> false),
+      Seq((ts("2024-01-01 10:50:00"), "click", 100.0) -> true,
+        (ts("2024-01-01 12:10:00"), "view", 200.0) -> true,
+        (ts("2024-01-03 08:00:00"), "click", 7.0) -> false),
+      Seq((ts("2024-01-01 11:59:00"), "click", 300.0) -> true,
+        (ts("2024-01-02 09:30:00"), "view", 8.0) -> false,
+        (ts("2024-01-08 00:00:00"), "advance", 0.0) -> false),
+      Seq((ts("2024-01-02 09:45:00"), "view", 400.0) -> true))
+    val stateRows = batches.map { b =>
+      input.addData(b.map(_._1): _*)
+      q.processAllAvailable()
+      q.lastProgress.stateOperators.head.numRowsTotal
+    }
+    q.stop()
+    // state grows to five windows, then falls each time the watermark
+    // passes them (after batches 4 and 6)
+    assert(stateRows(2) == 5L && stateRows(3) < stateRows(2) &&
+      stateRows(5) < stateRows(4), stateRows.mkString(","))
+    // batch semantics: the on-time rows aggregated, windows the final
+    // watermark (2024-01-04 00:00) has closed
+    val expected = batches.flatten.collect { case (r, false) => r }
+      .toDF("ts", "event_type", "value")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
+      .where(col("window.end") <= lit(ts("2024-01-04 00:00:00")))
+      .select(col("window.start"), col("event_type"), col("n"), col("total_value"))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+    val got = spark.table("late_canary_out")
+    assert(rows(got) == rows(expected))
+    assert(got.count() == 6L) // no window emitted twice
+  }
+
   test("stateful sessionization emits closed sessions with counts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventStream.SessionEvent]
