@@ -33,24 +33,23 @@ object Pipeline {
     DimLoader.loadDim(spark, s"$dir/shows.json", Schemas.shows, "code"),
     DimLoader.loadDim(spark, s"$dir/cpm_categories.json", Schemas.cpmCategories, "shows_name"))
 
-  /** Stages 1–6 composed lazily into ONE Catalyst plan over the `prior`
-    * staged rows (None: the epoch is the batch alone, still keep-last
-    * deduped within itself). Writes nothing; the caller materializes. */
+  /** Stages 1–6 composed lazily into ONE Catalyst plan over the batch
+    * alone (keep-last deduped within itself; no prior staged rows).
+    * Writes nothing; the caller materializes. */
   private def epochFrame(spark: SparkSession, src: Sources,
-      prior: Option[DataFrame], windowStartIso: String,
-      windowEndIso: String): DataFrame = {
-    val priorRows = prior.getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.staging))
-    val s1 = Stages.ingest(src.videos, src.channels, priorRows,
+      windowStartIso: String, windowEndIso: String): DataFrame = {
+    val noPrior = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.staging)
+    val s1 = Stages.ingest(src.videos, src.channels, noPrior,
       windowStartIso, windowEndIso)
     val s2 = Stages.enrichTitleCode(s1, src.employees)
     // MATERIALIZE the enriched frame once (guide §3.3 "materialising an
-    // intermediate truncates the plan"): the owner loop below embeds
-    // `ids` once per owner PLUS once per anti-join hop, and the final
-    // merge embeds s3 again — without the checkpoint the composed epoch
-    // plan carries ~4 copies of the scan→ingest→regex-enrich subtree,
-    // re-analyzed AND re-executed every micro-batch (the measured ~1 s
-    // driver gap per epoch). An epoch is O(micro-batch), so the
+    // intermediate truncates the plan"): the owner pass below semi-joins
+    // the facts against `ids` and the final merge embeds s3 again —
+    // without the checkpoint the composed epoch plan carries two copies
+    // of the scan→ingest→regex-enrich subtree, re-analyzed AND
+    // re-executed every micro-batch (perfbench `epoch_stream`: 14 jobs
+    // per epoch instead of 11). An epoch is O(micro-batch), so the
     // checkpoint is bounded by trigger admission, never warehouse size.
     val s3 = Stages.enrichShow(s2, src.shows).localCheckpoint()
     val ids = s3.select("video_id")
@@ -60,27 +59,26 @@ object Pipeline {
     Stages.toCanonical(Stages.derive(s5, src.cpmCategories))
   }
 
-  /** One epoch: stages 1–6 as one plan, materialized ONCE
-    * (`localCheckpoint`), then a CHECK-gated, atomically-committed drain
-    * of that same frame into the [[graft.sinks.AtomicWarehouse]]
-    * ([[graft.sinks.Constraints.drainChecked]]: the audited rows are the
-    * committed rows; a violating batch aborts with the warehouse
-    * untouched). No staging dir is read or written — `dirs.stagingDir`
-    * is unused. The epoch has no prior staged rows: each epoch is its
-    * own batch, keep-last deduped within itself, and keep-last ACROSS
-    * epochs is the warehouse's last-wins read. Replaying a committed
-    * `loadSeq` is a no-op. This is the reference's cron unit
+  /** One epoch: stages 1–6 as one plan, handed to
+    * [[graft.sinks.Constraints.drainChecked]], which materializes it ONCE
+    * (`localCheckpoint`, with the CHECK audit observed on that same
+    * pass) and commits the pinned frame atomically into the
+    * [[graft.sinks.AtomicWarehouse]]: the audited rows are the committed
+    * rows; a violating batch aborts with the warehouse untouched. No
+    * staging dir is read or written — `dirs.stagingDir` is unused. The
+    * epoch has no prior staged rows: each epoch is its own batch,
+    * keep-last deduped within itself, and keep-last ACROSS epochs is the
+    * warehouse's last-wins read. Replaying a committed `loadSeq` is a
+    * no-op. This is the reference's cron unit
     * (dags/Dashboard-pipeline.py:20-40) with the transactionality its
     * BigQuery sink provides server-side. Returns the committed epoch
     * frame, typed (the warehouse stores it all-string). */
   def runEpoch(spark: SparkSession, src: Sources, dirs: Dirs,
       windowStartIso: String, windowEndIso: String, loadSeq: Long,
-      checks: Seq[(String, String)]): DataFrame = {
-    val epoch = epochFrame(spark, src, None, windowStartIso, windowEndIso)
-      .localCheckpoint()
-    Constraints.drainChecked(spark, epoch, dirs.warehouseDir, loadSeq, checks)
-    epoch
-  }
+      checks: Seq[(String, String)]): DataFrame =
+    Constraints.drainChecked(spark,
+      epochFrame(spark, src, windowStartIso, windowEndIso),
+      dirs.warehouseDir, loadSeq, checks)
 
   /** The WHOLE pipeline on the STREAMING ENGINE: each micro-batch of
     * arriving videos runs one full [[runEpoch]] epoch — DSv2/file
@@ -96,10 +94,13 @@ object Pipeline {
     * per epoch end-to-end.
     *
     * The streaming path never writes `dirs.stagingDir`: each epoch
-    * frame is checkpointed in memory, audited and committed as is.
+    * frame is checkpointed in memory, audited on that same pass and
+    * committed as is.
     *
-    * Scale: the stream side never shuffles before the commit (dim joins
-    * are broadcasts); per-epoch cost is the batch pipeline's. State lives
+    * Scale: before the commit the stream side shuffles only the epoch's
+    * own rows (dim joins are broadcasts; the owner pass is one
+    * `video_id` exchange over the epoch's facts); per-epoch cost is the
+    * batch pipeline's. State lives
     * in the source checkpoint only — the pipeline itself is stateless
     * across epochs by design (no staging carries rows between epochs,
     * the warehouse merge is read-side). */

@@ -24,9 +24,9 @@ object Extended60 {
     * ([[graft.sinks.Constraints.drainChecked]]: the audited frame is the
     * committed frame). The result is the warehouse snapshot
     * read: every stage's semantics — channel default, purge rules,
-    * employee/show lookups, the 2-owner anti-join metrics loop, H:MM:SS
-    * rendering, +05:00 local split, rate derivations, the International-
-    * News cpm override, and the all-string warehouse edge — must
+    * employee/show lookups, the 2-owner first-owner-wins metrics pass,
+    * H:MM:SS rendering, +05:00 local split, rate derivations, the
+    * International-News cpm override, and the all-string warehouse edge — must
     * hash-match the oracle's single declarative replay.
     *
     * Fixtures derive deterministically from `orders` (k = o_orderkey,
@@ -35,8 +35,8 @@ object Extended60 {
     * the dim), publish time spread over 2024-05-01/02 (the two epoch
     * files), analytics facts per owner with k%3 coverage — owner1 holds
     * two fact rows for k%3==0 (exercising the grouped sum/avg), owner2
-    * one row for k%3<=1, so owner2's k%3==0 rows MUST be anti-joined
-    * away (their values differ — a broken owner loop breaks the hash)
+    * one row for k%3<=1, so owner2's k%3==0 rows MUST lose to owner1's
+    * (their values differ — a broken owner attribution breaks the hash)
     * and k%3==2 videos keep null metrics through the merge.
     *
     * Epoch-assignment is order-free by construction (each video's
@@ -293,10 +293,10 @@ object Extended60 {
           ((k % 15) + j).cast("long").as("subs_gained"),
           ((k % 7) + j).cast("long").as("subs_lost"))
     // materialized once per DRIVING, not re-scanned per epoch: every
-    // micro-batch's plan embeds the facts table once per owner, so the
-    // un-checkpointed 3-way orders-scan union was re-analyzed and
-    // re-executed ~4x per epoch (guide §3.3); the facts are invariant
-    // across epochs by construction
+    // micro-batch's plan embeds the facts table, so an un-checkpointed
+    // 3-way orders-scan union would be re-analyzed and re-executed every
+    // epoch (guide §3.3); the facts are invariant across epochs by
+    // construction
     val facts = factRows("owner1", "vod", 0, k % 3 === 0)
       .unionByName(factRows("owner1", "vod", 1, k % 3 === 0))
       .unionByName(factRows("owner2", "short", 0, k % 3 <= 1))

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CHECK-constraint gate for warehouse drains — the quality fence the
@@ -46,30 +46,38 @@ object Constraints {
     * `checks`: any violation aborts BEFORE anything is written — the
     * manifest and the epoch dirs are left untouched, and the error
     * carries the per-constraint counts. A clean epoch commits through
-    * the drain's all-string, part-sized commit.
+    * the drain's all-string, part-sized commit. Returns the committed
+    * (pinned) frame.
     *
-    * CHECK and COMMIT see one frame: the audit is one aggregate pass
-    * (the violation sums plus the row count the part sizing needs) and
-    * the same DataFrame is committed, so the rows audited are the rows
-    * committed. Callers pass a frame whose input is pinned — a
-    * `localCheckpoint`ed epoch, or a parquet read (its file listing is
-    * fixed when the DataFrame is created). `afterCheck` is a test seam
-    * (fires between the audit and the commit) for pinning exactly that
-    * property. */
+    * CHECK and COMMIT see one frame without a separate audit job: the
+    * frame is pinned by ONE `localCheckpoint`, and the row count the part
+    * sizing needs plus the violation sums ride that materialization as
+    * an [[org.apache.spark.sql.Observation]]. The observe node is the top
+    * of the materialized plan, so its accumulators live in the result
+    * stage and count each partition once however tasks retry. The commit
+    * writes the checkpointed rows, so the rows audited are the rows
+    * committed whatever the input is — callers need not pin it.
+    * `afterCheck` is a test seam (fires between the audit and the commit)
+    * for pinning exactly that property. */
   def drainChecked(spark: SparkSession, epoch: DataFrame, dir: String,
       seq: Long, checks: Seq[(String, String)],
-      afterCheck: () => Unit = () => ()): Unit = {
-    val audit = epoch.agg(count(lit(1)), violationCounts(checks): _*).head()
-    val rows = audit.getLong(0)
+      afterCheck: () => Unit = () => ()): DataFrame = {
+    val audit = Observation()
+    val pinned = epoch.observe(audit, count(lit(1)).as("__rows"),
+      violationCounts(checks): _*).localCheckpoint()
+    val metrics = audit.get
+    val rows = metrics("__rows").asInstanceOf[Long]
+    // an empty frame observes null sums: the row guard covers them
     val bad = if (rows == 0L) Nil else checks.zipWithIndex.collect {
-      case ((name, _), i) if audit.getLong(i + 1) > 0 =>
-        s"$name=${audit.getLong(i + 1)}"
+      case ((name, _), i) if metrics(s"__c$i").asInstanceOf[Long] > 0 =>
+        s"$name=${metrics(s"__c$i")}"
     }
     if (bad.nonEmpty)
       throw new ConstraintViolationException(bad.mkString(
         s"drain epoch $seq refused, constraint violations: ", ", ", ""))
     afterCheck()
-    AtomicWarehouse.commitDrained(spark, epoch, rows, dir, seq)
+    AtomicWarehouse.commitDrained(spark, pinned, rows, dir, seq)
+    pinned
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Local stand-in for the YouTube Analytics API — the remote endpoint IS
@@ -17,40 +18,41 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsSource {
 
-  /** Metrics for `ids` visible to one content owner. `withContentType`
-    * mirrors dataprocessing2's extra dimension (:90). */
-  def metricsFor(facts: DataFrame, ids: DataFrame, ownerId: String,
-      withContentType: Boolean): DataFrame = {
-    val owned = facts.where(col("content_owner_id") === ownerId)
-      .join(broadcast(ids.select(col("video_id"))), Seq("video_id"), "left_semi")
-    val keys = if (withContentType) Seq(col("video_id"), col("content_type"))
-      else Seq(col("video_id"))
-    owned.groupBy(keys: _*).agg(
-      sum("views").as("views"),
-      sum("minutes_watched").as("minutes_watched"),
-      avg("avg_view_duration_s").cast("long").as("avg_view_duration_s"),
-      sum("comments").as("comments"),
-      sum("likes").as("likes"),
-      sum("shares").as("shares"),
-      sum("revenue").as("revenue"),
-      avg("cpm").as("cpm"),
-      sum("subs_gained").as("subs_gained"),
-      sum("subs_lost").as("subs_lost"))
-  }
-
-  /** The 3-content-owner loop with anti-join "remaining" semantics
-    * (ref dataprocessing.py:106-114): each owner only fetches ids not
-    * already satisfied by a previous owner. */
+  /** The reference's content-owner loop (dataprocessing.py:106-114:
+    * each owner only fetches the ids no earlier owner returned) as ONE
+    * relational pass: a video is served by the first owner, in `owners`
+    * order, holding any fact row for it, and its metrics aggregate that
+    * owner's rows only. The facts are filtered to the owners, semi-joined
+    * once against a broadcast of `ids`, tagged with the owner's first
+    * index in `owners`, grouped once by (video, owner index
+    * [, content type]), and each video keeps the groups of its lowest
+    * index (a window `min`). One hash partitioning on `video_id` serves
+    * both the aggregate and the window, so the pass shuffles once.
+    * `withContentType` mirrors dataprocessing2's extra dimension (:90). */
   def metricsAcrossOwners(facts: DataFrame, ids: DataFrame,
       owners: Seq[String], withContentType: Boolean): DataFrame = {
-    val (all, _) = owners.foldLeft((Option.empty[DataFrame], ids)) {
-      case ((acc, remaining), owner) =>
-        val got = metricsFor(facts, remaining, owner, withContentType)
-        val newAcc = acc.map(_.unionByName(got)).orElse(Some(got))
-        val stillMissing = remaining.join(
-          got.select("video_id"), Seq("video_id"), "left_anti")
-        (newAcc, stillMissing)
-    }
-    all.getOrElse(facts.sparkSession.emptyDataFrame)
+    require(owners.nonEmpty, "no content owners")
+    val dims = if (withContentType) Seq("video_id", "content_type")
+      else Seq("video_id")
+    facts.where(col("content_owner_id").isin(owners: _*))
+      .join(broadcast(ids.select(col("video_id"))), Seq("video_id"), "left_semi")
+      .withColumn("__owner", array_position(
+        array(owners.map(lit): _*), col("content_owner_id")))
+      .repartition(col("video_id"))
+      .groupBy((dims :+ "__owner").map(col): _*)
+      .agg(
+        sum("views").as("views"),
+        sum("minutes_watched").as("minutes_watched"),
+        avg("avg_view_duration_s").cast("long").as("avg_view_duration_s"),
+        sum("comments").as("comments"),
+        sum("likes").as("likes"),
+        sum("shares").as("shares"),
+        sum("revenue").as("revenue"),
+        avg("cpm").as("cpm"),
+        sum("subs_gained").as("subs_gained"),
+        sum("subs_lost").as("subs_lost"))
+      .withColumn("__first", min("__owner").over(Window.partitionBy("video_id")))
+      .where(col("__owner") === col("__first"))
+      .drop("__owner", "__first")
   }
 }

@@ -715,7 +715,9 @@ class PlanAuditSpec extends SparkSuite {
     val shows = Seq(("AB4", "S", "B", "Cat"))
       .toDF("code", "show_name", "broadcaster", "category")
     val cpm = Seq(("S", "P")).toDF("shows_name", "cpm_category")
-    val facts = Seq(("v1", "owner1", "vod", 1L, 1.0, 1L, 1L, 1L, 1L, 1.0, 1.0, 1L, 1L))
+    // owner2 holds a row too: the optimizer prunes an owner without one
+    val facts = Seq(("v1", "owner1", "vod", 1L, 1.0, 1L, 1L, 1L, 1L, 1.0, 1.0, 1L, 1L),
+        ("v1", "owner2", "vod", 2L, 2.0, 2L, 2L, 2L, 2L, 2.0, 2.0, 2L, 2L))
       .toDF("video_id", "content_owner_id", "content_type", "views",
         "minutes_watched", "avg_view_duration_s", "comments", "likes",
         "shares", "revenue", "cpm", "subs_gained", "subs_lost")
@@ -730,13 +732,25 @@ class PlanAuditSpec extends SparkSuite {
     val s6 = Stages.toCanonical(
       Stages.derive(Stages.mergeAnalytics(s3, metrics), cpm))
     val p = s6.queryExecution.sparkPlan.toString
-    // channel, employee, show, cpm-category dim joins + the per-owner
-    // semi/anti id joins all broadcast; the only allowed shuffle joins
+    // channel, employee, show, cpm-category dim joins + the owner pass's
+    // one semi id join all broadcast; the only allowed shuffle joins
     // are the video_id-keyed staging-metrics merges (fact-sized at scale)
     assert(count(p, "BroadcastHashJoin") >= 4,
       s"expected >=4 broadcast dim joins:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") &&
       !p.contains("CartesianProduct"),
       s"nested-loop/cartesian in the epoch plan:\n$p")
+    // the owners are attributed in ONE pass over the facts: no anti-join
+    // hop, and one aggregate whose input holds the facts
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val opt = s6.queryExecution.optimizedPlan
+    assert(opt.collect { case j: Join if j.joinType == LeftAnti => j }.isEmpty,
+      s"anti-join in the epoch plan:\n$opt")
+    val factAggs = opt.collect {
+      case a: Aggregate if a.collectLeaves()
+        .exists(_.output.exists(_.name == "content_owner_id")) => a
+    }
+    assert(factAggs.size == 1, s"${factAggs.size} aggregates over the facts:\n$opt")
   }
 }

@@ -155,9 +155,12 @@ class PipelineSpec extends SparkSuite {
 
   /** The two fixture epochs as two day-files under `root`, one per
     * trigger (c30's driving shape), drained by [[Pipeline.streamEpochs]]
-    * over a window holding both; rethrows the stream's failure. */
+    * over a window (by default one holding both); rethrows the stream's
+    * failure. */
   private def streamFixtureEpochs(root: String,
-      checks: Seq[(String, String)]): Unit = {
+      checks: Seq[(String, String)],
+      window: (String, String) = ("2024-05-01T00:00:00Z", "2024-05-03T23:59:59Z"))
+      : Unit = {
     val in = new java.io.File(s"$root/videos_in")
     if (!in.exists()) {
       in.mkdirs()
@@ -175,7 +178,7 @@ class PipelineSpec extends SparkSuite {
     val src = sources("videos_epoch1.json")
     Pipeline.streamEpochs(spark, stream, batch => src.copy(videos = batch),
       Pipeline.Dirs(s"$root/staging", s"$root/warehouse"),
-      "2024-05-01T00:00:00Z", "2024-05-03T23:59:59Z", checks,
+      window._1, window._2, checks,
       s"$root/checkpoint").awaitTermination()
   }
 
@@ -205,5 +208,71 @@ class PipelineSpec extends SparkSuite {
     streamFixtureEpochs(root, pass)
     assert(AtomicWarehouse.currentVersion(spark, s"$root/warehouse") == 2L)
     assert(snapshot(root) == want)
+  }
+
+  test("stream: micro-batches with every video outside the window commit empty epochs") {
+    val root = Files.createTempDirectory("graft_stream_empty").toString
+    streamFixtureEpochs(root, idPresent,
+      window = ("2030-01-01T00:00:00Z", "2030-01-01T23:59:59Z"))
+    assert(AtomicWarehouse.currentVersion(spark, s"$root/warehouse") == 2L)
+    for (seq <- 1 to 2)
+      assert(new java.io.File(s"$root/warehouse/epoch_$seq").isDirectory)
+    val read = AtomicWarehouse.read(spark, s"$root/warehouse", "video_id")
+    assert(read.count() == 0L)
+    assert(read.columns.toSeq == Schemas.staging.fieldNames.toSeq :+ "load_seq")
+  }
+
+  /** Spark jobs `body` fires on this thread. A sentinel job flushes the
+    * listener queue (FIFO) before the count is reset and read, so no job
+    * from before `body` leaks in and none from inside it is lost; jobs
+    * are matched by a local property of this thread, which Spark hands to
+    * the broadcast and adaptive-stage jobs an action spawns. */
+  private def jobsFiredBy(body: => Unit): Int = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (jobs, sentinels) = (new AtomicInteger, new AtomicInteger)
+    val tag = "graft.spec.jobs"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("sentinel") => sentinels.incrementAndGet()
+          case Some(_) => jobs.incrementAndGet()
+          case None =>
+        }
+    }
+    def flush(): Unit = {
+      val before = sentinels.get
+      sc.setLocalProperty(tag, "sentinel")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(tag, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (sentinels.get == before && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(sentinels.get > before, "listener queue did not drain in 60 s")
+    }
+    sc.addSparkListener(listener)
+    try {
+      flush(); jobs.set(0)
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, null)
+      flush(); jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one epoch's job graph: a pinned number of Spark jobs") {
+    val src = sources("videos_epoch1.json")
+    val n = jobsFiredBy {
+      Pipeline.runEpoch(spark, src, tmpDirs(), "2024-05-01T00:00:00Z",
+        "2024-05-02T23:59:59Z", loadSeq = 1, idPresent)
+    }
+    // 15 on this fixture (local[4], 4 shuffle partitions): 8 build the
+    // enriched-frame checkpoint (the dims' dedup stages and broadcasts,
+    // then the checkpoint), 5 run the rest of the epoch plan (the id
+    // broadcast, the one owner pass, the cpm dim), 1 is the checkpoint
+    // that pins the epoch frame and observes its CHECK audit, and 1 is
+    // the commit's write. A per-owner join loop or a separate audit
+    // aggregate raises it.
+    assert(n == 15, s"one epoch fired $n jobs")
   }
 }

@@ -74,4 +74,36 @@ class ConstraintsSpec extends SparkSuite {
     // still there, and never reached the warehouse unchecked
     assert(spark.read.parquet(staging).count() == 3)
   }
+
+  test("an empty epoch commits an empty epoch; its null violation sums refuse nothing") {
+    val wh = tmp("cons_empty") + "/wh"
+    val empty = Seq((1L, "a")).toDF("k", "v").where("k < 0")
+    Constraints.drainChecked(spark, empty, wh, 1L,
+      Seq("k_pos" -> "k > 0", "v_set" -> "v IS NOT NULL"))
+    assert(AtomicWarehouse.currentVersion(spark, wh) == 1L)
+    assert(new java.io.File(s"$wh/epoch_1").isDirectory)
+    val read = AtomicWarehouse.read(spark, wh, "k")
+    assert(read.columns.toSeq == Seq("k", "v", "load_seq"))
+    assert(read.count() == 0L)
+  }
+
+  test("a multi-constraint refusal reports each violated constraint's count, in order") {
+    val wh = tmp("cons_multi") + "/wh"
+    val df = Seq[(java.lang.Long, String)]((1L, "a"), (-1L, null), (-2L, "b"),
+      (null, "c"), (5L, null)).toDF("k", "v")
+    val checks = Seq("k_pos" -> "k > 0", "k_small" -> "k < 100",
+      "v_set" -> "v IS NOT NULL", "k_neg" -> "k < 0")
+    val e = intercept[ConstraintViolationException] {
+      Constraints.drainChecked(spark, df, wh, 4L, checks)
+    }
+    // k_small passes everywhere and a null k is UNKNOWN for every k check
+    assert(e.getMessage ==
+      "drain epoch 4 refused, constraint violations: k_pos=2, v_set=2, k_neg=2")
+    // the same counts as the one-aggregate report
+    val report = Constraints.violationReport(df, checks).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).filter(_._2 > 0)
+    assert(report.map { case (n, c) => s"$n=$c" }.mkString(", ") ==
+      "k_pos=2, v_set=2, k_neg=2")
+    assert(!new java.io.File(wh).exists())
+  }
 }
