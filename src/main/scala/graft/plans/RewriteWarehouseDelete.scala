@@ -159,20 +159,7 @@ final case class WarehouseDeleteCommand(
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val nParts = AtomicWarehouse.keyParts(mergeKey).size
-    val snap =
-      if (pointKeys.nonEmpty && pointKeys.size <= 64)
-        pointKeys.flatMap { k =>
-          if (nParts > 1)
-            Some(AtomicWarehouse.readPointComposite(spark, dir, mergeKey,
-              k.split(AtomicWarehouse.CompositeSep, -1).toSeq))
-          else if (keyTyp == "string")
-            Some(AtomicWarehouse.readPointStr(spark, dir, mergeKey, k))
-          else k.toLongOption
-            .map(AtomicWarehouse.readPoint(spark, dir, mergeKey, _))
-        }.reduceOption(_.unionByName(_))
-          .getOrElse(AtomicWarehouse.read(spark, dir, mergeKey))
-      else AtomicWarehouse.read(spark, dir, mergeKey)
+    val snap = PointBound.read(spark, dir, mergeKey, keyTyp, pointKeys)
     val cond = coalesce(GraftBridge.column(branch.cond.get), lit(false))
     val matched = snap.where(cond)
     val maxKeys = spark.conf.get("graft.delete.maxKeys", "100000").toInt

@@ -60,9 +60,14 @@ import graft.sources.v2.WarehouseTable
   *    epoch — no target read at all, O(|source|);
   *  - GENERAL PATH (partial assignments, conditional/multiple branches,
   *    or target-referencing values): one left-outer join of the source
-  *    against the current merged snapshot supplies old values and the
-  *    per-row branch choice; rows with no applicable branch drop out.
-  *    The delta-sized source is the join's small side.
+  *    against the target supplies old values and the per-row branch
+  *    choice; rows with no applicable branch drop out. The target side
+  *    is KEY-BOUND: a source of at most 64 keys (the cap UPDATE and
+  *    DELETE bound their point reads by) reads only those keys' current
+  *    winners, through the same pruned point lookups; a larger source
+  *    reads the merged snapshot. Either way the delta-sized source is
+  *    the join's small side. WHEN NOT MATCHED BY SOURCE needs the target
+  *    keys ABSENT from the source, so it reads the merged snapshot.
   */
 object RewriteWarehouseMerge extends Rule[LogicalPlan] {
 
@@ -208,8 +213,7 @@ object RewriteWarehouseMerge extends Rule[LogicalPlan] {
       val keyType = targetAttrs.find(_.name == part)
         .map(_.dataType).getOrElse(refuse(
           s"target has no mergeKey column '$part'"))
-      if (!Seq("tinyint", "smallint", "int", "bigint", "string")
-          .contains(keyType.catalogString))
+      if (!PointBound.KeyTypes.contains(keyType.catalogString))
         refuse("WHEN NOT MATCHED BY SOURCE THEN DELETE needs an integral " +
           s"or string mergeKey (tombstones address typed keys); " +
           s"'$part' is ${keyType.catalogString}")
@@ -354,14 +358,38 @@ final case class WarehouseMergeCommand(
         keys
       }
 
+    // KEY-BOUND target read: the left-outer join below takes only the
+    // target rows whose key equals a source key (a null source key
+    // matches nothing), so when the source carries at most
+    // PointBound.MaxKeys keys the target is read through their pruned
+    // point lookups — the reads UPDATE and DELETE use — instead of the
+    // full merged snapshot. The probe collects at most MaxKeys + 1 key
+    // renderings (a VALUES source folds to a local relation: no Spark
+    // job); more, or a source key typed unlike its target part (or
+    // outside the integral/string types whose renderings round-trip),
+    // reads the full snapshot.
+    def boundTarget(): org.apache.spark.sql.DataFrame = {
+      val sameType = keyPartNames.zip(srcKeyExprs).forall { case (p, e) =>
+        targetCols.find(_._1 == p).exists { case (_, t) =>
+          t == e.dataType.catalogString && PointBound.KeyTypes.contains(t)
+        }
+      }
+      lazy val probe = src.select(srcKeyRendered.cast("string"))
+        .limit(PointBound.MaxKeys + 1).collect()
+      if (sameType && probe.length <= PointBound.MaxKeys)
+        PointBound.read(spark, dir, mergeKey, keyTyp,
+          probe.flatMap(r => Option(r.getString(0))).distinct.toSeq)
+      else AtomicWarehouse.read(spark, dir, mergeKey)
+    }
+
     // GENERAL PATH pieces: old values / branch selection need the
-    // matched target row — one left-outer join against the merged
-    // snapshot (the delta-sized source is the join's small side).
+    // matched target row — one left-outer join against the key-bound
+    // target read (the delta-sized source is the join's small side).
     // Shared by the plain commit and the typed-feed commit (which needs
     // the matched/not-matched SPLIT even for symmetric merges).
     def generalParts(): (org.apache.spark.sql.DataFrame, Column, Column,
         Seq[Column]) = {
-      val merged = AtomicWarehouse.read(spark, dir, mergeKey)
+      val merged = boundTarget()
       val t = merged.select(merged.columns.toSeq
         .map(c => col(c).as(s"__t_$c")): _*)
       val joinCond = srcKeyExprs.zip(keyPartNames).map { case (e, p) =>
@@ -413,10 +441,25 @@ final case class WarehouseMergeCommand(
     // the keyed winner. `load_seq` stats are recorded so the NEXT
     // self-sequencing writer derives its floor from the manifest alone.
     val baseV = AtomicWarehouse.currentVersion(spark, dir)
+    // the digest renders source columns by their ORDINAL in the source's
+    // output, never by expression id: ids come from a JVM-wide counter,
+    // so an id-bearing rendering would name the same MERGE at the same
+    // base differently depending on what was analyzed before it, and a
+    // replay would not converge by name
+    val srcOrdinal = source.output.map(_.exprId).zipWithIndex.toMap
+    def stable(e: Expression): String = e.transform {
+      case a: AttributeReference if srcOrdinal.contains(a.exprId) =>
+        UnresolvedAttribute(Seq(s"__s${srcOrdinal(a.exprId)}"))
+    }.toString
+    def stableBranches(bs: Seq[MergeBranch]): String = bs.map { b =>
+      (b.cond.map(stable), b.assigns.toSeq.sortBy(_._1)
+        .map { case (c, e) => c -> stable(e) }, b.srcOnly)
+    }.toString
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest((source.canonicalized.toString +
-          srcKeyExprs.map(_.canonicalized).mkString(";") +
-          matched.toString + notMatched.toString + bySourceDelete.toString)
+          srcKeyExprs.map(stable).mkString(";") +
+          stableBranches(matched) + stableBranches(notMatched) +
+          stableBranches(bySourceDelete))
         .getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(8)
     if (matched.isEmpty && notMatched.isEmpty) {

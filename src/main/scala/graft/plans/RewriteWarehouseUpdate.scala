@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -167,22 +167,7 @@ final case class WarehouseUpdateCommand(
     // per key — blooms/zone maps open only the epochs that can hold
     // it); the full predicate still applies residually below, so the
     // bound only has to be a superset of the matched rows
-    val nParts = AtomicWarehouse.keyParts(mergeKey).size
-    val snap =
-      if (pointKeys.nonEmpty && pointKeys.size <= 64)
-        pointKeys.flatMap { k =>
-          if (nParts > 1)
-            // composite bound: the rendering splits back into parts,
-            // pruned per part (zone maps + blooms)
-            Some(AtomicWarehouse.readPointComposite(spark, dir, mergeKey,
-              k.split(AtomicWarehouse.CompositeSep, -1).toSeq))
-          else if (keyTyp == "string")
-            Some(AtomicWarehouse.readPointStr(spark, dir, mergeKey, k))
-          else k.toLongOption
-            .map(AtomicWarehouse.readPoint(spark, dir, mergeKey, _))
-        }.reduceOption(_.unionByName(_))
-          .getOrElse(AtomicWarehouse.read(spark, dir, mergeKey))
-      else AtomicWarehouse.read(spark, dir, mergeKey)
+    val snap = PointBound.read(spark, dir, mergeKey, keyTyp, pointKeys)
     val cond = branch.cond
       .map(c => coalesce(GraftBridge.column(c), lit(false)))
       .getOrElse(lit(true))
@@ -231,15 +216,24 @@ final case class WarehouseUpdateCommand(
   }
 }
 
-/** Shared key-bound extraction for the point-read DML paths: when every
-  * part of the (possibly composite) mergeKey is pinned to literal
-  * value(s) by the predicate, the bounded key set — renderings, parts
+/** Shared key-bound reads for the DML paths. When every part of the
+  * (possibly composite) mergeKey is pinned to literal value(s) by the
+  * predicate, the bounded key set — renderings, parts
   * [[graft.sinks.AtomicWarehouse.CompositeSep]]-joined — is a SUPERSET
   * of the matched rows (the full predicate still applies residually),
   * so the command reads through pruned point lookups instead of a full
   * merged scan. A composite bound is the CROSS PRODUCT of the per-part
-  * bounds, capped (a blown-up product reads the scan path instead). */
+  * bounds, capped at [[MaxKeys]] (a blown-up product reads the scan
+  * path instead). MERGE bounds its target read by its source's keys
+  * through the same [[read]]. */
 private[plans] object PointBound {
+  /** Most keys read through point lookups; more read the full scan. */
+  val MaxKeys = 64
+
+  /** Key column types whose values round-trip through their string
+    * renderings into a point lookup of the same value. */
+  val KeyTypes = Set("tinyint", "smallint", "int", "bigint", "string")
+
   def boundKeys(mergeKey: String,
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       keyBound: String => org.apache.spark.sql.catalyst.expressions.Expression
@@ -248,9 +242,29 @@ private[plans] object PointBound {
     val perPart = parts.map(p => keyBound(p)(cond))
     if (perPart.exists(_.isEmpty)) return None
     val product = perPart.flatten.foldLeft(Seq(Seq.empty[String])) {
-      (acc, vs) => if (acc.size * vs.size > 64) return None
+      (acc, vs) => if (acc.size * vs.size > MaxKeys) return None
         else acc.flatMap(prefix => vs.map(prefix :+ _))
     }
     Some(product.map(_.mkString(graft.sinks.AtomicWarehouse.CompositeSep)))
+  }
+
+  /** The merged snapshot's rows for `keys` (renderings as
+    * [[boundKeys]] makes them), as the union of one pruned point lookup
+    * per key — a composite rendering splits back into its parts, pruned
+    * per part (zone maps + blooms). No keys, more than [[MaxKeys]], or
+    * none usable as the key's type read the full merged snapshot. */
+  def read(spark: SparkSession, dir: String, mergeKey: String,
+      keyTyp: String, keys: Seq[String]): DataFrame = {
+    lazy val full = AtomicWarehouse.read(spark, dir, mergeKey)
+    if (keys.isEmpty || keys.size > MaxKeys) full
+    else keys.flatMap { k =>
+      if (AtomicWarehouse.keyParts(mergeKey).size > 1)
+        Some(AtomicWarehouse.readPointComposite(spark, dir, mergeKey,
+          k.split(AtomicWarehouse.CompositeSep, -1).toSeq))
+      else if (keyTyp == "string")
+        Some(AtomicWarehouse.readPointStr(spark, dir, mergeKey, k))
+      else k.toLongOption
+        .map(AtomicWarehouse.readPoint(spark, dir, mergeKey, _))
+    }.reduceOption(_.unionByName(_)).getOrElse(full)
   }
 }

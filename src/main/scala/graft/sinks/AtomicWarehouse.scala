@@ -1087,8 +1087,9 @@ object AtomicWarehouse {
     * micro-seconds against a grace window of hours; [[vacuum]]'s lease +
     * grace contract documents the operational bound.) Persistent
     * contention past [[MaxCommitAttempts]] fails loudly rather than
-    * spinning. */
-  /** `partitionBy` lays each epoch dir out Hive-style on the named
+    * spinning.
+    *
+    * `partitionBy` lays each epoch dir out Hive-style on the named
     * columns — TWO-LEVEL pruning for range reads: the manifest zone map
     * skips whole epochs, and inside a scanned epoch Spark's partition
     * discovery turns the range predicate into PartitionFilters so only
@@ -1311,24 +1312,6 @@ object AtomicWarehouse {
     maybeAutoCompact(spark, dir)
   }
 
-  /** Per-column min/max over a published data dir, in ONE aggregate pass.
-    * Integral columns record `"long"` stats (numeric comparison); string/
-    * date/timestamp columns record `"string"` stats (their canonical
-    * renderings sort lexicographically in value order). Fractional and
-    * other types are refused — their string forms do NOT sort numerically
-    * ("10.0" < "9.0") so stats over them would prune wrongly. Columns
-    * that are entirely null contribute no stats (conservative: the epoch
-    * is always scanned). */
-  /** Zone-map min/max for `cols` PLUS (when `bloomKey` is set) the key
-    * Bloom filter and the non-null key count, over ONE
-    * `spark.read.parquet` of the published dir and at most TWO jobs:
-    * one aggregate computes every min/max, the total row count and the
-    * bloom key's non-null count together (the pre-round-7 shape ran a
-    * separate scan+agg for stats, a count job and a bloom job — 3 scans
-    * of the same data per epoch commit, a fixed overhead that compounded
-    * at 2 drains/day × years of epochs); the bloom construction itself
-    * stays a second pass because its size must be EXACT-n-sized before
-    * it runs. Returns (stats entries, total row count). */
   /** Zone-map stats, exact row count and (when `bloomKey` is set) the
     * key's non-null count derived from the just-written epoch's parquet
     * FOOTERS — ZERO Spark jobs and zero re-read of the data the write
@@ -1533,6 +1516,22 @@ object AtomicWarehouse {
     Some((capped, total, bloomKey.map(_ => bloomNonNull)))
   }
 
+  /** Zone-map min/max for `cols`, the exact row count, the read schema,
+    * the data file list and (when `bloomKey` is set) the key's Bloom
+    * filters, for a published data dir. Everything but the blooms comes
+    * from the footers ([[footerStatsOf]]: zero Spark jobs); outside the
+    * footer contract ONE aggregate computes every min/max, the total row
+    * count and the bloom key's non-null count together. Integral columns
+    * record `"long"` stats (numeric comparison); string/date/timestamp
+    * columns record `"string"` stats (their canonical renderings sort
+    * lexicographically in value order). Fractional and other types are
+    * refused — their string forms do NOT sort numerically ("10.0" <
+    * "9.0") so stats over them would prune wrongly. Columns that are
+    * entirely null contribute no stats (conservative: the epoch is
+    * always scanned). The blooms are ONE more query ([[buildBlooms]]),
+    * a pass of its own because a filter must be sized by the exact
+    * non-null count before it runs; each further composite-key part
+    * adds one. Returns (stats entries, total row count). */
   private def statsAndBloomOf(spark: SparkSession, path: String,
       cols0: Seq[String], bloomKey0: Option[String],
       needCount: Boolean = false): (Map[String, ColStats], Long) = {
@@ -1642,44 +1641,43 @@ object AtomicWarehouse {
     * is the column's footer/aggregate-counted non-null count; past
     * ~[[MaxBloomBytes]]×0.8 keys no filter is embedded (manifest reads
     * must stay cheap — put row-group blooms in the footers instead at
-    * that scale). One construction job per filter. */
+    * that scale). Both filters come from ONE query: a `select` of one
+    * `bloom_filter_agg` per filter — the aggregate `stat.bloomFilter`
+    * itself runs, at the same `n` and `optimalNumOfBits(n, 0.01)`, so
+    * the bits are identical to a `stat.bloomFilter` of each column (the
+    * aggregate skips nulls). */
   private def buildBlooms(spark: SparkSession, schema: StructType,
       path: String, k: String, nonNull: Long): Map[String, ColStats] = {
+    import org.apache.spark.util.sketch.BloomFilter
     // ~9.6 bits/key at 1% fpp → stay under the manifest-size cap
     if (nonNull == 0 || nonNull > (MaxBloomBytes.toLong * 8 / 10))
       return Map.empty
-    val df = spark.read.schema(schema).parquet(path)
-    // stat.bloomFilter NPEs on an EMPTY input (its aggregate buffer stays
-    // null) — reachable when a string key column holds zero castable
-    // values. An explicitly-empty filter is the RIGHT answer there: no
-    // long lookup can match a column with no castable values, and an
-    // empty bloom prunes them all soundly (no false negatives trivially).
-    def bloomOf(keyed: DataFrame): org.apache.spark.util.sketch.BloomFilter =
-      try keyed.stat.bloomFilter("__k", math.max(1000L, nonNull), 0.01)
-      catch {
-        case _: NullPointerException =>
-          org.apache.spark.util.sketch.BloomFilter
-            .create(math.max(1000L, nonNull), 0.01)
-      }
-    val longBloom = {
-      // try_cast: non-castable strings drop out instead of failing the
-      // commit under ANSI — a long lookup could never match them anyway
-      val keyed = df.select(col(k).try_cast(LongType).as("__k"))
-        .where(col("__k").isNotNull)
-      Map(bloomStatsCol(k) ->
-        ColStats("bloom", serializeBloom(bloomOf(keyed)), nonNull.toString))
+    val n = math.max(1000L, nonNull)
+    def bloomAgg(c: org.apache.spark.sql.Column) =
+      org.apache.spark.sql.GraftBridge.internalFn("bloom_filter_agg", c,
+        lit(n), lit(BloomFilter.optimalNumOfBits(n, 0.01)))
+    val isStr = schema.fields.find(_.name == k).map(_.dataType)
+      .contains(StringType)
+    // try_cast: non-castable strings drop out instead of failing the
+    // commit under ANSI — a long lookup could never match them anyway
+    val r = spark.read.schema(schema).parquet(path).select(
+      bloomAgg(col(k).try_cast(LongType)) +:
+        (if (isStr) Seq(bloomAgg(col(k).cast("string"))) else Nil): _*)
+      .head()
+    // the aggregate is NULL over zero non-null inputs — reachable when a
+    // string key column holds no castable values. An explicitly-empty
+    // filter is the RIGHT answer there: no long lookup can match a
+    // column with no castable values, and an empty bloom prunes them
+    // all soundly (no false negatives trivially).
+    def bloomAt(i: Int, typ: String): ColStats = {
+      val bf =
+        if (r.isNullAt(i)) BloomFilter.create(n, 0.01)
+        else BloomFilter.readFrom(r.getAs[Array[Byte]](i))
+      ColStats(typ, serializeBloom(bf), nonNull.toString)
     }
-    val strBloom =
-      if (!schema.fields.find(_.name == k).map(_.dataType)
-          .contains(StringType)) Map.empty[String, ColStats]
-      else {
-        val keyed = df.select(col(k).cast("string").as("__k"))
-          .where(col("__k").isNotNull)
-        Map(bloomStrStatsCol(k) ->
-          ColStats("bloomstr", serializeBloom(bloomOf(keyed)),
-            nonNull.toString))
-      }
-    longBloom ++ strBloom
+    Map(bloomStatsCol(k) -> bloomAt(0, "bloom")) ++
+      (if (isStr) Map(bloomStrStatsCol(k) -> bloomAt(1, "bloomstr"))
+       else Map.empty)
   }
 
   /** Write `df` to a unique hidden stage dir and move it to `$dir/$name`
@@ -2290,10 +2288,6 @@ object AtomicWarehouse {
   private def keyLits(typ: String, ks: Seq[String]): Seq[Any] =
     if (typ == "long") ks.map(_.toLong) else ks
 
-  /** [[purgeKeys]] with a test seam between the rewrites and the
-    * manifest commit — the window a concurrent drain or fold can land
-    * in; specs use it to pin the carry-over/retry behavior
-    * deterministically. */
   /** Publish (or RE-publish, deleting a lost CAS attempt's stale dir)
     * the delete-preimage log `preName`: the purged keys' CURRENT winner
     * rows — the exact rows the purge retracts from the merged read — in
@@ -2333,6 +2327,58 @@ object AtomicWarehouse {
     (entry, basis)
   }
 
+  /** Runs `tasks` on a driver thread pool made for this call, at most
+    * `width` threads, and returns their results in task order. The
+    * threads are created by the calling thread, so each inherits its
+    * Spark local properties (SQL execution id, job group, job tags);
+    * each makes `spark` its active session. Every task settles before
+    * the first failure (in task order) is rethrown, and the pool is
+    * shut down and drained of its threads before this returns. */
+  private def onDriverPool[T](spark: SparkSession, width: Int,
+      tasks: Seq[() => T]): Seq[T] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors,
+      ThreadFactory, TimeUnit}
+    val threads = new java.util.concurrent.atomic.AtomicInteger
+    val pool = Executors.newFixedThreadPool(math.max(1, width),
+      new ThreadFactory {
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"graft-rewrite-${threads.incrementAndGet()}")
+          t.setDaemon(true); t
+        }
+      })
+    try {
+      val futures = tasks.map(t => pool.submit(new Callable[T] {
+        def call(): T = { SparkSession.setActiveSession(spark); t() }
+      }))
+      val settled = futures.map { f =>
+        try scala.util.Success(f.get())
+        catch { case e: ExecutionException => scala.util.Failure(e.getCause) }
+      }
+      settled.collectFirst { case scala.util.Failure(e) => throw e }
+      settled.map(_.get)
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+  }
+
+  /** [[purgeKeys]] with a test seam between the rewrites and the
+    * manifest commit — the window a concurrent drain or fold can land
+    * in; specs use it to pin the carry-over/retry behavior
+    * deterministically.
+    *
+    * The affected epochs' rewrites (read, filter, publish, footer stats,
+    * blooms) and the purge log's publish are independent, so they run
+    * concurrently on a driver pool of min(rewrites,
+    * `defaultParallelism`) threads ([[onDriverPool]]): a rewrite of a
+    * small epoch is a single-task job, so one at a time they would
+    * leave the other cores idle. Results gather in manifest order, so
+    * the CAS builds the same entry list a one-at-a-time loop would. A
+    * failed rewrite fails the purge once the others settle; the
+    * manifest is untouched and any dirs already published are orphans
+    * for [[vacuum]], as after a crash. Each victim is read under its
+    * manifest-recorded schema ([[WarehouseConnector.entrySchema]]), so
+    * no schema-inference job runs. */
   private[sinks] def purgeKeysImpl(spark: SparkSession, dir: String,
       key: String, typ: String, keys0: Seq[String],
       statsKey: Option[String], statsCols: Seq[String],
@@ -2362,38 +2408,38 @@ object AtomicWarehouse {
       }
       val affected = affectedEntries.map(_.name)
       if (affected.isEmpty) return (0, 0L)
-      var purged = 0L
-      val rewritten: Map[String, (String, Map[String, ColStats])] =
-        affectedEntries.map { entry =>
-          val name = entry.name
-          val df = spark.read.parquet(s"$dir/$name")
-          // a purge rewrite of an epoch carrying load_seq keeps its
-          // load_seq stats (same rationale as compact's: the
-          // self-sequencing floor must stay metadata-only)
-          val wanted = (wanted0 ++
-            (if (df.columns.contains("load_seq")) Seq("load_seq")
-             else Nil)).distinct
-          // coalesce: a NULL merge key is never a purge target (isin
-          // over null is UNKNOWN, and WHERE would silently drop the row)
-          val kept = df.where(
-            coalesce(!keyCol(key, typ).isin(keyLits(typ, keys): _*),
-              lit(true)))
-          val newName = s"${name}_p${baseV}_$digest"
-          publishData(spark, dir, kept, newName)
-          // the kept count rides the stats aggregate over the published
-          // rewrite — one job instead of a separate kept.count()
-          val (stats, keptCount) =
-            statsAndBloomOf(spark, s"$dir/$newName", wanted, bloomKey,
-              needCount = true)
-          // the victim's pre-rewrite row count comes from its manifest
-          // entry (every commit path records RowCountStat) — a scan-free
-          // answer to what `df.count()` paid one full job per affected
-          // epoch for; stats-less legacy entries still pay the count
-          val origCount = entry.stats.get(RowCountStat).map(_.mn.toLong)
-            .getOrElse(df.count())
-          purged += origCount - keptCount
-          name -> (newName, stats)
-        }.toMap
+      // (victim name, (rewrite name, rewrite stats), rows purged)
+      type Rewrite = (String, (String, Map[String, ColStats]), Long)
+      def rewrite(entry: EpochEntry): Rewrite = {
+        val name = entry.name
+        val df = spark.read.schema(graft.sources.v2.WarehouseConnector
+          .entrySchema(spark, dir, entry)).parquet(s"$dir/$name")
+        // a purge rewrite of an epoch carrying load_seq keeps its
+        // load_seq stats (same rationale as compact's: the
+        // self-sequencing floor must stay metadata-only)
+        val wanted = (wanted0 ++
+          (if (df.columns.contains("load_seq")) Seq("load_seq")
+           else Nil)).distinct
+        // coalesce: a NULL merge key is never a purge target (isin
+        // over null is UNKNOWN, and WHERE would silently drop the row)
+        val kept = df.where(
+          coalesce(!keyCol(key, typ).isin(keyLits(typ, keys): _*),
+            lit(true)))
+        val newName = s"${name}_p${baseV}_$digest"
+        publishData(spark, dir, kept, newName)
+        // the kept count rides the stats pass over the published
+        // rewrite — no separate kept.count()
+        val (stats, keptCount) =
+          statsAndBloomOf(spark, s"$dir/$newName", wanted, bloomKey,
+            needCount = true)
+        // the victim's pre-rewrite row count comes from its manifest
+        // entry (every commit path records RowCountStat) — a scan-free
+        // answer to what `df.count()` paid one full job per affected
+        // epoch for; stats-less legacy entries still pay the count
+        val origCount = entry.stats.get(RowCountStat).map(_.mn.toLong)
+          .getOrElse(df.count())
+        (name, (newName, stats), origCount - keptCount)
+      }
       // PURGE LOG for the change feed: the rewrite names carry only the
       // key-set DIGEST, so without this the retraction was not
       // reconstructible and every feed range crossing the purge refused.
@@ -2402,8 +2448,16 @@ object AtomicWarehouse {
       // rewrite already removed the rows — zero read overhead kept), the
       // feed serves its keys as `_change_type='delete'` rows exactly
       // like a deferred purge's.
-      val (tombName, tombStats, _) =
-        publishTombstone(spark, dir, key, typ, keys, baseV, noop = true)
+      type Tomb = (String, Map[String, ColStats], Int)
+      val results = onDriverPool[Either[Rewrite, Tomb]](spark,
+        math.min(affectedEntries.size, spark.sparkContext.defaultParallelism),
+        affectedEntries.map(e => () => Left(rewrite(e))) :+ (() =>
+          Right(publishTombstone(spark, dir, key, typ, keys, baseV,
+            noop = true))))
+      val rewrites = results.collect { case Left(r) => r }
+      val rewritten = rewrites.map { case (n, r, _) => n -> r }.toMap
+      val purged = rewrites.map(_._3).sum
+      val (tombName, tombStats, _) = results.last.toOption.get
       // DELETE PREIMAGES on the CoW path too (c86's contract, previously
       // deferred-purge-only): behind the same opt-in, the victims'
       // current winners publish as `tombstone_noop_delpre_<log>` in the

@@ -10,6 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** An internal function by name (e.g. `bloom_filter_agg`, the
+    * aggregate `stat.bloomFilter` runs). */
+  def internalFn(name: String, inputs: Column*): Column = Column.internalFn(name, inputs: _*)
   /** Execute a hand-transformed LogicalPlan (rule-testing aid). */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

@@ -586,6 +586,59 @@ class AtomicWarehouseSpec extends SparkSuite {
     assert(AtomicWarehouse.readPoint(spark, wh, "k", 5000L).count() == 0)
   }
 
+  test("key blooms are bit-identical to stat.bloomFilter of the column " +
+      "(long, castable string, non-castable string keys)") {
+    import org.apache.spark.util.sketch.BloomFilter
+    def b64(bf: BloomFilter): String = {
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
+    }
+    // keys with nulls among them: the filters must skip them
+    val cases = Seq(
+      "long" -> spark.range(0, 1500).select(
+        when(col("id") % 7 === 0, lit(null)).otherwise(col("id")).as("k")),
+      "castable" -> spark.range(0, 1500).select(
+        when(col("id") % 7 === 0, lit(null))
+          .otherwise(col("id").cast("string")).as("k")),
+      "non-castable" -> spark.range(0, 1500).select(
+        when(col("id") % 7 === 0, lit(null))
+          .otherwise(concat(lit("id"), col("id").cast("string"))).as("k")))
+    cases.foreach { case (label, keys) =>
+      val wh = tmp("aw_bloombits") + "/wh"
+      AtomicWarehouse.commitEpoch(spark, wh,
+        keys.withColumn("load_seq", lit(1L)), 1L, bloomKey = Some("k"))
+      val st = AtomicWarehouse.committedEntriesAt(spark, wh, 1L).head.stats
+      val data = spark.read.parquet(s"$wh/epoch_1")
+      val n = math.max(1000L, data.where(col("k").isNotNull).count())
+      val asLong = data.select(col("k").try_cast("long").as("k"))
+      val wantLong =
+        if (label == "non-castable") b64(BloomFilter.create(n, 0.01))
+        else b64(asLong.stat.bloomFilter("k", n, 0.01))
+      assert(st("bloom(k)").mn == wantLong, label)
+      assert(st("bloom(k)").mx == n.toString, label)
+      if (label == "long") assert(!st.contains("bloomstr(k)"))
+      else assert(st("bloomstr(k)").mn ==
+        b64(data.stat.bloomFilter("k", n, 0.01)), label)
+    }
+  }
+
+  test("a bloom-keyed commit runs the write plus ONE bloom query") {
+    val wh = tmp("aw_bloomjobs") + "/wh"
+    // a string key: a long and a string filter, both from one query
+    val df = spark.range(0, 2000).select(
+      col("id").cast("string").as("k"), lit(1L).as("load_seq"))
+    val jobs = jobsFiredBy {
+      AtomicWarehouse.commitEpoch(spark, wh, df, 1L,
+        statsKey = Some("k"), bloomKey = Some("k"))
+    }
+    // 3 (local[4]): the write, then the bloom aggregate's map stage and
+    // its final stage; a query per filter makes it 5
+    assert(jobs == 3, s"the commit fired $jobs jobs")
+    val st = AtomicWarehouse.committedEntriesAt(spark, wh, 1L).head.stats
+    assert(st.contains("bloom(k)") && st.contains("bloomstr(k)"))
+  }
+
   private def parquetScans(df: org.apache.spark.sql.DataFrame): Int =
     // sparkPlan, not executedPlan: AQE wraps the latter in an adaptive
     // root whose tree isn't traversable until execution finalizes it

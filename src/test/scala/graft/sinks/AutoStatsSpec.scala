@@ -128,26 +128,12 @@ class AutoStatsSpec extends SparkSuite {
         (1 to 28).map(i => (col("id") * i).as(f"c$i%02d")) :+
         concat_ws("", Seq.fill(40)(lit("lorem ipsum ")): _*).as("body") :+
         lit(1L).as("load_seq")): _*)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsFiredBy {
       AtomicWarehouse.commitEpoch(spark, dir, wide, 1L) // nothing declared
-      // listener delivery is async: poll until the count is stable
-      val deadline = System.currentTimeMillis() + 5000
-      var last = -1
-      while (System.currentTimeMillis() < deadline && jobs.get() != last) {
-        last = jobs.get(); Thread.sleep(200)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // exactly ONE job: the parquet write itself. Stats came from the
     // just-written footers — the "free at commit time" claim, enforced
-    assert(jobs.get() == 1, s"commit ran ${jobs.get()} jobs; auto stats " +
-      "must not scan")
+    assert(jobs == 1, s"commit ran $jobs jobs; auto stats must not scan")
     val stats = statsOf(dir, "epoch_1")
     // every eligible column recorded; the oversized text column dropped
     assert((1 to 28).forall(i => stats.contains(f"c$i%02d")))

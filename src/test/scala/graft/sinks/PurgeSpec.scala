@@ -176,6 +176,93 @@ class PurgeSpec extends SparkSuite {
     assert(read.where(col("k") === 45).isEmpty)
   }
 
+  /** Keys 60, 95, 120 and 180 over epochs 1-100, 50-150, 90-200 and
+    * 300-400: the first three epochs hold 8 versions, the fourth none. */
+  private def fourEpochs(dir: String): Unit = {
+    commit(dir, 1, 100, 1L)
+    commit(dir, 50, 150, 2L)
+    commit(dir, 90, 200, 3L)
+    commit(dir, 300, 400, 4L)
+  }
+  private val spread = Seq(60L, 95L, 120L, 180L)
+
+  test("concurrent rewrites commit the same entries, order and stats on " +
+      "identical warehouses") {
+    def purged(tag: String): Seq[(String, Map[String, AtomicWarehouse.ColStats])] = {
+      val dir = freshDir(tag)
+      fourEpochs(dir)
+      val (epochs, rows) = AtomicWarehouse.purgeKeys(spark, dir, "k", spread,
+        statsKey = Some("k"), bloomKey = Some("k"))
+      assert(epochs == 3 && rows == 8L)
+      assert(AtomicWarehouse.read(spark, dir, "k").where(col("k")
+        .isin(spread: _*)).isEmpty)
+      // the data file list names each write's files: not comparable
+      AtomicWarehouse.committedEntriesAt(spark, dir,
+        AtomicWarehouse.currentVersion(spark, dir))
+        .map(e => e.name -> (e.stats - AtomicWarehouse.FilesStat))
+    }
+    val a = purged("conc_a")
+    val b = purged("conc_b")
+    assert(a == b)
+    // rewrites in their victims' places, the purge log right after the
+    // last of them, the untouched epoch after it
+    val names = a.map(_._1)
+    assert(names.size == 5 && names.take(3).zipWithIndex.forall {
+      case (n, i) => n.startsWith(s"epoch_${i + 1}_p4_")
+    } && names(3).startsWith("tombstone_noop_v4_") && names(4) == "epoch_4",
+      names)
+  }
+
+  test("a refused rewrite publish fails the purge: manifest untouched, " +
+      "no pool thread left") {
+    val local = freshDir("refused")
+    fourEpochs(local)
+    val v = AtomicWarehouse.currentVersion(spark, local)
+    val e = intercept[java.io.IOException] {
+      RefusingFileSystem.refusing(spark, (call, p) => call == "rename" &&
+          new org.apache.hadoop.fs.Path(p).getName.startsWith(".stage_epoch_2_p")) {
+        AtomicWarehouse.purgeKeys(spark, s"refuse://$local", "k", spread,
+          statsKey = Some("k"), bloomKey = Some("k"))
+      }
+    }
+    assert(e.getMessage.contains(".stage_epoch_2_p"), e.getMessage)
+    assert(AtomicWarehouse.currentVersion(spark, local) == v)
+    assert(AtomicWarehouse.read(spark, local, "k").where(col("k")
+      .isin(spread: _*)).count() == 4)
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(_.getName.startsWith("graft-rewrite-")))
+    // the other rewrites settled: their dirs are orphans for vacuum
+    val left = new java.io.File(local).list().toSeq
+    assert(left.exists(_.startsWith("epoch_1_p")) &&
+      left.exists(_.startsWith("epoch_3_p")), left)
+  }
+
+  test("concurrent rewrites run under the caller's local properties") {
+    val dir = freshDir("tagged")
+    fourEpochs(dir)
+    // every job's value of the property jobsFiredBy tags its caller with
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(j.properties.getProperty("graft.spec.jobs")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val jobs = try jobsFiredBy {
+      AtomicWarehouse.purgeKeys(spark, dir, "k", spread,
+        statsKey = Some("k"), bloomKey = Some("k"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    // the jobs between the two flushes' sentinels
+    val all = seen.asScala.toSeq
+    val last = all.lastIndexOf("sentinel")
+    val body = all.slice(all.lastIndexOf("sentinel", last - 1) + 1, last)
+    // 3 rewrites of 3 jobs (write, bloom map stage, bloom result) and
+    // the purge log's write
+    assert(jobs == 10 && body.size == jobs && body.forall(_ == "body"), body)
+  }
+
   test("replaying an identical purge converges without double-rewrite") {
     val dir = freshDir("replay")
     commit(dir, 1, 30, 1L)
@@ -463,30 +550,17 @@ class PurgeSpec extends SparkSuite {
     AtomicWarehouse.purgeKeysDeferredStr(spark, dir, "k", Seq("12"))
     val entries = AtomicWarehouse.committedEntriesAt(spark, dir,
       AtomicWarehouse.currentVersion(spark, dir))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsFiredBy {
       val tombs = graft.sources.v2.WarehouseConnector
         .loadTombstones(spark, dir, entries)
       assert(tombs.map(_.keys.length).sum == 2)
       assert(tombs.map(_.strKeys.length).sum == 1)
       assert(tombs.forall(_.keyCol == "k"))
-      // listener delivery is async: poll until stable before asserting
-      val deadline = System.currentTimeMillis() + 3000
-      var last = -1
-      while (System.currentTimeMillis() < deadline && jobs.get() != last) {
-        last = jobs.get(); Thread.sleep(150)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // a collect() per tombstone costs a ~100 ms Spark job EACH — at T
     // uncompacted tombstones that made every plan O(T) jobs; the
     // driver-side parquet read must schedule none
-    assert(jobs.get() == 0, s"loadTombstones ran ${jobs.get()} Spark jobs")
+    assert(jobs == 0, s"loadTombstones ran $jobs Spark jobs")
   }
 
   test("long and string tombstones coexist in one manifest") {

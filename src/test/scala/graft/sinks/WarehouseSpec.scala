@@ -82,23 +82,13 @@ class WarehouseSpec extends SparkSuite {
     assert(spark.read.parquet(flat).count() == 10)
   }
 
-  /** Runs `body` with every `refuse://` call matching `refuse`
-    * (call, local path) refused. */
-  private def refusing[T](refuse: (String, String) => Boolean)(body: => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.refuse.impl", classOf[RefusingFileSystem].getName)
-    conf.setBoolean("fs.refuse.impl.disable.cache", true)
-    RefusingFileSystem.refuse = refuse
-    try body finally RefusingFileSystem.refuse = (_, _) => false
-  }
-
   test("compaction fails loudly when the swap's delete fails, data intact") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("wh_nodelete").toString + "/wh"
     (1 to 3).foreach(b => Seq((b.toLong, b * 1.0)).toDF("id", "v")
       .write.mode("append").parquet(dir))
     val e = intercept[java.io.IOException] {
-      refusing((call, _) => call == "delete") {
+      RefusingFileSystem.refusing(spark, (call, _) => call == "delete") {
         Warehouse.compact(spark, s"refuse://$dir", Seq.empty, targetRowsPerFile = 1000L)
       }
     }
@@ -120,7 +110,7 @@ class WarehouseSpec extends SparkSuite {
         .write.mode("append").parquet(dir))
       val want = spark.read.parquet(dir).collect().map(_.toSeq).toSet
       val e = intercept[java.io.IOException] {
-        refusing((c, p) => c == call && p == target(dir)) {
+        RefusingFileSystem.refusing(spark, (c, p) => c == call && p == target(dir)) {
           Warehouse.compact(spark, s"refuse://$dir", Seq.empty, targetRowsPerFile = 1000L)
         }
       }
@@ -142,6 +132,7 @@ class WarehouseSpec extends SparkSuite {
   * call's result. */
 class RefusingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("refuse:///")
+  override def getScheme: String = "refuse"
   override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
     !RefusingFileSystem.refuse("delete", p.toUri.getPath) &&
       super.delete(p, recursive)
@@ -153,4 +144,24 @@ class RefusingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object RefusingFileSystem {
   @volatile var refuse: (String, String) => Boolean = (_, _) => false
+
+  /** Runs `body` with every `refuse://` call matching `refuse`
+    * (call, local path) refused, through `FileSystem` and `FileContext`
+    * alike. */
+  def refusing[T](spark: org.apache.spark.sql.SparkSession,
+      refuse: (String, String) => Boolean)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.refuse.impl", classOf[RefusingFileSystem].getName)
+    conf.setBoolean("fs.refuse.impl.disable.cache", true)
+    conf.set("fs.AbstractFileSystem.refuse.impl", classOf[RefusingFs].getName)
+    RefusingFileSystem.refuse = refuse
+    try body finally RefusingFileSystem.refuse = (_, _) => false
+  }
 }
+
+/** [[RefusingFileSystem]] behind Hadoop's `FileContext` API (the one the
+  * warehouse publishes directories through off the local scheme): a
+  * refused rename fails the call with an `IOException`. */
+class RefusingFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri,
+      new RefusingFileSystem, conf, "refuse", false)
