@@ -8,12 +8,17 @@ import org.apache.spark.sql.types.{LongType, StringType}
 import graft.functions.{BloomMightContain, HexPrefixLong, HexTopBitsPack, SecondsToHms, TitleMainCode, VecDot}
 
 /** SparkSessionExtensions entry point: makes the engine's custom Catalyst
-  * expressions callable from SQL.
+  * expressions and the warehouse change-feed table function callable from
+  * SQL, and installs its analyzer rules (title-code fusion, the warehouse
+  * MERGE/UPDATE/DELETE rewrites), its optimizer rule (window partitions a
+  * filter pins to one key, [[graft.plans.EliminatePinnedWindowPartitions]])
+  * and its planner strategy (native top-k per group).
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   *   SELECT seconds_to_hms(avg_view_duration_s), title_main_code(title) …
   *
-  * For an already-running session use GraftExtensions.register(spark).
+  * For an already-running session GraftExtensions.register(spark) adds the
+  * functions only.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -48,6 +53,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // refuses) → matched winners' keys collected (bounded) into one
     // deferred-purge tombstone
     ext.injectPostHocResolutionRule(_ => graft.plans.RewriteWarehouseDelete)
+    // a last-wins window whose filter pins its key to one literal forms
+    // one group: drop the pinned keys, and plan `row_number() = 1` as a
+    // top-1 with no exchange. Pre-CBO (batch Once): constraints are
+    // derived once per query, after the filters were pushed down
+    ext.injectPreCBORule(_ => graft.plans.EliminatePinnedWindowPartitions)
     // physical planning for the native top-k-per-group logical node
     // (graft.plans.TopKPerGroup → partial/final bounded-heap pair)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
@@ -150,8 +160,10 @@ object GraftExtensions {
       }))
 
   /** Register on a live session (temp functions only — analyzer rules
-    * like FuseTitleCode are fixed at session creation; start the session
-    * with spark.sql.extensions=graft.GraftExtensions to get the fuse). */
+    * like FuseTitleCode and optimizer rules like
+    * EliminatePinnedWindowPartitions are fixed at session creation; start
+    * the session with spark.sql.extensions=graft.GraftExtensions to get
+    * them). */
   def register(spark: SparkSession): Unit =
     definitions.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry

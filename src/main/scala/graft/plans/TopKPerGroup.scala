@@ -8,8 +8,8 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, TakeOrderedAndProjectExec, UnaryExecNode}
 
 /** Native top-k-per-group — the full custom-operator path (SURVEY §7.3c):
   * a logical node, a planner Strategy, and a two-phase physical operator
@@ -103,7 +103,7 @@ case class FinalTopKPerGroupExec(
     child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def requiredChildDistribution: Seq[Distribution] =
-    (if (keys.isEmpty) AllTuples else ClusteredDistribution(keys)) :: Nil
+    ClusteredDistribution(keys) :: Nil
   override protected def doExecute(): RDD[InternalRow] =
     child.execute().mapPartitions { iter =>
       BoundedTopK.perKey(iter, keys, order, k, child.output)
@@ -113,9 +113,13 @@ case class FinalTopKPerGroupExec(
     copy(child = newChild)
 }
 
-/** Planner rule: TopKPerGroup → Final(Partial(child)). */
+/** Planner rule: TopKPerGroup → Final(Partial(child)); with no keys, one
+  * global top-k → Spark's TakeOrderedAndProject (a top-k per partition
+  * merged in one task, no exchange operator). */
 object TopKPerGroupStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case TopKPerGroup(keys, order, k, child) if keys.isEmpty =>
+      TakeOrderedAndProjectExec(k, order, child.output, planLater(child)) :: Nil
     case TopKPerGroup(keys, order, k, child) =>
       FinalTopKPerGroupExec(keys, order, k,
         PartialTopKPerGroupExec(keys, order, k, planLater(child))) :: Nil

@@ -697,10 +697,16 @@ object AtomicWarehouse {
     * contribute their SCHEMA only, so the result never depends on which
     * epochs were pruned — an additively-evolved column living only in
     * skipped epochs must still appear) and apply the keyed last-wins
-    * merge. */
+    * merge, a `row_number() = 1` window over the merge key. A
+    * `preFilter` (a predicate over the union) applies below the window;
+    * when it pins every key part to a literal, as a point lookup's does,
+    * the window forms one group and the optimizer plans it as a top-1
+    * with no exchange ([[graft.plans.EliminatePinnedWindowPartitions]]).
+    */
   private def mergedRead(spark: SparkSession, dir: String, key: String,
       entries: Seq[EpochEntry], scanned: Set[String],
-      preFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      preFilter: Option[DataFrame => org.apache.spark.sql.Column] = None)
+      : DataFrame = {
     val union = logViewWithPos(spark, dir, key, entries, scanned)
     // the range predicate applies BELOW the merge window: a filter above
     // it could never push past the Window (its partitioning is the merge
@@ -709,7 +715,7 @@ object AtomicWarehouse {
     // exactly under the contracts the range readers already carry — the
     // filtered column is version-stable per key, so the filter drops ALL
     // versions of a key or none and the merge winner is unchanged.
-    val filtered = preFilter.map(union.where).getOrElse(union)
+    val filtered = preFilter.map(p => union.where(p(union))).getOrElse(union)
     val w = Window.partitionBy(keyParts(key).map(col): _*)
       .orderBy(col("load_seq").desc, col("__pos").desc)
     filtered.withColumn("__rn", row_number().over(w))
@@ -3113,7 +3119,7 @@ object AtomicWarehouse {
     require(entries.nonEmpty, s"no committed epochs at $dir")
     val scanned = scanListForRange(entries, key, lo, hi).map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
-      Some(col(key).cast("long").between(lo, hi)))
+      Some(_ => col(key).cast("long").between(lo, hi)))
   }
 
   /** Range read with EPOCH SKIPPING on an arbitrary stats column —
@@ -3138,7 +3144,7 @@ object AtomicWarehouse {
     val scanned =
       scanListForRangeOn(entries, key, statsCol, lo, hi).map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
-      Some(col(statsCol).cast("string").between(lo, hi)))
+      Some(_ => col(statsCol).cast("string").between(lo, hi)))
   }
 
   /** POINT lookup with BLOOM-FILTER epoch skipping: beyond the min/max
@@ -3163,7 +3169,7 @@ object AtomicWarehouse {
     require(entries.nonEmpty, s"no committed epochs at $dir")
     val scanned = scanListForPoint(entries, key, value).map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
-      Some(col(key).cast("long") === value))
+      Some(_ => col(key).cast("long") === value))
   }
 
   /** [[readPoint]] for a STRING merge key: pruned by the key's
@@ -3175,7 +3181,7 @@ object AtomicWarehouse {
     require(entries.nonEmpty, s"no committed epochs at $dir")
     val scanned = scanListForPointStr(entries, key, value).map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
-      Some(col(key).cast("string") === value))
+      Some(_ => col(key).cast("string") === value))
   }
 
   /** COMPOSITE point lookup: `partVals` are the key parts' values in
@@ -3184,7 +3190,7 @@ object AtomicWarehouse {
     * zone map + bloom ([[pointMayHold]]'s composite split), so a
     * two-part lookup on a 100 TB store opens only the epochs that may
     * hold BOTH parts — the same O(matching epochs) shape as single-key
-    * point reads. */
+    * point reads. A part holds its value as [[renderedEq]] compares. */
   def readPointComposite(spark: SparkSession, dir: String, key: String,
       partVals: Seq[String]): DataFrame = {
     val parts = keyParts(key)
@@ -3198,8 +3204,29 @@ object AtomicWarehouse {
     val scanned = scanListForPointTyped(entries, key, "string", rendered)
       .map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
-      Some(parts.zip(partVals).map { case (p, v) =>
-        col(p).cast("string") === v }.reduce(_ && _)))
+      Some(union => parts.zip(partVals).map { case (p, v) =>
+        renderedEq(union, p, v) }.reduce(_ && _)))
+  }
+
+  /** `cast(c AS STRING) = v` over `df`. On an integral column, when `v`
+    * is the canonical rendering of a value of the column's type, the
+    * same rows as the typed equality `c = v`, which pins `c` to a
+    * literal; any other `v` matches no integral value, and keeps the
+    * string comparison. */
+  private def renderedEq(df: DataFrame, c: String,
+      v: String): org.apache.spark.sql.Column = {
+    def fits(t: DataType, n: Long): Boolean = t match {
+      case ByteType => n.isValidByte
+      case ShortType => n.isValidShort
+      case IntegerType => n.isValidInt
+      case LongType => true
+      case _ => false
+    }
+    (df.schema.find(_.name.equalsIgnoreCase(c)), v.toLongOption) match {
+      case (Some(f), Some(n)) if n.toString == v && fits(f.dataType, n) =>
+        col(c) === lit(n).cast(f.dataType)
+      case _ => col(c).cast("string") === v
+    }
   }
 
   /** The epochs [[readPoint]] would open: range stats first, then the

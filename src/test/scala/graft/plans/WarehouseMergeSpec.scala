@@ -3,10 +3,9 @@ package graft.plans
 import graft.SparkSuite
 import graft.sinks.AtomicWarehouse
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window}
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FilterExec, QueryExecution}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -158,38 +157,27 @@ class WarehouseMergeSpec extends SparkSuite {
       .map(_.toString).sorted
     assert(after.toSeq == Seq("[vid00010,x,1]", "[vid00610,y,2]",
       "[vid99999,z,3]"))
-    // 6 on this fixture (local[4], 4 shuffle partitions): the window
-    // stages of the two point lookups that open an epoch (vid99999 is
-    // past every zone map), the broadcast of their union to the join,
-    // the merge epoch's write, and the two stages of its one bloom
-    // aggregate. The probe of the VALUES source runs none.
-    assert(jobs == 6, s"the MERGE fired $jobs jobs")
-    // every window, and every hash exchange (a window's or a shuffled
-    // join's), sits above a filter pinning the key to a literal; the
-    // bloom aggregate's single-partition exchange reads the new epoch
+    // 4 on this fixture (local[4], 4 shuffle partitions): the broadcast
+    // of the union of the two point lookups that open an epoch (vid99999
+    // is past every zone map; each lookup pins its key, so its last-wins
+    // window plans as a top-1 inside that job) to the join, the merge
+    // epoch's write, and the two stages of its one bloom aggregate. The
+    // probe of the VALUES source runs none.
+    assert(jobs == 4, s"the MERGE fired $jobs jobs")
+    // no window and no hash exchange anywhere: the lookups are top-1s,
+    // the join broadcasts, and the bloom aggregate's exchange is
+    // single-partition
     val qes = plans.asScala.toSeq
     val windows = qes.flatMap(_.optimizedPlan.collect { case w: Window => w })
-    assert(windows.nonEmpty && windows.forall(w => w.child.exists {
-      case Filter(cond, _) => pinned(cond)
-      case _ => false
-    }), windows.mkString("\n"))
+    assert(windows.isEmpty, windows.mkString("\n"))
     val exchanges = qes.flatMap(qe => AQE.collect(qe.executedPlan) {
       case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
     })
-    assert(exchanges.nonEmpty && exchanges.forall(e =>
-      AQE.find(e.child) {
-        case f: FilterExec => pinned(f.condition)
-        case _ => false
-      }.isDefined), exchanges.mkString("\n"))
+    assert(exchanges.isEmpty, exchanges.mkString("\n"))
   }
 
   private object AQE extends AdaptiveSparkPlanHelper
-
-  private def pinned(cond: Expression): Boolean = cond.exists {
-    case EqualTo(a: Attribute, _: Literal) => a.name == "video_id"
-    case _ => false
-  }
 
   test("a MERGE's entry name depends on the statement and its base only") {
     val r = catalog("whmdig")
