@@ -13,10 +13,10 @@ import graft.sources.v2.WarehouseTable
 
 /** `DELETE FROM wh.t WHERE <arbitrary deterministic predicate>` on a
   * graft-warehouse catalog table. Key-IDENTITY predicates
-  * (`mergeKey = v` / `IN (...)`) keep their existing path — the
-  * copy-on-write selective rewrite through [[WarehouseTable]]'s
-  * `SupportsDelete` — this rule handles exactly the shapes that path
-  * REFUSES: the matched CURRENT WINNERS' keys are collected (bounded by
+  * (`mergeKey = v` / `IN (...)`) keep their own path — [[WarehouseTable]]'s
+  * `SupportsDelete`, which tombstones the NAMED keys with no read at
+  * all — this rule handles exactly the shapes that path REFUSES: the
+  * matched CURRENT WINNERS' keys are collected (bounded by
   * `graft.delete.maxKeys`, default 100k — the deferred-purge contract
   * is a driver-sized key list) and committed as ONE tombstone entry,
   * i.e. `DELETE WHERE category = 'x'` becomes a deferred purge of the
@@ -48,8 +48,8 @@ object RewriteWarehouseDelete extends Rule[LogicalPlan] {
         r
     }
 
-  /** Shapes [[WarehouseTable.deleteWhere]] already serves (the CoW
-    * selective rewrite): conjunctions/disjunctions of key-literal
+  /** Shapes [[WarehouseTable.deleteWhere]] already serves (a tombstone
+    * of the named keys): conjunctions/disjunctions of key-literal
     * equality/IN plus IsNotNull(key). Leave those alone. */
   private def keyIdentity(d: DeleteFromTable): Boolean = {
     val rel = warehouseOf(d.table).get
@@ -57,7 +57,7 @@ object RewriteWarehouseDelete extends Rule[LogicalPlan] {
     // analysis wraps literals in casts, so "literal" = foldable here.
     // IN-list coercion also wraps the ATTRIBUTE side in a same-type
     // cast (`cast(k as bigint) IN (...)` for a bigint k) — unwrap
-    // NO-OP casts only, so `k IN (9, 18)` keeps the CoW path while a
+    // NO-OP casts only, so `k IN (9, 18)` keeps the key path while a
     // type-CHANGING cast (`k IN ('x')`) stays with the predicate path,
     // whose execution-time materialization handles it soundly
     def keyAttr(e: Expression): Boolean = e match {

@@ -209,14 +209,15 @@ object Extended63 {
     * forgotten purge addressed the way an operator actually issues it —
     * `DELETE FROM whc52.parts WHERE k IN (…)` resolves through
     * [[graft.sources.v2.WarehouseTable]]'s SupportsDelete into
-    * [[graft.sinks.AtomicWarehouse.purgeKeys]] (selective pruning-driven
-    * rewrite + one manifest swap); only key-identity predicates qualify
-    * and the refusal path is analysis-time (WarehouseCatalogSpec pins
-    * both). The hashed result is the post-DELETE merged snapshot read
-    * back BY SQL; the oracle replays both epochs minus the keys.
+    * [[graft.sinks.AtomicWarehouse.purgeKeysDeferredTyped]] (one
+    * tombstone of the named keys + one manifest CAS; the reads drop
+    * them); WarehouseCatalogSpec pins the tombstone shape. The hashed
+    * result is the post-DELETE merged snapshot read back BY SQL; the
+    * oracle replays both epochs minus the keys.
     *
-    * Scale: the DELETE rewrites O(matching epochs), the same contract
-    * as c48 — now reachable from any SQL client with zero engine API. */
+    * Scale: the DELETE writes O(keys) and rewrites no epoch — the
+    * deferred half of c48's purge, reachable from any SQL client with
+    * zero engine API. */
   val c52SqlDeletePurge = q("c52_sql_delete_purge",
     """WITH e1 AS (
       |  SELECT CAST(p_partkey AS BIGINT) AS k, p_name,

@@ -12,16 +12,18 @@ import graft.Tables
 object Extended67 {
 
   /** C63 — the STRING-KEY deletion lattice end-to-end: a warehouse
-    * keyed by a video_id-style string drains, takes a key-identity
-    * `DELETE FROM ... WHERE vid IN (...)` (copy-on-write purge under
-    * SQL — round 10 generalized [[graft.sinks.AtomicWarehouse]]'s
-    * tombstone/purge keys to TYPED long+string lists), then a full
+    * keyed by a video_id-style string drains, takes a copy-on-write
+    * purge of two keys ([[graft.sinks.AtomicWarehouse.purgeKeysStr]],
+    * the rewrite a key-identity SQL `DELETE` ran before it became a
+    * tombstone commit — round 10 generalized
+    * [[graft.sinks.AtomicWarehouse]]'s tombstone/purge keys to TYPED
+    * long+string lists), then a full
     * sync-MERGE — update / insert / `WHEN NOT MATCHED BY SOURCE THEN
     * DELETE` — whose tombstone addresses the string keys the feed no
     * longer carries, committed atomically with the merge epoch.
     *
     * Pinned in-query: the CoW purge rewrote the epoch (no tombstone for
-    * the DELETE), the sync-MERGE landed epoch+tombstone in ONE version
+    * the purge), the sync-MERGE landed epoch+tombstone in ONE version
     * bump, and the delete-key CAP (`graft.merge.maxDeleteKeys`) was
     * enforced — the collect is bounded, a feed outage cannot tombstone
     * the table (the EMPTY-source refusal is spec-pinned in
@@ -65,11 +67,12 @@ object Extended67 {
     s.conf.set("spark.sql.catalog.whc63.root", root)
     s.conf.set("spark.sql.catalog.whc63.mergeKey", "vid")
 
-    // key-identity DELETE on the STRING key → CoW purge rewrite, pinned:
-    // the epoch was rewritten in place; the only tombstone is the purge
-    // LOG the rewrite commits for the change feed (a NO-OP tombstone —
-    // it suppresses nothing, the rewrite already removed the rows)
-    s.sql("DELETE FROM whc63.vids WHERE vid IN ('VID40', 'VID80')")
+    // copy-on-write purge on the STRING key, pinned: the epoch was
+    // rewritten in place; the only tombstone is the purge LOG the
+    // rewrite commits for the change feed (a NO-OP tombstone — it
+    // suppresses nothing, the rewrite already removed the rows)
+    AtomicWarehouse.purgeKeysStr(s, dir, "vid", Seq("VID40", "VID80"),
+      statsKey = Some("vid"), bloomKey = Some("vid"))
     val postDelete = AtomicWarehouse.committedEpochs(s, dir)
     require(postDelete.exists(_.startsWith("epoch_1_p")) &&
       !postDelete.exists(n => AtomicWarehouse.isTombstone(n) &&
@@ -100,7 +103,7 @@ object Extended67 {
       entries.count(n => AtomicWarehouse.isTombstone(n) &&
         !AtomicWarehouse.isNoopTombstone(n)) == 1,
       s"expected one merge epoch + one REAL tombstone (the earlier CoW " +
-        s"DELETE's purge log doesn't count); entries: $entries")
+        s"purge's log doesn't count); entries: $entries")
 
     s.sql(
       """SELECT vid, p_name, p_size, load_seq FROM (

@@ -11,17 +11,18 @@ import graft.Tables
   * tombstone. */
 object Extended76 {
 
-  /** C76 — key-identity SQL `DELETE` (the CoW `SupportsDelete` path →
-    * [[graft.sinks.AtomicWarehouse.purgeKeys]]) now RIDES the row-level
-    * change feed: the purge commits a NO-OP tombstone — its purge LOG,
+  /** C76 — a copy-on-write key purge
+    * ([[graft.sinks.AtomicWarehouse.purgeKeys]], what a key-identity SQL
+    * `DELETE` ran before it became a tombstone commit) now RIDES the
+    * row-level change feed: the purge commits a NO-OP tombstone — its purge LOG,
     * the key list verbatim — in the SAME manifest CAS as the rewrites,
     * and the feed serves it as `_change_type='delete'` rows exactly
     * like a deferred purge's. Round 12's feed refused here (the rewrite
     * names only a key-set digest), which broke every downstream CDC
-    * mirror on the most natural SQL delete.
+    * mirror on a copy-on-write delete.
     *
     * Pinned here: the full insert/delete history of a 4-version
-    * warehouse (two appends, one CoW SQL DELETE, one append with a
+    * warehouse (two appends, one CoW purge, one append with a
     * re-add of a purged key) hash-matches a DuckDB replay; in-query
     * requires pin the manifest shape (rewrite + purge log, NO real
     * tombstone) and that [[graft.ops.Merge.applyChangeFeed]] over the
@@ -57,9 +58,6 @@ object Extended76 {
       |         CAST(4 AS BIGINT))""".stripMargin) { (s, d) =>
     import graft.sinks.AtomicWarehouse
     val root = freshScratch("c76")
-    s.conf.set("spark.sql.catalog.whc76", "graft.sources.v2.WarehouseCatalog")
-    s.conf.set("spark.sql.catalog.whc76.root", root)
-    s.conf.set("spark.sql.catalog.whc76.mergeKey", "k")
     val dir = s"$root/parts"
     val src = Tables.part(s, d).select(
       col("p_partkey").cast("long").as("k"), col("p_name").as("name"))
@@ -71,15 +69,16 @@ object Extended76 {
         .withColumn("name", concat(lit("R2-"), col("name")))
         .withColumn("load_seq", lit(2L)), 2L,
       statsKey = Some("k"), bloomKey = Some("k")) // v2
-    // v3: key-identity SQL DELETE — the SupportsDelete COPY-ON-WRITE
-    // path (both epochs hold the keys, so both rewrite)
-    s.sql("DELETE FROM whc76.parts WHERE k IN (9, 18, 36)")
+    // v3: COPY-ON-WRITE key purge (both epochs hold the keys, so both
+    // rewrite)
+    AtomicWarehouse.purgeKeys(s, dir, "k", Seq(9L, 18L, 36L),
+      statsKey = Some("k"), bloomKey = Some("k"))
     val names = AtomicWarehouse.committedEpochs(s, dir)
     require(names.exists(AtomicWarehouse.isPurgeRewrite) &&
       names.exists(AtomicWarehouse.isNoopTombstone) &&
       !names.exists(n => AtomicWarehouse.isTombstone(n) &&
         !AtomicWarehouse.isNoopTombstone(n)),
-      s"SQL key DELETE must rewrite CoW and log its keys: $names")
+      s"CoW key purge must rewrite and log its keys: $names")
     AtomicWarehouse.commitEpoch(s, dir,
       src.where(col("k") % 50 === 0)
         .withColumn("k", col("k") + 1000000L)
@@ -166,7 +165,7 @@ object Extended76 {
     * reference's warehouse-refresh loop (re-read everything, rewrite
     * the table) as an O(delta) incremental pipeline, and the full
     * Delta-style "merge CDC into a replica" story: the history
-    * includes a COPY-ON-WRITE SQL DELETE (served through the purge
+    * includes a COPY-ON-WRITE key purge (served through the purge
     * log) with a cross-batch re-add of a purged key, and a RESTART
     * from the same checkpoint draining a version committed after the
     * first drain (exactly-once resume; `maxVersionsPerBatch` forces
@@ -202,9 +201,6 @@ object Extended76 {
       |  FROM alive) WHERE rn = 1""".stripMargin) { (s, d) =>
     import graft.sinks.AtomicWarehouse
     val root = freshScratch("c78")
-    s.conf.set("spark.sql.catalog.whc78", "graft.sources.v2.WarehouseCatalog")
-    s.conf.set("spark.sql.catalog.whc78.root", root)
-    s.conf.set("spark.sql.catalog.whc78.mergeKey", "k")
     val srcDir = s"$root/src"
     val mirror = s"$root/mirror"
     val ck = s"$root/ck"
@@ -218,9 +214,10 @@ object Extended76 {
         .withColumn("name", concat(lit("R2-"), col("name")))
         .withColumn("load_seq", lit(2L)), 2L,
       statsKey = Some("k"), bloomKey = Some("k")) // v2
-    // v3: CoW SQL DELETE (999999999 matches nothing — the purge log
+    // v3: CoW key purge (999999999 matches nothing — the purge log
     // still serves it as a delete row, and the mirror purge carries it)
-    s.sql("DELETE FROM whc78.src WHERE k IN (6, 12, 999999999)")
+    AtomicWarehouse.purgeKeys(s, srcDir, "k", Seq(6L, 12L, 999999999L),
+      statsKey = Some("k"), bloomKey = Some("k"))
     AtomicWarehouse.commitEpoch(s, srcDir,
       src.where(col("k") % 40 === 0)
         .withColumn("k", col("k") + 2000000L)

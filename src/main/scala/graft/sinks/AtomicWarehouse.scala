@@ -702,12 +702,13 @@ object AtomicWarehouse {
     * when it pins every key part to a literal, as a point lookup's does,
     * the window forms one group and the optimizer plans it as a top-1
     * with no exchange ([[graft.plans.EliminatePinnedWindowPartitions]]).
+    * A key-bound read's `pin` narrows the tombstones ([[logViewWithPos]]).
     */
   private def mergedRead(spark: SparkSession, dir: String, key: String,
       entries: Seq[EpochEntry], scanned: Set[String],
-      preFilter: Option[DataFrame => org.apache.spark.sql.Column] = None)
-      : DataFrame = {
-    val union = logViewWithPos(spark, dir, key, entries, scanned)
+      preFilter: Option[DataFrame => org.apache.spark.sql.Column] = None,
+      pin: Option[KeyPin] = None): DataFrame = {
+    val union = logViewWithPos(spark, dir, key, entries, scanned, pin)
     // the range predicate applies BELOW the merge window: a filter above
     // it could never push past the Window (its partitioning is the merge
     // key, not the filtered column), which would defeat partition and
@@ -726,9 +727,16 @@ object AtomicWarehouse {
     * (tombstones already applied) BEFORE the last-wins window, `__pos`
     * retained — the shared substrate of [[mergedRead]] and the
     * tombstone-commit suppression count ([[suppressionStats]]), which
-    * must count exactly the rows a read would serve. */
+    * must count exactly the rows a read would serve.
+    *
+    * A read of given keys only passes their [[KeyPin]]: entries ordered
+    * before a tombstone that covers the keys are not scanned (the
+    * tombstone would drop every row of theirs the read keeps), and only
+    * the tombstones that name a key and follow a scanned entry are
+    * anti-joined — none, for a live key no tombstone names. */
   private def logViewWithPos(spark: SparkSession, dir: String, key: String,
-      entries: Seq[EpochEntry], scanned: Set[String]): DataFrame = {
+      entries: Seq[EpochEntry], scanned0: Set[String],
+      pin: Option[KeyPin] = None): DataFrame = {
     val (tombs, dataAll) = entries.partition(e => isTombstone(e.name))
     // column-mapping DIRECTIVES are manifest-only metadata: never data,
     // their positions resolve each epoch's physical names below
@@ -743,10 +751,26 @@ object AtomicWarehouse {
     // entry name), and manifest order — commit order — decides the
     // winner deterministically, matching wall-clock last-wins.
     val posOf = entries.map(_.name).zipWithIndex.toMap
+    // NO-OP tombstones (a CoW purge's change-feed log) suppress
+    // nothing — the rewrite already removed their rows; loading their
+    // key lists would only bloat the broadcast. Key lists load
+    // DRIVER-SIDE ([[readTombstoneKeys]]): O(T) tiny parquet reads, zero
+    // Spark jobs — not O(T) collect() jobs
+    val lists = tombs.filterNot(t => isNoopTombstone(t.name)).flatMap { t =>
+      val (_, ls, ss) = readTombstoneKeys(spark, dir, t.name)
+      if (pin.forall(_.names(ls, ss))) Some((posOf(t.name), ls, ss)) else None
+    }
+    val scanned = pin.fold(scanned0) { p =>
+      lists.collect { case (tp, ls, ss) if p.covers(ls, ss) => tp }
+        .maxOption.fold(scanned0)(last => scanned0.filter(posOf(_) > last))
+    }
+    // a tombstone drops rows only in entries before it
+    val firstScanned = scanned.map(posOf).minOption.getOrElse(Int.MaxValue)
+    val drops = lists.filter(_._1 > firstScanned)
     val union0 = unionOfEpochs(spark, dir, data, scanned, posOf,
       colMapOps(entries))
     val union =
-      if (tombs.isEmpty) union0
+      if (drops.isEmpty) union0
       else {
         // MERGE-ON-READ deletion vectors: a tombstone suppresses every
         // version of its keys in entries committed BEFORE it (manifest
@@ -758,34 +782,21 @@ object AtomicWarehouse {
         // its parquet column's: long tombstones compare `cast(key as
         // long)`, string tombstones `cast(key as string)` — both coexist
         // in one manifest.
-        // key lists load DRIVER-SIDE ([[readTombstoneKeys]]): O(T) tiny
-        // parquet reads, zero Spark jobs — not O(T) collect() jobs
-        val longRows = Seq.newBuilder[(Long, Int)]
-        val strRows = Seq.newBuilder[(String, Int)]
-        // NO-OP tombstones (a CoW purge's change-feed log) suppress
-        // nothing — the rewrite already removed their rows; loading
-        // their key lists would only bloat the broadcast
-        tombs.filterNot(t => isNoopTombstone(t.name)).foreach { t =>
-          val (_, ls, ss) = readTombstoneKeys(spark, dir, t.name)
-          longRows ++= ls.map(l => (l, posOf(t.name)))
-          strRows ++= ss.map(s => (s, posOf(t.name)))
-        }
+        val longRows = drops.flatMap { case (tp, ls, _) => ls.map((_, tp)) }
+        val strRows = drops.flatMap { case (tp, _, ss) => ss.map((_, tp)) }
         import spark.implicits._
         // null merge keys never match a tombstone (k === null is UNKNOWN
         // → anti-join keeps the row), matching purgeKeys' null contract
-        val afterLong = {
-          val ks = longRows.result()
-          if (ks.isEmpty) union0
-          else union0.join(broadcast(ks.toDF("__tk", "__tpos")),
+        val afterLong =
+          if (longRows.isEmpty) union0
+          else union0.join(broadcast(longRows.toDF("__tk", "__tpos")),
             // try_cast: a long tombstone over string-keyed rows matches
             // the castable ones and (under ANSI) must not throw on the
             // rest — a non-numeric key is never a long purge target
             keyCol(key, "long") === col("__tk") &&
               col("__tpos") > col("__pos"), "left_anti")
-        }
-        val ks = strRows.result()
-        if (ks.isEmpty) afterLong
-        else afterLong.join(broadcast(ks.toDF("__tks", "__tspos")),
+        if (strRows.isEmpty) afterLong
+        else afterLong.join(broadcast(strRows.toDF("__tks", "__tspos")),
           keyCol(key, "string") === col("__tks") &&
             col("__tspos") > col("__pos"), "left_anti")
       }
@@ -1750,17 +1761,26 @@ object AtomicWarehouse {
     * manifest (None = nothing left to do), and publishes it as version
     * N+1 via [[casPublish]]; a lost race retries against the winner's
     * manifest. Persistent contention past [[MaxCommitAttempts]] fails
-    * loudly rather than spinning. */
-  private def commitManifest(spark: SparkSession, dir: String, what: String)(
-      compute: Seq[EpochEntry] => Option[Seq[EpochEntry]]): Unit = {
+    * loudly rather than spinning. A caller that has just read the latest
+    * version passes it as `base`, and the first attempt computes on it
+    * (a stale one only loses the CAS). Returns the published entries,
+    * None when `compute` found nothing to do. */
+  private def commitManifest(spark: SparkSession, dir: String, what: String,
+      base: Option[(Long, Seq[EpochEntry])] = None)(
+      compute: Seq[EpochEntry] => Option[Seq[EpochEntry]])
+      : Option[Seq[EpochEntry]] = {
     val f = fs(spark, dir)
     requireAtomicScheme(f, dir)
     f.mkdirs(new Path(manifestDir(dir)))
     var attempt = 0
+    var known = base
     while (attempt < MaxCommitAttempts) {
-      val v = currentVersion(spark, dir)
-      compute(committedEntriesAt(spark, dir, v)) match {
-        case None => return
+      val (v, current) = known.getOrElse {
+        val v = currentVersion(spark, dir); (v, committedEntriesAt(spark, dir, v))
+      }
+      known = None
+      compute(current) match {
+        case None => return None
         case Some(entries) =>
           val next = v + 1
           val tmp = new Path(
@@ -1769,7 +1789,7 @@ object AtomicWarehouse {
           try out.write(entries.map(_.line).mkString("\n").getBytes("UTF-8"))
           finally out.close()
           if (casPublish(f, tmp, new Path(s"${manifestDir(dir)}/v$next.json")))
-            return
+            return Some(entries)
       }
       attempt += 1
     }
@@ -1862,16 +1882,18 @@ object AtomicWarehouse {
     * untouched (maintenance stays an explicit call). A failed auto-fold
     * propagates AFTER the commit is durable: re-running the drain
     * replays to a no-op and re-attempts the fold — convergent, never
-    * silent. */
-  private def maybeAutoCompact(spark: SparkSession, dir: String): Unit = {
+    * silent. A caller that knows the manifest it just published passes
+    * it as `committed`, so the cadence check reads no manifest. */
+  private def maybeAutoCompact(spark: SparkSession, dir: String,
+      committed: Option[Seq[EpochEntry]] = None): Unit = {
     val conf = graft.sources.v2.WarehouseCatalog.tableConf(fs(spark, dir), dir)
     def csv(k: String): Seq[String] = conf.get(k).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     (conf.get("compactEvery").flatMap(_.toIntOption),
         conf.get("mergeKey")) match {
       case (Some(every), Some(key)) if every > 1 =>
-        val n = committedEntriesAt(spark, dir,
-          currentVersion(spark, dir)).size
+        val n = committed.getOrElse(committedEntriesAt(spark, dir,
+          currentVersion(spark, dir))).size
         if (n >= every)
           compact(spark, dir, key, statsKey = conf.get("statsKey"),
             statsCols = csv("statsCols"), bloomKey = conf.get("bloomKey"),
@@ -2109,22 +2131,25 @@ object AtomicWarehouse {
       if (hit != null) return hit
     }
     val computed = readTombstoneKeysUncached(spark, dir, name)
+    cacheTombstoneKeys(cacheKey, computed)
+    computed
+  }
+
+  private def cacheTombstoneKeys(cacheKey: String,
+      keys: (String, Array[Long], Array[String])): Unit =
     tombCache.synchronized {
-      if (!tombCache.containsKey(cacheKey)) {
-        tombCache.put(cacheKey, computed)
-        tombCacheBytes += tombEntryBytes(computed)
-        val it = tombCache.entrySet().iterator()
-        while (tombCacheBytes > TombCacheMaxBytes && it.hasNext) {
-          val eldest = it.next()
-          if (eldest.getKey != cacheKey) { // never evict the fresh entry
-            tombCacheBytes -= tombEntryBytes(eldest.getValue)
-            it.remove()
-          }
+      val old = tombCache.put(cacheKey, keys)
+      if (old != null) tombCacheBytes -= tombEntryBytes(old)
+      tombCacheBytes += tombEntryBytes(keys)
+      val it = tombCache.entrySet().iterator()
+      while (tombCacheBytes > TombCacheMaxBytes && it.hasNext) {
+        val eldest = it.next()
+        if (eldest.getKey != cacheKey) { // never evict the fresh entry
+          tombCacheBytes -= tombEntryBytes(eldest.getValue)
+          it.remove()
         }
       }
     }
-    computed
-  }
 
   private def readTombstoneKeysUncached(spark: SparkSession, dir: String,
       name: String): (String, Array[Long], Array[String]) = {
@@ -2573,6 +2598,8 @@ object AtomicWarehouse {
     require(keys.nonEmpty, "no keys to purge")
     val baseV = currentVersion(spark, dir)
     if (baseV == 0L) return 0
+    // the base manifest seeds the commit's first CAS attempt
+    val base = committedEntriesAt(spark, dir, baseV)
     val ks = canonicalKeys(typ, keys)
     val (name, stats, n) = publishTombstone(spark, dir, key, typ, keys, baseV)
     // DELETE PREIMAGES (c86, Delta CDF's full delete contract): behind
@@ -2602,7 +2629,8 @@ object AtomicWarehouse {
       preEntry = e; preBasis = Some(basis)
     }
     if (logPre) computePreimage()
-    commitManifest(spark, dir, s"tombstone of $n keys") { entries =>
+    val committed = commitManifest(spark, dir, s"tombstone of $n keys",
+        Some((baseV, base))) { entries =>
       if (entries.exists(_.name == name)) None // identical replay converged
       else {
         if (logPre && !preBasis.contains(entries.map(_.name)))
@@ -2616,7 +2644,7 @@ object AtomicWarehouse {
     // a tombstone GROWS the manifest like any commit: a compliance job
     // issuing many deferred purges between drains must trigger the
     // declared cadence too, or T runs unbounded until the next drain
-    maybeAutoCompact(spark, dir)
+    maybeAutoCompact(spark, dir, committed)
     n
   }
 
@@ -2664,13 +2692,15 @@ object AtomicWarehouse {
     * log view — prior tombstones applied, try_cast key semantics — a
     * read serves).
     *
-    * Cost: ONE Spark count job over the bloom/zone-PRUNED affected
-    * epochs, inside the manifest-CAS compute (so a racing drain's epoch
-    * is re-counted on retry, keeping the total coherent with the
-    * manifest the tombstone lands in). This trades the deferred purge's
-    * pure-O(keys) commit for tombstone-durable metadata counts; the
-    * pruning keeps it O(epochs that may hold the keys), and compaction
-    * folds the cost away entirely. */
+    * Cost: ONE Spark job over the bloom/zone-PRUNED affected epochs —
+    * the keys an IN filter, the rows counted per entry within each task
+    * (no shuffle), and only the earlier tombstones that name a key
+    * anti-joined ([[KeyPin]]) — inside the manifest-CAS compute (so a
+    * racing drain's epoch is re-counted on retry, keeping the total
+    * coherent with the manifest the tombstone lands in). This trades the
+    * deferred purge's pure-O(keys) commit for tombstone-durable
+    * metadata counts; the pruning keeps it O(epochs that may hold the
+    * keys), and compaction folds the cost away entirely. */
   private def suppressionStats(spark: SparkSession, dir: String,
       key: String, typ: String, keys: Seq[String],
       entries: Seq[EpochEntry]): Map[String, ColStats] = {
@@ -2681,16 +2711,18 @@ object AtomicWarehouse {
       keys.exists(may)
     }.map(_.name).toSet
     if (data.isEmpty || affected.isEmpty) return zero
-    val lv = logViewWithPos(spark, dir, key, entries, affected)
+    val lv = logViewWithPos(spark, dir, key, entries, affected,
+      Some(KeyPin(typ, keys)))
     import spark.implicits._
-    val keysDf = broadcast(
-      if (typ == "long") keys.map(_.toLong).toDF("__sk")
-      else keys.toDF("__sk"))
     val nameAt = entries.map(_.name).zipWithIndex.map(_.swap).toMap
-    val counts = lv.join(keysDf, keyCol(key, typ) === col("__sk"),
-        "left_semi")
-      .groupBy(col("__pos")).count().collect()
-      .map(r => nameAt(r.getInt(0)) -> r.getLong(1))
+    val counts = lv.where(keyCol(key, typ).isin(keyLits(typ, keys): _*))
+      .select(col("__pos")).as[Int]
+      .mapPartitions { ps =>
+        val n = scala.collection.mutable.HashMap.empty[Int, Long]
+        ps.foreach(p => n(p) = n.getOrElse(p, 0L) + 1L)
+        n.iterator
+      }.collect().groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .map { case (pos, n) => nameAt(pos) -> n }
     val total = counts.map(_._2).sum
     counts.filter(_._2 > 0L).map { case (e, c) =>
       suppStatsCol(e) -> ColStats("long", c.toString, c.toString)
@@ -2722,6 +2754,13 @@ object AtomicWarehouse {
     publishData(spark, dir,
       (if (typ == "long") ks.map(_.toLong).toDF(key)
        else ks.toDF(key)).coalesce(1), name)
+    // the dir now holds exactly this key list under this column (a
+    // same-name dir is the same keys by the naming contract): the first
+    // read after the commit finds both in the caches instead of the files
+    cacheTombstoneKeys(s"$dir/$name",
+      if (typ == "long") ("long", ks.map(_.toLong).toArray, Array.empty[String])
+      else ("string", Array.empty[Long], ks.toArray))
+    tombColCache.put(s"$dir/$name", Some(key))
     (name, Map(key -> ColStats(typ, ks.head, ks.last)), ks.size)
   }
 
@@ -3169,7 +3208,8 @@ object AtomicWarehouse {
     require(entries.nonEmpty, s"no committed epochs at $dir")
     val scanned = scanListForPoint(entries, key, value).map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
-      Some(_ => col(key).cast("long") === value))
+      Some(_ => col(key).cast("long") === value),
+      Some(KeyPin("long", Seq(value.toString))))
   }
 
   /** [[readPoint]] for a STRING merge key: pruned by the key's
@@ -3181,7 +3221,33 @@ object AtomicWarehouse {
     require(entries.nonEmpty, s"no committed epochs at $dir")
     val scanned = scanListForPointStr(entries, key, value).map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
-      Some(_ => col(key).cast("string") === value))
+      Some(_ => col(key).cast("string") === value),
+      Some(KeyPin("string", Seq(value))))
+  }
+
+  /** A read of only the rows whose key equals one of `keys` compared
+    * as `typ` ([[canonicalKeys]]): a `"string"` key matches the rows whose
+    * key renders (cast to string) as it, a `"long"` key those whose key
+    * casts to it. What such a read asks a tombstone's key lists (long
+    * keys, string keys): `names` — may the tombstone drop one of the
+    * rows, so that it must join the read; `covers` — does it drop every
+    * one, so that the entries before it need not be scanned. A string
+    * drop compares a row's rendering and a long drop its `try_cast` to
+    * long, both fixed by a string key; a long key fixes only the cast,
+    * so any string drop joins its read and none covers it. */
+  private final case class KeyPin(typ: String, keys: Seq[String]) {
+    private val asLong = keys.map(k =>
+      if (typ == "long") Some(k.toLong) else sparkLongCast(k))
+    /** Per key: do these lists drop its rows? */
+    private def hits(ls: Array[Long], ss: Array[String]): Seq[Boolean] = {
+      val (lset, sset) =
+        (ls.toSet, if (typ == "string") ss.toSet else Set.empty[String])
+      keys.indices.map(i => asLong(i).exists(lset) || sset(keys(i)))
+    }
+    def names(ls: Array[Long], ss: Array[String]): Boolean =
+      typ == "long" && ss.nonEmpty || hits(ls, ss).contains(true)
+    def covers(ls: Array[Long], ss: Array[String]): Boolean =
+      !hits(ls, ss).contains(false)
   }
 
   /** COMPOSITE point lookup: `partVals` are the key parts' values in
@@ -3205,7 +3271,8 @@ object AtomicWarehouse {
       .map(_.name).toSet
     mergedRead(spark, dir, key, entries, scanned,
       Some(union => parts.zip(partVals).map { case (p, v) =>
-        renderedEq(union, p, v) }.reduce(_ && _)))
+        renderedEq(union, p, v) }.reduce(_ && _)),
+      Some(KeyPin("string", Seq(rendered))))
   }
 
   /** `cast(c AS STRING) = v` over `df`. On an integral column, when `v`

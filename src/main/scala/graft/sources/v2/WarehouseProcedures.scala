@@ -167,8 +167,9 @@ final class CompactProcedure(root: String, catalogMergeKey: String)
   *   CALL whc.system.vacuum('t', 1, 0);            -- destroy history
   * }}}
   *
-  * Returns (keys_tombstoned, version). A key-identity DELETE FROM stays
-  * the copy-on-write alternative (same end state after vacuum). */
+  * Returns (keys_tombstoned, version). A key-identity DELETE FROM
+  * commits the same tombstone; [[AtomicWarehouse.purgeKeys]] is the
+  * copy-on-write alternative (same end state after vacuum). */
 final class PurgeProcedure(root: String, catalogMergeKey: String)
     extends UnboundProcedure with BoundProcedure {
   import WarehouseProcedures._

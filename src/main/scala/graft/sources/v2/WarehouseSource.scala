@@ -1047,6 +1047,86 @@ object WarehouseConnector {
         ts.flatMap(_.strKeys).distinct.toArray) }
       .toArray
 
+  /** The literals the pushed filters pin each column to: every
+    * `EqualTo`, non-null `EqualNullSafe` and `In` conjunct on the column
+    * itself, the shortest list when several pin one column. A row the
+    * filters admit holds one of its columns' pinned literals (a null
+    * never equals one). */
+  def pinnedLiterals(filters: Seq[Filter]): Map[String, Seq[Any]] = {
+    def of(f: Filter): Seq[(String, Seq[Any])] = f match {
+      case EqualTo(c, v) if v != null => Seq(c -> Seq(v))
+      case EqualNullSafe(c, v) if v != null => Seq(c -> Seq(v))
+      case In(c, vs) => Seq(c -> vs.toSeq.filter(_ != null))
+      case And(l, r) => of(l) ++ of(r)
+      case _ => Nil
+    }
+    filters.flatMap(of).groupMapReduce(_._1)(_._2)((a, b) =>
+      if (b.size < a.size) b else a)
+  }
+
+  /** What the `pins` ([[pinnedLiterals]]) let file `p`'s drop lists
+    * (its [[dropsFor]]) decide: Some(true) when one list drops every row
+    * the pins admit, so the file need not be opened; Some(false) when no
+    * list drops any of them, so the file is read without drops; None
+    * otherwise. A literal is judged as the reader's drop check judges a
+    * row holding it: a string by its value and its `try_cast` to long,
+    * an int or long by its value and its decimal rendering; a composite
+    * list needs every part pinned and judges every combination of the
+    * parts' renderings (at most [[MaxPinCombos]]). Other literal types,
+    * key columns the file holds as hive partition values, and lists on
+    * unpinned columns decide nothing. */
+  def pinnedDrops(drops: Array[(String, Array[Long], Array[String])],
+      pins: Map[String, Seq[Any]], p: WarehouseFilePartition)
+      : Option[Boolean] = {
+    if (drops.isEmpty || pins.isEmpty) return None
+    val parted = p.partValues.map(_._1).toSet
+    // the pinned literals under the physical names the drops compare
+    val phys = pins.flatMap { case (c, vs) =>
+      p.physOf(c).filterNot(parted).map(_ -> vs) }
+    def render(v: Any): Option[String] = v match {
+      case s: String => Some(s)
+      case l: Long => Some(l.toString)
+      case i: Int => Some(i.toString)
+      case _ => None
+    }
+    def asLong(v: Any): Option[Long] = v match {
+      case s: String => AtomicWarehouse.sparkLongCast(s)
+      case l: Long => Some(l)
+      case i: Int => Some(i.toLong)
+      case _ => None
+    }
+    // per list: are all / none of the admitted rows dropped?
+    val verdicts = drops.toSeq.map { case (c, ls0, ss0) =>
+      val (ls, ss) = (ls0.toSet, ss0.toSet)
+      val parts = AtomicWarehouse.keyParts(c)
+      val hits: Option[Seq[Boolean]] =
+        if (parts.size > 1) {
+          val vals = parts.flatMap(phys.get).map(_.map(render))
+          if (vals.size < parts.size || vals.exists(_.exists(_.isEmpty)) ||
+              vals.map(_.size.toLong).product > MaxPinCombos) None
+          else Some(vals.map(_.flatten)
+            .foldLeft(Seq(Seq.empty[String])) { (acc, vs) =>
+              for (a <- acc; v <- vs) yield a :+ v }
+            .map(vs => ss(vs.mkString(AtomicWarehouse.CompositeSep))))
+        } else phys.get(c).flatMap { vs =>
+          val judged = vs.map(v => (render(v), asLong(v)))
+          if (judged.exists(j => j._1.isEmpty && j._2.isEmpty)) None
+          else Some(judged.map { case (r, l) =>
+            r.exists(ss) || l.exists(ls) })
+        }
+      hits.collect {
+        case h if !h.contains(false) => true
+        case h if !h.contains(true) => false
+      }
+    }
+    if (verdicts.contains(Some(true))) Some(true)
+    else if (verdicts.forall(_.contains(false))) Some(false)
+    else None
+  }
+
+  /** Cap on the composite renderings [[pinnedDrops]] judges. */
+  private val MaxPinCombos = 1024L
+
   /** The physical key columns [[dropsFor]] compares for `pos`, without
     * gathering any key lists — what the planner needs to decide which
     * columns a file is read with. */
@@ -1199,17 +1279,19 @@ class WarehouseTable(val dir: String, version: Option[Long],
   override def schema(): StructType = schema0
 
   /** `DELETE FROM <catalog>.<table> WHERE <mergeKey> = v | IN (…)` maps
-    * to [[AtomicWarehouse.purgeKeys]] — the SQL face of the
+    * to [[AtomicWarehouse.purgeKeysDeferredTyped]] — the SQL face of the
     * right-to-be-forgotten purge: every version of the named keys is
-    * removed by the selective pruning-driven rewrite, committed by one
-    * manifest swap. ONLY key-identity predicates qualify (a purge is
-    * addressed at row identities; an arbitrary-predicate delete would
-    * have to rewrite every epoch and silently break the merge's
-    * version-stability reasoning), and the catalog must be configured
-    * with `mergeKey` — everything else is refused at analysis via
-    * [[canDeleteWhere]], so Spark reports "cannot delete" instead of
-    * half-running. History keeps the rows until vacuum, exactly like
-    * the API purge. */
+    * suppressed by ONE tombstone commit (a key-list file and one
+    * manifest CAS, no epoch rewritten), which reads apply as a
+    * merge-on-read drop and [[AtomicWarehouse.compact]] folds away.
+    * [[AtomicWarehouse.purgeKeys]] stays the explicit copy-on-write
+    * verb. ONLY key-identity predicates qualify here (the named keys are
+    * the tombstone, including keys no row holds); every other
+    * predicate is served by [[graft.plans.RewriteWarehouseDelete]] as a
+    * tombstone of the matched winners' keys. The catalog must be
+    * configured with `mergeKey`, and time-travel targets are refused at
+    * analysis via [[canDeleteWhere]]. History keeps the rows until
+    * compact + vacuum, exactly like the API purge. */
   private def deleteKeys(filters: Array[Filter])
       : Option[(String, Seq[String])] = {
     if (mergeKey.isEmpty || version.isDefined) return None
@@ -1283,15 +1365,9 @@ class WarehouseTable(val dir: String, version: Option[Long],
         s"graft-warehouse DELETE supports only $mergeKey = v / IN (...) " +
           "key-identity predicates (configure the catalog's mergeKey); " +
           "arbitrary-predicate deletes need an epoch rewrite pipeline"))
-    if (keys.nonEmpty) {
-      if (typ == "long")
-        AtomicWarehouse.purgeKeys(SparkSession.active, dir, mergeKey,
-          keys.map(_.toLong), statsKey = Some(mergeKey),
-          bloomKey = Some(mergeKey))
-      else
-        AtomicWarehouse.purgeKeysStr(SparkSession.active, dir, mergeKey,
-          keys, statsKey = Some(mergeKey), bloomKey = Some(mergeKey))
-    }
+    if (keys.nonEmpty)
+      AtomicWarehouse.purgeKeysDeferredTyped(SparkSession.active, dir,
+        mergeKey, typ, keys)
   }
 
   /** Surfaced in `DESCRIBE TABLE EXTENDED`: where the table lives, the
@@ -1926,20 +2002,37 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
             dropMemo.getOrElseUpdate(p.pos, dropKeyCols(tombstones, p.pos, ops)))
         val files = listPlannedFiles()
           .filter(file => all.forall(fileMayMatch(file, _)))
-        val packed = WarehouseConnector.packPartitions(spark, files.map { file =>
+        // a point lookup never opens a file whose every admitted row a
+        // later tombstone drops (a deleted key's epochs), and reads
+        // without drops a file whose admitted rows none drops
+        val pins =
+          if (tombstones.isEmpty) Map.empty[String, Seq[Any]]
+          else pinnedLiterals(all.toSeq)
+        val dropsMemo = scala.collection.mutable.HashMap
+          .empty[Int, Array[(String, Array[Long], Array[String])]]
+        val packed = WarehouseConnector.packPartitions(spark, files.flatMap { file =>
           val v = versionOf.getOrElse(file.epoch, -1L)
           // a stable NEGATIVE position for an epoch folded out of the
           // end manifest mid-range (change feeds only; same contract
           // as the tail) — first-appearance order below position 0
           val pos = posOf.getOrElse(file.epoch, foldedPos.getOrElse(file.epoch, 0))
           val (rn, mk) = resoFor(pos)
-          planned(WarehouseFilePartition(file.path, file.len,
+          val p = WarehouseFilePartition(file.path, file.len,
             file.partValues.toArray, pos,
             commitVersion = v,
             commitTsMicros = tsOf.getOrElse(v, -1L),
             changeType =
               WarehouseConnector.feedChangeType(file.epoch),
-            renames = rn, masked = mk), file.epoch)
+            renames = rn, masked = mk)
+          val verdict =
+            if (pins.isEmpty) None
+            else pinnedDrops(dropsMemo.getOrElseUpdate(pos,
+              dropsFor(tombstones, pos, ops)), pins, p)
+          verdict match {
+            case Some(true) => None
+            case Some(false) => Some(planned(p.copy(applyDrops = false), file.epoch))
+            case None => Some(planned(p, file.epoch))
+          }
         })
         // readChangeFeed: each in-range tombstone's key list becomes one
         // partition of synthesized _change_type='delete' rows — O(purged

@@ -89,6 +89,8 @@ class WarehouseCatalogSpec extends SparkSuite {
   }
 
   test("SQL DELETE maps to the key purge; predicates go deferred") {
+    def real(ns: Seq[String]) = ns.count(n =>
+      AtomicWarehouse.isTombstone(n) && !AtomicWarehouse.isNoopTombstone(n))
     val delRoot = java.nio.file.Files.createTempDirectory("wh_del").toString
     spark.conf.set("spark.sql.catalog.whdel",
       "graft.sources.v2.WarehouseCatalog")
@@ -103,6 +105,12 @@ class WarehouseCatalogSpec extends SparkSuite {
     val left = spark.sql("SELECT DISTINCT k FROM whdel.t")
       .as[Long].collect().toSet
     assert(left == (1L to 20L).toSet -- Set(3L, 7L, 15L))
+    // a key-identity DELETE is ONE tombstone commit: both epochs stay
+    // as committed, no copy-on-write rewrite
+    val keyed = AtomicWarehouse.committedEpochs(spark, s"$delRoot/t")
+    assert(real(keyed) == 1 && keyed.count(_.startsWith("epoch_")) == 2 &&
+      !keyed.exists(AtomicWarehouse.isPurgeRewrite),
+      s"key DELETE must commit one tombstone and rewrite nothing: $keyed")
 
     // not a key-identity predicate → round 12: served as a DEFERRED
     // purge of the matched winners' keys (was refused at analysis)
@@ -110,7 +118,7 @@ class WarehouseCatalogSpec extends SparkSuite {
     assert(spark.sql("SELECT count(DISTINCT k) AS c FROM whdel.t")
       .head.getLong(0) == 16)
     val names = AtomicWarehouse.committedEpochs(spark, s"$delRoot/t")
-    assert(names.exists(AtomicWarehouse.isTombstone),
+    assert(real(names) == 2 && !names.exists(AtomicWarehouse.isPurgeRewrite),
       s"predicate DELETE goes through the tombstone path: $names")
   }
 
@@ -162,26 +170,29 @@ class WarehouseCatalogSpec extends SparkSuite {
       statsKey = Some("k"), bloomKey = Some("k"))
     assert(spark.sql("SELECT count(*) FROM whdel3.t WHERE k = 2")
       .head.getLong(0) == 1L)
-    // key-identity predicates keep the CoW selective-rewrite path
+    // key-identity predicates commit a tombstone of the NAMED keys:
+    // one more real tombstone, no copy-on-write rewrite
+    def real(ns: Seq[String]) = ns.filter(n =>
+      AtomicWarehouse.isTombstone(n) && !AtomicWarehouse.isNoopTombstone(n))
     spark.sql("DELETE FROM whdel3.t WHERE k = 5")
     val names2 = AtomicWarehouse.committedEpochs(spark, s"$r/t")
-    assert(names2.exists(AtomicWarehouse.isPurgeRewrite),
-      s"key-identity DELETE must keep the CoW rewrite path: $names2")
+    assert(real(names2).size == real(names).size + 1 &&
+      !names2.exists(AtomicWarehouse.isPurgeRewrite),
+      s"key-identity DELETE must commit one tombstone: $names2")
     // ... IN-lists included: coercion wraps the attribute in a NO-OP
     // cast (`cast(k as bigint) IN (...)`), which must not demote the
     // shape to the predicate path (round-12 regression: every long-key
-    // IN delete silently went deferred)
-    spark.sql("DELETE FROM whdel3.t WHERE k IN (3, 4)")
+    // IN delete silently went deferred). The key path tombstones every
+    // named key, 999 included; the predicate path would list only the
+    // matched winners (3, 4)
+    spark.sql("DELETE FROM whdel3.t WHERE k IN (3, 4, 999)")
     val names3 = AtomicWarehouse.committedEpochs(spark, s"$r/t")
-    // the CoW path logs its keys as ONE MORE no-op tombstone; the
-    // deferred path would have added a REAL tombstone instead
-    assert(names3.count(AtomicWarehouse.isNoopTombstone) ==
-      names2.count(AtomicWarehouse.isNoopTombstone) + 1 &&
-      names3.count(n => AtomicWarehouse.isTombstone(n) &&
-        !AtomicWarehouse.isNoopTombstone(n)) ==
-        names2.count(n => AtomicWarehouse.isTombstone(n) &&
-          !AtomicWarehouse.isNoopTombstone(n)),
-      s"key IN (...) DELETE must keep the CoW rewrite path: $names3")
+    val added = real(names3).diff(real(names2))
+    assert(added.size == 1 && !names3.exists(AtomicWarehouse.isPurgeRewrite),
+      s"key IN (...) DELETE must commit one tombstone: $names3")
+    assert(AtomicWarehouse.readTombstoneKeys(spark, s"$r/t", added.head)._2
+      .toSet == Set(3L, 4L, 999L),
+      "key IN (...) DELETE must take the key path, not the predicate path")
     assert(spark.sql("SELECT DISTINCT k FROM whdel3.t").as[Long]
       .collect().toSet == Set(1L, 2L, 6L, 8L, 10L))
     // over-cap predicate deletes refuse loudly
@@ -897,11 +908,19 @@ class WarehouseCatalogSpec extends SparkSuite {
         .toDF("vid", "title", "load_seq"), 1L,
       statsKey = Some("vid"), bloomKey = Some("vid"))
 
-    // key-identity DELETE on the string key (CoW purge underneath)
+    // key-identity DELETE on the string key: one string tombstone, the
+    // epoch untouched
     spark.sql("DELETE FROM whvid.vids WHERE vid IN ('VID3', 'VID5')")
     assert(spark.sql("SELECT vid FROM whvid.vids").as[String]
       .collect().toSet == Set("VID1", "VID2", "VID4", "VID6", "VID7",
         "VID8"))
+    val keyed = AtomicWarehouse.committedEpochs(spark, dir)
+    assert(keyed.size == 2 && keyed.head == "epoch_1" &&
+      AtomicWarehouse.isTombstone(keyed(1)) &&
+      !AtomicWarehouse.isNoopTombstone(keyed(1)) &&
+      AtomicWarehouse.readTombstoneKeys(spark, dir, keyed(1))._3.toSet ==
+        Set("VID3", "VID5"),
+      s"string key DELETE must commit one string tombstone: $keyed")
     // arbitrary predicates on a STRING-keyed table: deferred purge of
     // the matched keys (string-typed tombstone)
     spark.sql("DELETE FROM whvid.vids WHERE title = 'title1'")
