@@ -12,7 +12,9 @@ import graft.functions.{BloomMightContain, HexPrefixLong, HexTopBitsPack, Second
   * SQL, and installs its analyzer rules (title-code fusion, the warehouse
   * MERGE/UPDATE/DELETE rewrites), its optimizer rule (window partitions a
   * filter pins to one key, [[graft.plans.EliminatePinnedWindowPartitions]])
-  * and its planner strategy (native top-k per group).
+  * and its planner strategies (key-pinned warehouse reads answered on
+  * the driver, [[graft.plans.DriverAnswerStrategy]]; native top-k per
+  * group).
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   *   SELECT seconds_to_hms(avg_view_duration_s), title_main_code(title) …
@@ -58,6 +60,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // top-1 with no exchange. Pre-CBO (batch Once): constraints are
     // derived once per query, after the filters were pushed down
     ext.injectPreCBORule(_ => graft.plans.EliminatePinnedWindowPartitions)
+    // a key-pinned warehouse read within the driver bound, with the
+    // projections, filters and top-1 above it, answered on the driver as
+    // a local table (no Spark job); before the top-k strategy, which
+    // would otherwise plan that top-1 as a task
+    ext.injectPlannerStrategy(_ => graft.plans.DriverAnswerStrategy)
     // physical planning for the native top-k-per-group logical node
     // (graft.plans.TopKPerGroup → partial/final bounded-heap pair)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)

@@ -253,9 +253,11 @@ private[plans] object PointBound {
     * per key — a composite rendering splits back into its parts, pruned
     * per part (zone maps + blooms). Each lookup pins its key, so its
     * last-wins window plans as a top-1 and the union shuffles nothing by
-    * hash ([[EliminatePinnedWindowPartitions]]). No keys, more than
-    * [[MaxKeys]], or none usable as the key's type read the full merged
-    * snapshot. */
+    * hash ([[EliminatePinnedWindowPartitions]]); a lookup within the
+    * driver bound reads its files and picks its winner on the driver
+    * ([[AtomicWarehouse.readPoint]]), so no task decodes them. No keys,
+    * more than [[MaxKeys]], or none usable as the key's type read the
+    * full merged snapshot. */
   def read(spark: SparkSession, dir: String, mergeKey: String,
       keyTyp: String, keys: Seq[String]): DataFrame = {
     lazy val full = AtomicWarehouse.read(spark, dir, mergeKey)

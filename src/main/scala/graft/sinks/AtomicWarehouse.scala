@@ -716,10 +716,16 @@ object AtomicWarehouse {
     // exactly under the contracts the range readers already carry — the
     // filtered column is version-stable per key, so the filter drops ALL
     // versions of a key or none and the merge winner is unchanged.
-    val filtered = preFilter.map(p => union.where(p(union))).getOrElse(union)
+    lastWins(preFilter.map(p => union.where(p(union))).getOrElse(union), key)
+  }
+
+  /** The keyed last-wins merge of a log view carrying `__pos`: a
+    * `row_number() = 1` window over the merge key, ordered by `load_seq`
+    * then manifest position, both descending. */
+  private def lastWins(log: DataFrame, key: String): DataFrame = {
     val w = Window.partitionBy(keyParts(key).map(col): _*)
       .orderBy(col("load_seq").desc, col("__pos").desc)
-    filtered.withColumn("__rn", row_number().over(w))
+    log.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn", "__pos")
   }
 
@@ -729,34 +735,71 @@ object AtomicWarehouse {
     * tombstone-commit suppression count ([[suppressionStats]]), which
     * must count exactly the rows a read would serve.
     *
-    * A read of given keys only passes their [[KeyPin]]: entries ordered
-    * before a tombstone that covers the keys are not scanned (the
-    * tombstone would drop every row of theirs the read keeps), and only
-    * the tombstones that name a key and follow a scanned entry are
-    * anti-joined — none, for a live key no tombstone names. */
+    * A read of given keys only passes their [[KeyPin]] (see
+    * [[tombstoneLists]]). */
   private def logViewWithPos(spark: SparkSession, dir: String, key: String,
       entries: Seq[EpochEntry], scanned0: Set[String],
       pin: Option[KeyPin] = None): DataFrame = {
-    val (tombs, dataAll) = entries.partition(e => isTombstone(e.name))
     // column-mapping DIRECTIVES are manifest-only metadata: never data,
     // their positions resolve each epoch's physical names below
-    val data = dataAll.filterNot(e => isColMap(e.name))
+    val data = entries.filterNot(e => isTombstone(e.name) || isColMap(e.name))
     require(data.nonEmpty,
       s"warehouse at $dir holds only tombstone entries — no data to read")
     // every row carries its entry's MANIFEST POSITION (`__pos`):
-    // tombstones anti-join against it, and the merge window uses it as
-    // the load_seq TIEBREAKER. A tie is reachable since SQL MERGE
+    // tombstones drop rows by it, and the merge window uses it as the
+    // load_seq TIEBREAKER. A tie is reachable since SQL MERGE
     // self-assigns load_seq in its own entry namespace: a drain whose
     // external counter lands on the same seq commits fine (distinct
     // entry name), and manifest order — commit order — decides the
     // winner deterministically, matching wall-clock last-wins.
     val posOf = entries.map(_.name).zipWithIndex.toMap
-    // NO-OP tombstones (a CoW purge's change-feed log) suppress
-    // nothing — the rewrite already removed their rows; loading their
-    // key lists would only bloat the broadcast. Key lists load
-    // DRIVER-SIDE ([[readTombstoneKeys]]): O(T) tiny parquet reads, zero
-    // Spark jobs — not O(T) collect() jobs
-    val lists = tombs.filterNot(t => isNoopTombstone(t.name)).flatMap { t =>
+    val (scanned, drops) = tombstoneLists(spark, dir, entries, scanned0, pin)
+    val union0 = unionOfEpochs(spark, dir, data, scanned, posOf,
+      colMapOps(entries))
+    // MERGE-ON-READ deletion vectors: a tombstone suppresses every
+    // version of its keys in entries committed BEFORE it (manifest
+    // order); a later drain re-adding a key is new data and survives.
+    // One filter per tombstone — `__pos` below its position and the key
+    // in its lists — so zero data rewrites at purge time (Iceberg's
+    // equality-delete read path) and no Spark job at read time. A
+    // tombstone's key TYPE is its parquet column's: long lists compare
+    // `try_cast(key as long)` (a non-numeric key is never a long purge
+    // target and must not throw under ANSI), string lists
+    // `cast(key as string)`; both coexist in one manifest. A null key
+    // never matches (the null `IN` result counts as no match), the
+    // purgeKeys null contract.
+    def in(typ: String, vs: Set[Any]): Option[org.apache.spark.sql.Column] =
+      if (vs.isEmpty) None
+      else Some(org.apache.spark.sql.GraftBridge.column(
+        org.apache.spark.sql.catalyst.expressions.InSet(
+          org.apache.spark.sql.GraftBridge.expression(keyCol(key, typ)), vs)))
+    drops.foldLeft(union0) { case (df, (tp, ls, ss)) =>
+      val hit = (in("long", ls.toSet[Any]) ++
+        in("string", ss.map(UTF8String.fromString).toSet[Any]))
+        .reduce(_ || _)
+      df.where(!coalesce(col("__pos") < tp && hit, lit(false)))
+    }
+  }
+
+  /** The tombstone key lists a read of the `scanned0` entries applies —
+    * (manifest position, long keys, string keys), NO-OP tombstones (a
+    * CoW purge's change-feed log, whose rewrite already removed the
+    * rows) skipped — and the entries it scans. Key lists load
+    * DRIVER-SIDE ([[readTombstoneKeys]]): O(T) tiny parquet reads, zero
+    * Spark jobs. A tombstone drops rows only in entries before it, so
+    * lists ordered before every scanned entry are left out.
+    *
+    * A read of given keys only passes their [[KeyPin]]: entries ordered
+    * before a tombstone that covers the keys are not scanned (the
+    * tombstone would drop every row of theirs the read keeps), and only
+    * the tombstones that name a key apply — none, for a live key no
+    * tombstone names. */
+  private def tombstoneLists(spark: SparkSession, dir: String,
+      entries: Seq[EpochEntry], scanned0: Set[String], pin: Option[KeyPin])
+      : (Set[String], Seq[(Int, Array[Long], Array[String])]) = {
+    val posOf = entries.map(_.name).zipWithIndex.toMap
+    val lists = entries.filter(e => isTombstone(e.name) &&
+        !isNoopTombstone(e.name)).flatMap { t =>
       val (_, ls, ss) = readTombstoneKeys(spark, dir, t.name)
       if (pin.forall(_.names(ls, ss))) Some((posOf(t.name), ls, ss)) else None
     }
@@ -764,43 +807,8 @@ object AtomicWarehouse {
       lists.collect { case (tp, ls, ss) if p.covers(ls, ss) => tp }
         .maxOption.fold(scanned0)(last => scanned0.filter(posOf(_) > last))
     }
-    // a tombstone drops rows only in entries before it
     val firstScanned = scanned.map(posOf).minOption.getOrElse(Int.MaxValue)
-    val drops = lists.filter(_._1 > firstScanned)
-    val union0 = unionOfEpochs(spark, dir, data, scanned, posOf,
-      colMapOps(entries))
-    val union =
-      if (drops.isEmpty) union0
-      else {
-        // MERGE-ON-READ deletion vectors: a tombstone suppresses every
-        // version of its keys in entries committed BEFORE it (manifest
-        // order); a later drain re-adding a key is new data and
-        // survives. Per-entry position + ONE broadcast anti-join per key
-        // TYPE (tombstone key lists are O(purged keys), driver-sized by
-        // the purge contract) — zero data rewrites at purge time, exactly
-        // Iceberg's equality-delete read path. A tombstone's key TYPE is
-        // its parquet column's: long tombstones compare `cast(key as
-        // long)`, string tombstones `cast(key as string)` — both coexist
-        // in one manifest.
-        val longRows = drops.flatMap { case (tp, ls, _) => ls.map((_, tp)) }
-        val strRows = drops.flatMap { case (tp, _, ss) => ss.map((_, tp)) }
-        import spark.implicits._
-        // null merge keys never match a tombstone (k === null is UNKNOWN
-        // → anti-join keeps the row), matching purgeKeys' null contract
-        val afterLong =
-          if (longRows.isEmpty) union0
-          else union0.join(broadcast(longRows.toDF("__tk", "__tpos")),
-            // try_cast: a long tombstone over string-keyed rows matches
-            // the castable ones and (under ANSI) must not throw on the
-            // rest — a non-numeric key is never a long purge target
-            keyCol(key, "long") === col("__tk") &&
-              col("__tpos") > col("__pos"), "left_anti")
-        if (strRows.isEmpty) afterLong
-        else afterLong.join(broadcast(strRows.toDF("__tks", "__tspos")),
-          keyCol(key, "string") === col("__tks") &&
-            col("__tspos") > col("__pos"), "left_anti")
-      }
-    union
+    (scanned, lists.filter(_._1 > firstScanned))
   }
 
   /** MIN and MAX of column `c` over ONLY the given entries' LOG view —
@@ -3201,15 +3209,19 @@ object AtomicWarehouse {
     * (the reference's per-epoch fetch is ≤ thousands); beyond that, put
     * the bloom in the parquet footers (row-group level) and keep the
     * manifest lean — [[commitEpoch]] refuses to embed filters past
-    * [[MaxBloomBytes]] rather than bloat every manifest read. */
+    * [[MaxBloomBytes]] rather than bloat every manifest read.
+    *
+    * When the epochs left hold few, small files (the connector's driver
+    * bound), they are decoded on the driver when the lookup is planned,
+    * only the columns the query uses, and the winner is picked there:
+    * collecting the lookup runs no Spark job ([[pointRead]]). */
   def readPoint(spark: SparkSession, dir: String, key: String,
       value: Long): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    val scanned = scanListForPoint(entries, key, value).map(_.name).toSet
-    mergedRead(spark, dir, key, entries, scanned,
-      Some(_ => col(key).cast("long") === value),
-      Some(KeyPin("long", Seq(value.toString))))
+    pointRead(spark, dir, key, entries,
+      scanListForPoint(entries, key, value).map(_.name).toSet,
+      _ => col(key).cast("long") === value, KeyPin("long", Seq(value.toString)))
   }
 
   /** [[readPoint]] for a STRING merge key: pruned by the key's
@@ -3219,10 +3231,9 @@ object AtomicWarehouse {
       value: String): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    val scanned = scanListForPointStr(entries, key, value).map(_.name).toSet
-    mergedRead(spark, dir, key, entries, scanned,
-      Some(_ => col(key).cast("string") === value),
-      Some(KeyPin("string", Seq(value))))
+    pointRead(spark, dir, key, entries,
+      scanListForPointStr(entries, key, value).map(_.name).toSet,
+      _ => col(key).cast("string") === value, KeyPin("string", Seq(value)))
   }
 
   /** A read of only the rows whose key equals one of `keys` compared
@@ -3267,12 +3278,73 @@ object AtomicWarehouse {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
     val rendered = partVals.mkString(CompositeSep)
-    val scanned = scanListForPointTyped(entries, key, "string", rendered)
-      .map(_.name).toSet
-    mergedRead(spark, dir, key, entries, scanned,
-      Some(union => parts.zip(partVals).map { case (p, v) =>
-        renderedEq(union, p, v) }.reduce(_ && _)),
-      Some(KeyPin("string", Seq(rendered))))
+    pointRead(spark, dir, key, entries,
+      scanListForPointTyped(entries, key, "string", rendered).map(_.name).toSet,
+      df => parts.zip(partVals).map { case (p, v) =>
+        renderedEq(df, p, v) }.reduce(_ && _),
+      KeyPin("string", Seq(rendered)))
+  }
+
+  /** A key-pinned read, the [[readPoint]] family's shared body: the
+    * `scanned` entries (pruned by zone maps and blooms) narrowed by the
+    * `pin`'s tombstones ([[tombstoneLists]]), the rows `pred` admits,
+    * and each key's last-wins winner. When the files left fit the
+    * connector's driver bound ([[WarehouseConnector.DriverMaxFiles]],
+    * [[WarehouseConnector.DriverMaxBytes]]) they are read by a
+    * [[graft.plans.DriverRead]], which decodes them on the driver
+    * through [[WarehouseConnector.readOnDriver]] (the connector's
+    * per-file reader: tombstone drops, renames, masks) when the query is
+    * planned, and only the columns the query uses — a wide table's
+    * unused columns cost most of a decode. [[lastWins]] on top plans as
+    * a top-1 that [[graft.plans.DriverAnswerStrategy]] picks on the
+    * driver with `pred`, so collecting the lookup runs no Spark job.
+    * Past the bound, or across a column committed under two types, the
+    * read plans as [[mergedRead]]. */
+  private def pointRead(spark: SparkSession, dir: String, key: String,
+      entries: Seq[EpochEntry], scanned0: Set[String],
+      pred: DataFrame => org.apache.spark.sql.Column, pin: KeyPin): DataFrame = {
+    import graft.sources.v2.{WarehouseConnector => WC, WarehouseFilePartition}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    def scan = mergedRead(spark, dir, key, entries, scanned0, Some(pred), Some(pin))
+    val (scanned, lists) = tombstoneLists(spark, dir, entries, scanned0, Some(pin))
+    val files = entries.filter(e => scanned(e.name) && !isTombstone(e.name) &&
+      !isColMap(e.name)).flatMap(WC.entryFiles(fs(spark, dir), dir, _))
+    val bytes = files.map(_.len).sum
+    if (files.size > WC.DriverMaxFiles || bytes > WC.DriverMaxBytes) return scan
+    val served =
+      try WC.servedSchema(spark, dir, entries)
+      catch { case _: IllegalStateException => return scan }
+    val ops = colMapOps(entries)
+    val posOf = entries.map(_.name).zipWithIndex.toMap
+    val tombs = lists.map { case (tp, ls, ss) =>
+      WC.TombstoneKeys(tp, tombstoneKeyCol(spark, dir, entries(tp).name)
+        .getOrElse(""), ls, ss)
+    }
+    // the columns a query asks for, `__pos` served as the connector's
+    // per-file position constant
+    def read(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) = {
+      val required = StructType(attrs.map(a => StructField(
+        if (a.name == "__pos") WC.PosColumn else a.name, a.dataType)))
+      val reads = new WC.FileReads(required)
+      val parts = files.map { f =>
+        val pos = posOf(f.epoch)
+        val (rn, mk) = WC.colMapResolution(pos, ops)
+        reads.plan(WarehouseFilePartition(f.path, f.len, f.partValues.toArray,
+          pos, renames = rn, masked = mk),
+          WC.entrySchema(spark, dir, entries(pos)), WC.dropKeyCols(tombs, pos, ops))
+      }
+      WC.readOnDriver(spark, required, Array.empty, reads, tombs, ops, parts) _
+    }
+    // a session started without GraftExtensions must still plan the leaf
+    // (the TopK.perGroup idiom)
+    if (!spark.sessionState.planner.strategies
+        .contains(graft.plans.DriverAnswerStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.plans.DriverAnswerStrategy
+    val union = org.apache.spark.sql.GraftBridge.ofRows(spark,
+      graft.plans.DriverRead(DataTypeUtils.toAttributes(
+        served.add("__pos", IntegerType, nullable = false)), read, bytes))
+    lastWins(union.where(pred(union)), key)
   }
 
   /** `cast(c AS STRING) = v` over `df`. On an integral column, when `v`

@@ -71,6 +71,12 @@ import graft.sinks.AtomicWarehouse.{ColStats, EpochEntry}
   * both decode, never rebased. The CONTRACT — what is pruned, what is
   * projected, what is residual — is what this class pins.
   *
+  * Point lookups are answered on the driver: a read whose pushed filters
+  * pin the merge key to a few literals and whose planning leaves a few
+  * small files decodes them at planning time through the same factory
+  * ([[WarehouseScan.driverRead]], [[WarehouseConnector.readOnDriver]]),
+  * and runs no Spark job.
+  *
   * Scale: planning reads ONE manifest file (O(epochs) entries, kept short
   * by compaction) and lists only surviving epochs' dirs; files BIN-PACK
   * into input partitions by Spark's own maxSplitBytes formula
@@ -243,14 +249,18 @@ object WarehouseConnector {
     * contract of [[AtomicWarehouse.readVersion]]. Conflicting types for
     * one name are refused loudly — silent coercion would make the
     * connector's nulls indistinguishable from cast losses. */
-  def snapshotSchema(spark: SparkSession, dir: String, v: Long): StructType = {
+  def snapshotSchema(spark: SparkSession, dir: String, v: Long): StructType =
+    servedSchema(spark, dir, AtomicWarehouse.committedEntriesAt(spark, dir, v))
+
+  /** [[snapshotSchema]] of the manifest entry list `all`. */
+  def servedSchema(spark: SparkSession, dir: String,
+      all: Seq[EpochEntry]): StructType = {
     // an EMPTY warehouse (first write's target) has nothing to infer:
     // an empty schema lets the write path proceed (it brings its own
     // schema via supportsExternalMetadata); a read of it is just empty.
     // Tombstone entries are key lists, not data — never part of the
     // table schema. Column-mapping directives resolve each epoch's
     // physical names to the SERVED names (rename) or mask them (drop).
-    val all = AtomicWarehouse.committedEntriesAt(spark, dir, v)
     val ops = AtomicWarehouse.colMapOps(all)
     val posOf = all.map(_.name).zipWithIndex.toMap
     val entries = all.filterNot(e =>
@@ -1196,15 +1206,71 @@ object WarehouseConnector {
     def broadcast(spark: SparkSession): Array[WarehouseReaderFactory.Read] =
       synchronized {
         while (confs.size < schemas.size)
-          confs += readerConf(spark, schemas(confs.size))
+          confs += spark.sparkContext.broadcast(
+            new org.apache.spark.util.SerializableConfiguration(
+              readerConf(spark, schemas(confs.size))))
         schemas.zip(confs).map { case (s, c) =>
           WarehouseReaderFactory.Read(s, c) }.toArray
       }
+
+    /** Every registered schema with a reader conf built on the driver
+      * and never broadcast: what [[readOnDriver]] decodes with. */
+    def onDriver(spark: SparkSession): Array[WarehouseReaderFactory.Read] =
+      synchronized {
+        schemas.map(s => WarehouseReaderFactory.Read(s, new DriverConf(
+          new org.apache.spark.util.SerializableConfiguration(
+            readerConf(spark, s))))).toArray
+      }
   }
+
+  /** A reader conf held by the driver itself: the `Broadcast` face
+    * Spark's parquet reader factory asks for, with nothing shipped. */
+  private final class DriverConf(
+      c: org.apache.spark.util.SerializableConfiguration)
+      extends org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration](-1L) {
+    override protected def getValue() = c
+    override protected def doUnpersist(blocking: Boolean): Unit = ()
+    override protected def doDestroy(blocking: Boolean): Unit = ()
+  }
+
+  /** Driver-answered reads: a key-pinned read pinning at most this many
+    * key literals (the product over a composite key's parts) … */
+  val DriverMaxKeys = 64L
+  /** … whose planning leaves at most this many files … */
+  val DriverMaxFiles = 16
+  /** … of at most this many bytes in all is decoded on the driver at
+    * planning time instead of in a Spark job. A plan choice by size:
+    * decoding one 0.9 MB, 15k-row epoch file on the driver took about
+    * 24 ms on a 4-vCPU host, and dispatching the job that would decode
+    * it about 59 ms, so the bytes bound keeps the driver's decode under
+    * a job's fixed cost; the files bound caps the per-file opens of
+    * many small parts. */
+  val DriverMaxBytes = 2L << 20
+
+  /** The driver-side reader: decodes `files` (planned partitions, read
+    * schemas registered in `reads`) on the driver through the per-file
+    * logic executors run ([[WarehouseReaderFactory]]: tombstone drops,
+    * renames, masks, `_pos` and hive partition constants), with reader
+    * confs built locally ([[FileReads.onDriver]]). Each row is handed
+    * to `visit` and reused afterwards: copy what you keep. */
+  def readOnDriver(spark: SparkSession, required: StructType,
+      filters: Array[Filter], reads: FileReads,
+      tombstones: Seq[TombstoneKeys],
+      ops: Seq[(Int, AtomicWarehouse.ColMapOp)],
+      files: Seq[WarehouseFilePartition])(visit: InternalRow => Unit): Unit =
+    if (files.nonEmpty) {
+      val factory = new WarehouseReaderFactory(required, filters,
+        reads.onDriver(spark), tombstones, ops)
+      files.foreach { p =>
+        val r = factory.createReader(p)
+        try while (r.next()) visit(r.get()) finally r.close()
+      }
+    }
 
   /** The Hadoop conf Spark's own `ParquetScan.createReaderFactory` hands
     * its reader: the session's conf plus the requested schema and the
-    * schema-conversion flags, broadcast. */
+    * schema-conversion flags. */
   private def readerConf(spark: SparkSession, schema: StructType) = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
     import org.apache.spark.sql.internal.SQLConf
@@ -1224,8 +1290,7 @@ object WarehouseConnector {
       sql.parquetInferTimestampNTZEnabled)
     c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
       sql.legacyParquetNanosAsLong)
-    spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(c))
+    c
   }
 
   /** Does the file's hive partition value satisfy `filter`? Only exact
@@ -1753,6 +1818,16 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
       cdf, includePreimages, restoreAsDeletes)
 }
 
+/** One planned read of the warehouse: the entries and files the pushed
+  * and runtime filters leave, bin-packed into input partitions that
+  * [[WarehouseReaderFactory]] decodes in Spark tasks — or, for a
+  * key-pinned snapshot read within the driver bound
+  * ([[WarehouseConnector.DriverMaxKeys]], [[WarehouseConnector
+  * .DriverMaxFiles]], [[WarehouseConnector.DriverMaxBytes]]), decoded on
+  * the driver at planning time ([[driverRead]], planned by
+  * [[graft.plans.DriverAnswerStrategy]] as a local table with no Spark
+  * job). Streaming, change-feed and aggregate-pushed scans, and reads
+  * past the bound, always run as tasks. */
 class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     required: StructType, pruneFilters: Array[Filter],
     maxVersionsPerBatch: Int, ignoreDeletes: Boolean = false,
@@ -1973,6 +2048,96 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
   override def filter(filters: Array[Filter]): Unit =
     runtimeFilters = filters
 
+  private lazy val posOf: Map[String, Int] =
+    allEntries.map(_.name).zipWithIndex.toMap
+  // commit instants (manifest mtimes), one listing — CDF only
+  private lazy val tsOf: Map[Long, Long] =
+    if (cdf) AtomicWarehouse.manifestTimes(spark, dir) else Map.empty
+  // column-mapping directives: resolution per manifest position is the
+  // identity (two empty arrays) when the manifest carries none
+  private lazy val ops = AtomicWarehouse.colMapOps(allEntries)
+  private lazy val byName: Map[String, EpochEntry] =
+    (allEntries ++ entries).map(e => e.name -> e).toMap
+  private val resoMemo = scala.collection.concurrent.TrieMap
+    .empty[Int, (Array[(String, String)], Array[String])]
+  private def resoFor(pos: Int) =
+    resoMemo.getOrElseUpdate(pos, colMapResolution(pos, ops))
+  private val dropColsMemo =
+    scala.collection.concurrent.TrieMap.empty[Int, Seq[String]]
+  private val dropsMemo = scala.collection.concurrent.TrieMap
+    .empty[Int, Array[(String, Array[Long], Array[String])]]
+
+  /** `p` with its read schema registered. */
+  private def planned(p: WarehouseFilePartition, epoch: String) =
+    fileReads.plan(p, entrySchema(spark, dir,
+      byName.getOrElse(epoch, EpochEntry(epoch))),
+      dropColsMemo.getOrElseUpdate(p.pos, dropKeyCols(tombstones, p.pos, ops)))
+
+  /** The data files the filters `all` leave, each with its read schema
+    * registered. */
+  private def dataFiles(all: Array[Filter]): Seq[WarehouseFilePartition] = {
+    val versionOf: Map[String, Long] =
+      changePlan.fold(Map.empty[String, Long])(p => p._1.toMap)
+    val files = listPlannedFiles()
+      .filter(file => all.forall(fileMayMatch(file, _)))
+    // a point lookup never opens a file whose every admitted row a
+    // later tombstone drops (a deleted key's epochs), and reads
+    // without drops a file whose admitted rows none drops
+    val pins =
+      if (tombstones.isEmpty) Map.empty[String, Seq[Any]]
+      else pinnedLiterals(all.toSeq)
+    files.flatMap { file =>
+      val v = versionOf.getOrElse(file.epoch, -1L)
+      // a stable NEGATIVE position for an epoch folded out of the
+      // end manifest mid-range (change feeds only; same contract
+      // as the tail) — first-appearance order below position 0
+      val pos = posOf.getOrElse(file.epoch, foldedPos.getOrElse(file.epoch, 0))
+      val (rn, mk) = resoFor(pos)
+      val p = WarehouseFilePartition(file.path, file.len,
+        file.partValues.toArray, pos,
+        commitVersion = v,
+        commitTsMicros = tsOf.getOrElse(v, -1L),
+        changeType =
+          WarehouseConnector.feedChangeType(file.epoch),
+        renames = rn, masked = mk)
+      val verdict =
+        if (pins.isEmpty) None
+        else pinnedDrops(dropsMemo.getOrElseUpdate(pos,
+          dropsFor(tombstones, pos, ops)), pins, p)
+      verdict match {
+        case Some(true) => None
+        case Some(false) => Some(planned(p.copy(applyDrops = false), file.epoch))
+        case None => Some(planned(p, file.epoch))
+      }
+    }
+  }
+
+  /** This scan answered on the driver, at planning time: a snapshot
+    * batch read (no pushed aggregate, change feed or runtime filter)
+    * whose pushed filters pin every merge key part, to at most
+    * [[DriverMaxKeys]] key literals in all, and whose planning leaves at
+    * most [[DriverMaxFiles]] files of at most [[DriverMaxBytes]] bytes.
+    * Some(source): `source(visit)` decodes the planned files through
+    * [[readOnDriver]] and hands `visit` every row the scan would
+    * produce, in [[readSchema]] order (the pushed filters stay residual,
+    * as on the scan path). None: the scan runs as Spark tasks.
+    * [[graft.plans.DriverAnswerStrategy]] plans the answer as a local
+    * table. */
+  def driverRead: Option[(InternalRow => Unit) => Unit] = {
+    val parts = AtomicWarehouse.keyParts(mergeKey)
+    lazy val pins = pinnedLiterals(pruneFilters.toSeq)
+    val pinned = parts.nonEmpty && pushedAgg.isEmpty &&
+      changeStart.isEmpty && runtimeFilters.isEmpty &&
+      parts.forall(pins.contains) &&
+      parts.map(pins(_).size.toLong).product <= DriverMaxKeys
+    if (!pinned) return None
+    val files = dataFiles(pruneFilters)
+    if (files.size > DriverMaxFiles || files.map(_.len).sum > DriverMaxBytes)
+      None
+    else Some(visit => readOnDriver(spark, required, pruneFilters,
+      fileReads, tombstones, ops, files)(visit))
+  }
+
   override def planInputPartitions(): Array[InputPartition] =
     pushedAgg match {
       case Some((_, values)) =>
@@ -1980,60 +2145,8 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
         // row, ZERO data files opened
         Array(WarehouseAggPartition(values))
       case None =>
-        val all = pruneFilters ++ runtimeFilters
-        val posOf = allEntries.map(_.name).zipWithIndex.toMap
-        val versionOf: Map[String, Long] =
-          changePlan.fold(Map.empty[String, Long])(p => p._1.toMap)
-        // commit instants (manifest mtimes), one listing — CDF only
-        val tsOf: Map[Long, Long] =
-          if (cdf) AtomicWarehouse.manifestTimes(spark, dir) else Map.empty
-        // column-mapping resolution per manifest position (identity —
-        // two empty arrays — when the manifest carries no directives)
-        val ops = AtomicWarehouse.colMapOps(allEntries)
-        val resoMemo = scala.collection.mutable.HashMap
-          .empty[Int, (Array[(String, String)], Array[String])]
-        def resoFor(pos: Int) = resoMemo.getOrElseUpdate(pos,
-          WarehouseConnector.colMapResolution(pos, ops))
-        val dropMemo = scala.collection.mutable.HashMap.empty[Int, Seq[String]]
-        val byName = (allEntries ++ entries).map(e => e.name -> e).toMap
-        def planned(p: WarehouseFilePartition, epoch: String) =
-          fileReads.plan(p, entrySchema(spark, dir,
-            byName.getOrElse(epoch, EpochEntry(epoch))),
-            dropMemo.getOrElseUpdate(p.pos, dropKeyCols(tombstones, p.pos, ops)))
-        val files = listPlannedFiles()
-          .filter(file => all.forall(fileMayMatch(file, _)))
-        // a point lookup never opens a file whose every admitted row a
-        // later tombstone drops (a deleted key's epochs), and reads
-        // without drops a file whose admitted rows none drops
-        val pins =
-          if (tombstones.isEmpty) Map.empty[String, Seq[Any]]
-          else pinnedLiterals(all.toSeq)
-        val dropsMemo = scala.collection.mutable.HashMap
-          .empty[Int, Array[(String, Array[Long], Array[String])]]
-        val packed = WarehouseConnector.packPartitions(spark, files.flatMap { file =>
-          val v = versionOf.getOrElse(file.epoch, -1L)
-          // a stable NEGATIVE position for an epoch folded out of the
-          // end manifest mid-range (change feeds only; same contract
-          // as the tail) — first-appearance order below position 0
-          val pos = posOf.getOrElse(file.epoch, foldedPos.getOrElse(file.epoch, 0))
-          val (rn, mk) = resoFor(pos)
-          val p = WarehouseFilePartition(file.path, file.len,
-            file.partValues.toArray, pos,
-            commitVersion = v,
-            commitTsMicros = tsOf.getOrElse(v, -1L),
-            changeType =
-              WarehouseConnector.feedChangeType(file.epoch),
-            renames = rn, masked = mk)
-          val verdict =
-            if (pins.isEmpty) None
-            else pinnedDrops(dropsMemo.getOrElseUpdate(pos,
-              dropsFor(tombstones, pos, ops)), pins, p)
-          verdict match {
-            case Some(true) => None
-            case Some(false) => Some(planned(p.copy(applyDrops = false), file.epoch))
-            case None => Some(planned(p, file.epoch))
-          }
-        })
+        val packed = WarehouseConnector.packPartitions(spark,
+          dataFiles(pruneFilters ++ runtimeFilters))
         // readChangeFeed: each in-range tombstone's key list becomes one
         // partition of synthesized _change_type='delete' rows — O(purged
         // keys) rows, no files opened (the keys ARE the manifest's
@@ -2101,8 +2214,7 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
   override def createReaderFactory(): PartitionReaderFactory =
     if (pushedAgg.isDefined) new WarehouseAggReaderFactory
     else new WarehouseReaderFactory(required, pruneFilters ++ runtimeFilters,
-      fileReads.broadcast(spark), tombstones,
-      AtomicWarehouse.colMapOps(allEntries))
+      fileReads.broadcast(spark), tombstones, ops)
 
   override def description(): String =
     s"graft-warehouse($dir v$resolvedVersion) " +

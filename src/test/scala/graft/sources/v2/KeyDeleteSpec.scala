@@ -4,7 +4,7 @@ import graft.SparkSuite
 import graft.sinks.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
 /** A key-identity SQL `DELETE … WHERE key IN (…)` is one tombstone
@@ -45,15 +45,12 @@ class KeyDeleteSpec extends SparkSuite {
     new java.io.File(dir).listFiles.filter(_.isDirectory).map(_.getName)
       .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
 
-  private def scanOf(df: DataFrame): WarehouseScan = {
-    def find(p: org.apache.spark.sql.execution.SparkPlan): Seq[WarehouseScan] =
-      p.collect {
-        case b: BatchScanExec => Seq(b.scan.asInstanceOf[WarehouseScan])
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          find(a.executedPlan)
-      }.flatten
-    find(df.queryExecution.executedPlan).head
-  }
+  /** The lookup's warehouse scan, as planned (the driver answers a
+    * pinned lookup from it, so the executed plan may hold no scan). */
+  private def scanOf(df: DataFrame): WarehouseScan =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan.asInstanceOf[WarehouseScan]
+    }.get
 
   private def plannedFiles(df: DataFrame): Seq[WarehouseFilePartition] =
     scanOf(df).planInputPartitions().toSeq.flatMap {
@@ -227,6 +224,9 @@ class KeyDeleteSpec extends SparkSuite {
     fx.build("whkdp", dir, true)
     val deleted = lookupSql("whkdp", "vid = 'v0025'", "vid")
     assert(plannedPaths(deleted).isEmpty && deleted.isEmpty)
+    // both lookups of the deleted key are answered on the driver
+    assert(jobsFiredBy(lookupSql("whkdp", "vid = 'v0025'", "vid")
+      .collect()) == 0)
     assert(jobsFiredBy(AtomicWarehouse.readPointStr(spark, dir, "vid",
       "v0025").collect()) == 0)
     // deleted then re-added: only the re-adding epoch is opened
@@ -243,7 +243,25 @@ class KeyDeleteSpec extends SparkSuite {
     for (v <- Seq("v0015", "v0001", "v0012"))
       assert(joins(AtomicWarehouse.readPointStr(spark, dir, "vid", v))
         .isEmpty, v)
-    // a full read still applies the tombstone
-    assert(joins(AtomicWarehouse.read(spark, dir, "vid")).nonEmpty)
+    // a full read still applies the tombstone, as a filter, not a join
+    val full = AtomicWarehouse.read(spark, dir, "vid")
+    assert(joins(full).isEmpty &&
+      full.where(col("vid").isin("v0025", "v0012")).collect()
+        .map(_.getString(1)).toSeq == Seq("re-12"))
+  }
+
+  test("a full read with one 2-key tombstone outstanding applies it " +
+      "as a filter, with no Spark job of its own: 2 jobs") {
+    val dir = table("whkdr", "vid")
+    fourEpochs(dir)
+    spark.sql("DELETE FROM whkdr.t WHERE vid IN ('v0160', 'v0480')")
+    var rows = 0L
+    // the last-wins window's two stages (local[4], 4 shuffle
+    // partitions); the tombstone's filter adds none
+    val jobs = jobsFiredBy {
+      rows = AtomicWarehouse.read(spark, dir, "vid").collect().length
+    }
+    assert(rows == 650L - 2L)
+    assert(jobs == 2, s"the full read fired $jobs jobs")
   }
 }
