@@ -3,45 +3,27 @@ package graft.plans
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, BindReferences, Expression, InterpretedOrdering, InterpretedUnsafeProjection, Predicate, SortOrder, Unevaluable}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import graft.sources.v2.WarehouseScan
-
-/** Rows the driver decodes when the query is planned: `read(attrs)`
-  * hands a visitor the rows of the columns `attrs` (a subset of
-  * `output`, in its order), so a query decodes only the columns it uses.
-  * `bytes` is the size of the files behind it. Planned by
-  * [[DriverAnswerStrategy]]; the engine's key-pinned reads
-  * ([[graft.sinks.AtomicWarehouse.readPoint]]) are built on it. */
-case class DriverRead(output: Seq[Attribute],
-    read: Seq[Attribute] => DriverAnswerStrategy.Source, bytes: Long)
-    extends LeafNode with MultiInstanceRelation {
-  override def newInstance(): DriverRead =
-    copy(output = output.map(_.newInstance()))
-  override def computeStats(): Statistics =
-    Statistics(sizeInBytes = BigInt(bytes))
-  override def simpleString(maxFields: Int): String =
-    s"DriverRead ${output.map(_.name).mkString("[", ", ", "]")}, $bytes bytes"
-}
 
 /** Physical planning of a warehouse read the driver answers: a chain of
   * deterministic `Project`s and `Filter`s, with at most keyless
   * [[TopKPerGroup]]s in it (the top-1 a key-pinned last-wins window
   * becomes, [[EliminatePinnedWindowPartitions]]), over a
   * `graft-warehouse` scan whose [[WarehouseScan.driverRead]] answers on
-  * the driver or over a [[DriverRead]]. The chain is evaluated on the
-  * driver while the files decode, and planned as one
+  * the driver — a key-pinned connector SQL read or an
+  * [[graft.sinks.AtomicWarehouse.readPoint]]-family read. The chain is
+  * evaluated on the driver while the files decode, and planned as one
   * `LocalTableScanExec`, so `collect` runs no Spark job. Spark's own
   * `ConvertToLocalRelation` folds `Project`/`Filter` over a local
   * relation during optimization, which is before the scan is known (the
   * pushdown batch runs later) and never folds a top-k; hence a planner
   * strategy. Any other shape, or a scan past the driver bound, plans as
-  * before; a [[DriverRead]] under any other operator plans alone.
-  * Expressions are interpreted: each lookup's literals differ, and
-  * generated code would compile per literal. */
+  * before. Expressions are interpreted: each lookup's literals differ,
+  * and generated code would compile per literal. */
 object DriverAnswerStrategy extends SparkStrategy {
   /** Rows handed to a visitor; each row is reused afterwards. */
   type Source = (InternalRow => Unit) => Unit
@@ -67,9 +49,6 @@ object DriverAnswerStrategy extends SparkStrategy {
       case w: WarehouseScan => w.driverRead.map(s.output -> _)
       case _ => None
     }
-    case r: DriverRead =>
-      val attrs = r.output.filter(needed.contains)
-      Some(attrs -> r.read(attrs))
     case Filter(cond, child) =>
       for {
         (in, src) <- source(child, needed ++ cond.references)

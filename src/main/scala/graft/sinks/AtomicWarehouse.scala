@@ -443,44 +443,50 @@ object AtomicWarehouse {
     retained.flatMap(v => committedEpochsAt(spark, dir, v)).toSet -- live
   }
 
-  /** Refuse the RENAME SIGNATURE in epoch schema evolution. The read
-    * merge unions epochs BY NAME (`allowMissingColumns` — additive
-    * widening is free: old epochs serve nulls for new columns, partial
-    * epochs serve nulls for absent ones). But a committed epoch that
-    * simultaneously DROPS a known column AND ADDS an unknown one is,
-    * in every real pipeline, a RENAME — and name-union silently forks
-    * it: every old row reads null under the new name, every new row
-    * null under the old, with no error anywhere. The engine has no
-    * column-mapping story (Delta's name-mapping), so the fork is
-    * REFUSED at commit time, loudly; pure widening and pure narrowing
-    * stay allowed. `graft.schema.allowNonAdditive=true` opts a session
-    * into the fork (a genuine add+drop migration, done knowingly).
-    * Judged against the RECORDED entry schemas ([[SchemaStat]] — zero
-    * I/O, the manifest is already read on this path); stats-less
-    * legacy entries cannot be judged and skip the check. */
+  /** Refuse a commit of `schema` that RETYPES a known column or bears
+    * the RENAME SIGNATURE. Both are judged against the committed
+    * [[effectiveSchema]] — the RECORDED entry schemas ([[SchemaStat]],
+    * zero I/O: the manifest is already read on this path, and the
+    * parsed schemas are cached) under the column-mapping directives.
+    *
+    * A retyped column ([[requireSameType]]) would commit fine and then
+    * fail every read at schema resolution; it is refused always, with
+    * the type a commit of `schema` records compared (integral columns
+    * narrower than int record as int) and hive partition columns
+    * (`partitionBy`, typed by inference from their values) left out.
+    *
+    * The read merge unions epochs BY NAME (additive widening is free:
+    * old epochs serve nulls for new columns, partial epochs serve nulls
+    * for absent ones). But a committed epoch that simultaneously DROPS a
+    * known column AND ADDS an unknown one is, in every real pipeline, a
+    * RENAME — and name-union silently forks it: every old row reads null
+    * under the new name, every new row null under the old, with no
+    * error anywhere. The fork is REFUSED at commit time, loudly; pure
+    * widening and pure narrowing stay allowed. `graft.schema.allowNonAdditive=true` opts a
+    * session into the fork (a genuine add+drop migration, done
+    * knowingly). */
   private def requireAdditiveSchema(spark: SparkSession, dir: String,
-      newCols: Seq[String], what: String): Unit = {
-    if (spark.conf.get("graft.schema.allowNonAdditive", "false").toBoolean)
+      schema: StructType, what: String,
+      partitionBy: Seq[String] = Nil): Unit = {
+    // the judgment runs against the EFFECTIVE schema: a commit under
+    // post-rename names must not read as "drops the old name", and a
+    // mapped-away (dropped) column is no longer known
+    val known = effectiveSchema(spark, dir,
+      committedEntriesAt(spark, dir, currentVersion(spark, dir))).toMap
+    def recorded(t: DataType): DataType = t match {
+      case ByteType | ShortType => IntegerType
+      case other => other
+    }
+    schema.fields.filterNot(f => partitionBy.contains(f.name)).foreach { f =>
+      known.get(f.name).foreach(t =>
+        requireSameType(dir, f.name, recorded(t), recorded(f.dataType), what))
+    }
+    if (known.isEmpty ||
+        spark.conf.get("graft.schema.allowNonAdditive", "false").toBoolean)
       return
-    val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
-    val ops = colMapOps(entries)
-    val posOf = entries.map(_.name).zipWithIndex.toMap
-    // the additive judgment runs against the EFFECTIVE schema: a commit
-    // under post-rename names must not read as "drops the old name", and
-    // a mapped-away (dropped) column is no longer known
-    val known: Set[String] = entries
-      .filterNot(e => isTombstone(e.name) || isColMap(e.name))
-      .flatMap(e => e.stats.get(SchemaStat).toSeq.flatMap(st =>
-        scala.util.Try(
-          org.apache.spark.sql.types.DataType.fromJson(st.mn)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSeq).getOrElse(Nil))
-        .flatMap(c => effectiveName(c, posOf(e.name), ops)))
-      .toSet
-    if (known.isEmpty) return
-    val cols = newCols.toSet
-    val dropped = known -- cols
-    val added = cols -- known
+    val cols = schema.fieldNames.toSet
+    val dropped = known.keySet -- cols
+    val added = cols -- known.keySet
     if (dropped.nonEmpty && added.nonEmpty)
       throw new UnsupportedOperationException(
         s"$what at $dir drops known column(s) ${dropped.toSeq.sorted
@@ -492,6 +498,18 @@ object AtomicWarehouse {
           "spark.conf graft.schema.allowNonAdditive=true to commit the " +
           "add+drop knowingly")
   }
+
+  /** The one TYPE rule of schema evolution: a column keeps the type it
+    * was first committed under — additive evolution may add columns,
+    * never retype them. Shared by the commit check
+    * ([[requireAdditiveSchema]]), the DSv2 write's planning check and the
+    * served schema ([[graft.sources.v2.WarehouseConnector.servedSchema]]).
+    */
+  private[graft] def requireSameType(dir: String, c: String, was: DataType,
+      now: DataType, what: String): Unit =
+    if (was != now) throw new IllegalStateException(
+      s"column '$c' is $was in $dir but $now in $what — additive " +
+        "evolution may add columns, never retype them")
 
   // ---- COLUMN MAPPING (rename / drop without rewrites) ----------------
   //
@@ -676,8 +694,9 @@ object AtomicWarehouse {
     s"${base}__r$k"
   }
 
-  /** Snapshot read: union of committed epochs + keyed last-wins merge
-    * (W2). Uncommitted epoch dirs are invisible by construction. */
+  /** Snapshot read: the committed epochs' log view under the keyed
+    * last-wins merge (W2). Uncommitted epoch dirs are invisible by
+    * construction. */
   def read(spark: SparkSession, dir: String, key: String): DataFrame =
     readVersion(spark, dir, key, currentVersion(spark, dir))
 
@@ -685,7 +704,8 @@ object AtomicWarehouse {
     * Epoch schemas may EVOLVE additively across drains (the reference's
     * sheet grows columns over time, K5's header-ensure): columns missing
     * from an older epoch surface as nulls, so old epochs never need a
-    * rewrite when the schema widens. */
+    * rewrite when the schema widens. The same scan the connector serves
+    * `VERSION AS OF` with ([[logView]]). */
   def readVersion(spark: SparkSession, dir: String, key: String,
       version: Long): DataFrame = {
     val entries = committedEntriesAt(spark, dir, version)
@@ -693,22 +713,19 @@ object AtomicWarehouse {
     mergedRead(spark, dir, key, entries, entries.map(_.name).toSet)
   }
 
-  /** Union `entries` (scanning only `scanned` ones; pruned entries
-    * contribute their SCHEMA only, so the result never depends on which
-    * epochs were pruned — an additively-evolved column living only in
-    * skipped epochs must still appear) and apply the keyed last-wins
-    * merge, a `row_number() = 1` window over the merge key. A
-    * `preFilter` (a predicate over the union) applies below the window;
-    * when it pins every key part to a literal, as a point lookup's does,
-    * the window forms one group and the optimizer plans it as a top-1
-    * with no exchange ([[graft.plans.EliminatePinnedWindowPartitions]]).
-    * A key-bound read's `pin` narrows the tombstones ([[logViewWithPos]]).
-    */
+  /** The [[logView]] of `entries`, scanning only the `scanned` ones,
+    * under the keyed last-wins merge: a `row_number() = 1` window over
+    * the merge key. A `preFilter` (a predicate over the log view)
+    * applies below the window, where the scan prunes epochs, files and
+    * row groups by it; when it pins every key part to a literal, as a
+    * point lookup's does, the window forms one group and the optimizer
+    * plans it as a top-1 with no exchange
+    * ([[graft.plans.EliminatePinnedWindowPartitions]]). */
   private def mergedRead(spark: SparkSession, dir: String, key: String,
       entries: Seq[EpochEntry], scanned: Set[String],
       preFilter: Option[DataFrame => org.apache.spark.sql.Column] = None,
       pin: Option[KeyPin] = None): DataFrame = {
-    val union = logViewWithPos(spark, dir, key, entries, scanned, pin)
+    val log = logView(spark, dir, key, entries, scanned, pin)
     // the range predicate applies BELOW the merge window: a filter above
     // it could never push past the Window (its partitioning is the merge
     // key, not the filtered column), which would defeat partition and
@@ -716,7 +733,7 @@ object AtomicWarehouse {
     // exactly under the contracts the range readers already carry — the
     // filtered column is version-stable per key, so the filter drops ALL
     // versions of a key or none and the merge winner is unchanged.
-    lastWins(preFilter.map(p => union.where(p(union))).getOrElse(union), key)
+    lastWins(preFilter.map(p => log.where(p(log))).getOrElse(log), key)
   }
 
   /** The keyed last-wins merge of a log view carrying `__pos`: a
@@ -729,86 +746,66 @@ object AtomicWarehouse {
       .where(col("__rn") === 1).drop("__rn", "__pos")
   }
 
-  /** The LOG view with its manifest position: the committed-epoch union
-    * (tombstones already applied) BEFORE the last-wins window, `__pos`
-    * retained — the shared substrate of [[mergedRead]] and the
+  /** The LOG view of the manifest entry list `entries`: every row-version
+    * of the `scanned` data entries with each row's manifest position as
+    * `__pos` — the `graft-warehouse` scan ([[graft.sources.v2
+    * .WarehouseScan]]) handed the entries to read, its `_pos` metadata
+    * column served as `__pos`. Its reader applies the tombstones
+    * (merge-on-read drops of the keys they list, in entries before
+    * them), the column-mapping directives and the hive partition values.
+    * The columns are the served schema of ALL data entries, scanned or
+    * pruned ([[graft.sources.v2.WarehouseConnector.servedSchema]]), so
+    * the result never depends on which epochs were pruned. The shared
+    * substrate of [[mergedRead]], [[minMaxOfEntries]] and the
     * tombstone-commit suppression count ([[suppressionStats]]), which
     * must count exactly the rows a read would serve.
     *
-    * A read of given keys only passes their [[KeyPin]] (see
-    * [[tombstoneLists]]). */
-  private def logViewWithPos(spark: SparkSession, dir: String, key: String,
+    * `__pos` is the merge window's `load_seq` TIEBREAKER. A tie is
+    * reachable since SQL MERGE self-assigns load_seq in its own entry
+    * namespace: a drain whose external counter lands on the same seq
+    * commits fine (distinct entry name), and manifest order — commit
+    * order — decides the winner deterministically.
+    *
+    * A read of given keys passes their [[KeyPin]]: entries ordered
+    * before a tombstone that covers the keys are not scanned (the
+    * tombstone drops every row of theirs the read keeps), and the scan
+    * answers on the driver when its files fit the connector's bound
+    * ([[graft.sources.v2.WarehouseScan.driverRead]]). */
+  private def logView(spark: SparkSession, dir: String, key: String,
       entries: Seq[EpochEntry], scanned0: Set[String],
       pin: Option[KeyPin] = None): DataFrame = {
-    // column-mapping DIRECTIVES are manifest-only metadata: never data,
-    // their positions resolve each epoch's physical names below
-    val data = entries.filterNot(e => isTombstone(e.name) || isColMap(e.name))
-    require(data.nonEmpty,
+    import graft.sources.v2.{WarehouseConnector => WC, WarehouseTable}
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    require(entries.exists(e => !isTombstone(e.name) && !isColMap(e.name)),
       s"warehouse at $dir holds only tombstone entries — no data to read")
-    // every row carries its entry's MANIFEST POSITION (`__pos`):
-    // tombstones drop rows by it, and the merge window uses it as the
-    // load_seq TIEBREAKER. A tie is reachable since SQL MERGE
-    // self-assigns load_seq in its own entry namespace: a drain whose
-    // external counter lands on the same seq commits fine (distinct
-    // entry name), and manifest order — commit order — decides the
-    // winner deterministically, matching wall-clock last-wins.
-    val posOf = entries.map(_.name).zipWithIndex.toMap
-    val (scanned, drops) = tombstoneLists(spark, dir, entries, scanned0, pin)
-    val union0 = unionOfEpochs(spark, dir, data, scanned, posOf,
-      colMapOps(entries))
-    // MERGE-ON-READ deletion vectors: a tombstone suppresses every
-    // version of its keys in entries committed BEFORE it (manifest
-    // order); a later drain re-adding a key is new data and survives.
-    // One filter per tombstone — `__pos` below its position and the key
-    // in its lists — so zero data rewrites at purge time (Iceberg's
-    // equality-delete read path) and no Spark job at read time. A
-    // tombstone's key TYPE is its parquet column's: long lists compare
-    // `try_cast(key as long)` (a non-numeric key is never a long purge
-    // target and must not throw under ANSI), string lists
-    // `cast(key as string)`; both coexist in one manifest. A null key
-    // never matches (the null `IN` result counts as no match), the
-    // purgeKeys null contract.
-    def in(typ: String, vs: Set[Any]): Option[org.apache.spark.sql.Column] =
-      if (vs.isEmpty) None
-      else Some(org.apache.spark.sql.GraftBridge.column(
-        org.apache.spark.sql.catalyst.expressions.InSet(
-          org.apache.spark.sql.GraftBridge.expression(keyCol(key, typ)), vs)))
-    drops.foldLeft(union0) { case (df, (tp, ls, ss)) =>
-      val hit = (in("long", ls.toSet[Any]) ++
-        in("string", ss.map(UTF8String.fromString).toSet[Any]))
-        .reduce(_ || _)
-      df.where(!coalesce(col("__pos") < tp && hit, lit(false)))
-    }
+    val scanned = pin.fold(scanned0)(pinScanned(spark, dir, entries, scanned0, _))
+    val table = new WarehouseTable(dir, None,
+      WC.servedSchema(spark, dir, entries), key,
+      engineRead = Some(new WC.EngineRead(entries, scanned, pin)))
+    val rel = DataSourceV2Relation.create(table, None, None,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    val pos = rel.metadataOutput.find(_.name == WC.PosColumn).getOrElse(
+      throw new IllegalStateException(
+        s"a data column of $dir shadows the ${WC.PosColumn} metadata column"))
+    org.apache.spark.sql.GraftBridge.ofRows(spark, Project(
+      rel.output :+ Alias(pos, "__pos")(), rel.withMetadataColumns()))
   }
 
-  /** The tombstone key lists a read of the `scanned0` entries applies —
-    * (manifest position, long keys, string keys), NO-OP tombstones (a
-    * CoW purge's change-feed log, whose rewrite already removed the
-    * rows) skipped — and the entries it scans. Key lists load
-    * DRIVER-SIDE ([[readTombstoneKeys]]): O(T) tiny parquet reads, zero
-    * Spark jobs. A tombstone drops rows only in entries before it, so
-    * lists ordered before every scanned entry are left out.
-    *
-    * A read of given keys only passes their [[KeyPin]]: entries ordered
-    * before a tombstone that covers the keys are not scanned (the
-    * tombstone would drop every row of theirs the read keeps), and only
-    * the tombstones that name a key apply — none, for a live key no
-    * tombstone names. */
-  private def tombstoneLists(spark: SparkSession, dir: String,
-      entries: Seq[EpochEntry], scanned0: Set[String], pin: Option[KeyPin])
-      : (Set[String], Seq[(Int, Array[Long], Array[String])]) = {
+  /** The `scanned` entries a read of the `pin`'s keys opens: an entry
+    * ordered before a tombstone that covers every pinned key holds no
+    * row of theirs the read keeps, so it is not scanned. Key lists load
+    * DRIVER-SIDE ([[readTombstoneKeys]]): O(T) tiny cached reads, zero
+    * Spark jobs. */
+  private def pinScanned(spark: SparkSession, dir: String,
+      entries: Seq[EpochEntry], scanned: Set[String], pin: KeyPin): Set[String] = {
     val posOf = entries.map(_.name).zipWithIndex.toMap
-    val lists = entries.filter(e => isTombstone(e.name) &&
-        !isNoopTombstone(e.name)).flatMap { t =>
-      val (_, ls, ss) = readTombstoneKeys(spark, dir, t.name)
-      if (pin.forall(_.names(ls, ss))) Some((posOf(t.name), ls, ss)) else None
-    }
-    val scanned = pin.fold(scanned0) { p =>
-      lists.collect { case (tp, ls, ss) if p.covers(ls, ss) => tp }
-        .maxOption.fold(scanned0)(last => scanned0.filter(posOf(_) > last))
-    }
-    val firstScanned = scanned.map(posOf).minOption.getOrElse(Int.MaxValue)
-    (scanned, lists.filter(_._1 > firstScanned))
+    entries.zipWithIndex.collect {
+      case (t, tp) if isTombstone(t.name) && !isNoopTombstone(t.name) &&
+          { val (_, ls, ss) = readTombstoneKeys(spark, dir, t.name)
+            pin.covers(ls, ss) } => tp
+    }.maxOption.fold(scanned)(last => scanned.filter(posOf(_) > last))
   }
 
   /** MIN and MAX of column `c` over ONLY the given entries' LOG view —
@@ -825,177 +822,10 @@ object AtomicWarehouse {
     * `c` (all suppressed / column absent from every epoch). */
   private[graft] def minMaxOfEntries(spark: SparkSession, dir: String,
       key: String, entries: Seq[EpochEntry], c: String): (Any, Any) = {
-    val data = entries.filterNot(e => isTombstone(e.name) || isColMap(e.name))
-    val scanned = data.map(_.name).toSet
-    val posOf = entries.map(_.name).zipWithIndex.toMap
-    val union0 = unionOfEpochs(spark, dir, data, scanned, posOf,
-      colMapOps(entries))
-    if (!union0.columns.contains(c)) return (null, null)
-    // a union schema lacking the key column means every scanned epoch
-    // predates it: those rows hold null keys, which are never purge
-    // targets — no drop can apply, read the union directly
-    val lv =
-      if (keyParts(key).forall(union0.columns.contains))
-        logViewWithPos(spark, dir, key, entries, scanned)
-      else union0
+    val lv = logView(spark, dir, key, entries, entries.map(_.name).toSet)
+    if (!lv.columns.contains(c)) return (null, null)
     val r = lv.agg(min(col(c)), max(col(c))).head()
     (r.get(0), r.get(1))
-  }
-
-  /** The committed-epoch union as ONE native parquet relation per
-    * distinct epoch SCHEMA (almost always exactly one), not one per
-    * EPOCH. The per-epoch shape — `spark.read.parquet(dir/epoch)` ×
-    * manifest length folded with `unionByName` — planned an
-    * O(epochs)-relation tree whose per-relation setup dominated at
-    * scale: the round-10 fold probe measured a 1000-epoch × 32-file
-    * merged read at 918 s against 78 s for the same bytes in one
-    * relation per epoch shape (BENCH.md `foldprofile`), and `compact`
-    * (read + write) at 973 s. Here identically-schema'd epochs become
-    * ONE multi-root scan (vectorized reader, one whole-stage-codegen
-    * span, one partition-listing pass), and the per-row manifest
-    * position is recovered from `_metadata.file_name` through
-    * [[graft.functions.FilePos]] — a constant-per-file O(1) hash probe
-    * — using the file lists the manifest already records
-    * ([[FilesStat]]; commit-time walk as fallback).
-    *
-    * Grouping key is (schema, hive-partition layout): additively
-    * evolved tables yield one relation per schema generation, and a
-    * flat epoch never shares a relation with a hive-partitioned one
-    * (multi-root partition discovery requires agreeing layouts).
-    * Columns are aligned to the UNION schema over ALL data entries —
-    * scanned or pruned — in manifest order (missing columns become
-    * typed nulls), preserving the exact column order and
-    * pruned-epochs-still-contribute-schema contract of the legacy
-    * `unionByName(allowMissingColumns = true)` fold.
-    *
-    * Falls back to the per-epoch fold when its preconditions fail —
-    * a column name committed under two different types (legacy
-    * unionByName coercion semantics apply) or a duplicate part-file
-    * NAME across epochs (never produced by Spark writers, whose part
-    * names embed task UUIDs, but checked rather than assumed). */
-  private def unionOfEpochs(spark: SparkSession, dir: String,
-      data: Seq[EpochEntry], scanned: Set[String],
-      posOf: Map[String, Int],
-      ops: Seq[(Int, ColMapOp)] = Nil): DataFrame = {
-    import graft.sources.v2.WarehouseConnector
-    val f = fs(spark, dir)
-    val schemas: Seq[(EpochEntry, StructType)] =
-      data.map(e => e -> WarehouseConnector.entrySchema(spark, dir, e))
-    // per-entry column RESOLUTION under the mapping directives: physical
-    // name → effective served name (dropped columns resolve away). With
-    // no directives this is the identity and everything below reduces to
-    // the round-11 shape.
-    def effOf(e: EpochEntry, st: StructType): Seq[(String, String)] =
-      st.fields.toSeq.flatMap(fld =>
-        effectiveName(fld.name, posOf(e.name), ops).map(fld.name -> _))
-    // EFFECTIVE name → type over ALL data entries, first occurrence
-    // fixing the output column order (the unionByName fold's order)
-    val types = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-    var conflict = false
-    schemas.foreach { case (e, st) =>
-      val eff = effOf(e, st).toMap
-      st.fields.foreach { fld =>
-        eff.get(fld.name).foreach { n =>
-          types.get(n) match {
-            case None => types(n) = fld.dataType
-            case Some(t) => if (t != fld.dataType) conflict = true
-          }
-        }
-      }
-    }
-    val scannedEntries = schemas.filter { case (e, _) => scanned.contains(e.name) }
-    // FLAT epochs (every data file directly under the epoch dir — the
-    // drain/compact/merge shape) collapse into one relation per schema;
-    // HIVE-PARTITIONED epochs keep one relation each: Spark's partition
-    // discovery refuses sibling partition trees under distinct roots
-    // (CONFLICTING_DIRECTORY_STRUCTURES — each root is its own base),
-    // and dynamic-partition writes reuse part-file NAMES across a
-    // task's partition subdirs, so the name-keyed position map below is
-    // only sound for flat layouts anyway. Partitioned warehouses keep
-    // their two-level pruning; the O(epochs) relation cost the fold
-    // probe measured was the flat drain shape, which this kills.
-    val filesOf: Map[String, Seq[WarehouseConnector.WhFile]] =
-      scannedEntries.map { case (e, _) =>
-        e.name -> WarehouseConnector.entryFiles(f, dir, e)
-      }.toMap
-    val (flat, parted) = scannedEntries.partition { case (e, _) =>
-      filesOf(e.name).forall(_.partValues.isEmpty)
-    }
-    // file NAME → manifest position over the flat entries, from the
-    // manifest's recorded file lists (zero I/O; commit-time walk for
-    // legacy entries). Spark part names embed the write job's UUID, so
-    // cross-epoch collisions do not occur — checked, not assumed.
-    val posByFile = scala.collection.mutable.HashMap.empty[String, Int]
-    var dupName = false
-    flat.foreach { case (e, _) =>
-      val pos = posOf(e.name)
-      filesOf(e.name).foreach { wf =>
-        val name = wf.path.substring(wf.path.lastIndexOf('/') + 1)
-        if (posByFile.put(name, pos).exists(_ != pos)) dupName = true
-      }
-    }
-    if (conflict || dupName)
-      return legacyUnionOfEpochs(spark, dir, data, scanned, posOf, ops)
-    val target: Seq[(String, DataType)] = types.toSeq
-    // `physFor`: effective name → this group's PHYSICAL column (identity
-    // without directives; the pre-rename name for remapped epochs)
-    def align(df: DataFrame, physFor: Map[String, String],
-        pos: org.apache.spark.sql.Column): DataFrame =
-      df.select(target.map { case (c, dt) =>
-        physFor.get(c) match {
-          case Some(p) if p == c => col(c)
-          case Some(p) => col(p).as(c)
-          case None => lit(null).cast(dt).as(c)
-        }
-      } :+ pos.as("__pos"): _*)
-    val frozen = posByFile.toMap
-    // grouping key is (schema, resolution): epochs straddling a rename
-    // directive read the same physical schema under different served
-    // names and must not share a relation projection
-    val flatParts = flat
-      .groupBy { case (e, st) => (st, effOf(e, st)) }.toSeq
-      .map { case ((st, eff), es) => (es.map(_._1.name), st, eff) }
-      .sortBy { case (names, _, _) => posOf(names.head) } // deterministic
-      .map { case (names, st, eff) =>
-        align(
-          spark.read.schema(st).parquet(names.map(n => s"$dir/$n"): _*),
-          eff.map(_.swap).toMap,
-          graft.functions.FilePos(col("_metadata.file_name"), frozen))
-      }
-    val partedParts = parted.map { case (e, st) =>
-      align(spark.read.schema(st).parquet(s"$dir/${e.name}"),
-        effOf(e, st).map(_.swap).toMap, lit(posOf(e.name)))
-    }
-    val parts = flatParts ++ partedParts
-    if (parts.isEmpty)
-      // everything pruned: an empty frame still carrying the full union
-      // schema (the contract pruning must never change)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(target.map { case (c, dt) => StructField(c, dt) } :+
-          StructField("__pos", IntegerType, nullable = false)))
-    else parts.reduce(_.unionByName(_))
-  }
-
-  /** The pre-round-11 one-relation-per-epoch fold — kept as the escape
-    * hatch for inputs outside [[unionOfEpochs]]'s preconditions. */
-  private def legacyUnionOfEpochs(spark: SparkSession, dir: String,
-      data: Seq[EpochEntry], scanned: Set[String],
-      posOf: Map[String, Int],
-      ops: Seq[(Int, ColMapOp)] = Nil): DataFrame = {
-    def dataDf(e: EpochEntry) = {
-      val st = graft.sources.v2.WarehouseConnector.entrySchema(spark, dir, e)
-      val df = spark.read.schema(st).parquet(s"$dir/${e.name}")
-      // resolve this epoch's physical names through the mapping
-      // directives committed after it (identity when there are none)
-      val sel = df.select(st.fields.toSeq.flatMap { fld =>
-        effectiveName(fld.name, posOf(e.name), ops)
-          .map(n => col(fld.name).as(n))
-      }: _*)
-      if (scanned.contains(e.name)) sel else sel.limit(0)
-    }
-    data.map(e => dataDf(e).withColumn("__pos", lit(posOf(e.name))))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Publish `tmp` as `dst` iff `dst` does not exist — the CAS primitive
@@ -1231,7 +1061,7 @@ object AtomicWarehouse {
     val epoch =
       if (entryName.isDefined) base else resolveEpochName(spark, dir, base)
     if (epoch != base && committed.contains(epoch)) return
-    requireAdditiveSchema(spark, dir, df.columns.toSeq, s"epoch $epoch")
+    requireAdditiveSchema(spark, dir, df.schema, s"epoch $epoch", partitionBy)
     val f = fs(spark, dir)
     val epochPath = new Path(s"$dir/$epoch")
     val wanted = (statsKey.toSeq ++ statsCols).distinct
@@ -1307,9 +1137,9 @@ object AtomicWarehouse {
     }
     // staged schema from the parquet footers (one cheap driver read);
     // a refusal must not leak the staged dir
-    scala.util.Try(spark.read.parquet(stage.toString).columns.toSeq)
-      .foreach { cols =>
-        try requireAdditiveSchema(spark, dir, cols, s"staged epoch $epoch")
+    scala.util.Try(spark.read.parquet(stage.toString).schema)
+      .foreach { staged =>
+        try requireAdditiveSchema(spark, dir, staged, s"staged epoch $epoch")
         catch { case e: Throwable => f.delete(stage, true); throw e }
       }
     val marker = new Path(stage, "_SUCCESS")
@@ -2093,8 +1923,9 @@ object AtomicWarehouse {
   private[graft] def isDeletePreimageLog(n: String): Boolean =
     n.startsWith("tombstone_noop_delpre_")
 
-  /** A tombstone's key list read DRIVER-SIDE via parquet-hadoop — ZERO
-    * Spark jobs. Key lists are O(purged keys) tiny by the purge
+  /** A tombstone's key list read DRIVER-SIDE through the connector's
+    * per-file reader ([[graft.sources.v2.WarehouseConnector.readOnDriver]])
+    * — ZERO Spark jobs. Key lists are O(purged keys) tiny by the purge
     * contract, but reading each through `spark.read.parquet(...).
     * collect()` costs a full driver JOB (~100 ms fixed): at T
     * uncompacted tombstones every merged read and connector plan paid
@@ -2161,37 +1992,28 @@ object AtomicWarehouse {
 
   private def readTombstoneKeysUncached(spark: SparkSession, dir: String,
       name: String): (String, Array[Long], Array[String]) = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val p = new Path(s"$dir/$name")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import graft.sources.v2.{WarehouseConnector => WC, WarehouseFilePartition}
+    val schema = WC.epochSchema(spark, dir, name)
     val longs = Array.newBuilder[Long]
     val strs = Array.newBuilder[String]
-    var typ = "long"
-    for ((rel, _) <- relativeDataFiles(f, p)) {
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new Path(p, rel))
-        .withConf(f.getConf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val t = g.getType
-          if (t.getFieldCount > 0 && t.getType(0).isPrimitive &&
-              g.getFieldRepetitionCount(0) > 0) {
-            t.getType(0).asPrimitiveType().getPrimitiveTypeName match {
-              case BINARY | FIXED_LEN_BYTE_ARRAY =>
-                typ = "string"; strs += g.getString(0, 0)
-              case INT64 => longs += g.getLong(0, 0)
-              case INT32 => longs += g.getInteger(0, 0).toLong
-              case _ => () // nothing else is ever written by publishTombstone
-            }
-          }
-          g = reader.read()
+    // the key list is the tombstone parquet's one column
+    schema.headOption.foreach { keyField =>
+      val required = StructType(Seq(keyField))
+      val reads = new WC.FileReads(required)
+      val files = WC.listEpochFiles(fs(spark, dir), dir, name).map(f =>
+        reads.plan(WarehouseFilePartition(f.path, f.len, f.partValues.toArray,
+          applyDrops = false), schema, Nil))
+      WC.readOnDriver(spark, required, Array.empty, reads, Nil, Nil, files) {
+        r => if (!r.isNullAt(0)) keyField.dataType match {
+          case StringType => strs += r.getUTF8String(0).toString
+          case LongType => longs += r.getLong(0)
+          case IntegerType => longs += r.getInt(0).toLong
+          case _ => () // nothing else is ever written by publishTombstone
         }
-      } finally reader.close()
+      }
     }
-    (typ, longs.result(), strs.result())
+    (if (schema.headOption.exists(_.dataType == StringType)) "string" else "long",
+      longs.result(), strs.result())
   }
 
   /** The tombstone's key COLUMN NAME, from the first data file's footer
@@ -2702,8 +2524,8 @@ object AtomicWarehouse {
     *
     * Cost: ONE Spark job over the bloom/zone-PRUNED affected epochs —
     * the keys an IN filter, the rows counted per entry within each task
-    * (no shuffle), and only the earlier tombstones that name a key
-    * anti-joined ([[KeyPin]]) — inside the manifest-CAS compute (so a
+    * (no shuffle), and entries a covering earlier tombstone hides left
+    * unscanned ([[KeyPin]]) — inside the manifest-CAS compute (so a
     * racing drain's epoch is re-counted on retry, keeping the total
     * coherent with the manifest the tombstone lands in). This trades the
     * deferred purge's pure-O(keys) commit for tombstone-durable
@@ -2719,7 +2541,7 @@ object AtomicWarehouse {
       keys.exists(may)
     }.map(_.name).toSet
     if (data.isEmpty || affected.isEmpty) return zero
-    val lv = logViewWithPos(spark, dir, key, entries, affected,
+    val lv = logView(spark, dir, key, entries, affected,
       Some(KeyPin(typ, keys)))
     import spark.implicits._
     val nameAt = entries.map(_.name).zipWithIndex.map(_.swap).toMap
@@ -3212,16 +3034,19 @@ object AtomicWarehouse {
     * [[MaxBloomBytes]] rather than bloat every manifest read.
     *
     * When the epochs left hold few, small files (the connector's driver
-    * bound), they are decoded on the driver when the lookup is planned,
-    * only the columns the query uses, and the winner is picked there:
-    * collecting the lookup runs no Spark job ([[pointRead]]). */
+    * bound), the scan decodes them on the driver when the lookup is
+    * planned, only the columns the query uses, and the winner is picked
+    * there: collecting the lookup runs no Spark job
+    * ([[graft.sources.v2.WarehouseScan.driverRead]],
+    * [[graft.plans.DriverAnswerStrategy]]). */
   def readPoint(spark: SparkSession, dir: String, key: String,
       value: Long): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    pointRead(spark, dir, key, entries,
+    mergedRead(spark, dir, key, entries,
       scanListForPoint(entries, key, value).map(_.name).toSet,
-      _ => col(key).cast("long") === value, KeyPin("long", Seq(value.toString)))
+      Some(_ => col(key).cast("long") === value),
+      Some(KeyPin("long", Seq(value.toString))))
   }
 
   /** [[readPoint]] for a STRING merge key: pruned by the key's
@@ -3231,34 +3056,29 @@ object AtomicWarehouse {
       value: String): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    pointRead(spark, dir, key, entries,
+    mergedRead(spark, dir, key, entries,
       scanListForPointStr(entries, key, value).map(_.name).toSet,
-      _ => col(key).cast("string") === value, KeyPin("string", Seq(value)))
+      Some(_ => col(key).cast("string") === value),
+      Some(KeyPin("string", Seq(value))))
   }
 
   /** A read of only the rows whose key equals one of `keys` compared
     * as `typ` ([[canonicalKeys]]): a `"string"` key matches the rows whose
     * key renders (cast to string) as it, a `"long"` key those whose key
-    * casts to it. What such a read asks a tombstone's key lists (long
-    * keys, string keys): `names` — may the tombstone drop one of the
-    * rows, so that it must join the read; `covers` — does it drop every
-    * one, so that the entries before it need not be scanned. A string
-    * drop compares a row's rendering and a long drop its `try_cast` to
-    * long, both fixed by a string key; a long key fixes only the cast,
-    * so any string drop joins its read and none covers it. */
-  private final case class KeyPin(typ: String, keys: Seq[String]) {
+    * casts to it. `covers` asks a tombstone's key lists (long keys,
+    * string keys) whether they drop every such row, so that the entries
+    * before the tombstone need not be scanned. A string drop compares a
+    * row's rendering and a long drop its `try_cast` to long, both fixed
+    * by a string key; a long key fixes only the cast, so no string drop
+    * covers it. */
+  private[graft] final case class KeyPin(typ: String, keys: Seq[String]) {
     private val asLong = keys.map(k =>
       if (typ == "long") Some(k.toLong) else sparkLongCast(k))
-    /** Per key: do these lists drop its rows? */
-    private def hits(ls: Array[Long], ss: Array[String]): Seq[Boolean] = {
+    def covers(ls: Array[Long], ss: Array[String]): Boolean = {
       val (lset, sset) =
         (ls.toSet, if (typ == "string") ss.toSet else Set.empty[String])
-      keys.indices.map(i => asLong(i).exists(lset) || sset(keys(i)))
+      keys.indices.forall(i => asLong(i).exists(lset) || sset(keys(i)))
     }
-    def names(ls: Array[Long], ss: Array[String]): Boolean =
-      typ == "long" && ss.nonEmpty || hits(ls, ss).contains(true)
-    def covers(ls: Array[Long], ss: Array[String]): Boolean =
-      !hits(ls, ss).contains(false)
   }
 
   /** COMPOSITE point lookup: `partVals` are the key parts' values in
@@ -3278,73 +3098,11 @@ object AtomicWarehouse {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
     val rendered = partVals.mkString(CompositeSep)
-    pointRead(spark, dir, key, entries,
+    mergedRead(spark, dir, key, entries,
       scanListForPointTyped(entries, key, "string", rendered).map(_.name).toSet,
-      df => parts.zip(partVals).map { case (p, v) =>
-        renderedEq(df, p, v) }.reduce(_ && _),
-      KeyPin("string", Seq(rendered)))
-  }
-
-  /** A key-pinned read, the [[readPoint]] family's shared body: the
-    * `scanned` entries (pruned by zone maps and blooms) narrowed by the
-    * `pin`'s tombstones ([[tombstoneLists]]), the rows `pred` admits,
-    * and each key's last-wins winner. When the files left fit the
-    * connector's driver bound ([[WarehouseConnector.DriverMaxFiles]],
-    * [[WarehouseConnector.DriverMaxBytes]]) they are read by a
-    * [[graft.plans.DriverRead]], which decodes them on the driver
-    * through [[WarehouseConnector.readOnDriver]] (the connector's
-    * per-file reader: tombstone drops, renames, masks) when the query is
-    * planned, and only the columns the query uses — a wide table's
-    * unused columns cost most of a decode. [[lastWins]] on top plans as
-    * a top-1 that [[graft.plans.DriverAnswerStrategy]] picks on the
-    * driver with `pred`, so collecting the lookup runs no Spark job.
-    * Past the bound, or across a column committed under two types, the
-    * read plans as [[mergedRead]]. */
-  private def pointRead(spark: SparkSession, dir: String, key: String,
-      entries: Seq[EpochEntry], scanned0: Set[String],
-      pred: DataFrame => org.apache.spark.sql.Column, pin: KeyPin): DataFrame = {
-    import graft.sources.v2.{WarehouseConnector => WC, WarehouseFilePartition}
-    import org.apache.spark.sql.catalyst.types.DataTypeUtils
-    def scan = mergedRead(spark, dir, key, entries, scanned0, Some(pred), Some(pin))
-    val (scanned, lists) = tombstoneLists(spark, dir, entries, scanned0, Some(pin))
-    val files = entries.filter(e => scanned(e.name) && !isTombstone(e.name) &&
-      !isColMap(e.name)).flatMap(WC.entryFiles(fs(spark, dir), dir, _))
-    val bytes = files.map(_.len).sum
-    if (files.size > WC.DriverMaxFiles || bytes > WC.DriverMaxBytes) return scan
-    val served =
-      try WC.servedSchema(spark, dir, entries)
-      catch { case _: IllegalStateException => return scan }
-    val ops = colMapOps(entries)
-    val posOf = entries.map(_.name).zipWithIndex.toMap
-    val tombs = lists.map { case (tp, ls, ss) =>
-      WC.TombstoneKeys(tp, tombstoneKeyCol(spark, dir, entries(tp).name)
-        .getOrElse(""), ls, ss)
-    }
-    // the columns a query asks for, `__pos` served as the connector's
-    // per-file position constant
-    def read(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) = {
-      val required = StructType(attrs.map(a => StructField(
-        if (a.name == "__pos") WC.PosColumn else a.name, a.dataType)))
-      val reads = new WC.FileReads(required)
-      val parts = files.map { f =>
-        val pos = posOf(f.epoch)
-        val (rn, mk) = WC.colMapResolution(pos, ops)
-        reads.plan(WarehouseFilePartition(f.path, f.len, f.partValues.toArray,
-          pos, renames = rn, masked = mk),
-          WC.entrySchema(spark, dir, entries(pos)), WC.dropKeyCols(tombs, pos, ops))
-      }
-      WC.readOnDriver(spark, required, Array.empty, reads, tombs, ops, parts) _
-    }
-    // a session started without GraftExtensions must still plan the leaf
-    // (the TopK.perGroup idiom)
-    if (!spark.sessionState.planner.strategies
-        .contains(graft.plans.DriverAnswerStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.DriverAnswerStrategy
-    val union = org.apache.spark.sql.GraftBridge.ofRows(spark,
-      graft.plans.DriverRead(DataTypeUtils.toAttributes(
-        served.add("__pos", IntegerType, nullable = false)), read, bytes))
-    lastWins(union.where(pred(union)), key)
+      Some(df => parts.zip(partVals).map { case (p, v) =>
+        renderedEq(df, p, v) }.reduce(_ && _)),
+      Some(KeyPin("string", Seq(rendered))))
   }
 
   /** `cast(c AS STRING) = v` over `df`. On an integral column, when `v`

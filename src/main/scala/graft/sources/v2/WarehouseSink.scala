@@ -171,13 +171,9 @@ class WarehouseWriteBuilder(dir: String, info: LogicalWriteInfo,
       val existing = WarehouseConnector.snapshotSchema(spark, dir,
         graft.sinks.AtomicWarehouse.currentVersion(spark, dir))
       info.schema().fields.foreach { f =>
-        existing.fields.find(_.name == f.name).foreach { prev =>
-          require(prev.dataType == f.dataType,
-            s"graft-warehouse write to $dir: column '${f.name}' is " +
-              s"${prev.dataType} in the warehouse but ${f.dataType} in " +
-              "the written data — additive evolution may add columns, " +
-              "never retype them")
-        }
+        existing.fields.find(_.name == f.name).foreach(prev =>
+          graft.sinks.AtomicWarehouse.requireSameType(dir, f.name,
+            prev.dataType, f.dataType, "the written data"))
       }
     }
     val statsCols = Option(o.get("statsCols")).toSeq

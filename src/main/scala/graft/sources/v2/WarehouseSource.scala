@@ -50,25 +50,26 @@ import graft.sinks.AtomicWarehouse.{ColStats, EpochEntry}
   *    fails a pushed predicate, then serves the value back as a column.
   *
   * The connector serves the LOG view: every committed row-version, with
-  * `load_seq` — the merged (last-wins) view is one window on top, exactly
-  * what [[AtomicWarehouse.read]] runs. That split is deliberate: the
-  * merge is a shuffle, which a Scan cannot (and should not) hide, and
-  * change-data consumers want the raw versions anyway. Pruning a filtered
-  * merged read stays sound under readRangeOn's version-stability
-  * contract, which the caller owns either way.
+  * `load_seq` — the merged (last-wins) view is one window on top. That
+  * split is deliberate: the merge is a shuffle, which a Scan cannot (and
+  * should not) hide, and change-data consumers want the raw versions
+  * anyway. [[AtomicWarehouse]]'s reads are this scan under that window,
+  * handed the manifest entries they resolved ([[WarehouseConnector
+  * .EngineRead]]). Pruning a filtered merged read stays sound under
+  * readRangeOn's version-stability contract, which the caller owns
+  * either way.
   *
   * Time travel: `.option("version", N)` reads the manifest as of version
   * N — same contract as [[AtomicWarehouse.readVersion]].
   *
   * Files are decoded executor-side by Spark's own vectorized parquet
-  * reader — the same decoder [[AtomicWarehouse.read]] scans with — each
-  * under its physical column names, with pushed filters skipping row
-  * groups by footer statistics (the third pruning level, the one
-  * `clusterBy` writes feed); [[WarehouseReaderFactory]] maps the decoded
-  * rows onto the served schema and applies tombstone drops. Drained
-  * epochs are all-string + load_seq by F19/F20; directly-committed epochs
-  * keep their primitive types; INT96 and INT64(MILLIS|MICROS) timestamps
-  * both decode, never rebased. The CONTRACT — what is pruned, what is
+  * reader, each under its physical column names, with pushed filters
+  * skipping row groups by footer statistics (the third pruning level,
+  * the one `clusterBy` writes feed); [[WarehouseReaderFactory]] maps the
+  * decoded rows onto the served schema and applies tombstone drops.
+  * Drained epochs are all-string + load_seq by F19/F20; directly-committed
+  * epochs keep their primitive types; INT96 and INT64(MILLIS|MICROS)
+  * timestamps both decode, never rebased. The CONTRACT — what is pruned, what is
   * projected, what is residual — is what this class pins.
   *
   * Point lookups are answered on the driver: a read whose pushed filters
@@ -161,13 +162,13 @@ object WarehouseConnector {
 
   /** Metadata column exposing each row's MANIFEST POSITION — the index
     * of the row's entry in the manifest at the served version. This is
-    * the `load_seq` TIEBREAKER [[AtomicWarehouse]]'s merged read uses
-    * (`__pos`): self-sequencing writers (SQL MERGE/INSERT) make equal
-    * load_seq values reachable, and manifest order — commit order —
-    * decides the winner deterministically. SQL consumers doing their own
-    * last-wins window MUST order by `(load_seq DESC, _pos DESC)`;
-    * ordering by load_seq alone is nondeterministic on a tie and can
-    * disagree with the engine read. Iceberg/Delta expose `_file`-style
+    * the `load_seq` TIEBREAKER [[AtomicWarehouse]]'s merged read orders
+    * by (served there as `__pos`): self-sequencing writers (SQL
+    * MERGE/INSERT) make equal load_seq values reachable, and manifest
+    * order — commit order — decides the winner deterministically. SQL
+    * consumers doing their own last-wins window MUST order by
+    * `(load_seq DESC, _pos DESC)`; ordering by load_seq alone is
+    * nondeterministic on a tie and can disagree with the engine read. Iceberg/Delta expose `_file`-style
     * metadata the same way (SupportsMetadataColumns: only materialized
     * when selected — zero cost otherwise). */
   val PosColumn = "_pos"
@@ -213,6 +214,18 @@ object WarehouseConnector {
         "load_seq tiebreaker (ORDER BY load_seq DESC, _pos DESC)"
   }
 
+  /** An [[AtomicWarehouse]] read, resolved by the engine before the
+    * scan is built: the manifest entry list it reads against (a
+    * version's manifest, or the subset [[AtomicWarehouse
+    * .minMaxOfEntries]] re-scans — positions are indexes into it), the
+    * data entries it opens (what zone-map, bloom and tombstone pruning
+    * left) and, for a key-bound read, its key pin. Handed to
+    * [[WarehouseTable]] and on to [[WarehouseScan]], which plans exactly
+    * these entries. Compared by identity: every planning of one read
+    * shares it, and a manifest's stats are too large to compare. */
+  final class EngineRead(val entries: Seq[EpochEntry],
+      val scanned: Set[String], val pin: Option[AtomicWarehouse.KeyPin])
+
   /** Timestamp-option parser shared by `timestampAsOf` and the change
     * feed's `startingTimestamp`/`endingTimestamp`: ISO-8601 instant or
     * the SQL `yyyy-MM-dd HH:mm:ss[.f…]` rendering, → micros since
@@ -245,10 +258,9 @@ object WarehouseConnector {
   /** The snapshot's schema at manifest version `v`: the UNION of the
     * committed epochs' schemas in commit order (additive evolution — a
     * column present in any epoch appears; epochs that lack it serve
-    * nulls), mirroring the `unionByName(allowMissingColumns = true)`
-    * contract of [[AtomicWarehouse.readVersion]]. Conflicting types for
-    * one name are refused loudly — silent coercion would make the
-    * connector's nulls indistinguishable from cast losses. */
+    * nulls). Conflicting types for one name are refused loudly
+    * ([[AtomicWarehouse.requireSameType]]) — silent coercion would make
+    * the connector's nulls indistinguishable from cast losses. */
   def snapshotSchema(spark: SparkSession, dir: String, v: Long): StructType =
     servedSchema(spark, dir, AtomicWarehouse.committedEntriesAt(spark, dir, v))
 
@@ -273,11 +285,10 @@ object WarehouseConnector {
             val f = f0.copy(name = served)
             a.fields.find(_.name == f.name) match {
               case None => a.add(f.copy(nullable = true))
-              case Some(prev) if prev.dataType == f.dataType => a
-              case Some(prev) => throw new IllegalStateException(
-                s"column '${f.name}' committed as ${prev.dataType} and " +
-                  s"${f.dataType} in different epochs of $dir — additive " +
-                  "evolution may add columns, never retype them")
+              case Some(prev) =>
+                AtomicWarehouse.requireSameType(dir, f.name, prev.dataType,
+                  f.dataType, s"entry ${e.name}")
+                a
             }
         }
       }
@@ -999,9 +1010,8 @@ object WarehouseConnector {
     * identity, or additively-evolved later) — such files hold null keys
     * for it and the drop cannot apply. Without this resolution a
     * deferred purge committed AFTER a key rename silently skipped every
-    * pre-rename file (the footer lacks the new name), resurfacing
-    * superseded rows in SQL/DSv2 reads while the engine's merged read
-    * suppressed them — divergent results. */
+    * pre-rename file (the footer lacks the new name), resurfacing the
+    * rows the tombstone was committed to suppress. */
   def tombKeyPhysName(part: String, filePos: Int, tombPos: Int,
       ops: Seq[(Int, AtomicWarehouse.ColMapOp)]): Option[String] = {
     var cur = part
@@ -1295,15 +1305,21 @@ object WarehouseConnector {
 
   /** Does the file's hive partition value satisfy `filter`? Only exact
     * column matches prune; comparisons run on the RAW path string for
-    * equality/IN and, when both sides parse as longs, numerically for
-    * ranges — anything else keeps the file (conservative). */
+    * equality/IN and for ranges, numerically when both sides parse as
+    * longs and in UTF-8 byte order (a string column's order) against a
+    * string or date literal — anything else keeps the file
+    * (conservative). */
   def fileMayMatch(file: WhFile, filter: Filter): Boolean = {
     val pv = file.partValues.toMap
-    def cmpLong(c: String, v: Any)(ok: (Long, Long) => Boolean): Boolean =
-      (pv.get(c), longLit(v)) match {
-        case (Some(raw), Some(l)) => raw.toLongOption.forall(r => ok(r, l))
-        case _ => true
-      }
+    def cmp(c: String, v: Any)(ok: Int => Boolean): Boolean =
+      pv.get(c).filter(_ != "__HIVE_DEFAULT_PARTITION__")
+        .forall(raw => (longLit(v), v) match {
+          case (Some(l), _) =>
+            raw.toLongOption.forall(r => ok(java.lang.Long.compare(r, l)))
+          case (None, _: String | _: java.sql.Date | _: java.time.LocalDate) =>
+            ok(AtomicWarehouse.utf8Cmp(raw, stringLit(v).get))
+          case _ => true
+        })
     filter match {
       case EqualTo(c, v) => pv.get(c).forall(raw =>
         longLit(v).flatMap(l => raw.toLongOption.map(_ == l))
@@ -1311,10 +1327,10 @@ object WarehouseConnector {
       case In(c, vs) => pv.get(c).forall(raw =>
         vs.exists(v => longLit(v).flatMap(l => raw.toLongOption.map(_ == l))
           .getOrElse(stringLit(v).forall(_ == raw))))
-      case GreaterThan(c, v) => cmpLong(c, v)(_ > _)
-      case GreaterThanOrEqual(c, v) => cmpLong(c, v)(_ >= _)
-      case LessThan(c, v) => cmpLong(c, v)(_ < _)
-      case LessThanOrEqual(c, v) => cmpLong(c, v)(_ <= _)
+      case GreaterThan(c, v) => cmp(c, v)(_ > 0)
+      case GreaterThanOrEqual(c, v) => cmp(c, v)(_ >= 0)
+      case LessThan(c, v) => cmp(c, v)(_ < 0)
+      case LessThanOrEqual(c, v) => cmp(c, v)(_ <= 0)
       case And(l, r) => fileMayMatch(file, l) && fileMayMatch(file, r)
       case Or(l, r) => fileMayMatch(file, l) || fileMayMatch(file, r)
       case _ => true
@@ -1324,7 +1340,8 @@ object WarehouseConnector {
 
 class WarehouseTable(val dir: String, version: Option[Long],
     schema0: StructType, val mergeKey: String,
-    writeDefaults: Map[String, String] = Map.empty)
+    writeDefaults: Map[String, String] = Map.empty,
+    engineRead: Option[WarehouseConnector.EngineRead] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -1518,7 +1535,7 @@ class WarehouseTable(val dir: String, version: Option[Long],
       options.getBoolean("ignoreDeletes", false),
       changeStart = changeStart, changeEnd = changeEnd, cdf = cdf,
       includePreimages = includePreimages,
-      restoreAsDeletes = restoreAsDeletes)
+      restoreAsDeletes = restoreAsDeletes, engineRead = engineRead)
   }
   /** Write options default to the CREATE TABLE-persisted table conf
     * (mergeKey/stats/bloom/cluster/zorder) so a SQL `INSERT INTO`
@@ -1534,7 +1551,8 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
     ignoreDeletes: Boolean = false,
     changeStart: Option[Long] = None, changeEnd: Option[Long] = None,
     cdf: Boolean = false, includePreimages: Boolean = false,
-    restoreAsDeletes: Boolean = false)
+    restoreAsDeletes: Boolean = false,
+    engineRead: Option[WarehouseConnector.EngineRead] = None)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
@@ -1574,7 +1592,10 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
     * subtraction; MIN/MAX still refuse under tombstones (a suppressed
     * row may hold the extremum). */
   private def translateAgg(a: Aggregation): Option[(StructType, Array[Any])] = {
-    if (a.groupByExpressions.nonEmpty || pruneFilters.nonEmpty) return None
+    // an engine read scans the entries it was handed, which the
+    // manifest's whole-version stats do not describe
+    if (a.groupByExpressions.nonEmpty || pruneFilters.nonEmpty ||
+        engineRead.isDefined) return None
     // a change-feed read serves a version RANGE's appended rows — entry
     // stats describe whole entries at one version, so no metadata answer
     if (changeStart.isDefined) return None
@@ -1815,7 +1836,7 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
   override def build(): Scan =
     new WarehouseScan(dir, version, mergeKey, required, pruneFilters,
       maxVersionsPerBatch, ignoreDeletes, pushedAgg, changeStart, changeEnd,
-      cdf, includePreimages, restoreAsDeletes)
+      cdf, includePreimages, restoreAsDeletes, engineRead)
 }
 
 /** One planned read of the warehouse: the entries and files the pushed
@@ -1827,19 +1848,36 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
   * the driver at planning time ([[driverRead]], planned by
   * [[graft.plans.DriverAnswerStrategy]] as a local table with no Spark
   * job). Streaming, change-feed and aggregate-pushed scans, and reads
-  * past the bound, always run as tasks. */
+  * past the bound, always run as tasks. An engine read
+  * (`engineRead`) plans the manifest entries it was handed instead of
+  * the served version's. */
 class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     required: StructType, pruneFilters: Array[Filter],
     maxVersionsPerBatch: Int, ignoreDeletes: Boolean = false,
     pushedAgg: Option[(StructType, Array[Any])] = None,
     changeStart: Option[Long] = None, changeEnd: Option[Long] = None,
     cdf: Boolean = false, includePreimages: Boolean = false,
-    restoreAsDeletes: Boolean = false)
+    restoreAsDeletes: Boolean = false,
+    engineRead: Option[WarehouseConnector.EngineRead] = None)
     extends Scan with Batch with SupportsRuntimeFiltering
     with SupportsReportStatistics {
   import WarehouseConnector._
 
   private var runtimeFilters: Array[Filter] = Array.empty
+
+  /** Two plannings of one read are one scan, as Spark's own file scans
+    * are: each planning builds a fresh Scan, and Catalyst compares plans
+    * by value (`sameResult`, exchange reuse). */
+  private def fields = (dir, version, mergeKey, required,
+    pruneFilters.toSeq, runtimeFilters.toSeq, maxVersionsPerBatch,
+    ignoreDeletes, pushedAgg.map { case (s, vs) => (s, vs.toSeq) },
+    changeStart, changeEnd, cdf, includePreimages, restoreAsDeletes,
+    engineRead)
+  override def equals(o: Any): Boolean = o match {
+    case w: WarehouseScan => fields == w.fields
+    case _ => false
+  }
+  override def hashCode(): Int = fields.hashCode
 
   override def readSchema(): StructType =
     pushedAgg.map(_._1).getOrElse(required)
@@ -1898,8 +1936,8 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
         s"(current is $cur)")
     v
   }
-  private lazy val allEntries: Seq[EpochEntry] =
-    AtomicWarehouse.committedEntriesAt(spark, dir, resolvedVersion)
+  private lazy val allEntries: Seq[EpochEntry] = engineRead.fold(
+    AtomicWarehouse.committedEntriesAt(spark, dir, resolvedVersion))(_.entries)
   /** CHANGE FEED (`.option("startingVersion", s)` [+ endingVersion]):
     * the entries appended in manifest versions [s, resolvedVersion] —
     * INCLUSIVE of the starting version, Delta CDF's convention for the
@@ -1976,8 +2014,8 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
   // DATA entries only — tombstones are split out and applied as per-file
   // key-drop lists (merge-on-read deletion vectors)
   private lazy val entries: Seq[EpochEntry] = changePlan match {
-    case None => allEntries.filterNot(e =>
-      AtomicWarehouse.isTombstone(e.name) || AtomicWarehouse.isColMap(e.name))
+    case None => allEntries.filter(e => !AtomicWarehouse.isTombstone(e.name) &&
+      !AtomicWarehouse.isColMap(e.name) && engineRead.forall(_.scanned(e.name)))
     case Some((data, _, _, _)) =>
       // an in-range entry FOLDED OUT of the end manifest (auto-compact
       // landed inside the range) is still servable — its dir outlives
@@ -2114,9 +2152,10 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
 
   /** This scan answered on the driver, at planning time: a snapshot
     * batch read (no pushed aggregate, change feed or runtime filter)
-    * whose pushed filters pin every merge key part, to at most
-    * [[DriverMaxKeys]] key literals in all, and whose planning leaves at
-    * most [[DriverMaxFiles]] files of at most [[DriverMaxBytes]] bytes.
+    * whose pushed filters — or an engine read's key pin — pin every
+    * merge key part, to at most [[DriverMaxKeys]] key literals in all,
+    * and whose planning leaves at most [[DriverMaxFiles]] files of at
+    * most [[DriverMaxBytes]] bytes.
     * Some(source): `source(visit)` decodes the planned files through
     * [[readOnDriver]] and hands `visit` every row the scan would
     * produce, in [[readSchema]] order (the pushed filters stay residual,
@@ -2126,10 +2165,11 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
   def driverRead: Option[(InternalRow => Unit) => Unit] = {
     val parts = AtomicWarehouse.keyParts(mergeKey)
     lazy val pins = pinnedLiterals(pruneFilters.toSeq)
-    val pinned = parts.nonEmpty && pushedAgg.isEmpty &&
-      changeStart.isEmpty && runtimeFilters.isEmpty &&
-      parts.forall(pins.contains) &&
-      parts.map(pins(_).size.toLong).product <= DriverMaxKeys
+    val pinned = pushedAgg.isEmpty && changeStart.isEmpty &&
+      runtimeFilters.isEmpty &&
+      (engineRead.flatMap(_.pin).exists(_.keys.size <= DriverMaxKeys) ||
+        parts.nonEmpty && parts.forall(pins.contains) &&
+          parts.map(pins(_).size.toLong).product <= DriverMaxKeys)
     if (!pinned) return None
     val files = dataFiles(pruneFilters)
     if (files.size > DriverMaxFiles || files.map(_.len).sum > DriverMaxBytes)
@@ -2217,7 +2257,8 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
       fileReads.broadcast(spark), tombstones, ops)
 
   override def description(): String =
-    s"graft-warehouse($dir v$resolvedVersion) " +
+    s"graft-warehouse($dir ${engineRead.fold(s"v$resolvedVersion")(_ =>
+      s"${entries.size} of ${allEntries.size} entries")}) " +
       s"PushedFilters: [${pruneFilters.mkString(", ")}], " +
       pushedAgg.map { case (sch, _) =>
         s"PushedAggregates: [${sch.fieldNames.mkString(", ")}], "
@@ -2321,7 +2362,7 @@ object WarehouseReaderFactory {
 
 /** Executor-side decode through Spark's own parquet reader
   * (`ParquetPartitionReaderFactory`, the reader behind
-  * `spark.read.parquet` and [[AtomicWarehouse.read]]): vectorized
+  * `spark.read.parquet`): vectorized
   * decode, row-group skipping from the pushed filters (Spark's
   * `ParquetFilters` over each footer's statistics), and nulls for
   * requested columns a file lacks. Each file is read under its PHYSICAL

@@ -13,7 +13,8 @@ object GraftBridge {
   /** An internal function by name (e.g. `bloom_filter_agg`, the
     * aggregate `stat.bloomFilter` runs). */
   def internalFn(name: String, inputs: Column*): Column = Column.internalFn(name, inputs: _*)
-  /** Execute a hand-transformed LogicalPlan (rule-testing aid). */
+  /** A DataFrame of a LogicalPlan: a relation built directly (the
+    * engine's warehouse reads) or a hand-transformed plan (rule tests). */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

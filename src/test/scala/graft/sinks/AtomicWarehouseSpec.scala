@@ -1,6 +1,9 @@
 package graft.sinks
 
 import graft.SparkSuite
+import graft.sources.v2.{WarehouseFilePartition, WarehouseFilesPartition, WarehouseScan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 class AtomicWarehouseSpec extends SparkSuite {
@@ -55,6 +58,26 @@ class AtomicWarehouseSpec extends SparkSuite {
       Seq((4L, "t", 4L)).toDF("k", "title", "load_seq"), 4L)
     finally spark.conf.unset("graft.schema.allowNonAdditive")
     assert(AtomicWarehouse.read(spark, wh, "k").count() == 4)
+  }
+
+  test("a commit that retypes a column is refused; the manifest stays") {
+    val wh = tmp("aw_retype") + "/wh"
+    AtomicWarehouse.commitEpoch(spark, wh,
+      Seq((1L, "a", 1L)).toDF("k", "v", "load_seq"), 1L)
+    val err = intercept[IllegalStateException] {
+      AtomicWarehouse.commitEpoch(spark, wh,
+        Seq((2L, 7L, 2L)).toDF("k", "v", "load_seq"), 2L)
+    }
+    assert(err.getMessage.contains("never retype") &&
+      err.getMessage.contains("'v'"), err.getMessage)
+    assert(AtomicWarehouse.currentVersion(spark, wh) == 1L,
+      "the refused commit must not land")
+    // narrower integral types record as int: no retype
+    AtomicWarehouse.commitEpoch(spark, wh,
+      Seq((3L, "c", 3L, 5.toShort)).toDF("k", "v", "load_seq", "n"), 3L)
+    AtomicWarehouse.commitEpoch(spark, wh,
+      Seq((4L, "d", 4L, 6.toShort)).toDF("k", "v", "load_seq", "n"), 4L)
+    assert(AtomicWarehouse.read(spark, wh, "k").count() == 3)
   }
 
   test("crash between data write and manifest commit: invisible, recoverable") {
@@ -497,7 +520,7 @@ class AtomicWarehouseSpec extends SparkSuite {
     }
   }
 
-  test("hive-partitioned epochs: range predicate becomes PartitionFilters inside scanned epochs") {
+  test("hive-partitioned epochs: a range read opens only the matching partitions") {
     val wh = tmp("aw_partepoch") + "/wh"
     def ep(seq: Long, rows: Seq[(Long, String, String)]): Unit =
       AtomicWarehouse.commitEpoch(spark, wh,
@@ -511,14 +534,17 @@ class AtomicWarehouseSpec extends SparkSuite {
     assert(new java.io.File(s"$wh/epoch_1/month=2024-05").isDirectory)
     assert(new java.io.File(s"$wh/epoch_1/month=2024-06").isDirectory)
     // a month range read prunes partitions INSIDE the scanned epochs:
-    // the predicate must reach PartitionFilters, not a post-scan Filter
+    // the scan opens exactly the month=2024-05 files of both epochs
     val may = AtomicWarehouse.readRangeOn(spark, wh, "k", "month",
       "2024-05", "2024-05")
-    val scan = may.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") &&
-      scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .nonEmpty,
-      s"month predicate did not reach PartitionFilters:\n$scan")
+    val may05 = Seq("epoch_1", "epoch_2").flatMap(e =>
+      new java.io.File(s"$wh/$e/month=2024-05").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getName))
+    val opened = warehouseScans(may).flatMap(plannedFiles)
+    assert(may05.nonEmpty && opened.sorted ==
+      opened.filter(_.contains("/month=2024-05/")).sorted &&
+      opened.map(p => p.substring(p.lastIndexOf('/') + 1)).sorted ==
+        may05.sorted, s"planned $opened, month=2024-05 holds $may05")
     val got = may.select(col("k").cast("long"), col("v"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got.size == 20 &&
@@ -639,43 +665,51 @@ class AtomicWarehouseSpec extends SparkSuite {
     assert(st.contains("bloom(k)") && st.contains("bloomstr(k)"))
   }
 
-  private def parquetScans(df: org.apache.spark.sql.DataFrame): Int =
-    // sparkPlan, not executedPlan: AQE wraps the latter in an adaptive
-    // root whose tree isn't traversable until execution finalizes it
+  /** The warehouse scans `df` plans — from `sparkPlan`, not
+    * `executedPlan`: AQE wraps the latter in an adaptive root whose tree
+    * isn't traversable until execution finalizes it. */
+  private def warehouseScans(df: DataFrame): Seq[WarehouseScan] =
     df.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.size
+      case b: BatchScanExec if b.scan.isInstanceOf[WarehouseScan] =>
+        b.scan.asInstanceOf[WarehouseScan]
+    }
 
-  test("merged read plans O(1) parquet relations, not O(epochs)") {
+  /** The data files a warehouse scan opens. */
+  private def plannedFiles(s: WarehouseScan): Seq[String] =
+    s.planInputPartitions().toSeq.flatMap {
+      case p: WarehouseFilePartition => Seq(p.path)
+      case m: WarehouseFilesPartition => m.files.toSeq.map(_.path)
+    }
+
+  test("merged read plans one warehouse scan, not O(epochs)") {
     // the round-10 fold probe measured the one-relation-per-epoch union
     // at 918 s for 1000 epochs × 32 files vs 78 s for the same bytes in
-    // single-relation shape — identically-schema'd flat epochs must
-    // share ONE native scan (per-row manifest position recovered from
-    // _metadata.file_name), however long the manifest grows
+    // single-relation shape — every epoch must be read by ONE scan,
+    // however long the manifest grows
     val wh = tmp("aw_flatplan") + "/wh"
     for (seq <- 1L to 30L)
       AtomicWarehouse.commitEpoch(spark, wh,
         Seq((seq, s"v$seq", seq)).toDF("k", "v", "load_seq")
           .repartition(3), seq, statsKey = Some("k"))
     val read = AtomicWarehouse.read(spark, wh, "k")
-    assert(parquetScans(read) == 1,
-      s"30 uniform epochs must plan exactly one scan; got ${parquetScans(read)}")
+    assert(warehouseScans(read).size == 1,
+      s"30 uniform epochs must plan exactly one scan; got ${warehouseScans(read)}")
     // correctness unchanged: every key resolves, last-wins intact
     assert(read.count() == 30)
     assert(read.where(col("k") === 7L).head.getString(1) == "v7")
-    // an additively-evolved epoch adds ONE more relation (its schema
-    // generation), not one per epoch — and old rows serve null there
+    // an additively-evolved epoch joins the same scan — and old rows
+    // serve null there
     AtomicWarehouse.commitEpoch(spark, wh,
       Seq((31L, "v31", 31L, "x")).toDF("k", "v", "load_seq", "extra"),
       31L, statsKey = Some("k"))
     val evolved = AtomicWarehouse.read(spark, wh, "k")
-    assert(parquetScans(evolved) == 2)
+    assert(warehouseScans(evolved).size == 1)
     assert(evolved.columns.toSeq == Seq("k", "v", "load_seq", "extra"))
     assert(evolved.where(col("k") === 31L).head.getString(3) == "x")
     assert(evolved.where(col("k") === 7L).head.isNullAt(3))
   }
 
-  test("tombstones and pruned reads keep the single-relation plan") {
+  test("tombstones and pruned reads keep the single-scan plan") {
     val wh = tmp("aw_flatplan2") + "/wh"
     for (seq <- 1L to 10L)
       AtomicWarehouse.commitEpoch(spark, wh,
@@ -684,15 +718,18 @@ class AtomicWarehouseSpec extends SparkSuite {
         statsKey = Some("k"), bloomKey = Some("k"))
     AtomicWarehouse.purgeKeysDeferred(spark, wh, "k", Seq(105L, 333L))
     val read = AtomicWarehouse.read(spark, wh, "k")
-    assert(parquetScans(read) == 1,
-      "tombstone anti-joins ride broadcast local relations, not scans")
+    assert(warehouseScans(read).size == 1,
+      "tombstones are drops in the scan's reader, not more scans")
     assert(read.count() == 498)
-    // a range read scans ONE relation over the surviving epochs only
+    // a range read scans the surviving epoch only
     val ranged = AtomicWarehouse.readRange(spark, wh, "k", 300L, 360L)
-    assert(parquetScans(ranged) == 1)
+    assert(warehouseScans(ranged).map(plannedFiles(_)
+      .flatMap(_.split('/').find(_.startsWith("epoch_"))).distinct) ==
+      Seq(Seq("epoch_3")))
     assert(ranged.count() == 49) // epoch 3's 50 keys minus purged 333
-    // fully-pruned read: zero scans, schema intact
+    // fully-pruned read: no file opened, schema intact
     val empty = AtomicWarehouse.readRange(spark, wh, "k", 5000L, 6000L)
+    assert(warehouseScans(empty).map(plannedFiles) == Seq(Nil))
     assert(empty.count() == 0)
     assert(empty.columns.toSeq == Seq("k", "v", "load_seq"))
   }
