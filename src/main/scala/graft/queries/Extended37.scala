@@ -35,8 +35,8 @@ object Extended37 {
        |JOIN orders o ON l.l_orderkey = o.o_orderkey
        |WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderkey % 97 = 0
        |GROUP BY 1""".stripMargin) { (s, d) =>
-    // FIXED table names + dir, overwritten per run: repeated battery /
-    // ScaleProbe invocations (each query runs warmup + timed) reuse the
+    // FIXED table names + dir, overwritten per run: repeated battery
+    // invocations (each query runs warmup + timed) reuse the
     // same two metastore entries and disk footprint instead of
     // accumulating uniquely-named tables and temp dirs
     val base = sys.props("java.io.tmpdir") + "/graft_c9_tables"

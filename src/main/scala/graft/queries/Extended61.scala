@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.v2.WarehouseScan
 
 /** Round-6 widening, part 61: the DSv2 sink's TRUNCATE commit through
   * the new part manifest, and zone-map stats surviving a compaction
@@ -104,15 +105,12 @@ object Extended61 {
     ep(3L, base.where(col("c_custkey") % 4 === 3), "JUNE")
     // the June window must open ONLY epoch_3: the compacted May fold's
     // re-stated stats exclude it from the scan
-    val entries = AtomicWarehouse.committedEntriesAt(s, wh,
-      AtomicWarehouse.currentVersion(s, wh))
-    val opened = AtomicWarehouse.scanListForRangeOn(entries, "c_custkey",
-      "pub", "2024-06-01", "2024-06-30").map(_.name)
-    require(opened == Seq("epoch_3"),
-      s"compacted stats failed to prune: scan list $opened")
-    AtomicWarehouse.readRangeOn(s, wh, "c_custkey", "pub",
+    val june = AtomicWarehouse.readRangeOn(s, wh, "c_custkey", "pub",
       "2024-06-01", "2024-06-30")
-      .select("c_custkey", "c_name", "pub", "seg", "load_seq")
+    val opened = WarehouseScan.of(june).flatMap(_.plannedEpochs())
+    require(opened == Seq("epoch_3"),
+      s"compacted stats failed to prune: planned $opened")
+    june.select("c_custkey", "c_name", "pub", "seg", "load_seq")
   }
 
   /** C36 — TWO-LEVEL pruning on a hive-partitioned atomic warehouse:
@@ -277,13 +275,12 @@ object Extended61 {
     ep(1L, cust.where(col("c_custkey") % 2 === 0), "EVEN")
     ep(2L, cust.where(col("c_custkey") % 2 === 1), "ODD")
     ep(3L, cust.where(col("c_custkey") % 10 === 0), "TEN")
-    val entries = AtomicWarehouse.committedEntriesAt(s, wh,
-      AtomicWarehouse.currentVersion(s, wh))
     val m = cust.agg(max("c_custkey")).head.getLong(0)
     // the bloom must beat the (fully-overlapping) range stats for key 7
-    val opened = AtomicWarehouse.scanListForPoint(entries, "c_custkey", 7L)
-    require(opened.size < 3 && opened.exists(_.name == "epoch_2"),
-      s"bloom failed to prune the point scan: ${opened.map(_.name)}")
+    val opened = WarehouseScan.of(AtomicWarehouse.readPoint(s, wh,
+      "c_custkey", 7L)).flatMap(_.plannedEpochs())
+    require(opened.size < 3 && opened.contains("epoch_2"),
+      s"bloom failed to prune the point scan: $opened")
     Seq(7L, 10L, m + 5000L)
       .map(AtomicWarehouse.readPoint(s, wh, "c_custkey", _))
       .reduce(_.unionByName(_))

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{sources => sf}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -245,14 +246,7 @@ object AtomicWarehouse {
     * order and byte order matches Spark's own string comparison). Values
     * are stored URL-encoded so tabs/newlines in string minima can never
     * corrupt the line-oriented manifest. */
-  final case class ColStats(typ: String, mn: String, mx: String) {
-    /** Could this epoch hold a value in [lo, hi]? Conservative on equal
-      * bounds; `lo`/`hi` use the same encoding as `mn`/`mx`. */
-    def mayIntersect(lo: String, hi: String): Boolean = typ match {
-      case "long" => mx.toLong >= lo.toLong && mn.toLong <= hi.toLong
-      case _ => utf8Cmp(mx, lo) >= 0 && utf8Cmp(mn, hi) <= 0
-    }
-  }
+  final case class ColStats(typ: String, mn: String, mx: String)
 
   /** Reserved stats slot holding an entry's EXACT row count (min = max =
     * count). `#` can never collide with a real column: every stats
@@ -710,22 +704,24 @@ object AtomicWarehouse {
       version: Long): DataFrame = {
     val entries = committedEntriesAt(spark, dir, version)
     require(entries.nonEmpty, s"no committed epochs at $dir v$version")
-    mergedRead(spark, dir, key, entries, entries.map(_.name).toSet)
+    mergedRead(spark, dir, key, entries)
   }
 
-  /** The [[logView]] of `entries`, scanning only the `scanned` ones,
-    * under the keyed last-wins merge: a `row_number() = 1` window over
-    * the merge key. A `preFilter` (a predicate over the log view)
-    * applies below the window, where the scan prunes epochs, files and
-    * row groups by it; when it pins every key part to a literal, as a
-    * point lookup's does, the window forms one group and the optimizer
-    * plans it as a top-1 with no exchange
+  /** The [[logView]] of `entries`, pruned by `filters`, under the keyed
+    * last-wins merge: a `row_number() = 1` window over the merge key.
+    * `filters` state the read's predicate for pruning
+    * ([[graft.sources.v2.WarehouseConnector.EngineRead]]); `preFilter`,
+    * the same predicate over the log view, filters the rows below the
+    * window, where the scan also prunes row groups by what of it Spark
+    * pushes. When the read pins every key part to a literal, as a point
+    * lookup does, the window forms one group and the optimizer plans it
+    * as a top-1 with no exchange
     * ([[graft.plans.EliminatePinnedWindowPartitions]]). */
   private def mergedRead(spark: SparkSession, dir: String, key: String,
-      entries: Seq[EpochEntry], scanned: Set[String],
-      preFilter: Option[DataFrame => org.apache.spark.sql.Column] = None,
-      pin: Option[KeyPin] = None): DataFrame = {
-    val log = logView(spark, dir, key, entries, scanned, pin)
+      entries: Seq[EpochEntry], filters: Seq[sf.Filter] = Nil,
+      preFilter: Option[DataFrame => org.apache.spark.sql.Column] = None)
+      : DataFrame = {
+    val log = logView(spark, dir, key, entries, filters)
     // the range predicate applies BELOW the merge window: a filter above
     // it could never push past the Window (its partitioning is the merge
     // key, not the filtered column), which would defeat partition and
@@ -747,13 +743,18 @@ object AtomicWarehouse {
   }
 
   /** The LOG view of the manifest entry list `entries`: every row-version
-    * of the `scanned` data entries with each row's manifest position as
-    * `__pos` — the `graft-warehouse` scan ([[graft.sources.v2
-    * .WarehouseScan]]) handed the entries to read, its `_pos` metadata
-    * column served as `__pos`. Its reader applies the tombstones
+    * of its data entries with each row's manifest position as `__pos` —
+    * the `graft-warehouse` scan ([[graft.sources.v2.WarehouseScan]])
+    * handed the entries and the read's `filters`, its `_pos` metadata
+    * column served as `__pos`. The scan skips the entries and files the
+    * filters rule out, and those whose every admitted row a later
+    * tombstone drops; it answers on the driver when the filters pin the
+    * key and its files fit the connector's bound
+    * ([[graft.sources.v2.WarehouseScan.driverRead]]). Its reader applies
+    * the tombstones
     * (merge-on-read drops of the keys they list, in entries before
     * them), the column-mapping directives and the hive partition values.
-    * The columns are the served schema of ALL data entries, scanned or
+    * The columns are the served schema of ALL data entries, planned or
     * pruned ([[graft.sources.v2.WarehouseConnector.servedSchema]]), so
     * the result never depends on which epochs were pruned. The shared
     * substrate of [[mergedRead]], [[minMaxOfEntries]] and the
@@ -764,26 +765,18 @@ object AtomicWarehouse {
     * reachable since SQL MERGE self-assigns load_seq in its own entry
     * namespace: a drain whose external counter lands on the same seq
     * commits fine (distinct entry name), and manifest order — commit
-    * order — decides the winner deterministically.
-    *
-    * A read of given keys passes their [[KeyPin]]: entries ordered
-    * before a tombstone that covers the keys are not scanned (the
-    * tombstone drops every row of theirs the read keeps), and the scan
-    * answers on the driver when its files fit the connector's bound
-    * ([[graft.sources.v2.WarehouseScan.driverRead]]). */
+    * order — decides the winner deterministically. */
   private def logView(spark: SparkSession, dir: String, key: String,
-      entries: Seq[EpochEntry], scanned0: Set[String],
-      pin: Option[KeyPin] = None): DataFrame = {
+      entries: Seq[EpochEntry], filters: Seq[sf.Filter] = Nil): DataFrame = {
     import graft.sources.v2.{WarehouseConnector => WC, WarehouseTable}
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     require(entries.exists(e => !isTombstone(e.name) && !isColMap(e.name)),
       s"warehouse at $dir holds only tombstone entries — no data to read")
-    val scanned = pin.fold(scanned0)(pinScanned(spark, dir, entries, scanned0, _))
     val table = new WarehouseTable(dir, None,
       WC.servedSchema(spark, dir, entries), key,
-      engineRead = Some(new WC.EngineRead(entries, scanned, pin)))
+      engineRead = Some(new WC.EngineRead(entries, filters)))
     val rel = DataSourceV2Relation.create(table, None, None,
       org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
     val pos = rel.metadataOutput.find(_.name == WC.PosColumn).getOrElse(
@@ -791,21 +784,6 @@ object AtomicWarehouse {
         s"a data column of $dir shadows the ${WC.PosColumn} metadata column"))
     org.apache.spark.sql.GraftBridge.ofRows(spark, Project(
       rel.output :+ Alias(pos, "__pos")(), rel.withMetadataColumns()))
-  }
-
-  /** The `scanned` entries a read of the `pin`'s keys opens: an entry
-    * ordered before a tombstone that covers every pinned key holds no
-    * row of theirs the read keeps, so it is not scanned. Key lists load
-    * DRIVER-SIDE ([[readTombstoneKeys]]): O(T) tiny cached reads, zero
-    * Spark jobs. */
-  private def pinScanned(spark: SparkSession, dir: String,
-      entries: Seq[EpochEntry], scanned: Set[String], pin: KeyPin): Set[String] = {
-    val posOf = entries.map(_.name).zipWithIndex.toMap
-    entries.zipWithIndex.collect {
-      case (t, tp) if isTombstone(t.name) && !isNoopTombstone(t.name) &&
-          { val (_, ls, ss) = readTombstoneKeys(spark, dir, t.name)
-            pin.covers(ls, ss) } => tp
-    }.maxOption.fold(scanned)(last => scanned.filter(posOf(_) > last))
   }
 
   /** MIN and MAX of column `c` over ONLY the given entries' LOG view —
@@ -822,7 +800,7 @@ object AtomicWarehouse {
     * `c` (all suppressed / column absent from every epoch). */
   private[graft] def minMaxOfEntries(spark: SparkSession, dir: String,
       key: String, entries: Seq[EpochEntry], c: String): (Any, Any) = {
-    val lv = logView(spark, dir, key, entries, entries.map(_.name).toSet)
+    val lv = logView(spark, dir, key, entries)
     if (!lv.columns.contains(c)) return (null, null)
     val r = lv.agg(min(col(c)), max(col(c))).head()
     (r.get(0), r.get(1))
@@ -1392,7 +1370,8 @@ object AtomicWarehouse {
       needCount: Boolean = false): (Map[String, ColStats], Long) = {
     // COMPOSITE keys expand to their parts here, once, for every commit
     // path: zone maps + blooms are recorded PER PART column (the
-    // rendering is never stored), and [[pointMayHold]] prunes per part
+    // rendering is never stored), and the connector's verdict prunes per
+    // part ([[graft.sources.v2.WarehouseConnector.epochMayMatch]])
     val cols = cols0.flatMap(keyParts).distinct
     val bloomKey = bloomKey0.map(bk => keyParts(bk).head)
     val bloomExtra = bloomKey0.toSeq.flatMap(bk => keyParts(bk).drop(1))
@@ -2149,6 +2128,29 @@ object AtomicWarehouse {
   private def keyLits(typ: String, ks: Seq[String]): Seq[Any] =
     if (typ == "long") ks.map(_.toLong) else ks
 
+  /** The rows whose key is one of `keys` compared as `typ`, as one
+    * source filter for the connector's pruning verdict
+    * ([[graft.sources.v2.WarehouseConnector.epochMayMatch]]): an `In` of
+    * the typed literals, or for a composite key one `EqualTo` per part
+    * of each key's rendering, the keys joined by a balanced `Or`. A
+    * rendering with the wrong number of parts (corrupt) prunes nothing. */
+  private def keysFilter(key: String, typ: String,
+      keys: Seq[String]): sf.Filter = {
+    val parts = keyParts(key)
+    def anyOf(fs: Seq[sf.Filter]): sf.Filter =
+      if (fs.size <= 1) fs.headOption.getOrElse(sf.AlwaysFalse)
+      else fs.splitAt(fs.size / 2) match {
+        case (l, r) => sf.Or(anyOf(l), anyOf(r))
+      }
+    if (parts.size == 1) sf.In(key, keyLits(typ, keys).toArray)
+    else anyOf(keys.map { k =>
+      val vs = k.split(CompositeSep, -1)
+      if (vs.length != parts.size) sf.AlwaysTrue
+      else parts.zip(vs).map { case (p, v) => sf.EqualTo(p, v): sf.Filter }
+        .reduce(sf.And(_, _))
+    })
+  }
+
   /** Publish (or RE-publish, deleting a lost CAS attempt's stale dir)
     * the delete-preimage log `preName`: the purged keys' CURRENT winner
     * rows — the exact rows the purge retracts from the merged read — in
@@ -2247,6 +2249,7 @@ object AtomicWarehouse {
       beforeCommit: () => Unit): (Int, Long) = {
     require(keys0.nonEmpty, "no keys to purge")
     val keys = canonicalKeys(typ, keys0)
+    val hit = keysFilter(key, typ, keys)
     val wanted0 = (statsKey.toSeq ++ statsCols).distinct
     val digest = digestOf(keys)
     var attempt = 0
@@ -2257,16 +2260,8 @@ object AtomicWarehouse {
       // tombstones are key lists, not data — never rewrite targets (a
       // tombstone listing a CoW-purged key stays; suppressing already-
       // removed rows is a no-op)
-      // per-entry pruning verdict with the blooms deserialized ONCE per
-      // entry ([[pointMayHold]]) — a wide purge probes every key against
-      // every entry, and re-decoding a megabyte bloom per (entry, key)
-      // pair would dominate purge planning at real key counts
-      val affectedEntries = base.filter { e =>
-        !isTombstone(e.name) && {
-          val mayHold = pointMayHold(e, key, typ)
-          keys.exists(mayHold)
-        }
-      }
+      val affectedEntries = base.filter(e => !isTombstone(e.name) &&
+        graft.sources.v2.WarehouseConnector.epochMayMatch(e, key, Seq(hit)))
       val affected = affectedEntries.map(_.name)
       if (affected.isEmpty) return (0, 0L)
       // (victim name, (rewrite name, rewrite stats), rows purged)
@@ -2523,9 +2518,9 @@ object AtomicWarehouse {
     * read serves).
     *
     * Cost: ONE Spark job over the bloom/zone-PRUNED affected epochs —
-    * the keys an IN filter, the rows counted per entry within each task
-    * (no shuffle), and entries a covering earlier tombstone hides left
-    * unscanned ([[KeyPin]]) — inside the manifest-CAS compute (so a
+    * the keys an IN filter ([[keysFilter]]), the rows counted per entry
+    * within each task (no shuffle), and files a covering earlier
+    * tombstone hides left unopened — inside the manifest-CAS compute (so a
     * racing drain's epoch is re-counted on retry, keeping the total
     * coherent with the manifest the tombstone lands in). This trades the
     * deferred purge's pure-O(keys) commit for tombstone-durable
@@ -2535,14 +2530,11 @@ object AtomicWarehouse {
       key: String, typ: String, keys: Seq[String],
       entries: Seq[EpochEntry]): Map[String, ColStats] = {
     val zero = Map(SuppTotalStat -> ColStats("long", "0", "0"))
-    val data = entries.filterNot(e => isTombstone(e.name))
-    val affected = data.filter { e =>
-      val may = pointMayHold(e, key, typ)
-      keys.exists(may)
-    }.map(_.name).toSet
-    if (data.isEmpty || affected.isEmpty) return zero
-    val lv = logView(spark, dir, key, entries, affected,
-      Some(KeyPin(typ, keys)))
+    val hit = keysFilter(key, typ, keys)
+    if (!entries.exists(e => !isTombstone(e.name) &&
+        graft.sources.v2.WarehouseConnector.epochMayMatch(e, key, Seq(hit))))
+      return zero
+    val lv = logView(spark, dir, key, entries, Seq(hit))
     import spark.implicits._
     val nameAt = entries.map(_.name).zipWithIndex.map(_.swap).toMap
     val counts = lv.where(keyCol(key, typ).isin(keyLits(typ, keys): _*))
@@ -2972,22 +2964,25 @@ object AtomicWarehouse {
     } finally f.delete(lock, false)
   }
 
-  /** Range read with EPOCH SKIPPING on the MERGE KEY: epochs whose
-    * manifest [min,max] key stats don't intersect [lo,hi] are never
-    * opened — pruning the scan, the union and the merge shuffle in one
-    * stroke. Sound unconditionally because the stats column IS the merge
-    * key: any epoch holding a version of an in-range key covers that key
-    * in its stats, so every epoch that could change an in-range winner is
-    * scanned (filter-then-merge == merge-then-filter on the merge key).
-    * Stat-less entries are scanned conservatively; skipped entries still
-    * contribute their SCHEMA (footer-only reads), so the result schema
-    * never depends on which epochs matched. */
+  /** Range read with EPOCH SKIPPING on the MERGE KEY: the rows whose key
+    * casts to a long in [lo, hi]. The scan is handed the long bounds
+    * ([[graft.sources.v2.WarehouseConnector.epochMayMatch]]), so epochs
+    * whose key zone map lies outside them are never opened — pruning the
+    * scan, the union and the merge in one stroke. Sound unconditionally
+    * because the stats column IS the merge key: any epoch holding a
+    * version of an in-range key covers that key in its stats, so every
+    * epoch that could change an in-range winner is scanned
+    * (filter-then-merge == merge-then-filter on the merge key). A
+    * string-stored key's lexicographic zone map cannot bound its cast
+    * (`"2"` sorts after `"10"`), so it keeps the epoch; stat-less entries
+    * are scanned conservatively; skipped entries still contribute their
+    * SCHEMA, so the result schema never depends on which epochs matched. */
   def readRange(spark: SparkSession, dir: String, key: String, lo: Long,
       hi: Long): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    val scanned = scanListForRange(entries, key, lo, hi).map(_.name).toSet
-    mergedRead(spark, dir, key, entries, scanned,
+    mergedRead(spark, dir, key, entries,
+      Seq(sf.GreaterThanOrEqual(key, lo), sf.LessThanOrEqual(key, hi)),
       Some(_ => col(key).cast("long").between(lo, hi)))
   }
 
@@ -2995,9 +2990,12 @@ object AtomicWarehouse {
     * the reference's core access pattern is a `published_at` window over
     * the video warehouse (ref: Python-pipeline/dataingestion1.py:71-80
     * pushes publishedAfter/Before to the source; this is the same window
-    * applied at the warehouse). Bounds compare as the stats do: numeric
-    * for integral columns, lexicographic for string/date/timestamp (pass
-    * ISO-8601 bounds).
+    * applied at the warehouse). The bounds are typed by the served
+    * column: an integral column compares numerically when both bounds
+    * parse as longs, anything else compares its string rendering in
+    * UTF-8 byte order (pass ISO-8601 bounds for a date or timestamp). The
+    * scan prunes by the typed bounds and the rows are filtered by them,
+    * so the result never depends on which epochs were skipped.
     *
     * SOUNDNESS CONTRACT: pruning on a non-key column is correct iff the
     * column is VERSION-STABLE — every version of a merge key carries the
@@ -3010,21 +3008,35 @@ object AtomicWarehouse {
       statsCol: String, lo: String, hi: String): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    val scanned =
-      scanListForRangeOn(entries, key, statsCol, lo, hi).map(_.name).toSet
-    mergedRead(spark, dir, key, entries, scanned,
-      Some(_ => col(statsCol).cast("string").between(lo, hi)))
+    val integral = graft.sources.v2.WarehouseConnector
+      .servedSchema(spark, dir, entries).find(_.name.equalsIgnoreCase(statsCol))
+      .exists(f => Seq(ByteType, ShortType, IntegerType, LongType)
+        .contains(f.dataType))
+    val bounds: Option[(Any, Any)] = (lo.toLongOption, hi.toLongOption) match {
+      case (Some(l), Some(h)) if integral => Some((l, h))
+      case _ => None
+    }
+    val (l, h) = bounds.getOrElse((lo, hi))
+    mergedRead(spark, dir, key, entries,
+      Seq(sf.GreaterThanOrEqual(statsCol, l), sf.LessThanOrEqual(statsCol, h)),
+      Some(_ => bounds.fold(col(statsCol).cast("string").between(lo, hi))(_ =>
+        col(statsCol).between(l, h))))
   }
 
-  /** POINT lookup with BLOOM-FILTER epoch skipping: beyond the min/max
-    * zone map (which cannot help when every epoch's key RANGE overlaps —
-    * the common case for hash-ish or interleaved keys), each epoch may
-    * carry a Bloom filter over the merge key (`bloomKey` at
+  /** POINT lookup with BLOOM-FILTER epoch skipping: the rows whose key
+    * casts to `value`, handed to the scan as a long equality. Beyond the
+    * min/max zone map (which cannot help when every epoch's key RANGE
+    * overlaps — the common case for hash-ish or interleaved keys), each
+    * epoch may carry a Bloom filter over the merge key (`bloomKey` at
     * [[commitEpoch]]): an epoch whose filter reports the key ABSENT
     * provably holds no version of it (no false negatives) and is never
     * opened. Exactly Delta/Iceberg's file-level bloom idea at the epoch
-    * level. Epochs without a filter are scanned conservatively; range
-    * stats still apply first.
+    * level. Epochs without a filter are scanned conservatively. On a
+    * string-stored key the zone map is inconclusive (`try_cast` admits
+    * `"07"`, `" 7"` and `"+7"`) and the long bloom, which hashes the
+    * cast, decides; a string tombstone of `"7"` does not hide `"07"`
+    * ([[graft.sources.v2.WarehouseConnector.epochMayMatch]],
+    * [[graft.sources.v2.WarehouseConnector.pinnedDrops]]).
     *
     * Scale: a 1% - fpp filter costs ~1.2 MB per 1M keys in the manifest
     * — right for epoch deltas up to the low tens of millions of keys
@@ -3043,51 +3055,31 @@ object AtomicWarehouse {
       value: Long): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    mergedRead(spark, dir, key, entries,
-      scanListForPoint(entries, key, value).map(_.name).toSet,
-      Some(_ => col(key).cast("long") === value),
-      Some(KeyPin("long", Seq(value.toString))))
+    mergedRead(spark, dir, key, entries, Seq(sf.EqualTo(key, value)),
+      Some(_ => col(key).cast("long") === value))
   }
 
-  /** [[readPoint]] for a STRING merge key: pruned by the key's
-    * lexicographic zone map and the string bloom when epochs carry one
-    * ([[scanListForPointTyped]]'s string contract). */
+  /** [[readPoint]] of the rows whose key RENDERS as `value` (cast to
+    * string), handed to the scan as a string equality: a string-stored
+    * key prunes by its lexicographic zone map and both blooms, an
+    * integral one compares numerically and plans no epoch for a value
+    * that does not parse as a long. */
   def readPointStr(spark: SparkSession, dir: String, key: String,
       value: String): DataFrame = {
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    mergedRead(spark, dir, key, entries,
-      scanListForPointStr(entries, key, value).map(_.name).toSet,
-      Some(_ => col(key).cast("string") === value),
-      Some(KeyPin("string", Seq(value))))
-  }
-
-  /** A read of only the rows whose key equals one of `keys` compared
-    * as `typ` ([[canonicalKeys]]): a `"string"` key matches the rows whose
-    * key renders (cast to string) as it, a `"long"` key those whose key
-    * casts to it. `covers` asks a tombstone's key lists (long keys,
-    * string keys) whether they drop every such row, so that the entries
-    * before the tombstone need not be scanned. A string drop compares a
-    * row's rendering and a long drop its `try_cast` to long, both fixed
-    * by a string key; a long key fixes only the cast, so no string drop
-    * covers it. */
-  private[graft] final case class KeyPin(typ: String, keys: Seq[String]) {
-    private val asLong = keys.map(k =>
-      if (typ == "long") Some(k.toLong) else sparkLongCast(k))
-    def covers(ls: Array[Long], ss: Array[String]): Boolean = {
-      val (lset, sset) =
-        (ls.toSet, if (typ == "string") ss.toSet else Set.empty[String])
-      keys.indices.forall(i => asLong(i).exists(lset) || sset(keys(i)))
-    }
+    mergedRead(spark, dir, key, entries, Seq(sf.EqualTo(key, value)),
+      Some(_ => col(key).cast("string") === value))
   }
 
   /** COMPOSITE point lookup: `partVals` are the key parts' values in
     * [[keyParts]] order, canonical renderings (a long part's decimal
-    * form). Every part prunes independently against its own column's
-    * zone map + bloom ([[pointMayHold]]'s composite split), so a
-    * two-part lookup on a 100 TB store opens only the epochs that may
-    * hold BOTH parts — the same O(matching epochs) shape as single-key
-    * point reads. A part holds its value as [[renderedEq]] compares. */
+    * form). The scan is handed one string equality per part, and every
+    * part prunes independently against its own column's zone map +
+    * bloom, so a two-part lookup on a 100 TB store opens only the epochs
+    * that may hold BOTH parts — the same O(matching epochs) shape as
+    * single-key point reads. A part holds its value as [[renderedEq]]
+    * compares. */
   def readPointComposite(spark: SparkSession, dir: String, key: String,
       partVals: Seq[String]): DataFrame = {
     val parts = keyParts(key)
@@ -3097,12 +3089,10 @@ object AtomicWarehouse {
         s"got ${partVals.size}")
     val entries = committedEntriesAt(spark, dir, currentVersion(spark, dir))
     require(entries.nonEmpty, s"no committed epochs at $dir")
-    val rendered = partVals.mkString(CompositeSep)
     mergedRead(spark, dir, key, entries,
-      scanListForPointTyped(entries, key, "string", rendered).map(_.name).toSet,
+      parts.zip(partVals).map { case (p, v) => sf.EqualTo(p, v) },
       Some(df => parts.zip(partVals).map { case (p, v) =>
-        renderedEq(df, p, v) }.reduce(_ && _)),
-      Some(KeyPin("string", Seq(rendered))))
+        renderedEq(df, p, v) }.reduce(_ && _)))
   }
 
   /** `cast(c AS STRING) = v` over `df`. On an integral column, when `v`
@@ -3126,92 +3116,10 @@ object AtomicWarehouse {
     }
   }
 
-  /** The epochs [[readPoint]] would open: range stats first, then the
-    * bloom's no-false-negative verdict. Exposed for test pinning. */
-  def scanListForPoint(entries: Seq[EpochEntry], key: String,
-      value: Long): Seq[EpochEntry] =
-    scanListForPointTyped(entries, key, "long", value.toString)
-
-  /** The epochs [[readPointStr]] would open. */
-  def scanListForPointStr(entries: Seq[EpochEntry], key: String,
-      value: String): Seq[EpochEntry] =
-    scanListForPointTyped(entries, key, "string", value)
-
-  /** TYPED point-lookup pruning: zone map first, then blooms. Typed-
-    * versus-recorded-stats cases (keys travel as canonical renderings —
-    * [[canonicalKeys]]):
-    *
-    *  - matching types: compare as the stats do (numeric / UTF-8 bytes);
-    *  - long lookup vs STRING stats (an all-string drained warehouse):
-    *    the zone map is INCONCLUSIVE — the rewrite/read predicate is
-    *    `try_cast(key as long)`, which also matches NON-canonical
-    *    renderings (`"07"`, `" 7"`, `"+7"`) that can fall outside the
-    *    lexicographic bounds of the canonical one, so pruning on the
-    *    canonical rendering would silently skip epochs holding such
-    *    rows (a compliance-delete miss). The epoch is kept and the LONG
-    *    bloom — which hashes `cast(key as long)` and is therefore
-    *    rendering-insensitive — is the pruning that remains;
-    *  - string lookup vs LONG stats: the epoch's key column was integral
-    *    at commit, so its cast-to-string renderings are canonical
-    *    decimals — a non-numeric lookup provably matches nothing, a
-    *    numeric one compares numerically.
-    *
-    * Blooms: the LONG bloom hashes `cast(key as long)`, so any lookup
-    * whose value parses as a long consults it (a row matching the string
-    * form would cast to the same long — no false negatives either way);
-    * a STRING bloom ([[bloomStrStatsCol]], recorded when the stored
-    * column is a string) serves the non-numeric lookups. Absent blooms
-    * keep the epoch (conservative). */
-  def scanListForPointTyped(entries: Seq[EpochEntry], key: String,
-      typ: String, v: String): Seq[EpochEntry] =
-    entries.filter(e => pointMayHold(e, key, typ)(v))
-
-  /** Per-ENTRY point-lookup verdict, curried so the expensive part —
-    * deserializing the entry's Bloom filters (megabytes of base64) —
-    * happens ONCE per entry however many keys are probed against it:
-    * a purge of k keys over E entries costs O(E) deserializations +
-    * O(E·k) cheap probes, not O(E·k) deserializations. */
-  private[graft] def pointMayHold(e: EpochEntry, key: String,
-      typ: String): String => Boolean = {
-    // COMPOSITE key: split the rendering and prune each part against
-    // its own column's zone map + bloom — all parts must possibly hold
-    // their value for the entry to possibly hold the composite row.
-    // A rendering with a missing part (corrupt) conservatively passes.
-    val parts = keyParts(key)
-    if (parts.size > 1) {
-      val perPart = parts.map(p => pointMayHold(e, p, "string"))
-      return (v: String) => {
-        val vs = v.split(CompositeSep, -1)
-        vs.length != parts.size ||
-          perPart.zip(vs).forall { case (f, pv) => f(pv) }
-      }
-    }
-    val st = e.statsFor(key, key)
-    val longBloom =
-      e.stats.get(bloomStatsCol(key)).map(s => deserializeBloom(s.mn))
-    val strBloom =
-      if (typ != "string") None
-      else e.stats.get(bloomStrStatsCol(key)).map(s => deserializeBloom(s.mn))
-    (v: String) => {
-      val statsOk = st.forall { s =>
-        (s.typ, typ) match {
-          case ("long", "string") =>
-            v.toLongOption.exists(l => s.mayIntersect(l.toString, l.toString))
-          case ("string", "long") => true // inconclusive: try_cast matches
-          // non-canonical renderings outside the lexicographic bounds —
-          // the long bloom below prunes instead (hash of the CAST value)
-          case _ => s.mayIntersect(v, v)
-        }
-      }
-      statsOk &&
-        longBloom.forall(b => v.toLongOption.forall(b.mightContain)) &&
-        strBloom.forall(_.mightContainString(v))
-    }
-  }
-
   /** Manifest column slot a key's bloom rides in — distinct from the
-    * key's min/max slot so both coexist in one entry. */
-  private def bloomStatsCol(key: String) = s"bloom($key)"
+    * key's min/max slot so both coexist in one entry. The LONG bloom
+    * hashes `cast(key as long)`, so it is blind to a key's rendering. */
+  private[graft] def bloomStatsCol(key: String) = s"bloom($key)"
 
   /** Manifest slot of the key's STRING bloom (raw string values, no
     * cast) — recorded alongside the long bloom when the stored column
@@ -3228,23 +3136,6 @@ object AtomicWarehouse {
     bf.writeTo(bos)
     java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
   }
-
-  private def deserializeBloom(
-      b64: String): org.apache.spark.util.sketch.BloomFilter =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(java.util.Base64.getDecoder.decode(b64)))
-
-  /** The epochs [[readRange]] would open for [lo,hi] on the merge key —
-    * exposed so tests can pin that disjoint epochs are genuinely
-    * skipped. */
-  def scanListForRange(entries: Seq[EpochEntry], key: String, lo: Long,
-      hi: Long): Seq[EpochEntry] =
-    scanListForRangeOn(entries, key, key, lo.toString, hi.toString)
-
-  /** The epochs [[readRangeOn]] would open for [lo,hi] on `statsCol`. */
-  def scanListForRangeOn(entries: Seq[EpochEntry], key: String,
-      statsCol: String, lo: String, hi: String): Seq[EpochEntry] =
-    entries.filter(_.statsFor(statsCol, key).forall(_.mayIntersect(lo, hi)))
 
   /** Rows per part file of a drained epoch: about 128 MB of staged
     * parquet at ~128 bytes a row, the granule Spark's own scan split

@@ -217,14 +217,19 @@ object WarehouseConnector {
   /** An [[AtomicWarehouse]] read, resolved by the engine before the
     * scan is built: the manifest entry list it reads against (a
     * version's manifest, or the subset [[AtomicWarehouse
-    * .minMaxOfEntries]] re-scans — positions are indexes into it), the
-    * data entries it opens (what zone-map, bloom and tombstone pruning
-    * left) and, for a key-bound read, its key pin. Handed to
-    * [[WarehouseTable]] and on to [[WarehouseScan]], which plans exactly
-    * these entries. Compared by identity: every planning of one read
-    * shares it, and a manifest's stats are too large to compare. */
+    * .minMaxOfEntries]] re-scans — positions are indexes into it) and
+    * its predicate as source filters, each literal typed as the read
+    * compares: a `Long` against a string-stored key admits the rows whose
+    * key `try_cast`s to it, a `String` against an integral column the
+    * rows whose value renders as it. The filters are prune-only:
+    * [[WarehouseScan]] judges entries and files by them as by the pushed
+    * ones ([[epochMayMatch]], [[pinnedDrops]]) and pins a driver read by
+    * them ([[pinnedLiterals]]), but never hands them to the parquet
+    * reader; the read's Catalyst predicate filters the rows. Compared by
+    * identity: every planning of one read shares it, and a manifest's
+    * stats are too large to compare. */
   final class EngineRead(val entries: Seq[EpochEntry],
-      val scanned: Set[String], val pin: Option[AtomicWarehouse.KeyPin])
+      val filters: Seq[Filter])
 
   /** Timestamp-option parser shared by `timestampAsOf` and the change
     * feed's `startingTimestamp`/`endingTimestamp`: ISO-8601 instant or
@@ -812,36 +817,66 @@ object WarehouseConnector {
     walk(new Path(s"$dir/$epoch"), Nil)
   }
 
-  /** Can epoch `e` hold rows matching `filter`? Conservative: unknown
-    * filter shapes, stat-less columns and unparseable values keep the
-    * epoch. Numeric stats compare as longs, string stats
-    * lexicographically (date/timestamp literals render to their ISO
-    * forms first — the encoding [[AtomicWarehouse.colStatsOf]] recorded).
-    * Point equality additionally consults the key's Bloom filter when
-    * one rides in the manifest (no false negatives, so a miss provably
-    * excludes the epoch). */
-  def epochMayMatch(e: EpochEntry, mergeKey: String, filter: Filter): Boolean =
-    filter match {
-      case EqualTo(c, v) =>
-        mayHold(e, mergeKey, c, v, atLeast = true, atMost = true) &&
-          bloomMayHold(e, c, v)
-      case EqualNullSafe(c, v) if v != null =>
-        mayHold(e, mergeKey, c, v, atLeast = true, atMost = true) &&
-          bloomMayHold(e, c, v)
-      case In(c, vs) =>
-        vs.exists(v => v != null &&
-          mayHold(e, mergeKey, c, v, atLeast = true, atMost = true) &&
-          bloomMayHold(e, c, v))
+  /** Can entry `e` hold a row that every one of `filters` admits? The one
+    * pruning verdict of every read of the warehouse — connector SQL,
+    * engine reads ([[EngineRead]]), purges and tombstone counts.
+    * Conservative: unknown filter shapes, stat-less columns and
+    * unparseable values keep the entry. Zone maps compare as the stats
+    * were recorded: numeric stats as longs, string stats in UTF-8 byte
+    * order (date/timestamp literals render to their ISO forms first, the
+    * encoding [[AtomicWarehouse.colStatsOf]] recorded). Where the
+    * literal's type differs from the column's stored one, equality is
+    * judged as the read compares:
+    *
+    *  - a string literal against long stats pins the column's rendering,
+    *    a canonical decimal: it compares numerically when it parses as a
+    *    long and matches nothing when it does not;
+    *  - a long literal against string stats fixes only the key's
+    *    `try_cast` to long, which also admits non-canonical renderings
+    *    (`"07"`, `" 7"`, `"+7"`) outside the lexicographic bounds of the
+    *    canonical one: the zone map is inconclusive.
+    *
+    * Equality then consults the entry's Bloom filters (no false
+    * negatives, so a miss excludes the entry): the long bloom, which
+    * hashes the key's cast to long, for any literal with a long form,
+    * and the string bloom for a string literal. Each bloom is decoded at
+    * most once per call, however many literals probe it. */
+  def epochMayMatch(e: EpochEntry, mergeKey: String,
+      filters: Seq[Filter]): Boolean = {
+    val blooms = scala.collection.mutable.HashMap
+      .empty[String, Option[org.apache.spark.util.sketch.BloomFilter]]
+    def bloom(slot: String, typ: String) = blooms.getOrElseUpdate(slot,
+      e.stats.get(slot).collect { case ColStats(`typ`, b64, _) =>
+        org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(
+            java.util.Base64.getDecoder.decode(b64)))
+      })
+    def eq(c: String, v: Any): Boolean =
+      mayHold(e, mergeKey, c, v, atLeast = true, atMost = true) &&
+        longLit(v).orElse(v match {
+          case s: String => s.toLongOption
+          case _ => None
+        }).forall(l => bloom(AtomicWarehouse.bloomStatsCol(c), "bloom")
+          .forall(_.mightContain(l))) &&
+        (v match {
+          case s: String => bloom(AtomicWarehouse.bloomStrStatsCol(c),
+            "bloomstr").forall(_.mightContainString(s))
+          case _ => true
+        })
+    def may(f: Filter): Boolean = f match {
+      case EqualTo(c, v) => eq(c, v)
+      case EqualNullSafe(c, v) if v != null => eq(c, v)
+      case In(c, vs) => vs.exists(v => v != null && eq(c, v))
       case GreaterThan(c, v) => mayHold(e, mergeKey, c, v, atLeast = true, atMost = false)
       case GreaterThanOrEqual(c, v) => mayHold(e, mergeKey, c, v, atLeast = true, atMost = false)
       case LessThan(c, v) => mayHold(e, mergeKey, c, v, atLeast = false, atMost = true)
       case LessThanOrEqual(c, v) => mayHold(e, mergeKey, c, v, atLeast = false, atMost = true)
-      case And(l, r) =>
-        epochMayMatch(e, mergeKey, l) && epochMayMatch(e, mergeKey, r)
-      case Or(l, r) =>
-        epochMayMatch(e, mergeKey, l) || epochMayMatch(e, mergeKey, r)
+      case And(l, r) => may(l) && may(r)
+      case Or(l, r) => may(l) || may(r)
       case _ => true
     }
+    filters.forall(may)
+  }
 
   /** Zone-map verdict for "column `c` may hold a value {>=|<=|within} the
     * literal". `atLeast`: the epoch needs some value >= v (so check
@@ -858,10 +893,14 @@ object WarehouseConnector {
     e.statsFor(c, if (mergeKey.nonEmpty) mergeKey else "\u0000") match {
       case None => true
       case Some(st) if st.typ == "long" =>
-        longLit(v) match {
-          case None => true
-          case Some(l) =>
+        (longLit(v), v) match {
+          case (Some(l), _) =>
             (!atLeast || st.mx.toLong >= l) && (!atMost || st.mn.toLong <= l)
+          // a rendering equality; a string RANGE orders renderings
+          // lexicographically, which no numeric bound decides
+          case (None, s: String) if atLeast && atMost =>
+            s.toLongOption.exists(l => st.mx.toLong >= l && st.mn.toLong <= l)
+          case _ => true
         }
       case Some(st) if st.typ == "string" =>
         stringLit(v) match {
@@ -875,39 +914,6 @@ object WarehouseConnector {
         }
       case _ => true
     }
-
-  private def bloomMayHold(e: EpochEntry, c: String, v: Any): Boolean = {
-    // the LONG bloom hashes cast(col as long): any literal with a long
-    // form consults it — a string literal parsing as long l can only
-    // equal rows whose canonical rendering is l's, and those cast to l
-    // (no false negatives). The STRING bloom serves raw string
-    // equality; both absent → keep (conservative).
-    val asLong = longLit(v).orElse(v match {
-      case s: String => s.toLongOption
-      case _ => None
-    })
-    val longOk = e.stats.get(s"bloom($c)") match {
-      case Some(ColStats("bloom", b64, _)) => asLong match {
-        case Some(l) => deserializeBloom(b64).mightContain(l)
-        case None => true
-      }
-      case _ => true
-    }
-    val strOk = v match {
-      case s: String => e.stats.get(s"bloomstr($c)") match {
-        case Some(ColStats("bloomstr", b64, _)) =>
-          deserializeBloom(b64).mightContainString(s)
-        case _ => true
-      }
-      case _ => true
-    }
-    longOk && strOk
-  }
-
-  private def deserializeBloom(b64: String) =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(
-        java.util.Base64.getDecoder.decode(b64)))
 
   private def longLit(v: Any): Option[Long] = v match {
     case l: Long => Some(l)
@@ -1067,46 +1073,61 @@ object WarehouseConnector {
         ts.flatMap(_.strKeys).distinct.toArray) }
       .toArray
 
-  /** The literals the pushed filters pin each column to: every
-    * `EqualTo`, non-null `EqualNullSafe` and `In` conjunct on the column
-    * itself, the shortest list when several pin one column. A row the
+  /** The literals the filters pin each column to: every `EqualTo`,
+    * non-null `EqualNullSafe` and `In` conjunct on the column itself, the
+    * shortest list when several pin one column, and the union of both
+    * sides' lists for a column each side of an `Or` pins. A row the
     * filters admit holds one of its columns' pinned literals (a null
     * never equals one). */
   def pinnedLiterals(filters: Seq[Filter]): Map[String, Seq[Any]] = {
-    def of(f: Filter): Seq[(String, Seq[Any])] = f match {
-      case EqualTo(c, v) if v != null => Seq(c -> Seq(v))
-      case EqualNullSafe(c, v) if v != null => Seq(c -> Seq(v))
-      case In(c, vs) => Seq(c -> vs.toSeq.filter(_ != null))
-      case And(l, r) => of(l) ++ of(r)
-      case _ => Nil
+    def shortest(a: Map[String, Seq[Any]], b: Map[String, Seq[Any]]) =
+      b.foldLeft(a) { case (m, (c, vs)) =>
+        m.updated(c, m.get(c).filter(_.size <= vs.size).getOrElse(vs)) }
+    def of(f: Filter): Map[String, Seq[Any]] = f match {
+      case EqualTo(c, v) if v != null => Map(c -> Seq(v))
+      case EqualNullSafe(c, v) if v != null => Map(c -> Seq(v))
+      case In(c, vs) => Map(c -> vs.toSeq.filter(_ != null))
+      case And(l, r) => shortest(of(l), of(r))
+      case Or(l, r) =>
+        val (a, b) = (of(l), of(r))
+        a.collect { case (c, vs) if b.contains(c) => c -> (vs ++ b(c)).distinct }
+      case _ => Map.empty
     }
-    filters.flatMap(of).groupMapReduce(_._1)(_._2)((a, b) =>
-      if (b.size < a.size) b else a)
+    filters.map(of).foldLeft(Map.empty[String, Seq[Any]])(shortest)
   }
 
   /** What the `pins` ([[pinnedLiterals]]) let file `p`'s drop lists
     * (its [[dropsFor]]) decide: Some(true) when one list drops every row
     * the pins admit, so the file need not be opened; Some(false) when no
     * list drops any of them, so the file is read without drops; None
-    * otherwise. A literal is judged as the reader's drop check judges a
-    * row holding it: a string by its value and its `try_cast` to long,
-    * an int or long by its value and its decimal rendering; a composite
-    * list needs every part pinned and judges every combination of the
-    * parts' renderings (at most [[MaxPinCombos]]). Other literal types,
-    * key columns the file holds as hive partition values, and lists on
-    * unpinned columns decide nothing. */
+    * otherwise. `physical` is the file's entry schema ([[entrySchema]]).
+    * A literal is judged as the reader's drop check judges the rows it
+    * admits: a string literal admits the rows rendering as it, judged by
+    * its value and its `try_cast` to long; an int or long literal against
+    * an integral column admits the rows holding it, judged by its value
+    * and its decimal rendering. Against a string-stored column a long
+    * literal admits every rendering that `try_cast`s to it, so only a long
+    * drop of it drops them all, and a string drop of one such rendering
+    * leaves the verdict open. A composite list needs every part pinned
+    * and judges every combination of the parts' renderings (at most
+    * [[MaxPinCombos]]). Other literal types, key columns the file holds
+    * as hive partition values, and lists on unpinned columns decide
+    * nothing. */
   def pinnedDrops(drops: Array[(String, Array[Long], Array[String])],
-      pins: Map[String, Seq[Any]], p: WarehouseFilePartition)
-      : Option[Boolean] = {
+      pins: Map[String, Seq[Any]], p: WarehouseFilePartition,
+      physical: StructType): Option[Boolean] = {
     if (drops.isEmpty || pins.isEmpty) return None
     val parted = p.partValues.map(_._1).toSet
     // the pinned literals under the physical names the drops compare
     val phys = pins.flatMap { case (c, vs) =>
       p.physOf(c).filterNot(parted).map(_ -> vs) }
-    def render(v: Any): Option[String] = v match {
+    def stringStored(c: String) =
+      physical.find(_.name == c).exists(_.dataType == StringType)
+    // the one rendering of the rows `v` admits in column `c`, if fixed
+    def render(c: String, v: Any): Option[String] = v match {
       case s: String => Some(s)
-      case l: Long => Some(l.toString)
-      case i: Int => Some(i.toString)
+      case l: Long if !stringStored(c) => Some(l.toString)
+      case i: Int if !stringStored(c) => Some(i.toString)
       case _ => None
     }
     def asLong(v: Any): Option[Long] = v match {
@@ -1118,23 +1139,24 @@ object WarehouseConnector {
     // per list: are all / none of the admitted rows dropped?
     val verdicts = drops.toSeq.map { case (c, ls0, ss0) =>
       val (ls, ss) = (ls0.toSet, ss0.toSet)
+      lazy val ssLongs = ss.flatMap(AtomicWarehouse.sparkLongCast)
       val parts = AtomicWarehouse.keyParts(c)
-      val hits: Option[Seq[Boolean]] =
+      val hits: Option[Seq[Option[Boolean]]] =
         if (parts.size > 1) {
-          val vals = parts.flatMap(phys.get).map(_.map(render))
+          val vals = parts.flatMap(pc => phys.get(pc).map(_.map(render(pc, _))))
           if (vals.size < parts.size || vals.exists(_.exists(_.isEmpty)) ||
               vals.map(_.size.toLong).product > MaxPinCombos) None
           else Some(vals.map(_.flatten)
             .foldLeft(Seq(Seq.empty[String])) { (acc, vs) =>
               for (a <- acc; v <- vs) yield a :+ v }
-            .map(vs => ss(vs.mkString(AtomicWarehouse.CompositeSep))))
-        } else phys.get(c).flatMap { vs =>
-          val judged = vs.map(v => (render(v), asLong(v)))
-          if (judged.exists(j => j._1.isEmpty && j._2.isEmpty)) None
-          else Some(judged.map { case (r, l) =>
-            r.exists(ss) || l.exists(ls) })
-        }
-      hits.collect {
+            .map(vs => Some(ss(vs.mkString(AtomicWarehouse.CompositeSep)))))
+        } else phys.get(c).map(_.map(v => (render(c, v), asLong(v)) match {
+          case (Some(r), l) => Some(ss(r) || l.exists(ls))
+          case (None, Some(l)) =>
+            if (ls(l)) Some(true) else if (ssLongs(l)) None else Some(false)
+          case (None, None) => None
+        }))
+      hits.filterNot(_.contains(None)).map(_.flatten).collect {
         case h if !h.contains(false) => true
         case h if !h.contains(true) => false
       }
@@ -1700,10 +1722,9 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
                       .exists(t.keys.contains)
               }
             } else
-              (t.keys.nonEmpty && WarehouseConnector.epochMayMatch(e,
-                mergeKey, In(t.keyCol, t.keys.map(Long.box(_): Any)))) ||
-                (t.strKeys.nonEmpty && WarehouseConnector.epochMayMatch(e,
-                  mergeKey, In(t.keyCol, t.strKeys.toArray[Any])))
+              WarehouseConnector.epochMayMatch(e, mergeKey, Seq(Or(
+                In(t.keyCol, t.keys.map(Long.box(_): Any)),
+                In(t.keyCol, t.strKeys.toArray[Any]))))
           all.filter { e =>
             val p = posOfAll(e.name)
             tombs.exists(t => t.pos > p && extremumSuppressible(e, t))
@@ -1850,7 +1871,7 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
   * job). Streaming, change-feed and aggregate-pushed scans, and reads
   * past the bound, always run as tasks. An engine read
   * (`engineRead`) plans the manifest entries it was handed instead of
-  * the served version's. */
+  * the served version's, pruned by its filters as by the pushed ones. */
 class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     required: StructType, pruneFilters: Array[Filter],
     maxVersionsPerBatch: Int, ignoreDeletes: Boolean = false,
@@ -2015,7 +2036,7 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
   // key-drop lists (merge-on-read deletion vectors)
   private lazy val entries: Seq[EpochEntry] = changePlan match {
     case None => allEntries.filter(e => !AtomicWarehouse.isTombstone(e.name) &&
-      !AtomicWarehouse.isColMap(e.name) && engineRead.forall(_.scanned(e.name)))
+      !AtomicWarehouse.isColMap(e.name))
     case Some((data, _, _, _)) =>
       // an in-range entry FOLDED OUT of the end manifest (auto-compact
       // landed inside the range) is still servable — its dir outlives
@@ -2056,13 +2077,24 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     }
   }
 
-  /** Epochs surviving the static + runtime filters — exposed for spec
-    * pinning (the connector's analogue of `scanListForRangeOn`). */
-  def plannedEpochs(): Seq[String] = {
-    val all = pruneFilters ++ runtimeFilters
-    entries.filter(e => all.forall(f => epochMayMatch(e, mergeKey, f)))
-      .map(_.name)
+  /** An engine read's filters ([[EngineRead]]): prune-only, beside the
+    * pushed ones. */
+  private def engineFilters: Seq[Filter] =
+    engineRead.fold(Seq.empty[Filter])(_.filters)
+
+  /** The entries the pushed and engine filters leave, judged once. */
+  private lazy val staticPlanned: Seq[EpochEntry] = {
+    val all = pruneFilters.toSeq ++ engineFilters
+    entries.filter(epochMayMatch(_, mergeKey, all))
   }
+
+  /** Epochs surviving the pushed, engine and runtime filters
+    * ([[epochMayMatch]]), in manifest order — what a read of the
+    * warehouse plans, and what specs pin its pruning by. */
+  def plannedEpochs(): Seq[String] =
+    (if (runtimeFilters.isEmpty) staticPlanned
+     else staticPlanned.filter(epochMayMatch(_, mergeKey, runtimeFilters)))
+      .map(_.name)
 
   /** Runtime (join-pushed) filters may reference any column the manifest
     * keeps stats or blooms for — with auto stats (round 9) that is most
@@ -2111,9 +2143,10 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
       byName.getOrElse(epoch, EpochEntry(epoch))),
       dropColsMemo.getOrElseUpdate(p.pos, dropKeyCols(tombstones, p.pos, ops)))
 
-  /** The data files the filters `all` leave, each with its read schema
-    * registered. */
-  private def dataFiles(all: Array[Filter]): Seq[WarehouseFilePartition] = {
+  /** The data files `filters` and the engine filters leave, each with
+    * its read schema registered. */
+  private def dataFiles(filters: Array[Filter]): Seq[WarehouseFilePartition] = {
+    val all = filters.toSeq ++ engineFilters
     val versionOf: Map[String, Long] =
       changePlan.fold(Map.empty[String, Long])(p => p._1.toMap)
     val files = listPlannedFiles()
@@ -2123,7 +2156,7 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     // without drops a file whose admitted rows none drops
     val pins =
       if (tombstones.isEmpty) Map.empty[String, Seq[Any]]
-      else pinnedLiterals(all.toSeq)
+      else pinnedLiterals(all)
     files.flatMap { file =>
       val v = versionOf.getOrElse(file.epoch, -1L)
       // a stable NEGATIVE position for an epoch folded out of the
@@ -2141,7 +2174,8 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
       val verdict =
         if (pins.isEmpty) None
         else pinnedDrops(dropsMemo.getOrElseUpdate(pos,
-          dropsFor(tombstones, pos, ops)), pins, p)
+          dropsFor(tombstones, pos, ops)), pins, p, entrySchema(spark, dir,
+          byName.getOrElse(file.epoch, EpochEntry(file.epoch))))
       verdict match {
         case Some(true) => None
         case Some(false) => Some(planned(p.copy(applyDrops = false), file.epoch))
@@ -2152,10 +2186,10 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
 
   /** This scan answered on the driver, at planning time: a snapshot
     * batch read (no pushed aggregate, change feed or runtime filter)
-    * whose pushed filters — or an engine read's key pin — pin every
-    * merge key part, to at most [[DriverMaxKeys]] key literals in all,
-    * and whose planning leaves at most [[DriverMaxFiles]] files of at
-    * most [[DriverMaxBytes]] bytes.
+    * whose pushed and engine filters pin every merge key part
+    * ([[pinnedLiterals]]), to at most [[DriverMaxKeys]] key literals in
+    * all, and whose planning leaves at most [[DriverMaxFiles]] files of
+    * at most [[DriverMaxBytes]] bytes.
     * Some(source): `source(visit)` decodes the planned files through
     * [[readOnDriver]] and hands `visit` every row the scan would
     * produce, in [[readSchema]] order (the pushed filters stay residual,
@@ -2164,12 +2198,11 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     * table. */
   def driverRead: Option[(InternalRow => Unit) => Unit] = {
     val parts = AtomicWarehouse.keyParts(mergeKey)
-    lazy val pins = pinnedLiterals(pruneFilters.toSeq)
+    lazy val pins = pinnedLiterals(pruneFilters.toSeq ++ engineFilters)
     val pinned = pushedAgg.isEmpty && changeStart.isEmpty &&
-      runtimeFilters.isEmpty &&
-      (engineRead.flatMap(_.pin).exists(_.keys.size <= DriverMaxKeys) ||
-        parts.nonEmpty && parts.forall(pins.contains) &&
-          parts.map(pins(_).size.toLong).product <= DriverMaxKeys)
+      runtimeFilters.isEmpty && parts.nonEmpty &&
+      parts.forall(pins.contains) &&
+      parts.map(pins(_).size.toLong).product <= DriverMaxKeys
     if (!pinned) return None
     val files = dataFiles(pruneFilters)
     if (files.size > DriverMaxFiles || files.map(_.len).sum > DriverMaxBytes)
@@ -2258,7 +2291,7 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
 
   override def description(): String =
     s"graft-warehouse($dir ${engineRead.fold(s"v$resolvedVersion")(_ =>
-      s"${entries.size} of ${allEntries.size} entries")}) " +
+      s"${staticPlanned.size} of ${allEntries.size} entries")}) " +
       s"PushedFilters: [${pruneFilters.mkString(", ")}], " +
       pushedAgg.map { case (sch, _) =>
         s"PushedAggregates: [${sch.fieldNames.mkString(", ")}], "
@@ -2279,6 +2312,18 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
       cdf = cdf, includePreimages = includePreimages,
       restoreAsDeletes = restoreAsDeletes)
   }
+}
+
+object WarehouseScan {
+  /** The warehouse scans `df` reads, from its optimized plan (a
+    * driver-answered read plans no `BatchScanExec`): the handle on what a
+    * read plans ([[WarehouseScan.plannedEpochs]]). */
+  def of(df: org.apache.spark.sql.DataFrame): Seq[WarehouseScan] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation if r.scan.isInstanceOf[WarehouseScan] =>
+        r.scan.asInstanceOf[WarehouseScan]
+    }
 }
 
 /** The single metadata-computed row of a pushed-down aggregate. */
@@ -2907,8 +2952,7 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
           dropKeyCols(snapshotTombs, p.pos, snapshotColMapOps)))
     val files = dataAdds
       .filter { case (n, _) => byName.get(n).forall(en =>
-        pruneFilters.forall(fl =>
-          WarehouseConnector.epochMayMatch(en, mergeKey, fl))) }
+        WarehouseConnector.epochMayMatch(en, mergeKey, pruneFilters)) }
       .flatMap { case (n, v) => byName.get(n)
         .map(WarehouseConnector.entryFiles(f, dir, _))
         .getOrElse(WarehouseConnector.listEpochFiles(f, dir, n))

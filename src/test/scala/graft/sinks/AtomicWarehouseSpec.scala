@@ -12,6 +12,10 @@ class AtomicWarehouseSpec extends SparkSuite {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** The epochs `df`'s warehouse scans plan. */
+  private def plannedEpochs(df: DataFrame): Seq[String] =
+    WarehouseScan.of(df).flatMap(_.plannedEpochs())
+
   private def snapshot(dir: String): Set[(Long, String, Long)] =
     AtomicWarehouse.read(spark, dir, "k")
       .select(col("k").cast("long"), col("v"), col("load_seq"))
@@ -290,13 +294,14 @@ class AtomicWarehouseSpec extends SparkSuite {
         AtomicWarehouse.ColStats("long", "1", "10"),
         AtomicWarehouse.ColStats("long", "60", "80")))
     // [1,10] intersects epochs 1+2 only: the HOT epoch must not be opened
-    assert(AtomicWarehouse.scanListForRange(entries, "k", 1L, 10L).map(_.name) ==
-      Seq("epoch_1", "epoch_2"))
+    val low = AtomicWarehouse.readRange(spark, wh, "k", 1L, 10L)
+    assert(plannedEpochs(low) == Seq("epoch_1", "epoch_2"))
     // fully disjoint range: nothing scanned, empty result with schema
-    assert(AtomicWarehouse.scanListForRange(entries, "k", 200L, 300L).isEmpty)
-    assert(AtomicWarehouse.readRange(spark, wh, "k", 200L, 300L).count() == 0)
+    val none = AtomicWarehouse.readRange(spark, wh, "k", 200L, 300L)
+    assert(plannedEpochs(none).isEmpty)
+    assert(none.count() == 0)
     // and pruned results equal the unpruned read filtered to the range
-    val pruned = AtomicWarehouse.readRange(spark, wh, "k", 1L, 10L)
+    val pruned = low
       .select(col("k").cast("long"), col("v"), col("load_seq"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val full = AtomicWarehouse.read(spark, wh, "k")
@@ -330,23 +335,19 @@ class AtomicWarehouseSpec extends SparkSuite {
     ep(2L, (51L to 60L).map(k => (k, "2024-06-15T00:00:00Z", s"june$k")))
     ep(3L, (1L to 5L).map(k =>
       (k, f"2024-05-${1 + (k % 3).toInt}%02dT00:00:00Z", s"refetch$k")))
-    val entries = AtomicWarehouse.committedEntriesAt(spark, wh,
-      AtomicWarehouse.currentVersion(spark, wh))
     // a May window must skip the June-only epoch
-    assert(AtomicWarehouse.scanListForRangeOn(entries, "k", "pub",
-      "2024-05-01", "2024-05-31T23:59:59Z").map(_.name) ==
-      Seq("epoch_1", "epoch_3"))
     val may = AtomicWarehouse.readRangeOn(spark, wh, "k", "pub",
       "2024-05-01", "2024-05-31T23:59:59Z")
+    assert(plannedEpochs(may) == Seq("epoch_1", "epoch_3"))
     assert(may.count() == 50)
     // refetched keys won the merge inside the pruned read
     assert(may.where(col("k") <= 5).select("v").collect()
       .forall(_.getString(0).startsWith("refetch")))
     // and the June window skips both May epochs
-    assert(AtomicWarehouse.scanListForRangeOn(entries, "k", "pub",
-      "2024-06-01", "2024-06-30").map(_.name) == Seq("epoch_2"))
-    assert(AtomicWarehouse.readRangeOn(spark, wh, "k", "pub",
-      "2024-06-01", "2024-06-30").count() == 10)
+    val june = AtomicWarehouse.readRangeOn(spark, wh, "k", "pub",
+      "2024-06-01", "2024-06-30")
+    assert(plannedEpochs(june) == Seq("epoch_2"))
+    assert(june.count() == 10)
   }
 
   test("fractional stats columns are refused (lexicographic order is wrong for them)") {
@@ -594,14 +595,13 @@ class AtomicWarehouseSpec extends SparkSuite {
     ep(1L, (0L to 200L by 2).map(k => k -> s"even$k"))
     ep(2L, (1L to 199L by 2).map(k => k -> s"odd$k"))
     ep(3L, (0L to 200L by 10).map(k => k -> s"ten$k"))
-    val entries = AtomicWarehouse.committedEntriesAt(spark, wh,
-      AtomicWarehouse.currentVersion(spark, wh))
     // range stats alone keep everything...
-    assert(AtomicWarehouse.scanListForRange(entries, "k", 7L, 7L).size == 3)
+    assert(plannedEpochs(AtomicWarehouse.readRange(spark, wh, "k", 7L, 7L))
+      .size == 3)
     // ...the bloom knows 7 is odd-only and 10 is even+tens
-    assert(AtomicWarehouse.scanListForPoint(entries, "k", 7L).map(_.name) ==
+    assert(plannedEpochs(AtomicWarehouse.readPoint(spark, wh, "k", 7L)) ==
       Seq("epoch_2"))
-    assert(AtomicWarehouse.scanListForPoint(entries, "k", 10L).map(_.name) ==
+    assert(plannedEpochs(AtomicWarehouse.readPoint(spark, wh, "k", 10L)) ==
       Seq("epoch_1", "epoch_3"))
     // and the pruned point reads still merge correctly
     def point(v: Long) = AtomicWarehouse.readPoint(spark, wh, "k", v)

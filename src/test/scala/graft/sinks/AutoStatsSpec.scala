@@ -59,10 +59,10 @@ class AutoStatsSpec extends SparkSuite {
     AtomicWarehouse.commitEpoch(spark, dir,
       (51 to 90).map(i => (i.toLong, i * 10L, 2L))
         .toDF("k", "score", "load_seq"), 2L)
-    val entries = AtomicWarehouse.committedEntriesAt(spark, dir, 2L)
     // `score` was never declared anywhere; its auto stats still prune
-    val scanned = AtomicWarehouse
-      .scanListForRangeOn(entries, "k", "score", "600", "700").map(_.name)
+    val scanned = graft.sources.v2.WarehouseScan.of(AtomicWarehouse
+      .readRangeOn(spark, dir, "k", "score", "600", "700"))
+      .flatMap(_.plannedEpochs())
     assert(scanned == Seq("epoch_2"), scanned)
   }
 

@@ -501,16 +501,12 @@ class PurgeSpec extends SparkSuite {
       statsKey = Some("vid"), bloomKey = Some("vid"))
     AtomicWarehouse.commitEpoch(spark, dir, b, 2L,
       statsKey = Some("vid"), bloomKey = Some("vid"))
-    val entries = AtomicWarehouse.committedEpochs(spark, dir)
-      .map(n => AtomicWarehouse.committedEntriesAt(spark, dir,
-        AtomicWarehouse.currentVersion(spark, dir))
-        .find(_.name == n).get)
     // VID0007 lives only in epoch_1 (odd): the string bloom must
     // exclude epoch_2 even though both lexicographic ranges cover it
-    val opened = AtomicWarehouse
-      .scanListForPointStr(entries, "vid", "VID0007").map(_.name)
-    assert(opened == Seq("epoch_1"), s"bloomstr should prune: $opened")
     val hit = AtomicWarehouse.readPointStr(spark, dir, "vid", "VID0007")
+    val opened = graft.sources.v2.WarehouseScan.of(hit)
+      .flatMap(_.plannedEpochs())
+    assert(opened == Seq("epoch_1"), s"bloomstr should prune: $opened")
     assert(hit.count() == 1 && hit.head.getAs[String]("title") == "a7")
   }
 

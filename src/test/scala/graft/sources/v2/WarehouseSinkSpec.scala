@@ -58,8 +58,8 @@ class WarehouseSinkSpec extends SparkSuite {
     val entries = AtomicWarehouse.committedEntriesAt(spark, dir, 2L)
     assert(entries.forall(e => e.stats.contains("k") &&
       e.stats.contains("name") && e.stats.contains("bloom(k)")))
-    assert(AtomicWarehouse.scanListForRange(entries, "k", 1000, 1100)
-      .map(_.name) == Seq("epoch_2"))
+    assert(WarehouseScan.of(AtomicWarehouse.readRange(spark, dir, "k", 1000,
+      1100)).flatMap(_.plannedEpochs()) == Seq("epoch_2"))
   }
 
   test("overwrite mode is refused (epochs are immutable deltas)") {
