@@ -44,8 +44,9 @@ object Extended60 {
     * `load_seq` is dropped), so the hash is deterministic however the
     * file source orders or coalesces its batches.
     *
-    * Scale: the stream side never shuffles before the commit (all dim
-    * joins broadcast), per-epoch cost is the composed batch plan, and
+    * Scale: the stream side never shuffles for the dims before the
+    * commit (they are map lookups resolved on the first micro-batch),
+    * per-epoch cost is the composed batch plan, and
     * the engine adds checkpointed offsets + idempotent epoch commits —
     * crash/retry semantics the reference's scripts lack entirely. */
   /** The single declarative DuckDB replay of all 7 stages — shared by

@@ -6,6 +6,7 @@ import graft.sources.DimLoader
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQueryException
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end epoch tests over the committed fixtures (FIXTURES.md §1):
   * two overlapping epochs, stage goldens, warehouse-commit idempotence,
@@ -182,6 +183,22 @@ class PipelineSpec extends SparkSuite {
       s"$root/checkpoint").awaitTermination()
   }
 
+  /** Spark jobs per micro-batch id of the streams `body` runs, read from
+    * the batch id Spark puts on each job's local properties. */
+  private def jobsPerBatch(body: => Unit): Map[Long, Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => batches.add(b.toLong))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // jobsFiredBy drains the listener queue this listener shares
+    try jobsFiredBy(body) finally spark.sparkContext.removeSparkListener(listener)
+    batches.asScala.groupBy(identity).map { case (b, js) => b -> js.size }
+  }
+
   private def snapshot(root: String): Set[Seq[Any]] =
     AtomicWarehouse.read(spark, s"$root/warehouse", "video_id")
       .collect().map(_.toSeq).toSet
@@ -228,13 +245,26 @@ class PipelineSpec extends SparkSuite {
       Pipeline.runEpoch(spark, src, tmpDirs(), "2024-05-01T00:00:00Z",
         "2024-05-02T23:59:59Z", loadSeq = 1, idPresent)
     }
-    // 15 on this fixture (local[4], 4 shuffle partitions): 8 build the
-    // enriched-frame checkpoint (the dims' dedup stages and broadcasts,
-    // then the checkpoint), 5 run the rest of the epoch plan (the id
-    // broadcast, the one owner pass, the cpm dim), 1 is the checkpoint
-    // that pins the epoch frame and observes its CHECK audit, and 1 is
-    // the commit's write. A per-owner join loop or a separate audit
-    // aggregate raises it.
+    // 15 on this fixture (local[4], 4 shuffle partitions): 8 resolve the
+    // four dims, once per call (each a last-wins dedup stage, then the
+    // collect of its map), 2 build the enriched-frame checkpoint (the
+    // keep-last stage, then the checkpoint), 3 run the rest of the epoch
+    // plan (the id broadcast, the owner pass's exchange and the metrics
+    // merge's), 1 is the checkpoint that pins the epoch frame and
+    // observes its CHECK audit, and 1 is the commit's write. A per-owner
+    // join loop, a separate audit aggregate or a dim join raises it.
     assert(n == 15, s"one epoch fired $n jobs")
+  }
+
+  test("a stream's epochs after the first: a pinned number of Spark jobs") {
+    val perBatch = jobsPerBatch {
+      streamFixtureEpochs(Files.createTempDirectory("graft_stream_jobs").toString,
+        idPresent)
+    }
+    assert(perBatch.keySet == Set(0L, 1L), perBatch)
+    // 7 (15 while every epoch deduped and broadcast the four dims again):
+    // the first epoch resolves the dims into map literals, which the
+    // later ones reuse
+    assert(perBatch(1L) == 7, s"the second epoch fired ${perBatch(1L)} jobs")
   }
 }
