@@ -182,7 +182,7 @@ object RewriteWarehouseMerge extends Rule[LogicalPlan] {
     // TOMBSTONE batch — the deleted keys (target ∖ source, any branch
     // condition accepting) commit as a deletion-vector entry in the SAME
     // manifest CAS as the merge epoch
-    // ([[graft.sinks.AtomicWarehouse.commitNamedEpochWithTombstone]]):
+    // ([[graft.sinks.AtomicWarehouse.commitNamedEpochWithTombstoneTyped]]):
     // the sync-style "delete rows the feed no longer carries" MERGE,
     // with no epoch rewrite. THEN UPDATE stays refused: an update
     // addressed at absent-from-source rows would rewrite arbitrarily

@@ -15,8 +15,8 @@ object Extended66 {
     * existing deferred-purge machinery: the key set (target ∖ source,
     * one broadcast anti-join) commits as a TOMBSTONE entry in the SAME
     * manifest CAS as the merge epoch
-    * ([[graft.sinks.AtomicWarehouse.commitNamedEpochWithTombstone]]), so
-    * updates, inserts and deletes become visible atomically — a torn
+    * ([[graft.sinks.AtomicWarehouse.commitNamedEpochWithTombstoneTyped]]),
+    * so updates, inserts and deletes become visible atomically — a torn
     * pair could serve a half-synced table. This closes the full
     * Delta/Iceberg MERGE clause lattice (the UPDATE form of the clause
     * stays refused with the append-only rationale: rows addressed by

@@ -912,10 +912,10 @@ object AtomicWarehouse {
     * 49-76), and simultaneous replays of the SAME epoch converge to one
     * listing (the loser observes the epoch already committed and no-ops).
     * A RACING VACUUM is tolerated too: the manifest compute re-verifies
-    * the published epoch dir still exists, and if a vacuum that outlived
-    * its grace window deleted it (this drain stalled longer than the
-    * window between publish and commit), the data is re-published and the
-    * commit retried — so the manifest can only ever point at a dir that
+    * ([[commitPublished]]) the published epoch dir still exists, and if a
+    * vacuum that outlived its grace window deleted it (this drain stalled
+    * longer than the window between publish and commit), the data is
+    * re-published and the commit retried — so the manifest can only ever point at a dir that
     * existed at compute time. (The residual exists-check→CAS window is
     * micro-seconds against a grace window of hours; [[vacuum]]'s lease +
     * grace contract documents the operational bound.) Persistent
@@ -936,8 +936,8 @@ object AtomicWarehouse {
       partitionBy: Seq[String] = Nil,
       bloomKey: Option[String] = None,
       zorderBy: Seq[String] = Nil): Unit =
-    commitEpochImpl(spark, dir, df, seq, statsKey, statsCols, () => (),
-      partitionBy, bloomKey, zorderBy)
+    commitEpochImpl(spark, dir, df, seq, statsKey, statsCols, partitionBy,
+      bloomKey, zorderBy)
 
   /** [[commitEpoch]] under a caller-chosen manifest entry NAME decoupled
     * from the rows' `load_seq`. Writers that self-assign a sequence
@@ -955,9 +955,8 @@ object AtomicWarehouse {
       skipIfEmpty: Boolean = false): Unit = {
     require(!name.matches("epoch_\\d+"),
       s"entry name '$name' collides with the drain counter namespace")
-    commitEpochImpl(spark, dir, df, loadSeq, statsKey, statsCols, () => (),
-      Nil, bloomKey, Nil, entryName = Some(name),
-      skipIfEmpty = skipIfEmpty)
+    commitEpochImpl(spark, dir, df, loadSeq, statsKey, statsCols, Nil,
+      bloomKey, Nil, entryName = Some(name), skipIfEmpty = skipIfEmpty)
   }
 
   /** Z-ORDER layout pass over 2–4 columns: bucket each column to
@@ -1018,16 +1017,11 @@ object AtomicWarehouse {
       .drop("__z")
   }
 
-  /** [[commitEpoch]] with a test seam firing between the data publish and
-    * the manifest commit — the window a racing vacuum can delete the
-    * published dir in; specs use it to pin the vanish-and-republish
-    * recovery deterministically. */
-  private[sinks] def commitEpochImpl(spark: SparkSession, dir: String,
+  /** [[commitEpoch]] and [[commitNamedEpoch]]: one entry, appended. */
+  private def commitEpochImpl(spark: SparkSession, dir: String,
       df: DataFrame, seq: Long, statsKey: Option[String],
-      statsCols: Seq[String], afterPublish: () => Unit,
-      partitionBy: Seq[String] = Nil,
-      bloomKey: Option[String] = None,
-      zorderBy: Seq[String] = Nil,
+      statsCols: Seq[String], partitionBy: Seq[String],
+      bloomKey: Option[String], zorderBy: Seq[String],
       entryName: Option[String] = None,
       skipIfEmpty: Boolean = false): Unit = {
     val base = entryName.getOrElse(s"epoch_$seq")
@@ -1045,37 +1039,19 @@ object AtomicWarehouse {
     val wanted = (statsKey.toSeq ++ statsCols).distinct
     val laidOut =
       if (zorderBy.isEmpty) df else zorderFrame(spark, df, zorderBy)
-    var attempt = 0
-    while (true) {
-      publishData(spark, dir, laidOut, epoch, partitionBy)
-      afterPublish()
+    commitPublished(spark, dir, s"epoch $epoch") { () =>
       val stats =
-        if (f.exists(epochPath))
-          statsAndBloomOf(spark, s"$dir/$epoch", wanted, bloomKey)._1
-        else Map.empty[String, ColStats] // vanished: the compute will notice
+        publishWithStats(spark, dir, laidOut, epoch, wanted, bloomKey,
+          partitionBy)
       // skipIfEmpty: a ZERO-ROW epoch commits NOTHING (the caller's
       // write was a no-op — e.g. an UPDATE whose predicate matched no
       // rows). Decided from the row count the stats pass already
       // computed, so the no-op check costs no extra scan; the empty
       // dir is dropped rather than left for vacuum.
-      if (skipIfEmpty && f.exists(epochPath) &&
-          stats.get(RowCountStat).exists(_.mn.toLong == 0L)) {
+      if (skipIfEmpty && stats.get(RowCountStat).exists(_.mn.toLong == 0L)) {
         f.delete(epochPath, true)
-        return
-      }
-      var vanished = false
-      commitManifest(spark, dir, s"epoch $epoch") { entries =>
-        if (entries.exists(_.name == epoch)) None // a concurrent replay won
-        else if (!f.exists(epochPath)) { vanished = true; None }
-        else Some(entries :+ EpochEntry(epoch, stats))
-      }
-      if (!vanished) { maybeAutoCompact(spark, dir); return }
-      attempt += 1
-      if (attempt >= MaxCommitAttempts)
-        throw new java.io.IOException(
-          s"epoch $epoch at $dir kept vanishing before its manifest commit " +
-            s"($MaxCommitAttempts attempts) — a vacuum is racing this drain " +
-            "with a grace window shorter than the drain's stall time")
+        None
+      } else Some(appending(epoch, EpochEntry(epoch, stats)))
     }
   }
 
@@ -1100,19 +1076,16 @@ object AtomicWarehouse {
     val baseName = entryName.getOrElse(s"epoch_$seq")
     val f = fs(spark, dir)
     requireAtomicScheme(f, dir)
-    if (committedEpochs(spark, dir).contains(baseName)) {
+    val committed = committedEpochs(spark, dir)
+    // same RESTORE-undone-dir sidestep as [[commitEpochImpl]]
+    val epoch =
+      if (entryName.isDefined || committed.contains(baseName)) baseName
+      else resolveEpochName(spark, dir, baseName)
+    if (committed.contains(epoch)) {
       f.delete(stage, true) // idempotent replay: the committed copy wins
       return
     }
-    // same RESTORE-undone-dir sidestep as [[commitEpochImpl]]
-    val epoch =
-      if (entryName.isDefined) baseName
-      else resolveEpochName(spark, dir, baseName)
     val epochPath = new Path(s"$dir/$epoch")
-    if (epoch != baseName && committedEpochs(spark, dir).contains(epoch)) {
-      f.delete(stage, true)
-      return
-    }
     // staged schema from the parquet footers (one cheap driver read);
     // a refusal must not leak the staged dir
     scala.util.Try(spark.read.parquet(stage.toString).schema)
@@ -1122,27 +1095,28 @@ object AtomicWarehouse {
       }
     val marker = new Path(stage, "_SUCCESS")
     if (!f.exists(marker)) f.create(marker, true).close()
-    if (f.exists(epochPath) &&
-        f.exists(new Path(epochPath, "_SUCCESS"))) {
-      f.delete(stage, true) // adopt a concurrent same-seq writer's publish
-    } else {
-      if (f.exists(epochPath)) f.delete(epochPath, true) // torn leftover
-      if (!publishDir(f, stage, epochPath)) {
-        f.delete(stage, true)
-        if (!f.exists(epochPath)) throw new java.io.IOException(
-          s"failed to publish $epochPath and no concurrent writer did either")
-      }
-    }
     val wanted = (statsKey.toSeq ++ statsCols).distinct
-    val stats = statsAndBloomOf(spark, s"$dir/$epoch", wanted, bloomKey)._1
-    commitManifest(spark, dir, s"staged epoch $epoch") { entries =>
-      if (entries.exists(_.name == epoch)) None // a concurrent replay won
-      else if (!f.exists(epochPath)) throw new java.io.IOException(
+    var published = false
+    commitPublished(spark, dir, s"staged epoch $epoch") { () =>
+      // the staged data exists once: a second publish means it vanished
+      if (published) throw new java.io.IOException(
         s"staged epoch $epoch at $dir vanished before its manifest commit " +
           "— a vacuum with too short a grace window is racing this write")
-      else Some(entries :+ EpochEntry(epoch, stats))
+      published = true
+      if (f.exists(epochPath) &&
+          f.exists(new Path(epochPath, "_SUCCESS"))) {
+        f.delete(stage, true) // adopt a concurrent same-seq writer's publish
+      } else {
+        if (f.exists(epochPath)) f.delete(epochPath, true) // torn leftover
+        if (!publishDir(f, stage, epochPath)) {
+          f.delete(stage, true)
+          if (!f.exists(epochPath)) throw new java.io.IOException(
+            s"failed to publish $epochPath and no concurrent writer did either")
+        }
+      }
+      val stats = statsAndBloomOf(spark, s"$dir/$epoch", wanted, bloomKey)._1
+      Some(appending(epoch, EpochEntry(epoch, stats)))
     }
-    maybeAutoCompact(spark, dir)
   }
 
   /** Zone-map stats, exact row count and (when `bloomKey` is set) the
@@ -1573,15 +1547,29 @@ object AtomicWarehouse {
     }
   }
 
-  /** The manifest CAS loop shared by epoch commits and compaction: each
-    * attempt re-reads the latest entries, asks `compute` for the next
-    * manifest (None = nothing left to do), and publishes it as version
-    * N+1 via [[casPublish]]; a lost race retries against the winner's
-    * manifest. Persistent contention past [[MaxCommitAttempts]] fails
-    * loudly rather than spinning. A caller that has just read the latest
-    * version passes it as `base`, and the first attempt computes on it
-    * (a stale one only loses the CAS). Returns the published entries,
-    * None when `compute` found nothing to do. */
+  /** [[publishData]], then the published dir's manifest stats — empty
+    * when a racing vacuum already deleted the dir, which the commit's
+    * compute then notices ([[commitPublished]]). */
+  private def publishWithStats(spark: SparkSession, dir: String,
+      df: DataFrame, name: String, wanted: Seq[String],
+      bloomKey: Option[String], partitionBy: Seq[String] = Nil)
+      : Map[String, ColStats] = {
+    publishData(spark, dir, df, name, partitionBy)
+    if (fs(spark, dir).exists(new Path(s"$dir/$name")))
+      statsAndBloomOf(spark, s"$dir/$name", wanted, bloomKey)._1
+    else Map.empty
+  }
+
+  /** The manifest CAS loop under [[commitPublished]], column-mapping
+    * directives and [[restore]]: each attempt re-reads the latest
+    * entries, asks `compute` for the next manifest (None = nothing left
+    * to do), and publishes it as version N+1 via [[casPublish]]; a lost
+    * race retries against the winner's manifest. Persistent contention
+    * past [[MaxCommitAttempts]] fails loudly rather than spinning. A
+    * caller that has just read the latest version passes it as `base`,
+    * and the first attempt computes on it (a stale one only loses the
+    * CAS). Returns the published entries, None when `compute` found
+    * nothing to do. */
   private def commitManifest(spark: SparkSession, dir: String, what: String,
       base: Option[(Long, Seq[EpochEntry])] = None)(
       compute: Seq[EpochEntry] => Option[Seq[EpochEntry]])
@@ -1615,6 +1603,80 @@ object AtomicWarehouse {
         s"for $what — concurrent-writer storm or a stuck manifest dir")
   }
 
+  /** Test seam: when set on the committing thread, [[commitPublished]]
+    * runs it between each publish and its manifest CAS — the window a
+    * racing vacuum or writer lands in. Commits the seam itself makes run
+    * without it. */
+  private[sinks] val beforeManifestCas = new ThreadLocal[() => Unit]
+
+  /** What a writer's `place` step makes of the current manifest. */
+  private sealed trait Placed
+  /** An identical write already committed: nothing to do. */
+  private case object Converged extends Placed
+  /** The base the attempt published from was replaced: publish again. */
+  private case object Stale extends Placed
+  /** The next manifest's entries. */
+  private final case class Place(entries: Seq[EpochEntry]) extends Placed
+
+  /** The `place` step of a writer that appends `added`, converging when
+    * `name` is already committed (a concurrent replay won). */
+  private def appending(name: String, added: EpochEntry*)
+      : Seq[EpochEntry] => Placed =
+    entries =>
+      if (entries.exists(_.name == name)) Converged else Place(entries ++ added)
+
+  /** The one commit protocol of every warehouse writer. `publish` writes
+    * the attempt's dirs and stats from the current base and returns its
+    * `place` step (None: nothing to commit). Inside the manifest CAS
+    * ([[commitManifest]]) `place` builds the next entry list, which
+    * commits only if every entry it adds names a dir that still exists:
+    * a manifest may name only dirs that exist at CAS time, and a vacuum
+    * that outlived its grace window may have deleted one since the
+    * publish. A vanished dir or a stale base publishes again, at most
+    * [[MaxCommitAttempts]] times, then fails loudly. A caller that has
+    * just read the latest manifest passes it as `base` for the first CAS
+    * attempt. Returns the committed entries (None when nothing was
+    * committed), after [[maybeAutoCompact]] has checked them. */
+  private def commitPublished(spark: SparkSession, dir: String, what: String,
+      base: Option[(Long, Seq[EpochEntry])] = None)(
+      publish: () => Option[Seq[EpochEntry] => Placed])
+      : Option[Seq[EpochEntry]] = {
+    val f = fs(spark, dir)
+    var attempt = 0
+    while (attempt < MaxCommitAttempts) {
+      val place = publish() match {
+        case Some(p) => p
+        case None => return None
+      }
+      Option(beforeManifestCas.get).foreach { seam =>
+        beforeManifestCas.remove()
+        try seam() finally beforeManifestCas.set(seam)
+      }
+      var again = false
+      val committed = commitManifest(spark, dir, what,
+          if (attempt == 0) base else None) { entries =>
+        val had = entries.map(_.name).toSet
+        place(entries) match {
+          case Converged => None
+          case Place(next) if next.forall(e =>
+              had(e.name) || f.exists(new Path(s"$dir/${e.name}"))) =>
+            Some(next)
+          case _ => again = true; None // a vanished dir or a stale base
+        }
+      }
+      if (!again) {
+        maybeAutoCompact(spark, dir, committed)
+        return committed
+      }
+      attempt += 1
+    }
+    throw new java.io.IOException(
+      s"$what at $dir was published $MaxCommitAttempts times without " +
+        "committing: its dirs kept vanishing (a vacuum racing it with a " +
+        "grace window shorter than its stall) or its base kept being " +
+        "replaced (another maintainer re-folding continuously)")
+  }
+
   /** Fold every epoch committed as of now into ONE pre-merged dir. The
     * snapshot keeps each surviving row's original `load_seq`, so drains
     * that land after (or even DURING) the compaction still win the keyed
@@ -1634,8 +1696,9 @@ object AtomicWarehouse {
     * Scale: this is the maintenance pass that keeps read planning O(1) in
     * drain count — the union stays a handful of dirs no matter how many
     * epochs ever landed, and the fold itself is one merge + one write of
-    * the LIVE rows only (dead versions drop out). */
-  /** `zorderBy = Seq(a, b)` writes the fold Z-ORDERED on the two columns
+    * the LIVE rows only (dead versions drop out).
+    *
+    * `zorderBy = Seq(a, b)` writes the fold Z-ORDERED on the two columns
     * ([[zorderFrame]]) — Delta's `OPTIMIZE ... ZORDER BY` as the
     * maintenance pass: drains land in arrival order all day, compaction
     * rewrites the snapshot onto the curve so analyst predicates on
@@ -1644,46 +1707,39 @@ object AtomicWarehouse {
       statsKey: Option[String] = None,
       statsCols: Seq[String] = Nil,
       bloomKey: Option[String] = None,
-      zorderBy: Seq[String] = Nil): Unit = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
+      zorderBy: Seq[String] = Nil): Unit =
+    commitPublished(spark, dir, "compaction") { () =>
       val baseV = currentVersion(spark, dir)
-      if (baseV == 0L) return
-      val base = committedEntriesAt(spark, dir, baseV)
-      if (base.size <= 1) return // nothing to fold
-      val name = s"compact_v$baseV"
-      val snapshot = readVersion(spark, dir, key, baseV)
-      // the fold ALWAYS records load_seq stats when the column exists
-      // (even through the aggregate fallback): without them the next
-      // self-sequencing writer (SQL MERGE/INSERT) would pay a full scan
-      // of the folded warehouse to find its load_seq floor
-      val wanted = ((statsKey.toSeq ++ statsCols) ++
-        (if (snapshot.columns.contains("load_seq")) Seq("load_seq")
-         else Nil)).distinct
-      publishData(spark, dir,
-        if (zorderBy.isEmpty) snapshot
-        else zorderFrame(spark, snapshot, zorderBy), name)
-      val stats = statsAndBloomOf(spark, s"$dir/$name", wanted, bloomKey)._1
-      var stale = false
-      commitManifest(spark, dir, s"compaction $name") { entries =>
-        if (entries.exists(_.name == name)) None // identical fold already won
-        else if (!entries.map(_.name).startsWith(base.map(_.name))) {
-          stale = true; None // another fold replaced our base: retry on it
-        } else Some(EpochEntry(name, stats) +:
-          // a tombstone committed DURING the fold is carried over, but
-          // its suppression counts were computed against the pre-fold
-          // log view (whose per-key versions the fold collapses) — strip
-          // them so metadata COUNT refuses instead of miscounting; the
-          // next fold absorbs the tombstone entirely
-          stripSuppStats(entries.drop(base.size)))
+      val base =
+        if (baseV == 0L) Nil else committedEntriesAt(spark, dir, baseV)
+      if (base.size <= 1) None // nothing to fold
+      else {
+        val name = s"compact_v$baseV"
+        val snapshot = readVersion(spark, dir, key, baseV)
+        // the fold ALWAYS records load_seq stats when the column exists
+        // (even through the aggregate fallback): without them the next
+        // self-sequencing writer (SQL MERGE/INSERT) would pay a full scan
+        // of the folded warehouse to find its load_seq floor
+        val wanted = ((statsKey.toSeq ++ statsCols) ++
+          (if (snapshot.columns.contains("load_seq")) Seq("load_seq")
+           else Nil)).distinct
+        val stats = publishWithStats(spark, dir,
+          if (zorderBy.isEmpty) snapshot
+          else zorderFrame(spark, snapshot, zorderBy), name, wanted, bloomKey)
+        Some { entries =>
+          if (entries.exists(_.name == name)) Converged // identical fold won
+          else if (!entries.map(_.name).startsWith(base.map(_.name)))
+            Stale // another fold replaced our base: fold it again
+          else Place(EpochEntry(name, stats) +:
+            // a tombstone committed DURING the fold is carried over, but
+            // its suppression counts were computed against the pre-fold
+            // log view (whose per-key versions the fold collapses) — strip
+            // them so metadata COUNT refuses instead of miscounting; the
+            // next fold absorbs the tombstone entirely
+            stripSuppStats(entries.drop(base.size)))
+        }
       }
-      if (!stale) return
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"compaction at $dir lost $MaxCommitAttempts consecutive structural " +
-        "races — another maintainer is re-folding continuously")
-  }
 
   /** ENFORCED compaction cadence — the maintenance policy the fold-cost
     * adjudication priced (BENCH.md `foldprofile`: fold after 100 epochs
@@ -1699,10 +1755,11 @@ object AtomicWarehouse {
     * untouched (maintenance stays an explicit call). A failed auto-fold
     * propagates AFTER the commit is durable: re-running the drain
     * replays to a no-op and re-attempts the fold — convergent, never
-    * silent. A caller that knows the manifest it just published passes
-    * it as `committed`, so the cadence check reads no manifest. */
+    * silent. [[commitPublished]] passes the manifest it just published
+    * as `committed`, so the cadence check reads no manifest (None: it
+    * committed nothing, and the current manifest is read). */
   private def maybeAutoCompact(spark: SparkSession, dir: String,
-      committed: Option[Seq[EpochEntry]] = None): Unit = {
+      committed: Option[Seq[EpochEntry]]): Unit = {
     val conf = graft.sources.v2.WarehouseCatalog.tableConf(fs(spark, dir), dir)
     def csv(k: String): Seq[String] = conf.get(k).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
@@ -1833,7 +1890,7 @@ object AtomicWarehouse {
       statsCols: Seq[String] = Nil,
       bloomKey: Option[String] = None): (Int, Long) =
     purgeKeysImpl(spark, dir, key, "long", keys.map(_.toString), statsKey,
-      statsCols, bloomKey, () => ())
+      statsCols, bloomKey)
 
   /** [[purgeKeys]] for STRING merge keys: the same selective
     * pruning-driven rewrite, with candidate epochs pruned by the key's
@@ -1843,7 +1900,7 @@ object AtomicWarehouse {
       statsCols: Seq[String] = Nil,
       bloomKey: Option[String] = None): (Int, Long) =
     purgeKeysImpl(spark, dir, key, "string", keys, statsKey, statsCols,
-      bloomKey, () => ())
+      bloomKey)
 
   /** Is `n` a purge-rewrite entry name? Matches both the digest-suffixed
     * form (`<name>_p<V>_<8 hex>`) and the legacy digest-less `_p<V>`
@@ -1853,8 +1910,8 @@ object AtomicWarehouse {
 
   /** Is `n` a TOMBSTONE entry — a deletion-vector commit holding purged
     * KEYS instead of rewritten data? Tombstone entries are never read as
-    * data: every read path splits them out and applies them as an
-    * anti-join (merge-on-read). */
+    * data: the connector's reader drops the rows they suppress
+    * (merge-on-read). */
   private[graft] def isTombstone(n: String): Boolean =
     n.startsWith("tombstone_")
 
@@ -1902,16 +1959,15 @@ object AtomicWarehouse {
   private[graft] def isDeletePreimageLog(n: String): Boolean =
     n.startsWith("tombstone_noop_delpre_")
 
-  /** A tombstone's key list read DRIVER-SIDE through the connector's
-    * per-file reader ([[graft.sources.v2.WarehouseConnector.readOnDriver]])
-    * — ZERO Spark jobs. Key lists are O(purged keys) tiny by the purge
-    * contract, but reading each through `spark.read.parquet(...).
-    * collect()` costs a full driver JOB (~100 ms fixed): at T
-    * uncompacted tombstones every merged read and connector plan paid
-    * O(T) jobs — ~60 s at T=200 in the scale probe, pure scheduling
-    * overhead over kilobytes of data. This path reads the same files in
-    * ~1 ms each. Returns (typ, long keys, string keys) — exactly one
-    * side is populated, per the tombstone parquet column's type. */
+  /** BYTE budget, not entry count: at the documented 100k-key tombstone
+    * ceiling a single key list is ~1 MB (longs) to tens of MB (long
+    * strings) — an entry-count bound (the round-10 shape, 4096 entries)
+    * could pin multiple GB on the driver for the process lifetime.
+    * 256 MB holds hundreds of ceiling-sized lists (compaction folds
+    * tombstones away long before that), and eviction re-reads are the
+    * pre-cache transient cost, not a correctness event. */
+  private val TombCacheMaxBytes: Long = 256L << 20
+  private var tombCacheBytes: Long = 0L
   /** Session-wide tombstone key-list cache. Tombstone dirs are
     * publish-once immutable (their names encode base version + key-set
     * digest, and vacuum only destroys dirs no manifest references — a
@@ -1922,15 +1978,6 @@ object AtomicWarehouse {
     * scale probe's residual O(T) plan slope); with the cache only the
     * FIRST plan pays, and in parallel. Bounded LRU, same shape as the
     * connector's schema cache. */
-  /** BYTE budget, not entry count: at the documented 100k-key tombstone
-    * ceiling a single key list is ~1 MB (longs) to tens of MB (long
-    * strings) — an entry-count bound (the round-10 shape, 4096 entries)
-    * could pin multiple GB on the driver for the process lifetime.
-    * 256 MB holds hundreds of ceiling-sized lists (compaction folds
-    * tombstones away long before that), and eviction re-reads are the
-    * pre-cache transient cost, not a correctness event. */
-  private val TombCacheMaxBytes: Long = 256L << 20
-  private var tombCacheBytes: Long = 0L
   private val tombCache = new java.util.LinkedHashMap[
       String, (String, Array[Long], Array[String])](64, 0.75f, true)
 
@@ -1941,6 +1988,16 @@ object AtomicWarehouse {
     64L + 8L * e._2.length +
       e._3.foldLeft(0L)((a, s) => a + 48L + 2L * s.length)
 
+  /** A tombstone's key list read DRIVER-SIDE through the connector's
+    * per-file reader ([[graft.sources.v2.WarehouseConnector.readOnDriver]])
+    * — ZERO Spark jobs. Key lists are O(purged keys) tiny by the purge
+    * contract, but reading each through `spark.read.parquet(...).
+    * collect()` costs a full driver JOB (~100 ms fixed): at T
+    * uncompacted tombstones every merged read and connector plan paid
+    * O(T) jobs — ~60 s at T=200 in the scale probe, pure scheduling
+    * overhead over kilobytes of data. This path reads the same files in
+    * ~1 ms each. Returns (typ, long keys, string keys) — exactly one
+    * side is populated, per the tombstone parquet column's type. */
   private[graft] def readTombstoneKeys(spark: SparkSession, dir: String,
       name: String): (String, Array[Long], Array[String]) = {
     val cacheKey = s"$dir/$name"
@@ -2082,11 +2139,6 @@ object AtomicWarehouse {
     try Some(UTF8String.fromString(s).toLongExact)
     catch { case _: NumberFormatException => None }
 
-  /** The key column cast to the purge keys' comparison type. The long
-    * cast is a TRY-cast: under ANSI (Spark 4's default) a plain cast
-    * THROWS on non-numeric strings, but a long purge over a
-    * string-keyed epoch must simply match nothing there (null never
-    * equals a key). */
   /** COMPOSITE merge keys: `"k1,k2"` names a multi-column row identity.
     * Split into parts; a single-part key is the (unchanged) common
     * case. Every composite path routes through [[compositeCol]]'s
@@ -2111,6 +2163,11 @@ object AtomicWarehouse {
     concat(parts.map(p => col(p).cast("string"))
       .flatMap(c => Seq(lit(CompositeSep), c)).drop(1): _*)
 
+  /** The key column cast to the purge keys' comparison type. The long
+    * cast is a TRY-cast: under ANSI (Spark 4's default) a plain cast
+    * THROWS on non-numeric strings, but a long purge over a
+    * string-keyed epoch must simply match nothing there (null never
+    * equals a key). */
   private def keyCol(key: String, typ: String): org.apache.spark.sql.Column = {
     val parts = keyParts(key)
     // a composite rendering is a string; under typ "long" (a long
@@ -2225,10 +2282,7 @@ object AtomicWarehouse {
     }
   }
 
-  /** [[purgeKeys]] with a test seam between the rewrites and the
-    * manifest commit — the window a concurrent drain or fold can land
-    * in; specs use it to pin the carry-over/retry behavior
-    * deterministically.
+  /** [[purgeKeys]] and [[purgeKeysStr]].
     *
     * The affected epochs' rewrites (read, filter, publish, footer stats,
     * blooms) and the purge log's publish are independent, so they run
@@ -2242,153 +2296,151 @@ object AtomicWarehouse {
     * for [[vacuum]], as after a crash. Each victim is read under its
     * manifest-recorded schema ([[WarehouseConnector.entrySchema]]), so
     * no schema-inference job runs. */
-  private[sinks] def purgeKeysImpl(spark: SparkSession, dir: String,
+  private def purgeKeysImpl(spark: SparkSession, dir: String,
       key: String, typ: String, keys0: Seq[String],
       statsKey: Option[String], statsCols: Seq[String],
-      bloomKey: Option[String],
-      beforeCommit: () => Unit): (Int, Long) = {
+      bloomKey: Option[String]): (Int, Long) = {
     require(keys0.nonEmpty, "no keys to purge")
     val keys = canonicalKeys(typ, keys0)
     val hit = keysFilter(key, typ, keys)
     val wanted0 = (statsKey.toSeq ++ statsCols).distinct
     val digest = digestOf(keys)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
+    var result = (0, 0L) // (epochs rewritten, rows purged)
+    commitPublished(spark, dir, s"purge of ${keys.size} keys") { () =>
       val baseV = currentVersion(spark, dir)
-      if (baseV == 0L) return (0, 0L)
-      val base = committedEntriesAt(spark, dir, baseV)
+      val base =
+        if (baseV == 0L) Nil else committedEntriesAt(spark, dir, baseV)
       // tombstones are key lists, not data — never rewrite targets (a
       // tombstone listing a CoW-purged key stays; suppressing already-
       // removed rows is a no-op)
       val affectedEntries = base.filter(e => !isTombstone(e.name) &&
         graft.sources.v2.WarehouseConnector.epochMayMatch(e, key, Seq(hit)))
       val affected = affectedEntries.map(_.name)
-      if (affected.isEmpty) return (0, 0L)
-      // (victim name, (rewrite name, rewrite stats), rows purged)
-      type Rewrite = (String, (String, Map[String, ColStats]), Long)
-      def rewrite(entry: EpochEntry): Rewrite = {
-        val name = entry.name
-        val df = spark.read.schema(graft.sources.v2.WarehouseConnector
-          .entrySchema(spark, dir, entry)).parquet(s"$dir/$name")
-        // a purge rewrite of an epoch carrying load_seq keeps its
-        // load_seq stats (same rationale as compact's: the
-        // self-sequencing floor must stay metadata-only)
-        val wanted = (wanted0 ++
-          (if (df.columns.contains("load_seq")) Seq("load_seq")
-           else Nil)).distinct
-        // coalesce: a NULL merge key is never a purge target (isin
-        // over null is UNKNOWN, and WHERE would silently drop the row)
-        val kept = df.where(
-          coalesce(!keyCol(key, typ).isin(keyLits(typ, keys): _*),
-            lit(true)))
-        val newName = s"${name}_p${baseV}_$digest"
-        publishData(spark, dir, kept, newName)
-        // the kept count rides the stats pass over the published
-        // rewrite — no separate kept.count()
-        val (stats, keptCount) =
-          statsAndBloomOf(spark, s"$dir/$newName", wanted, bloomKey,
-            needCount = true)
-        // the victim's pre-rewrite row count comes from its manifest
-        // entry (every commit path records RowCountStat) — a scan-free
-        // answer to what `df.count()` paid one full job per affected
-        // epoch for; stats-less legacy entries still pay the count
-        val origCount = entry.stats.get(RowCountStat).map(_.mn.toLong)
-          .getOrElse(df.count())
-        (name, (newName, stats), origCount - keptCount)
-      }
-      // PURGE LOG for the change feed: the rewrite names carry only the
-      // key-set DIGEST, so without this the retraction was not
-      // reconstructible and every feed range crossing the purge refused.
-      // Publish the key list as a NO-OP tombstone ([[isNoopTombstone]])
-      // committed in the SAME manifest CAS: snapshot reads skip it (the
-      // rewrite already removed the rows — zero read overhead kept), the
-      // feed serves its keys as `_change_type='delete'` rows exactly
-      // like a deferred purge's.
-      type Tomb = (String, Map[String, ColStats], Int)
-      val results = onDriverPool[Either[Rewrite, Tomb]](spark,
-        math.min(affectedEntries.size, spark.sparkContext.defaultParallelism),
-        affectedEntries.map(e => () => Left(rewrite(e))) :+ (() =>
-          Right(publishTombstone(spark, dir, key, typ, keys, baseV,
-            noop = true))))
-      val rewrites = results.collect { case Left(r) => r }
-      val rewritten = rewrites.map { case (n, r, _) => n -> r }.toMap
-      val purged = rewrites.map(_._3).sum
-      val (tombName, tombStats, _) = results.last.toOption.get
-      // DELETE PREIMAGES on the CoW path too (c86's contract, previously
-      // deferred-purge-only): behind the same opt-in, the victims'
-      // current winners publish as `tombstone_noop_delpre_<log>` in the
-      // SAME CAS as the rewrites — the feed's includePreimages serves
-      // them as full-payload delete rows replacing the purge log's
-      // key-only rows. The read MUST precede the CAS (afterwards the
-      // rewrites have destroyed the winners); the basis check recomputes
-      // it when the manifest moved in between.
-      val logPre =
-        spark.conf.get("graft.delete.logPreimages", "false").toBoolean
-      val preName = s"tombstone_noop_delpre_$tombName"
-      var preEntry: Option[(String, Map[String, ColStats])] = None
-      var preBasis: Option[Seq[String]] = None
-      def computePreimage(): Unit = {
-        val (e, basis) =
-          publishDeletePreimage(spark, dir, key, typ, keys, preName)
-        preEntry = e; preBasis = Some(basis)
-      }
-      if (logPre) computePreimage()
-      beforeCommit()
-      var stale = false
-      commitManifest(spark, dir, s"purge of ${keys.size} keys") { entries =>
-        // the rewrite names carry (baseV, key-set digest), so a match
-        // proves THIS purge (same base, same keys) already committed —
-        // a different purge's rewrite of the same epoch has a different
-        // name and falls through to the structural-stale retry below
-        if (entries.exists(e => rewritten.valuesIterator
-            .exists(_._1 == e.name))) None // identical purge already won
-        else if (!affected.forall(entries.map(_.name).contains)) {
-          stale = true; None // a fold replaced our base: retry against it
-        } else {
-          val mapped = stripSuppStats(entries.map { e =>
-            // the rewrite changes the row counts outstanding tombstones'
-            // suppression totals were computed against (a CoW purge may
-            // physically remove rows a tombstone still counts) — strip
-            // them or the pushed COUNT(*) would double-subtract
-            rewritten.get(e.name) match {
-              case Some((newName, stats)) => EpochEntry(newName, stats)
-              case None => e
-            }
-          })
-          // splice the purge log RIGHT AFTER the last rewritten entry:
-          // an epoch committed concurrently (after our base, before the
-          // CAS) commutes with the swap and its rows are NOT purged —
-          // placing the log before it keeps the feed's delete `_pos`
-          // BELOW the concurrent re-insert's, so a `__dpos > _pos`
-          // consumer merge preserves the re-added key exactly as the
-          // snapshot does
-          if (mapped.exists(_.name == tombName)) Some(mapped)
+      result = (0, 0L)
+      if (affected.isEmpty) None
+      else {
+        // (victim name, (rewrite name, rewrite stats), rows purged)
+        type Rewrite = (String, (String, Map[String, ColStats]), Long)
+        def rewrite(entry: EpochEntry): Rewrite = {
+          val name = entry.name
+          val df = spark.read.schema(graft.sources.v2.WarehouseConnector
+            .entrySchema(spark, dir, entry)).parquet(s"$dir/$name")
+          // a purge rewrite of an epoch carrying load_seq keeps its
+          // load_seq stats (same rationale as compact's: the
+          // self-sequencing floor must stay metadata-only)
+          val wanted = (wanted0 ++
+            (if (df.columns.contains("load_seq")) Seq("load_seq")
+             else Nil)).distinct
+          // coalesce: a NULL merge key is never a purge target (isin
+          // over null is UNKNOWN, and WHERE would silently drop the row)
+          val kept = df.where(
+            coalesce(!keyCol(key, typ).isin(keyLits(typ, keys): _*),
+              lit(true)))
+          val newName = s"${name}_p${baseV}_$digest"
+          publishData(spark, dir, kept, newName)
+          // the kept count rides the stats pass over the published
+          // rewrite — no separate kept.count()
+          val (stats, keptCount) =
+            statsAndBloomOf(spark, s"$dir/$newName", wanted, bloomKey,
+              needCount = true)
+          // the victim's pre-rewrite row count comes from its manifest
+          // entry (every commit path records RowCountStat) — a scan-free
+          // answer to what `df.count()` paid one full job per affected
+          // epoch for; stats-less legacy entries still pay the count
+          val origCount = entry.stats.get(RowCountStat).map(_.mn.toLong)
+            .getOrElse(df.count())
+          (name, (newName, stats), origCount - keptCount)
+        }
+        // PURGE LOG for the change feed: the rewrite names carry only the
+        // key-set DIGEST, so without this the retraction was not
+        // reconstructible and every feed range crossing the purge refused.
+        // Publish the key list as a NO-OP tombstone ([[isNoopTombstone]])
+        // committed in the SAME manifest CAS: snapshot reads skip it (the
+        // rewrite already removed the rows — zero read overhead kept), the
+        // feed serves its keys as `_change_type='delete'` rows exactly
+        // like a deferred purge's.
+        type Tomb = (String, Map[String, ColStats], Int)
+        val results = onDriverPool[Either[Rewrite, Tomb]](spark,
+          math.min(affectedEntries.size,
+            spark.sparkContext.defaultParallelism),
+          affectedEntries.map(e => () => Left(rewrite(e))) :+ (() =>
+            Right(publishTombstone(spark, dir, key, typ, keys, baseV,
+              noop = true))))
+        val rewrites = results.collect { case Left(r) => r }
+        val rewritten = rewrites.map { case (n, r, _) => n -> r }.toMap
+        val purged = rewrites.map(_._3).sum
+        val (tombName, tombStats, _) = results.last.toOption.get
+        // DELETE PREIMAGES on the CoW path too (c86's contract, previously
+        // deferred-purge-only): behind the same opt-in, the victims'
+        // current winners publish as `tombstone_noop_delpre_<log>` in the
+        // SAME CAS as the rewrites — the feed's includePreimages serves
+        // them as full-payload delete rows replacing the purge log's
+        // key-only rows. The read MUST precede the CAS (afterwards the
+        // rewrites have destroyed the winners); the basis check recomputes
+        // it when the manifest moved in between.
+        val logPre =
+          spark.conf.get("graft.delete.logPreimages", "false").toBoolean
+        val preName = s"tombstone_noop_delpre_$tombName"
+        var preEntry: Option[(String, Map[String, ColStats])] = None
+        var preBasis: Option[Seq[String]] = None
+        def computePreimage(): Unit = {
+          val (e, basis) =
+            publishDeletePreimage(spark, dir, key, typ, keys, preName)
+          preEntry = e; preBasis = Some(basis)
+        }
+        if (logPre) computePreimage()
+        result = (affected.size, purged)
+        Some { entries =>
+          // the rewrite names carry (baseV, key-set digest), so a match
+          // proves THIS purge (same base, same keys) already committed —
+          // a different purge's rewrite of the same epoch has a different
+          // name and falls through to the structural-stale retry below
+          if (entries.exists(e => rewritten.valuesIterator
+              .exists(_._1 == e.name))) Converged
+          else if (!affected.forall(entries.map(_.name).contains))
+            Stale // a fold replaced our base: purge it again
           else {
-            if (logPre && !preBasis.contains(entries.map(_.name)))
-              computePreimage() // manifest moved since the victims read
-            val idx = mapped.lastIndexWhere(e =>
-              rewritten.valuesIterator.exists(_._1 == e.name))
-            val log = EpochEntry(tombName, tombStats +
-              (SuppTotalStat -> ColStats("long", "0", "0")))
-            Some((mapped.take(idx + 1) ++
-              preEntry.map { case (pn, ps) => EpochEntry(pn, ps) } :+ log) ++
-              mapped.drop(idx + 1))
+            val mapped = stripSuppStats(entries.map { e =>
+              // the rewrite changes the row counts outstanding tombstones'
+              // suppression totals were computed against (a CoW purge may
+              // physically remove rows a tombstone still counts) — strip
+              // them or the pushed COUNT(*) would double-subtract
+              rewritten.get(e.name) match {
+                case Some((newName, stats)) => EpochEntry(newName, stats)
+                case None => e
+              }
+            })
+            // splice the purge log RIGHT AFTER the last rewritten entry:
+            // an epoch committed concurrently (after our base, before the
+            // CAS) commutes with the swap and its rows are NOT purged —
+            // placing the log before it keeps the feed's delete `_pos`
+            // BELOW the concurrent re-insert's, so a `__dpos > _pos`
+            // consumer merge preserves the re-added key exactly as the
+            // snapshot does
+            if (mapped.exists(_.name == tombName)) Place(mapped)
+            else {
+              if (logPre && !preBasis.contains(entries.map(_.name)))
+                computePreimage() // manifest moved since the victims read
+              val idx = mapped.lastIndexWhere(e =>
+                rewritten.valuesIterator.exists(_._1 == e.name))
+              val log = EpochEntry(tombName, tombStats +
+                (SuppTotalStat -> ColStats("long", "0", "0")))
+              Place((mapped.take(idx + 1) ++
+                preEntry.map { case (pn, ps) => EpochEntry(pn, ps) } :+ log) ++
+                mapped.drop(idx + 1))
+            }
           }
         }
       }
-      if (!stale) return (affected.size, purged)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"purge at $dir lost $MaxCommitAttempts consecutive structural " +
-        "races — a maintainer is re-folding continuously")
+    result
   }
 
   /** DELETION-VECTOR purge (merge-on-read): commit the purged keys as a
     * TOMBSTONE entry instead of rewriting epochs — the Delta/Iceberg
     * deletion-vector/equality-delete pattern. Purge-time cost is O(keys)
     * (one tiny parquet write + one manifest CAS), ZERO epoch rewrites;
-    * the read paths apply the tombstone as a broadcast anti-join, and
+    * the connector's reader drops the rows it suppresses, and
     * [[compact]] folds tombstones into its rewrite (the merged snapshot
     * it materializes has them applied), so read-side cost is bounded by
     * compaction cadence. Contrast [[purgeKeys]] (copy-on-write): at
@@ -2426,7 +2478,6 @@ object AtomicWarehouse {
     // the base manifest seeds the commit's first CAS attempt
     val base = committedEntriesAt(spark, dir, baseV)
     val ks = canonicalKeys(typ, keys)
-    val (name, stats, n) = publishTombstone(spark, dir, key, typ, keys, baseV)
     // DELETE PREIMAGES (c86, Delta CDF's full delete contract): behind
     // the opt-in, log the victims' CURRENT WINNERS — the exact rows this
     // tombstone retracts from the merged read — as a no-op
@@ -2437,7 +2488,6 @@ object AtomicWarehouse {
     // preimage name is derived from it).
     val logPre =
       spark.conf.get("graft.delete.logPreimages", "false").toBoolean
-    val preName = s"tombstone_noop_delpre_$name"
     // the preimage is RECOMPUTED whenever the manifest moved under us
     // (mirroring suppressionStats): the victims read pins the current
     // winners, but a concurrent drain committing a newer winner between
@@ -2447,30 +2497,32 @@ object AtomicWarehouse {
     // the victims read ran against; the commit closure compares and
     // recomputes on mismatch (CAS failure then re-runs the closure with
     // fresh entries, so the pair converges).
-    var preEntry: Option[(String, Map[String, ColStats])] = None
-    var preBasis: Option[Seq[String]] = None
-    def computePreimage(): Unit = {
-      val (e, basis) = publishDeletePreimage(spark, dir, key, typ, ks, preName)
-      preEntry = e; preBasis = Some(basis)
-    }
-    if (logPre) computePreimage()
-    val committed = commitManifest(spark, dir, s"tombstone of $n keys",
-        Some((baseV, base))) { entries =>
-      if (entries.exists(_.name == name)) None // identical replay converged
-      else {
-        if (logPre && !preBasis.contains(entries.map(_.name)))
-          computePreimage()
-        Some(entries ++
-          preEntry.map { case (pn, ps) => EpochEntry(pn, ps) } :+
-          EpochEntry(name, stats ++
-            suppressionStats(spark, dir, key, typ, ks, entries)))
+    commitPublished(spark, dir, s"tombstone of ${ks.size} keys",
+        Some((baseV, base))) { () =>
+      val (name, stats, _) =
+        publishTombstone(spark, dir, key, typ, keys, baseV)
+      val preName = s"tombstone_noop_delpre_$name"
+      var preEntry: Option[(String, Map[String, ColStats])] = None
+      var preBasis: Option[Seq[String]] = None
+      def computePreimage(): Unit = {
+        val (e, basis) =
+          publishDeletePreimage(spark, dir, key, typ, ks, preName)
+        preEntry = e; preBasis = Some(basis)
+      }
+      if (logPre) computePreimage()
+      Some { entries =>
+        if (entries.exists(_.name == name)) Converged // identical replay
+        else {
+          if (logPre && !preBasis.contains(entries.map(_.name)))
+            computePreimage()
+          Place(entries ++
+            preEntry.map { case (pn, ps) => EpochEntry(pn, ps) } :+
+            EpochEntry(name, stats ++
+              suppressionStats(spark, dir, key, typ, ks, entries)))
+        }
       }
     }
-    // a tombstone GROWS the manifest like any commit: a compliance job
-    // issuing many deferred purges between drains must trigger the
-    // declared cadence too, or T runs unbounded until the next drain
-    maybeAutoCompact(spark, dir, committed)
-    n
+    ks.size
   }
 
   /** Deferred purge by COMPOSITE key (`key = "k1,k2"`): each element of
@@ -2600,22 +2652,8 @@ object AtomicWarehouse {
     * Replay converges by the EPOCH entry's name (same contract as
     * [[commitNamedEpoch]]): a manifest already holding it proves this
     * exact merge committed, tombstone included. Empty `tombKeys`
-    * delegates to the plain named commit. */
-  def commitNamedEpochWithTombstone(spark: SparkSession, dir: String,
-      df: DataFrame, name: String, loadSeq: Long, key: String,
-      tombKeys: Seq[Long], statsKey: Option[String] = None,
-      statsCols: Seq[String] = Nil,
-      bloomKey: Option[String] = None): Unit =
-    commitNamedEpochWithTombstoneTyped(spark, dir, df, name, loadSeq, key,
-      "long", tombKeys.map(_.toString), statsKey, statsCols, bloomKey)
-
-  /** [[commitNamedEpochWithTombstone]] with TYPED tombstone keys
-    * ([[canonicalKeys]]) — the string-merge-key sync-MERGE's commit
-    * shape. A RACING VACUUM is tolerated like [[commitEpochImpl]]: the
-    * manifest compute re-verifies BOTH published dirs still exist, and
-    * if a grace-window-violating vacuum deleted either, the pair is
-    * re-published and the commit retried — the manifest can only ever
-    * point at dirs that existed at compute time. */
+    * delegates to the plain named commit. Keys are TYPED
+    * ([[canonicalKeys]]), so string merge keys sync too. */
   private[graft] def commitNamedEpochWithTombstoneTyped(
       spark: SparkSession, dir: String, df: DataFrame, name: String,
       loadSeq: Long, key: String, keyTyp: String, tombKeys: Seq[String],
@@ -2627,37 +2665,26 @@ object AtomicWarehouse {
     require(!name.matches("epoch_\\d+"),
       s"entry name '$name' collides with the drain counter namespace")
     if (committedEpochs(spark, dir).contains(name)) return // replay
-    val f = fs(spark, dir)
     val baseV = currentVersion(spark, dir)
-    val namePath = new Path(s"$dir/$name")
-    var attempt = 0
-    while (true) {
+    val wanted = (statsKey.toSeq ++ statsCols).distinct
+    commitPublished(spark, dir,
+        s"merge epoch $name + tombstone of ${tombKeys.size} keys") { () =>
       // re-publishing converges: publishData adopts a complete existing
       // dir and replaces a vanished/torn one; the tombstone's name is
       // (baseV, digest)-stable across attempts
-      publishData(spark, dir, df, name)
-      val stats =
-        if (f.exists(namePath))
-          statsAndBloomOf(spark, s"$dir/$name",
-            (statsKey.toSeq ++ statsCols).distinct, bloomKey)._1
-        else Map.empty[String, ColStats] // vanished: the compute notices
+      val stats = publishWithStats(spark, dir, df, name, wanted, bloomKey)
       val (tombName, tombStats, _) =
         publishTombstone(spark, dir, key, keyTyp, tombKeys, baseV)
-      val tombPath = new Path(s"$dir/$tombName")
-      var vanished = false
-      commitManifest(spark, dir,
-        s"merge epoch $name + tombstone of ${tombKeys.size} keys") { entries =>
-        if (entries.exists(_.name == name)) None // a concurrent replay won
-        else if (!f.exists(namePath) || !f.exists(tombPath)) {
-          vanished = true; None // a racing vacuum deleted a published dir
-        } else {
+      Some { entries =>
+        if (entries.exists(_.name == name)) Converged // a replay won
+        else {
           val withEpoch = entries :+ EpochEntry(name, stats)
           // an identical tombstone may already exist (a prior
           // purgeKeysDeferred of the same key set at the same base):
           // duplicate names would corrupt position-keyed reads — reuse it
           // (its earlier position still suppresses the same keys; the
           // merge epoch holds none of them)
-          Some(if (entries.exists(_.name == tombName)) withEpoch
+          Place(if (entries.exists(_.name == tombName)) withEpoch
           else withEpoch :+ EpochEntry(tombName, tombStats ++
             // supp counted over the PRE-merge entries: the merge epoch
             // holds none of the deleted keys by construction (they are
@@ -2666,13 +2693,6 @@ object AtomicWarehouse {
               canonicalKeys(keyTyp, tombKeys), entries)))
         }
       }
-      if (!vanished) { maybeAutoCompact(spark, dir); return }
-      attempt += 1
-      if (attempt >= MaxCommitAttempts)
-        throw new java.io.IOException(
-          s"merge epoch $name at $dir kept vanishing before its manifest " +
-            s"commit ($MaxCommitAttempts attempts) — a vacuum is racing " +
-            "this merge with a grace window shorter than the merge's stall")
     }
   }
 
@@ -2705,44 +2725,18 @@ object AtomicWarehouse {
     require(!name.matches("epoch_\\d+"),
       s"entry name '$name' collides with the drain counter namespace")
     if (committedEpochs(spark, dir).contains(name)) return // replay
-    val f = fs(spark, dir)
     val preName = s"tombstone_noop_pre_$name"
-    val namePath = new Path(s"$dir/$name")
-    val prePath = new Path(s"$dir/$preName")
-    var attempt = 0
-    while (true) {
-      publishData(spark, dir, df, name)
-      val stats =
-        if (f.exists(namePath))
-          statsAndBloomOf(spark, s"$dir/$name",
-            (statsKey.toSeq ++ statsCols).distinct, bloomKey)._1
-        else Map.empty[String, ColStats] // vanished: the compute notices
-      if (skipIfEmpty && f.exists(namePath) &&
-          stats.get(RowCountStat).exists(_.mn.toLong == 0L)) {
-        f.delete(namePath, true)
-        return // zero-row update: no epoch, no preimage log
+    val wanted = (statsKey.toSeq ++ statsCols).distinct
+    commitPublished(spark, dir, s"update epoch $name + preimage log") { () =>
+      val stats = publishWithStats(spark, dir, df, name, wanted, bloomKey)
+      if (skipIfEmpty && stats.get(RowCountStat).exists(_.mn.toLong == 0L)) {
+        fs(spark, dir).delete(new Path(s"$dir/$name"), true)
+        None // zero-row update: no epoch, no preimage log
+      } else {
+        val preStats = publishWithStats(spark, dir, preRows, preName, Nil, None)
+        Some(appending(name, EpochEntry(preName, preStats),
+          EpochEntry(name, stats)))
       }
-      publishData(spark, dir, preRows, preName)
-      val preStats =
-        if (f.exists(prePath))
-          statsAndBloomOf(spark, s"$dir/$preName", Nil, None)._1
-        else Map.empty[String, ColStats]
-      var vanished = false
-      commitManifest(spark, dir, s"update epoch $name + preimage log") {
-        entries =>
-          if (entries.exists(_.name == name)) None // a concurrent replay won
-          else if (!f.exists(namePath) || !f.exists(prePath)) {
-            vanished = true; None // a racing vacuum deleted a published dir
-          } else Some(entries :+ EpochEntry(preName, preStats) :+
-            EpochEntry(name, stats))
-      }
-      if (!vanished) { maybeAutoCompact(spark, dir); return }
-      attempt += 1
-      if (attempt >= MaxCommitAttempts)
-        throw new java.io.IOException(
-          s"update epoch $name at $dir kept vanishing before its " +
-            s"manifest commit ($MaxCommitAttempts attempts) — a vacuum " +
-            "is racing this update with too short a grace window")
     }
   }
 
@@ -2773,29 +2767,22 @@ object AtomicWarehouse {
     val updName = baseName.replaceFirst("^merge_v", "update_v") + "_m"
     val insName = baseName
     val preName = s"tombstone_noop_pre_$updName"
-    val f = fs(spark, dir)
-    def committedAny(): Boolean = {
-      val names = committedEpochs(spark, dir)
-      names.contains(updName) || names.contains(insName)
-    }
-    if (committedAny()) return // replay converged
+    val committed = committedEpochs(spark, dir)
+    if (committed.contains(updName) || committed.contains(insName))
+      return // replay converged
     val wanted = (statsKey.toSeq ++ statsCols).distinct
-    var attempt = 0
-    while (true) {
+    commitPublished(spark, dir, s"typed merge $baseName") { () =>
       // publish every non-empty part; row counts come from the stats
       // pass each publish already runs
       def publishPart(df: DataFrame, name: String, declared: Boolean,
-          keepEmpty: Boolean = false): Option[(String, Map[String, ColStats])] = {
-        publishData(spark, dir, df, name)
-        val p = new Path(s"$dir/$name")
-        if (!f.exists(p)) return None // racing vacuum: CAS will notice
-        val stats = statsAndBloomOf(spark, s"$dir/$name",
-          if (declared) wanted else Nil,
-          if (declared) bloomKey else None)._1
+          keepEmpty: Boolean = false): Option[EpochEntry] = {
+        val stats = publishWithStats(spark, dir, df, name,
+          if (declared) wanted else Nil, if (declared) bloomKey else None)
         if (!keepEmpty &&
             stats.get(RowCountStat).exists(_.mn.toLong == 0L)) {
-          f.delete(p, true); None // zero-row branch: no entry
-        } else Some(name -> stats)
+          fs(spark, dir).delete(new Path(s"$dir/$name"), true)
+          None // zero-row branch: no entry
+        } else Some(EpochEntry(name, stats))
       }
       val upd = publishPart(updRows, updName, declared = true)
       // A DELETE-ONLY typed merge (both data branches zero-row, WHEN NOT
@@ -2815,19 +2802,13 @@ object AtomicWarehouse {
         if (tombKeys.isEmpty) None
         else Some(publishTombstone(spark, dir, key, keyTyp, tombKeys,
           currentVersion(spark, dir)))
-      if (upd.isEmpty && ins.isEmpty && tomb.isEmpty) return // no-op merge
-      var vanished = false
-      commitManifest(spark, dir, s"typed merge $baseName") { entries =>
+      if (upd.isEmpty && ins.isEmpty && tomb.isEmpty) None // no-op merge
+      else Some { entries =>
         if (entries.exists(e => e.name == updName || e.name == insName))
-          None // concurrent replay won
-        else if ((upd.toSeq ++ ins.toSeq ++ pre.toSeq).exists(p =>
-            !f.exists(new Path(s"$dir/${p._1}")))) {
-          vanished = true; None
-        } else {
-          val dataEntries = (pre.toSeq ++ upd.toSeq ++ ins.toSeq)
-            .map { case (n, st) => EpochEntry(n, st) }
-          val withData = entries ++ dataEntries
-          Some(tomb match {
+          Converged // concurrent replay won
+        else {
+          val withData = entries ++ pre ++ upd ++ ins
+          Place(tomb match {
             case Some((tn, tStats, _)) if !entries.exists(_.name == tn) =>
               withData :+ EpochEntry(tn, tStats ++
                 suppressionStats(spark, dir, key, keyTyp,
@@ -2836,39 +2817,9 @@ object AtomicWarehouse {
           })
         }
       }
-      if (!vanished) { maybeAutoCompact(spark, dir); return }
-      attempt += 1
-      if (attempt >= MaxCommitAttempts)
-        throw new java.io.IOException(
-          s"typed merge $baseName at $dir kept vanishing before its " +
-            s"manifest commit ($MaxCommitAttempts attempts) — a vacuum " +
-            "is racing this merge with too short a grace window")
     }
   }
 
-  /** Retention pass: keep the latest `retainVersions` manifests, delete
-    * older ones, then delete every data dir no retained manifest
-    * references. This is the ONLY operation that destroys history — until
-    * it runs, every version stays time-travelable. Returns (manifests,
-    * data dirs) deleted.
-    *
-    * SINGLE-MAINTAINER is enforced, not assumed: an exclusive lock file
-    * (`_manifest/.vacuum_lock`, atomic CREATE_NEW) fences concurrent
-    * vacuums — a second vacuum fails loudly while the first holds the
-    * lock. A lock older than `leaseMs` is presumed abandoned (crashed
-    * maintainer) and broken; size the lease above any real vacuum's
-    * runtime.
-    *
-    * Concurrent DRAINS are protected twice over: (1) the `graceMs` age
-    * gate — a drain publishes its (visible) epoch dir BEFORE its manifest
-    * commit lands, so an unreferenced-right-now dir may be an in-flight
-    * commit, not garbage; dirs younger than `graceMs` are skipped (the
-    * same modification-time guard Iceberg's remove-orphan-files ships
-    * with); and (2) [[commitEpoch]] re-verifies its epoch dir still
-    * exists inside the manifest compute and re-publishes if a vacuum beat
-    * it — so even a drain that stalls LONGER than the grace window cannot
-    * commit a manifest pointing at a deleted dir. Pass graceMs=0 only
-    * where no drain can be in flight (tests, single-process batteries). */
   /** RESTORE (rollback): make the LIVE table's content equal the
     * manifest at `target`, committed FORWARD as a new version — history
     * is preserved and time travel still reaches the undone versions
@@ -2913,6 +2864,31 @@ object AtomicWarehouse {
     want.size
   }
 
+  /** Retention pass: keep the latest `retainVersions` manifests, delete
+    * older ones, then delete every data dir no retained manifest
+    * references. This is the ONLY operation that destroys history — until
+    * it runs, every version stays time-travelable. Returns (manifests,
+    * data dirs) deleted.
+    *
+    * SINGLE-MAINTAINER is enforced, not assumed: an exclusive lock file
+    * (`_manifest/.vacuum_lock`, atomic CREATE_NEW) fences concurrent
+    * vacuums — a second vacuum fails loudly while the first holds the
+    * lock. A lock older than `leaseMs` is presumed abandoned (crashed
+    * maintainer) and broken; size the lease above any real vacuum's
+    * runtime.
+    *
+    * Concurrent DRAINS are protected twice over: (1) the `graceMs` age
+    * gate — a drain publishes its (visible) epoch dir BEFORE its manifest
+    * commit lands, so an unreferenced-right-now dir may be an in-flight
+    * commit, not garbage; dirs younger than `graceMs` are skipped (the
+    * same modification-time guard Iceberg's remove-orphan-files ships
+    * with); and (2) every writer commits through [[commitPublished]],
+    * which re-verifies inside the manifest compute that each dir the
+    * commit adds still exists and re-publishes if a vacuum beat it — so
+    * even a writer that stalls LONGER than the grace window cannot commit
+    * a manifest pointing at a deleted dir (the staged epoch, whose data
+    * exists once, fails loudly instead). Pass graceMs=0 only where no
+    * drain can be in flight (tests, single-process batteries). */
   def vacuum(spark: SparkSession, dir: String, retainVersions: Int,
       graceMs: Long = 60L * 60 * 1000,
       leaseMs: Long = 60L * 60 * 1000): (Int, Int) = {

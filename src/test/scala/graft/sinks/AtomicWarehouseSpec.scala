@@ -465,14 +465,13 @@ class AtomicWarehouseSpec extends SparkSuite {
     // that window (the ADVICE scenario) — the commit must re-publish and
     // land a manifest whose dir exists, not a dangling pointer
     var vacuumed = false
-    AtomicWarehouse.commitEpochImpl(spark, wh,
-      Seq((2L, "b")).toDF("k", "v").withColumn("load_seq", lit(2L)), 2L,
-      None, Nil, () => if (!vacuumed) {
-        vacuumed = true
-        val (_, d) = AtomicWarehouse.vacuum(spark, wh, retainVersions = 1,
-          graceMs = 0L)
-        assert(d == 1, s"vacuum should delete the in-flight epoch dir, got $d")
-      })
+    CommitSeam.around(if (!vacuumed) {
+      vacuumed = true
+      val (_, d) = AtomicWarehouse.vacuum(spark, wh, retainVersions = 1,
+        graceMs = 0L)
+      assert(d == 1, s"vacuum should delete the in-flight epoch dir, got $d")
+    })(AtomicWarehouse.commitEpoch(spark, wh,
+      Seq((2L, "b")).toDF("k", "v").withColumn("load_seq", lit(2L)), 2L))
     assert(vacuumed)
     assert(new java.io.File(s"$wh/epoch_2").exists(),
       "recovered commit must leave the epoch dir in place")

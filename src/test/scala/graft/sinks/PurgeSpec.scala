@@ -144,9 +144,10 @@ class PurgeSpec extends SparkSuite {
   test("a drain landing between rewrite and commit is carried over") {
     val dir = freshDir("race_drain")
     commit(dir, 1, 50, 1L)
-    val (epochs, purged) = AtomicWarehouse.purgeKeysImpl(spark, dir, "k",
-      "long", Seq("10"), Some("k"), Nil, Some("k"),
-      beforeCommit = () => commit(dir, 100, 120, 2L)) // racing drain
+    val (epochs, purged) =
+      CommitSeam.around(commit(dir, 100, 120, 2L))( // racing drain
+        AtomicWarehouse.purgeKeys(spark, dir, "k", Seq(10L),
+          statsKey = Some("k"), bloomKey = Some("k")))
     assert(epochs == 1 && purged == 1L)
     val names = AtomicWarehouse.committedEpochs(spark, dir)
     // the swap applied AND the racing epoch survived the CAS loop
@@ -162,12 +163,11 @@ class PurgeSpec extends SparkSuite {
     commit(dir, 1, 50, 1L)
     commit(dir, 40, 80, 2L)
     var folded = false
-    val (epochs, purged) = AtomicWarehouse.purgeKeysImpl(spark, dir, "k",
-      "string", Seq("45"), Some("k"), Nil, Some("k"),
-      beforeCommit = () => if (!folded) {
-        folded = true
-        AtomicWarehouse.compact(spark, dir, "k") // structural race
-      })
+    val (epochs, purged) = CommitSeam.around(if (!folded) {
+      folded = true
+      AtomicWarehouse.compact(spark, dir, "k") // structural race
+    })(AtomicWarehouse.purgeKeysStr(spark, dir, "k", Seq("45"),
+      statsKey = Some("k"), bloomKey = Some("k")))
     // the retry re-planned against the fold: ONE affected entry (the
     // compact dir), both versions of key 45 gone
     assert(epochs == 1 && purged == 1L)

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Sync README.md's test-count line from the committed JUnit reports
-(target/test-reports/TEST-*.xml) AND its battery-size mentions from the
+(target/test-reports/TEST-*.xml, counting only suites still declared under
+src/test/scala) AND its battery-size mentions from the
 query registry in src/main/scala/graft/queries/ — both counts went stale
 at round close when maintained by hand. Run after `sbt test`:
 
@@ -27,8 +28,25 @@ def battery_size() -> int:
     return len(names)
 
 
+def declared_suites() -> set:
+    """Fully qualified names of the classes declared under src/test/scala:
+    a report whose suite is not among them was left by a deleted suite."""
+    names = set()
+    for f in glob.glob(f"{ROOT}/src/test/scala/**/*.scala", recursive=True):
+        src = open(f).read()
+        pkg = re.search(r"^package\s+([\w.]+)", src, flags=re.M)
+        prefix = pkg.group(1) + "." if pkg else ""
+        for m in re.finditer(r"^\s*(?:final\s+|abstract\s+)*class\s+(\w+)",
+                             src, flags=re.M):
+            names.add(prefix + m.group(1))
+    return names
+
+
 def main() -> None:
-    reports = sorted(glob.glob(f"{ROOT}/target/test-reports/TEST-*.xml"))
+    suites = declared_suites()
+    reports = sorted(
+        r for r in glob.glob(f"{ROOT}/target/test-reports/TEST-*.xml")
+        if ET.parse(r).getroot().get("name") in suites)
     if not reports:
         sys.exit("no JUnit reports under target/test-reports — run `sbt test`")
     tests = failures = 0
