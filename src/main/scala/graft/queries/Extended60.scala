@@ -13,42 +13,6 @@ import graft.pipeline.{Pipeline, Schemas}
   */
 object Extended60 {
 
-  /** C30 — the full 7-stage pipeline epoch ON THE STREAMING ENGINE
-    * (ref: dags/Dashboard-pipeline.py:20-40 — the twice-daily cron DAG):
-    * a file-source video stream (two day-files, maxFilesPerTrigger=1)
-    * drives [[graft.pipeline.Pipeline.streamEpochs]] under
-    * `Trigger.AvailableNow` — each micro-batch runs ingest→title-code→
-    * show-join→analytics-merge→derivations as ONE Catalyst plan,
-    * materializes that epoch frame once, and commits it through a
-    * CHECK-gated exactly-once drain into the AtomicWarehouse
-    * ([[graft.sinks.Constraints.drainChecked]]: the audited frame is the
-    * committed frame). The result is the warehouse snapshot
-    * read: every stage's semantics — channel default, purge rules,
-    * employee/show lookups, the 2-owner first-owner-wins metrics pass,
-    * H:MM:SS rendering, +05:00 local split, rate derivations, the
-    * International-News cpm override, and the all-string warehouse edge — must
-    * hash-match the oracle's single declarative replay.
-    *
-    * Fixtures derive deterministically from `orders` (k = o_orderkey,
-    * k%5==0 subset): title shape by k%4 (valid 3-char, valid 4-char,
-    * all-digit purged, lowercase purged), channel ch0–ch4 (ch4 misses
-    * the dim), publish time spread over 2024-05-01/02 (the two epoch
-    * files), analytics facts per owner with k%3 coverage — owner1 holds
-    * two fact rows for k%3==0 (exercising the grouped sum/avg), owner2
-    * one row for k%3<=1, so owner2's k%3==0 rows MUST lose to owner1's
-    * (their values differ — a broken owner attribution breaks the hash)
-    * and k%3==2 videos keep null metrics through the merge.
-    *
-    * Epoch-assignment is order-free by construction (each video's
-    * enrichment is a pure function of the video + static dims/facts;
-    * `load_seq` is dropped), so the hash is deterministic however the
-    * file source orders or coalesces its batches.
-    *
-    * Scale: the stream side never shuffles for the dims before the
-    * commit (they are map lookups resolved on the first micro-batch),
-    * per-epoch cost is the composed batch plan, and
-    * the engine adds checkpointed offsets + idempotent epoch commits —
-    * crash/retry semantics the reference's scripts lack entirely. */
   /** The single declarative DuckDB replay of all 7 stages — shared by
     * c30 (straight-through run) and c35 (cold-stop + checkpoint resume):
     * both drivings must land the identical warehouse. */
@@ -332,6 +296,42 @@ object Extended60 {
     graft.sinks.AtomicWarehouse.read(s, s"$base/warehouse", "video_id")
       .drop("load_seq")
 
+  /** C30 — the full 7-stage pipeline epoch ON THE STREAMING ENGINE
+    * (ref: dags/Dashboard-pipeline.py:20-40 — the twice-daily cron DAG):
+    * a file-source video stream (two day-files, maxFilesPerTrigger=1)
+    * drives [[graft.pipeline.Pipeline.streamEpochs]] under
+    * `Trigger.AvailableNow` — each micro-batch runs ingest→title-code→
+    * show-join→analytics-merge→derivations as ONE Catalyst plan,
+    * materializes that epoch frame once, and commits it through a
+    * CHECK-gated exactly-once drain into the AtomicWarehouse
+    * ([[graft.sinks.Constraints.drainChecked]]: the audited frame is the
+    * committed frame). The result is the warehouse snapshot
+    * read: every stage's semantics — channel default, purge rules,
+    * employee/show lookups, the 2-owner first-owner-wins metrics pass,
+    * H:MM:SS rendering, +05:00 local split, rate derivations, the
+    * International-News cpm override, and the all-string warehouse edge — must
+    * hash-match the oracle's single declarative replay.
+    *
+    * Fixtures derive deterministically from `orders` (k = o_orderkey,
+    * k%5==0 subset): title shape by k%4 (valid 3-char, valid 4-char,
+    * all-digit purged, lowercase purged), channel ch0–ch4 (ch4 misses
+    * the dim), publish time spread over 2024-05-01/02 (the two epoch
+    * files), analytics facts per owner with k%3 coverage — owner1 holds
+    * two fact rows for k%3==0 (exercising the grouped sum/avg), owner2
+    * one row for k%3<=1, so owner2's k%3==0 rows MUST lose to owner1's
+    * (their values differ — a broken owner attribution breaks the hash)
+    * and k%3==2 videos keep null metrics through the merge.
+    *
+    * Epoch-assignment is order-free by construction (each video's
+    * enrichment is a pure function of the video + static dims/facts;
+    * `load_seq` is dropped), so the hash is deterministic however the
+    * file source orders or coalesces its batches.
+    *
+    * Scale: the stream side never shuffles for the dims before the
+    * commit (they are map lookups resolved on the first micro-batch),
+    * per-epoch cost is the composed batch plan, and
+    * the engine adds checkpointed offsets + idempotent epoch commits —
+    * crash/retry semantics the reference's scripts lack entirely. */
   val c30StreamingPipelineEpoch = q("c30_streaming_pipeline_epoch",
     pipelineOracle) { (s, d) =>
     val base = freshScratch("c30")

@@ -166,10 +166,10 @@ object Extended68 {
     * `endingVersion`] serves exactly the rows APPENDED to the warehouse
     * in the manifest range [s, e] — INCLUSIVE of both bounds, matching
     * Delta CDF's convention for the identically-named options — the
-    * Delta-CDF consumer surface on the log-structured manifest, sharing
-    * the micro-batch tail's diff and its refusal contract at purge
-    * boundaries
-    * ([[graft.sources.v2.WarehouseConnector.addedEntriesBetween]]).
+    * Delta-CDF consumer surface on the log-structured manifest, planned
+    * as every micro-batch of the manifest tail is, with its refusal
+    * contract at purge boundaries
+    * ([[graft.sources.v2.WarehouseScan]]'s change plan).
     * `_pos` rides along with END-manifest positions, so a downstream
     * incremental merge can apply the feed with the same
     * `(load_seq DESC, _pos DESC)` tiebreaker every other read path

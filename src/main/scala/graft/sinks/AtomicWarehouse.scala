@@ -1026,13 +1026,14 @@ object AtomicWarehouse {
       skipIfEmpty: Boolean = false): Unit = {
     val base = entryName.getOrElse(s"epoch_$seq")
     val committed = committedEpochs(spark, dir)
-    if (committed.contains(base)) return
     // default-named epochs sidestep RESTORE-undone same-name dirs (a
     // rollback lowers the load_seq floor, so seq re-use is the NATURAL
     // recovery, and adopting the undone dir would resurrect its rows)
     val epoch =
-      if (entryName.isDefined) base else resolveEpochName(spark, dir, base)
-    if (epoch != base && committed.contains(epoch)) return
+      if (entryName.isDefined || committed.contains(base)) base
+      else resolveEpochName(spark, dir, base)
+    if (committed.contains(epoch)) // replay
+      return maybeAutoCompact(spark, dir, None)
     requireAdditiveSchema(spark, dir, df.schema, s"epoch $epoch", partitionBy)
     val f = fs(spark, dir)
     val epochPath = new Path(s"$dir/$epoch")
@@ -1083,7 +1084,7 @@ object AtomicWarehouse {
       else resolveEpochName(spark, dir, baseName)
     if (committed.contains(epoch)) {
       f.delete(stage, true) // idempotent replay: the committed copy wins
-      return
+      return maybeAutoCompact(spark, dir, None)
     }
     val epochPath = new Path(s"$dir/$epoch")
     // staged schema from the parquet footers (one cheap driver read);
@@ -1757,7 +1758,8 @@ object AtomicWarehouse {
     * replays to a no-op and re-attempts the fold — convergent, never
     * silent. [[commitPublished]] passes the manifest it just published
     * as `committed`, so the cadence check reads no manifest (None: it
-    * committed nothing, and the current manifest is read). */
+    * committed nothing — a writer's replay that found its entry already
+    * committed, say — and the current manifest is read). */
   private def maybeAutoCompact(spark: SparkSession, dir: String,
       committed: Option[Seq[EpochEntry]]): Unit = {
     val conf = graft.sources.v2.WarehouseCatalog.tableConf(fs(spark, dir), dir)
@@ -2664,7 +2666,8 @@ object AtomicWarehouse {
         statsCols, bloomKey)
     require(!name.matches("epoch_\\d+"),
       s"entry name '$name' collides with the drain counter namespace")
-    if (committedEpochs(spark, dir).contains(name)) return // replay
+    if (committedEpochs(spark, dir).contains(name)) // replay
+      return maybeAutoCompact(spark, dir, None)
     val baseV = currentVersion(spark, dir)
     val wanted = (statsKey.toSeq ++ statsCols).distinct
     commitPublished(spark, dir,
@@ -2724,7 +2727,8 @@ object AtomicWarehouse {
       skipIfEmpty: Boolean = false): Unit = {
     require(!name.matches("epoch_\\d+"),
       s"entry name '$name' collides with the drain counter namespace")
-    if (committedEpochs(spark, dir).contains(name)) return // replay
+    if (committedEpochs(spark, dir).contains(name)) // replay
+      return maybeAutoCompact(spark, dir, None)
     val preName = s"tombstone_noop_pre_$name"
     val wanted = (statsKey.toSeq ++ statsCols).distinct
     commitPublished(spark, dir, s"update epoch $name + preimage log") { () =>
@@ -2769,7 +2773,7 @@ object AtomicWarehouse {
     val preName = s"tombstone_noop_pre_$updName"
     val committed = committedEpochs(spark, dir)
     if (committed.contains(updName) || committed.contains(insName))
-      return // replay converged
+      return maybeAutoCompact(spark, dir, None) // replay converged
     val wanted = (statsKey.toSeq ++ statsCols).distinct
     commitPublished(spark, dir, s"typed merge $baseName") { () =>
       // publish every non-empty part; row counts come from the stats

@@ -156,8 +156,8 @@ class WarehouseSource extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Driver-side planning helpers shared by the batch scan and the
-  * manifest-tailing micro-batch stream. */
+/** Driver-side planning helpers of [[WarehouseScan]], which plans batch
+  * reads, change feeds and every micro-batch of the manifest tail. */
 object WarehouseConnector {
 
   /** Metadata column exposing each row's MANIFEST POSITION — the index
@@ -454,9 +454,6 @@ object WarehouseConnector {
     new String(out.toByteArray, "UTF-8")
   }
 
-  /** Recursive listing of an epoch dir's parquet files, collecting
-    * partition `col=value` segments along the way. Hidden files/dirs and
-    * markers are skipped, as Spark's own file index does. */
   /** The entry's data files from its manifest-recorded file list
     * ([[AtomicWarehouse.FilesStat]], zero filesystem calls) when it
     * carries one, the recursive walk otherwise. Partition `col=value`
@@ -480,29 +477,6 @@ object WarehouseConnector {
       case None => listEpochFiles(f, dir, e.name)
     }
 
-  /** Entry names ADDED to the manifest in the version range (s, e] —
-    * the CHANGE-FEED diff shared by the micro-batch tail and the batch
-    * `startingVersion` read. `s == 0` is the initial snapshot: every
-    * committed entry at `e` (minus tombstone key lists, which are
-    * applied as drops, not served as rows). A stepped range serves
-    * every NEW data entry — drained `epoch_*`, SQL `insert_*`/`merge_*`
-    * — but never a `compact_*` fold (a re-materialization of rows the
-    * consumer already has). Purge rewrites or tombstones inside a
-    * stepped range REFUSE unless `ignoreDeletes`: an append-only feed
-    * cannot retract already-served rows. `namesAt` supplies each
-    * version's committed names — the stream passes its per-instance
-    * memo, batch readers pass the direct manifest read. */
-  def addedEntriesBetween(s: Long, e: Long, ignoreDeletes: Boolean,
-      namesAt: Long => Seq[String]): Seq[String] =
-    if (s == 0L) namesAt(e).filterNot(n =>
-      AtomicWarehouse.isTombstone(n) || AtomicWarehouse.isColMap(n))
-    else steppedEntriesBetween(s, e, ignoreDeletes, namesAt)
-
-  /** The STEPPED walk of (s, e] without the s=0 snapshot special case —
-    * an explicit `startingVersion = 1` (inclusive) means "every entry
-    * added since the table's birth", which serves the originally
-    * committed epochs (folds skipped, purge boundaries refusing),
-    * NOT the end manifest's folded/drop-applied snapshot. */
   /** Version `v`'s entry REMOVALS that its own additions do not
     * explain. A fold removes its base behind a `compact_*` addition; a
     * CoW purge renames each victim to `<name>_p<V>*`. Anything else —
@@ -548,6 +522,14 @@ object WarehouseConnector {
         "a fresh snapshot, or set .option(\"ignoreDeletes\", true) to " +
         "keep tailing additions only")
 
+  /** Entry names ADDED to the manifest in the version range (s, e], in
+    * commit order — the STEPPED change-feed walk. It serves every NEW
+    * data entry — drained `epoch_*`, SQL `insert_*`/`merge_*` — but
+    * never a `compact_*` fold (a re-materialization of rows the
+    * consumer already has). Purge rewrites, tombstones and rollbacks
+    * inside the range REFUSE unless `ignoreDeletes`: an append-only feed
+    * cannot retract already-served rows. `namesAt` supplies each
+    * version's committed names. */
   def steppedEntriesBetween(s: Long, e: Long, ignoreDeletes: Boolean,
       namesAt: Long => Seq[String]): Seq[String] =
     (s + 1 to e).flatMap { v =>
@@ -574,29 +556,6 @@ object WarehouseConnector {
         AtomicWarehouse.isColMap(n)) // manifest-only metadata, never rows
     }.distinct
 
-  /** ROW-LEVEL change-feed classification of the version range (s, e]:
-    * `(data, deletes)` — data entries (`epoch_*`/`insert_*`/`merge_*`,
-    * each an `_change_type='insert'` batch) and TOMBSTONE entries (each
-    * a batch of `_change_type='delete'` key rows — the deferred purge's
-    * key list IS the delete set, already in the manifest), both tagged
-    * with the manifest version that committed them (`_commit_version`).
-    * Compaction folds are skipped (no logical change). CoW purge
-    * rewrites serve their retraction through the PURGE LOG committed
-    * with them (a no-op tombstone holding the key list —
-    * [[AtomicWarehouse.isNoopTombstone]]); only UNLOGGED rewrites
-    * (pre-log history) still refuse — they record the 8-hex key-set
-    * digest, not the keys. `ignoreDeletes` keeps its meaning: skip
-    * every retraction (no delete rows, rewrites skipped) and serve
-    * appends only.
-    *
-    * Returns `(data, deletes, order)` — `order` is the served names in
-    * INTERLEAVED COMMIT ORDER (version ascending, within-version
-    * manifest order), the order folded-out entries' negative `_pos`
-    * values must follow: assigning all data entries below all delete
-    * entries regardless of commit order would let a purge's delete row
-    * outrank a LATER re-insert folded out by the same compaction,
-    * wrongly suppressing the re-added key in every `__dpos > _pos`
-    * consumer merge. */
   /** Sentinel name of a restore's delete INSTANCE of entry `n` at
     * version `v` — distinct from `n` itself (which the feed also served
     * as an insert), so the interleaved order assigns it its OWN
@@ -631,6 +590,31 @@ object WarehouseConnector {
       (renames.result().toArray, masked.result().toArray)
     }
 
+  /** ROW-LEVEL change-feed classification of the version range (s, e]:
+    * `(data, deletes)` — data entries (`epoch_*`/`insert_*`/`merge_*`,
+    * each an `_change_type='insert'` batch) and TOMBSTONE entries (each
+    * a batch of `_change_type='delete'` key rows — the deferred purge's
+    * key list IS the delete set, already in the manifest), both tagged
+    * with the manifest version that committed them (`_commit_version`).
+    * Compaction folds are skipped (no logical change). CoW purge
+    * rewrites serve their retraction through the PURGE LOG committed
+    * with them (a no-op tombstone holding the key list —
+    * [[AtomicWarehouse.isNoopTombstone]]); only UNLOGGED rewrites
+    * (pre-log history) still refuse — they record the 8-hex key-set
+    * digest, not the keys. `ignoreDeletes` keeps its meaning: skip
+    * every retraction (no delete rows, rewrites skipped) and serve
+    * appends only.
+    *
+    * Returns `(data, deletes, order, restoreDeletes)`. `order` is the
+    * served names in INTERLEAVED COMMIT ORDER (version ascending,
+    * within-version manifest order), the order folded-out entries'
+    * negative `_pos` values must follow: assigning all data entries
+    * below all delete entries regardless of commit order would let a
+    * purge's delete row outrank a LATER re-insert folded out by the same
+    * compaction, wrongly suppressing the re-added key in every
+    * `__dpos > _pos` consumer merge. `restoreDeletes` are the entries a
+    * restore removed, each with the version that removed it
+    * (`restoreAsDeletes`). */
   def cdfAddsBetween(s: Long, e: Long, ignoreDeletes: Boolean,
       namesAt: Long => Seq[String], includePreimages: Boolean = false,
       restoreAsDeletes: Boolean = false)
@@ -799,6 +783,9 @@ object WarehouseConnector {
     bins.result()
   }
 
+  /** Recursive listing of an epoch dir's parquet files, collecting
+    * partition `col=value` segments along the way. Hidden files/dirs and
+    * markers are skipped, as Spark's own file index does. */
   def listEpochFiles(f: FileSystem, dir: String, epoch: String): Seq[WhFile] = {
     def walk(p: Path, parts: Seq[(String, String)]): Seq[WhFile] =
       f.listStatus(p).toSeq.flatMap { st =>
@@ -1209,10 +1196,10 @@ object WarehouseConnector {
     StructType((served ++ keys).distinctBy(_.name))
   }
 
-  /** The distinct read schemas one scan's (or one stream's) files are
-    * decoded with. Spark's parquet reader takes its requested schema
-    * from the Hadoop conf, so each schema is broadcast ONCE inside its
-    * own conf — never once per file. Files carry an index into the list
+  /** The distinct read schemas one scan's files are decoded with.
+    * Spark's parquet reader takes its requested schema from the Hadoop
+    * conf, so each schema is broadcast ONCE inside its own conf — never
+    * once per file. Files carry an index into the list
     * ([[WarehouseFilePartition.read]]); it only grows, so an index stays
     * valid for every reader factory built after the file was planned. */
   final class FileReads(required: StructType) {
@@ -1871,7 +1858,10 @@ class WarehouseScanBuilder(dir: String, version: Option[Long],
   * job). Streaming, change-feed and aggregate-pushed scans, and reads
   * past the bound, always run as tasks. An engine read
   * (`engineRead`) plans the manifest entries it was handed instead of
-  * the served version's, pruned by its filters as by the pushed ones. */
+  * the served version's, pruned by its filters as by the pushed ones.
+  * A change feed reads each version's entry names through `namesAt`
+  * when given — the micro-batch stream passes its per-stream memo —
+  * and through a per-read memo otherwise. */
 class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     required: StructType, pruneFilters: Array[Filter],
     maxVersionsPerBatch: Int, ignoreDeletes: Boolean = false,
@@ -1879,7 +1869,8 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     changeStart: Option[Long] = None, changeEnd: Option[Long] = None,
     cdf: Boolean = false, includePreimages: Boolean = false,
     restoreAsDeletes: Boolean = false,
-    engineRead: Option[WarehouseConnector.EngineRead] = None)
+    engineRead: Option[WarehouseConnector.EngineRead] = None,
+    namesAt: Option[Long => Seq[String]] = None)
     extends Scan with Batch with SupportsRuntimeFiltering
     with SupportsReportStatistics {
   import WarehouseConnector._
@@ -1888,7 +1879,8 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
 
   /** Two plannings of one read are one scan, as Spark's own file scans
     * are: each planning builds a fresh Scan, and Catalyst compares plans
-    * by value (`sameResult`, exchange reuse). */
+    * by value (`sameResult`, exchange reuse). `namesAt` changes how the
+    * manifests are read, never what is read, so it is left out. */
   private def fields = (dir, version, mergeKey, required,
     pruneFilters.toSeq, runtimeFilters.toSeq, maxVersionsPerBatch,
     ignoreDeletes, pushedAgg.map { case (s, vs) => (s, vs.toSeq) },
@@ -1957,31 +1949,38 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
         s"(current is $cur)")
     v
   }
-  private lazy val allEntries: Seq[EpochEntry] = engineRead.fold(
+  private[v2] lazy val allEntries: Seq[EpochEntry] = engineRead.fold(
     AtomicWarehouse.committedEntriesAt(spark, dir, resolvedVersion))(_.entries)
   /** CHANGE FEED (`.option("startingVersion", s)` [+ endingVersion]):
     * the entries appended in manifest versions [s, resolvedVersion] —
     * INCLUSIVE of the starting version, Delta CDF's convention for the
-    * identically-named option — the batch face of the manifest tail's
-    * diff, same refusal contract at purge boundaries
-    * ([[WarehouseConnector.addedEntriesBetween]]).
-    * `startingVersion = 0` is the initial snapshot (tombstone drops
-    * applied); a stepped range serves appended rows only, so drops are
-    * NOT applied (a tombstone in range either refused, was
-    * ignoreDeletes-skipped, or — under `readChangeFeed` — became
-    * explicit delete rows). `_pos` stays the END-version manifest
-    * position for entries the end manifest still lists; an in-range
-    * entry FOLDED OUT by a compaction gets a stable NEGATIVE position
-    * (first-appearance order in the range, below every end-manifest
-    * position — folded-out entries predate the fold, so the
-    * `(load_seq DESC, _pos DESC)` tiebreaker stays commit-ordered even
-    * when several folded-out entries carry tied load_seq values).
+    * identically-named option. Every micro-batch of the manifest tail is
+    * this plan too ([[WarehouseMicroBatchStream]]), so the composition
+    * rule lives here alone:
     *
-    * The plan is `(data entries in commit order, delete entries,
-    * served names in interleaved commit order)`; delete entries are
-    * nonempty only under `readChangeFeed` (tombstone key lists served
-    * as `_change_type='delete'` rows, [[WarehouseConnector
-    * .cdfAddsBetween]]). */
+    *  - `startingVersion = 0` is the initial SNAPSHOT: every data entry
+    *    of the end manifest, folds included, with tombstone drops
+    *    applied — the documented extension beyond Delta's surface, and a
+    *    default-start stream's first batch;
+    *  - `startingVersion >= 1` is the stepped walk of versions [s, e]
+    *    ([[WarehouseConnector.steppedEntriesBetween]]): the ORIGINAL
+    *    commits, `compact_*` folds skipped (a fold changes no logical
+    *    content, and its rows were served as the entries it folded), no
+    *    drops applied, and purges and rollbacks refused unless
+    *    `ignoreDeletes` — `s = 1` is "everything since the table's
+    *    birth", never the snapshot;
+    *  - `readChangeFeed` is the row-level walk
+    *    ([[WarehouseConnector.cdfAddsBetween]]): tombstone key lists
+    *    become `_change_type='delete'` rows, and no drops apply.
+    *
+    * `_pos` stays the END-version manifest position for entries the end
+    * manifest still lists; an in-range entry FOLDED OUT by a compaction
+    * gets a stable NEGATIVE position ([[foldedPos]]).
+    *
+    * The plan is `(data entries with their commit versions, delete
+    * entries, served names in interleaved commit order, restore
+    * deletes)`; the last three are nonempty only under
+    * `readChangeFeed`. */
   private lazy val changePlan
       : Option[(Seq[(String, Long)], Seq[(String, Long)], Seq[String],
                 Seq[(String, Long)])] =
@@ -1993,27 +1992,22 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
       require(s0 >= 0L && s0 <= resolvedVersion + 1,
         s"startingVersion $s0 is outside this table's history (served " +
           s"end version is $resolvedVersion)")
-      // memoized per read: the diff touches each version twice
-      val memo = scala.collection.mutable.HashMap.empty[Long, Seq[String]]
-      val at = (v: Long) => memo.getOrElseUpdate(v,
-        AtomicWarehouse.committedEpochsAt(spark, dir, v))
+      // the diff reads each version twice: memoized per read unless the
+      // caller brought its own lookup
+      val at = namesAt.getOrElse {
+        val memo = scala.collection.mutable.HashMap.empty[Long, Seq[String]]
+        (v: Long) => memo.getOrElseUpdate(v,
+          AtomicWarehouse.committedEpochsAt(spark, dir, v))
+      }
       val sExcl = math.max(s0 - 1, 0L)
       if (cdf)
         WarehouseConnector.cdfAddsBetween(sExcl, resolvedVersion,
           ignoreDeletes, at, includePreimages, restoreAsDeletes)
-      else if (s0 == 0L) {
-        // startingVersion = 0: the initial SNAPSHOT (end-manifest
-        // content, tombstone drops applied) — the documented extension
-        // beyond Delta's surface
-        val d = WarehouseConnector.addedEntriesBetween(0L, resolvedVersion,
-          ignoreDeletes, at).map(_ -> -1L)
-        (d, Nil, d.map(_._1), Nil)
-      } else {
-        // startingVersion >= 1: stepped walk of versions [s0, e] —
-        // s0 = 1 is "everything since the table's birth", served as
-        // the ORIGINAL commits (folds skipped), never the snapshot
-        val d = WarehouseConnector.steppedEntriesBetween(sExcl,
-          resolvedVersion, ignoreDeletes, at).map(_ -> -1L)
+      else {
+        val d = (if (s0 == 0L) allEntries.map(_.name).filterNot(n =>
+            AtomicWarehouse.isTombstone(n) || AtomicWarehouse.isColMap(n))
+          else WarehouseConnector.steppedEntriesBetween(sExcl,
+            resolvedVersion, ignoreDeletes, at)).map(_ -> -1L)
         (d, Nil, d.map(_._1), Nil)
       }
     }
@@ -2049,12 +2043,12 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
   }
   private lazy val tombstones: Seq[TombstoneKeys] =
     // drops apply only to SNAPSHOT reads. A stepped range serves
-    // appended rows only; a readChangeFeed range serves retractions as
-    // explicit delete rows — applying drops there too would silently
+    // appended rows only (a tombstone in range refused or was
+    // ignoreDeletes-skipped); a readChangeFeed range serves retractions
+    // as explicit delete rows — applying drops there too would silently
     // remove purged keys' HISTORICAL insert rows from the feed while
     // still serving their delete rows (an incomplete history for
-    // audit/replay consumers, and inconsistent with the stream path's
-    // `applyDrops = !cdf`).
+    // audit/replay consumers).
     if (cdf || changeStart.exists(_ > 0L)) Nil
     else WarehouseConnector.loadTombstones(spark, dir, allEntries)
 
@@ -2125,7 +2119,7 @@ class WarehouseScan(dir: String, version: Option[Long], mergeKey: String,
     if (cdf) AtomicWarehouse.manifestTimes(spark, dir) else Map.empty
   // column-mapping directives: resolution per manifest position is the
   // identity (two empty arrays) when the manifest carries none
-  private lazy val ops = AtomicWarehouse.colMapOps(allEntries)
+  private[v2] lazy val ops = AtomicWarehouse.colMapOps(allEntries)
   private lazy val byName: Map[String, EpochEntry] =
     (allEntries ++ entries).map(e => e.name -> e).toMap
   private val resoMemo = scala.collection.concurrent.TrieMap
@@ -2349,11 +2343,10 @@ class WarehouseAggReaderFactory extends PartitionReaderFactory {
   * (~200 MB through the scheduler at the probe's T=400 × 12.8k files).
   * The factory ships the tombstone list ONCE in the stage's task
   * binary and derives each position's drops memoized; the partition
-  * carries only its manifest position and whether drops apply (the
-  * stream's stepped batches never apply them — a tombstone either
-  * failed the tail or was ignoreDeletes-skipped). `len` is the file's
-  * byte length; `read` indexes the factory's read schemas
-  * ([[WarehouseConnector.FileReads]]). */
+  * carries only its manifest position and whether drops apply (not
+  * when the read's pins show no drop can touch it, nor for a restore's
+  * delete rows). `len` is the file's byte length; `read` indexes the
+  * factory's read schemas ([[WarehouseConnector.FileReads]]). */
 final case class WarehouseFilePartition(path: String,
     len: Long,
     partValues: Array[(String, String)],
@@ -2728,39 +2721,31 @@ final case class WarehouseVersionOffset(v: Long)
 }
 
 /** The warehouse as a STREAMING source — `spark.readStream.format(
-  * "graft-warehouse")` tails the manifest, Delta-style: each committed
-  * drain becomes (at most) one micro-batch of raw upsert rows, offsets
-  * are manifest versions checkpointed by the engine, so a restarted query
+  * "graft-warehouse")` tails the manifest, Delta-style: offsets are
+  * manifest versions checkpointed by the engine, so a restarted query
   * resumes at the exact version it left off — exactly-once tailing with
   * no marker columns in the data.
   *
-  * Batch composition is version-stepped with an INITIAL SNAPSHOT:
+  * Each micro-batch (s, e] is the batch change feed of that version
+  * range: one [[WarehouseScan]] plans and decodes it, so what a batch
+  * serves is [[WarehouseScan.changePlan]]'s rule. A default-start,
+  * non-CDF stream's first batch is the initial snapshot (the feed's
+  * `startingVersion = 0`); every other batch serves the changes of
+  * versions s+1 to e. What only a stream has stays here:
   *
-  *  - batch 0 (fresh start): the full entry list of the start version —
-  *    folds included — i.e. the warehouse's current logical content, the
-  *    same "initial snapshot then tail" contract Delta's readStream
-  *    ships;
-  *  - every later step serves the `epoch_*` entries ADDED between
-  *    consecutive versions and SKIPS `compact_*` additions: a fold
-  *    replaces a manifest prefix the stream has (inductively) already
-  *    served, and folds change no logical content — re-serving one would
-  *    duplicate every pre-compaction row. The invariant "at offset v,
-  *    manifest(v)'s logical content has been served" holds at each step
-  *    because a version adds either epochs (served) or a fold of
-  *    already-served entries (skipped).
-  *
-  * RETENTION CONTRACT: stepping reads the intermediate manifests, so
-  * [[AtomicWarehouse.vacuum]]'s `retainVersions` must exceed the stream's
-  * maximum version lag (a lagging stream whose manifests were vacuumed
-  * fails loudly at the missing version rather than silently skipping).
-  *
-  * Admission control: `.option("maxVersionsPerBatch", k)` caps how many
-  * manifest versions one micro-batch advances — bounding batch size by
-  * drain cadence; `Trigger.AvailableNow` snapshots the current version
-  * and drains to exactly there. Pushed column pruning applies to the
-  * files; pushed FILTERS stay row-residual exactly as in batch (epoch
-  * pruning is skipped on the tail path — a tailed batch is one epoch,
-  * already the pruning granule). */
+  *  - offsets: a fresh stream starts at version 0, or at s−1 under
+  *    `.option("startingVersion", s)`;
+  *  - admission control: `.option("maxVersionsPerBatch", k)` caps how
+  *    many manifest versions one micro-batch advances — bounding batch
+  *    size by drain cadence; `Trigger.AvailableNow` snapshots the
+  *    current version and drains to exactly there;
+  *  - the RETENTION CONTRACT: stepping reads the intermediate manifests,
+  *    so [[AtomicWarehouse.vacuum]]'s `retainVersions` must exceed the
+  *    stream's maximum version lag (a lagging stream whose manifests
+  *    were vacuumed fails loudly at the missing version rather than
+  *    silently skipping);
+  *  - the pinned schema: a column-mapping directive that renames or
+  *    drops a served column after the stream started is refused. */
 class WarehouseMicroBatchStream(dir: String, required: StructType,
     pruneFilters: Array[Filter], mergeKey: String, maxVersionsPerBatch: Int,
     ignoreDeletes: Boolean = false,
@@ -2774,16 +2759,10 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
 
   private def spark = SparkSession.active
   private var availableNowTarget: Option[Long] = None
-  /** The initial snapshot's tombstone list, loaded by batch 0's
-    * planInputPartitions and shipped to its reader factory (batches
-    * plan then execute sequentially; stepped partitions never apply
-    * drops, so a later refresh cannot change served results). */
-  @volatile private var snapshotTombs: Seq[WarehouseConnector.TombstoneKeys] =
-    Nil
-  /** The directives the snapshot's drop keys resolve through — loaded
-    * with [[snapshotTombs]] under the same plan-then-execute ordering. */
-  @volatile private var snapshotColMapOps
-      : Seq[(Int, AtomicWarehouse.ColMapOp)] = Nil
+  /** The scan that planned the latest batch, whose reader factory
+    * decodes it: Spark plans a batch's partitions before it asks for
+    * the factory. */
+  @volatile private var batchScan: Option[WarehouseScan] = None
 
   /** Per-STREAM memo of each version's committed entry names: the tail
     * diffs consecutive manifests, so without it a batch of V versions
@@ -2795,11 +2774,10 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
     * memo is sound here where a session-global cache would not be (a
     * recreated warehouse may re-use version numbers). Names only —
     * O(versions × avg names) strings per stream. */
-  private val namesAt =
+  private val names =
     new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Seq[String]]()
-  private def epochsAt(v: Long): Seq[String] =
-    namesAt.computeIfAbsent(v,
-      _ => AtomicWarehouse.committedEpochsAt(spark, dir, v))
+  private val namesAt: Long => Seq[String] = v => names.computeIfAbsent(v,
+    _ => AtomicWarehouse.committedEpochsAt(spark, dir, v))
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = Some(AtomicWarehouse.currentVersion(spark, dir))
@@ -2843,69 +2821,33 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
   override def reportLatestOffset(): StreamOffset =
     WarehouseVersionOffset(AtomicWarehouse.currentVersion(spark, dir))
 
-  /** Entries to serve for (start, end] under the version-stepping rule.
-    * Additions classify four ways: plain `epoch_*` → serve;
-    * `compact_*` folds → skip (already-served content); `*_p<V>` PURGE
-    * rewrites and `tombstone_*` deletion-vector commits → an append-only
-    * stream cannot express the retraction, so by default the tail FAILS
-    * LOUDLY at the purge boundary (Delta's readStream-on-delete
-    * contract) — `.option("ignoreDeletes", true)` opts into skipping
-    * them (downstream keeps the purged rows it already saw; new
-    * consumers' initial snapshot never sees them — batch 0 applies
-    * tombstones as scan-time key drops). */
-  /** Offset 0 means "initial snapshot" ONLY for a default-start stream:
-    * an explicit `startingVersion` asked for the changes OF version s
-    * and later (Delta's streaming contract), so even its first batch is
-    * a stepped walk — the original commits, folds skipped, purge
-    * boundaries refusing — never the end-manifest snapshot. */
-  private def snapshotAtZero: Boolean = startVersion.isEmpty
-  private[v2] def entriesToServe(s: Long, e: Long): Seq[String] =
-    if (s == 0L && !snapshotAtZero)
-      WarehouseConnector.steppedEntriesBetween(s, e, ignoreDeletes, epochsAt)
-    else
-      WarehouseConnector.addedEntriesBetween(s, e, ignoreDeletes, epochsAt)
-
   override def planInputPartitions(start: StreamOffset,
       end: StreamOffset): Array[InputPartition] = {
     val s = start.asInstanceOf[WarehouseVersionOffset].v
     val e = end.asInstanceOf[WarehouseVersionOffset].v
-    val f = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // pushed filters prune SERVED epochs too (zone maps/blooms from the
-    // end-version manifest): rows a pruned epoch could contribute cannot
-    // match the filter, and Spark re-applies it row-level regardless —
-    // a filtered tail of a big warehouse opens O(matching) dirs, and the
-    // INITIAL SNAPSHOT (the whole manifest) prunes like a batch read.
-    // Offsets are unaffected: pruning drops files, never versions.
-    val allEntries = AtomicWarehouse.committedEntriesAt(spark, dir, e)
-    val byName = allEntries.map(en => en.name -> en).toMap
-    // batch 0's INITIAL SNAPSHOT applies tombstones as scan-time key
-    // drops (its contract is the warehouse's logical content); stepped
-    // batches never apply drops — a tombstone addition either failed
-    // the tail loudly, was ignoreDeletes-skipped, or (readChangeFeed)
-    // became explicit delete rows. The tombstone LIST ships once per
-    // stage via the reader factory; partitions carry only
-    // (pos, applyDrops). A CDF tail never snapshots: its batch 0 is a
-    // stepped walk from the start version.
-    val posOf = allEntries.map(_.name).zipWithIndex.toMap
+    // offset 0 is the initial snapshot only for a default-start plain
+    // stream: an explicit startingVersion asked for the changes of
+    // version s and later, so even its first batch is a stepped walk
+    val scan = new WarehouseScan(dir, None, mergeKey, served, pruneFilters,
+      maxVersionsPerBatch, ignoreDeletes,
+      changeStart = Some(if (s == 0L && startVersion.isEmpty && !cdf) 0L
+        else s + 1),
+      changeEnd = Some(e), cdf = cdf, includePreimages = includePreimages,
+      restoreAsDeletes = restoreAsDeletes, namesAt = Some(namesAt))
     // a STREAM's schema is pinned at stream start: a column-mapping
     // directive landing after that re-shapes what the end version serves
     // under the consumer's fixed names — detected as a pinned data
     // column the END-version effective schema no longer carries, and
     // refused loudly (Delta refuses streaming over rename/drop the same
     // way); restart the stream to pick up the mapped schema. Directives
-    // wholly before the pinned schema are fine — the per-file resolution
-    // below reads old epochs through them.
-    val colMapOps = AtomicWarehouse.colMapOps(allEntries)
-    if (colMapOps.nonEmpty) {
-      val served = WarehouseConnector.snapshotSchema(spark, dir, e)
-        .fieldNames.toSet
-      val metaCols = Set(WarehouseConnector.PosColumn,
-        WarehouseConnector.ChangeTypeColumn,
-        WarehouseConnector.CommitVersionColumn,
-        WarehouseConnector.CommitTimestampColumn)
+    // wholly before the pinned schema are fine — the scan reads old
+    // epochs through them.
+    if (scan.ops.nonEmpty) {
+      val mapped = servedSchema(spark, dir, scan.allEntries).fieldNames.toSet
+      val metaCols = Set(PosColumn, ChangeTypeColumn, CommitVersionColumn,
+        CommitTimestampColumn)
       val stale = required.fieldNames
-        .filterNot(n => served.contains(n) || metaCols.contains(n))
+        .filterNot(n => mapped.contains(n) || metaCols.contains(n))
       if (stale.nonEmpty)
         throw new UnsupportedOperationException(
           s"graft-warehouse stream: column(s) ${stale.mkString(", ")} " +
@@ -2913,98 +2855,8 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
             "this stream's schema was pinned — restart the stream to " +
             "read through the new mapping")
     }
-    val resoMemo = scala.collection.mutable.HashMap
-      .empty[Int, (Array[(String, String)], Array[String])]
-    def resoFor(pos: Int) = resoMemo.getOrElseUpdate(pos,
-      WarehouseConnector.colMapResolution(pos, colMapOps))
-    val (dataAdds, delAdds, serveOrder, rDels) =
-      if (cdf)
-        WarehouseConnector.cdfAddsBetween(s, e, ignoreDeletes, epochsAt,
-          includePreimages, restoreAsDeletes)
-      else {
-        if (s == 0L && snapshotAtZero) {
-          snapshotTombs =
-            WarehouseConnector.loadTombstones(spark, dir, allEntries)
-          snapshotColMapOps = colMapOps
-        }
-        val d = entriesToServe(s, e).map(_ -> -1L)
-        (d, Seq.empty[(String, Long)], d.map(_._1),
-          Seq.empty[(String, Long)])
-      }
-    // entries folded out of the END manifest mid-batch get stable
-    // NEGATIVE positions in INTERLEAVED COMMIT ORDER (same contract as
-    // the batch change feed — data and delete entries ordered by their
-    // commit, not data-then-deletes): folded-out entries predate the
-    // fold, so the (load_seq DESC, _pos DESC) tiebreaker stays
-    // commit-ordered even when a purge and a later re-insert fold out
-    // in the same batch
-    val folded = serveOrder.filterNot(posOf.contains)
-    val negPos = folded.zipWithIndex
-      .map { case (n, i) => n -> (i - folded.size) }.toMap
-    def posFor(n: String): Int = posOf.getOrElse(n, negPos.getOrElse(n, 0))
-    val tsOf: Map[Long, Long] =
-      if (cdf) AtomicWarehouse.manifestTimes(spark, dir) else Map.empty
-    val dropMemo = scala.collection.mutable.HashMap.empty[Int, Seq[String]]
-    def planned(p: WarehouseFilePartition, epoch: String) =
-      fileReads.plan(p, entrySchema(spark, dir,
-        byName.getOrElse(epoch, EpochEntry(epoch))),
-        dropMemo.getOrElseUpdate(p.pos,
-          dropKeyCols(snapshotTombs, p.pos, snapshotColMapOps)))
-    val files = dataAdds
-      .filter { case (n, _) => byName.get(n).forall(en =>
-        WarehouseConnector.epochMayMatch(en, mergeKey, pruneFilters)) }
-      .flatMap { case (n, v) => byName.get(n)
-        .map(WarehouseConnector.entryFiles(f, dir, _))
-        .getOrElse(WarehouseConnector.listEpochFiles(f, dir, n))
-        .map(_ -> v) }
-      .filter { case (file, _) =>
-        pruneFilters.forall(fileMayMatch(file, _)) }
-      .map { case (file, v) =>
-        val pos = posFor(file.epoch)
-        val (rn, mk) = resoFor(pos)
-        planned(WarehouseFilePartition(file.path, file.len,
-          file.partValues.toArray, pos,
-          applyDrops = !cdf && s == 0L && snapshotAtZero,
-          commitVersion = v,
-          commitTsMicros = tsOf.getOrElse(v, -1L),
-          changeType =
-            WarehouseConnector.feedChangeType(file.epoch),
-          renames = rn, masked = mk), file.epoch) }
-    val deletes: Array[InputPartition] = delAdds.map { case (name, v) =>
-      val keyCol0 = AtomicWarehouse.tombstoneKeyCol(spark, dir, name)
-        .getOrElse("")
-      val dpos = posFor(name)
-      // END-schema key name, same contract as the batch feed's deletes
-      val keyCol = WarehouseConnector
-        .tombKeyServedName(keyCol0, dpos, colMapOps)
-        .getOrElse(throw new UnsupportedOperationException(
-          s"graft-warehouse stream: the key column '$keyCol0' of " +
-            s"tombstone $name was DROPPED by a later column-mapping " +
-            "directive — the retraction's identity cannot be served; " +
-            "restart from a fresh snapshot or set " +
-            ".option(\"ignoreDeletes\", true)"))
-      val (_, ls, ss) = AtomicWarehouse.readTombstoneKeys(spark, dir, name)
-      WarehouseDeleteKeysPartition(keyCol, ls, ss, dpos, v,
-        tsOf.getOrElse(v, -1L))
-        : InputPartition
-    }.toArray
-    // restoreAsDeletes: a removed entry's files re-served as delete
-    // rows, same contract as the batch feed
-    val restoreDeleteFiles: Seq[WarehouseFilePartition] =
-      rDels.flatMap { case (n, v) =>
-        val dfiles = byName.get(n)
-          .map(WarehouseConnector.entryFiles(f, dir, _))
-          .getOrElse(WarehouseConnector.listEpochFiles(f, dir, n))
-        val pos = posFor(WarehouseConnector.restoreDelSentinel(n, v))
-        val (rn, mk) = resoFor(posOf.getOrElse(n, pos))
-        dfiles.map(file => planned(WarehouseFilePartition(file.path,
-          file.len, file.partValues.toArray, pos, applyDrops = false,
-          commitVersion = v, commitTsMicros = tsOf.getOrElse(v, -1L),
-          changeType = "delete", renames = rn, masked = mk), n))
-      }
-    WarehouseConnector.packPartitions(spark, files) ++
-      WarehouseConnector.packPartitions(spark, restoreDeleteFiles) ++
-      deletes
+    batchScan = Some(scan)
+    scan.planInputPartitions()
   }
 
   // `_pos` THROUGH THE TAIL: the streaming plan keeps the RELATION's
@@ -3019,19 +2871,14 @@ class WarehouseMicroBatchStream(dir: String, required: StructType,
   // batches because the tail path's manifest is append-only:
   // folds/purges fail the tail or are skipped).
   private val served =
-    if (required.fieldNames.contains(WarehouseConnector.PosColumn)) required
-    else required.add(StructField(WarehouseConnector.PosColumn,
-      IntegerType, nullable = false))
-
-  /** Read schemas of every file this stream planned, across batches
-    * (each batch plans, then builds its reader factory). */
-  private val fileReads = new FileReads(served)
+    if (required.fieldNames.contains(PosColumn)) required
+    else required.add(StructField(PosColumn, IntegerType, nullable = false))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarehouseReaderFactory(served, pruneFilters, fileReads.broadcast(spark),
-      snapshotTombs, snapshotColMapOps)
+    batchScan.getOrElse(throw new IllegalStateException(
+      "graft-warehouse stream: a reader factory was asked for before " +
+        "any batch was planned")).createReaderFactory()
 
   override def commit(end: StreamOffset): Unit = ()
   override def stop(): Unit = ()
 }
-

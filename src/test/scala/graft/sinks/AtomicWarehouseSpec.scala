@@ -786,6 +786,29 @@ class AtomicWarehouseSpec extends SparkSuite {
     }
   }
 
+  test("a drain replayed after a failed auto-fold folds on the replay") {
+    val wh = tmp("aw_refold") + "/wh"
+    AtomicWarehouse.declareWriteDefaults(spark, wh,
+      Map("compactEvery" -> "2", "mergeKey" -> "k"))
+    def epoch(seq: Long) = Seq((seq, s"v$seq", seq)).toDF("k", "v", "load_seq")
+    AtomicWarehouse.commitEpoch(spark, wh, epoch(1L), 1L)
+    // the seam throws at the fold's CAS only: by then epoch_2 is durable
+    val err = intercept[IllegalStateException] {
+      CommitSeam.around(
+        if (AtomicWarehouse.committedEpochs(spark, wh).contains("epoch_2"))
+          throw new IllegalStateException("fold CAS lost"))(
+        AtomicWarehouse.commitEpoch(spark, wh, epoch(2L), 2L))
+    }
+    assert(err.getMessage == "fold CAS lost")
+    assert(AtomicWarehouse.committedEpochs(spark, wh) ==
+      Seq("epoch_1", "epoch_2"))
+    AtomicWarehouse.commitEpoch(spark, wh, epoch(2L), 2L) // the replay
+    val folded = AtomicWarehouse.committedEpochs(spark, wh)
+    assert(folded.size == 1 && folded.head.startsWith("compact_v"),
+      s"the replay must retry the owed fold; manifest: $folded")
+    assert(snapshot(wh) == Set((1L, "v1", 1L), (2L, "v2", 2L)))
+  }
+
   test("column mapping: rename reads old+new epochs as ONE column, zero rewrites") {
     val wh = tmp("aw_colmap") + "/wh"
     AtomicWarehouse.commitEpoch(spark, wh,

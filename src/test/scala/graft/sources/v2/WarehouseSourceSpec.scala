@@ -961,12 +961,13 @@ class WarehouseSourceSpec extends SparkSuite {
     AtomicWarehouse.commitEpoch(spark, dir, typedRows(9, 9, 4L), 4L) // v4
     val stream = new WarehouseMicroBatchStream(dir,
       typedRows(1, 1, 1L).schema, Array.empty, "", 0)
-    val served = stream.entriesToServe(1L,
-      AtomicWarehouse.currentVersion(spark, dir))
-    assert(served.contains("insert_v1_test0001"),
+    val served = plannedPaths(stream.planInputPartitions(
+      WarehouseVersionOffset(1L),
+      WarehouseVersionOffset(AtomicWarehouse.currentVersion(spark, dir))))
+    assert(served.exists(_.contains("/insert_v1_test0001/")),
       s"SQL insert entries must ride the tail; served: $served")
-    assert(served.contains("epoch_4"))
-    assert(!served.exists(_.startsWith("compact_")),
+    assert(served.exists(_.contains("/epoch_4/")))
+    assert(!served.exists(_.contains("/compact_")),
       "folds re-materialize already-served rows and must be skipped")
   }
 
